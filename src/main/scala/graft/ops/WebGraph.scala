@@ -1142,8 +1142,10 @@ object WebGraph {
     * Implementation: Pregel-style frontier BFS. Each round joins the
     * edge table against the CURRENT FRONTIER ONLY (not the full
     * visited set), then anti-joins against everything already visited
-    * — so round cost is proportional to the newly discovered rim, and
-    * the loop exits as soon as a frontier comes back empty. Every
+    * — so round cost is proportional to the newly discovered rim. The
+    * loop always chains all `maxDepth` levels: once a frontier comes
+    * back empty, the remaining levels are empty frames that cost no
+    * stage (no per-level count barrier). Every
     * frontier is localCheckpoint-ed (plan truncation — an iterative
     * loop otherwise doubles its logical plan per round); the visited
     * set is a lazy union of those checkpointed leaves, never

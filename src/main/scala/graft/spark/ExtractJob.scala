@@ -2,8 +2,9 @@ package graft.spark
 
 import java.sql.Timestamp
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.html.BoilerplateStripper
 import graft.pdf.PdfExtractor
 
@@ -235,9 +236,18 @@ object ExtractJob {
   // next run, urls re-extracted — no duplicates, staging was never
   // readable); between 2 and 3 → the next run's heal() completes the
   // rename instead of re-extracting (checkpoint names the attempt), so
-  // neither duplicates nor loss; after 3 → done. Round 2 appended
-  // output BEFORE the checkpoint, so a kill between the writes
-  // re-extracted and re-appended those urls (duplicate window).
+  // neither duplicates nor loss; after 3 → done.
+  //
+  // Validation (Iceberg's optimistic commit): the resume anti-join reads
+  // the checkpoint files listed when the run starts — the BASE SNAPSHOT.
+  // Steps 2-3 run under a commit lock, and under it the checkpoint is
+  // listed again: only files ADDED since the base snapshot can own urls
+  // this attempt extracted, so only they are semi-joined (no file added
+  // → no job). This is exact, not a heuristic: the checkpoint is
+  // append-only (nothing is ever rewritten or deleted) and every append
+  // writes files under fresh job-unique names, so "listed now, not in
+  // the base" is precisely the set of rows committed since the base,
+  // and the full re-read finds no conflict the added files do not.
   // ------------------------------------------------------------------
   final case class RunReport(attempted: Long, ok: Long, error: Long, skipped: Long)
 
@@ -246,12 +256,29 @@ object ExtractJob {
   /** Test-only crash injection points for the commit protocol.
     * `renameFalse` simulates `FileSystem.rename` returning false at
     * publish (transient FS refusal — distinct from a crash: the
-    * process survives, the run FAILS, staging + checkpoint remain). */
+    * process survives, the run FAILS, staging + checkpoint remain).
+    * `beforeLock` runs after staging and before the commit lock is
+    * requested: a concurrent commit injected there lands between this
+    * attempt's base snapshot and its validation. */
   private[spark] final case class FailPoints(
       afterStage: Boolean = false, afterCheckpoint: Boolean = false,
-      renameFalse: Boolean = false)
+      renameFalse: Boolean = false, beforeLock: () => Unit = () => ())
   private[spark] final class InjectedCrash(at: String)
     extends RuntimeException(s"injected crash $at")
+
+  /** The checkpoint table's schema, given to every read: no read of it
+    * launches a schema-inference job. */
+  private lazy val checkpointSchema = Encoders.product[CheckpointRow].schema
+
+  private def readCheckpoint(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(checkpointSchema).parquet(paths: _*)
+
+  /** The checkpoint as it stands now, over the files listed at this call
+    * (None before its first append). The listing runs on the driver; no
+    * Spark job. */
+  private def checkpointSnapshot(spark: SparkSession, checkpointDir: String): Option[DataFrame] =
+    if (pathExists(spark, checkpointDir)) Some(readCheckpoint(spark, Seq(checkpointDir)))
+    else None
 
   def runWithCheckpoint(spark: SparkSession, pages: DataFrame, outDir: String,
                         checkpointDir: String, runId: String,
@@ -265,34 +292,40 @@ object ExtractJob {
                                        fail: FailPoints): RunReport = {
     import spark.implicits._
     heal(spark, outDir, checkpointDir, cfg)
-    val doneUrls: DataFrame =
-      if (pathExists(spark, checkpointDir))
-        spark.read.parquet(checkpointDir).select("url").distinct()
-      else spark.emptyDataset[String].toDF("url")
+    // base snapshot: the file index is fixed when the DataFrame is made,
+    // so the anti-join below reads exactly `baseFiles`
+    val base = checkpointSnapshot(spark, checkpointDir)
+    val baseFiles = base.fold(Set.empty[String])(_.inputFiles.toSet)
     // resume: only not-yet-checkpointed urls (left-anti — the one
-    // planned join; broadcast-able when the remainder is small)
-    val pending = pages.join(doneUrls, Seq("url"), "left_anti")
+    // planned join; broadcast-able when the remainder is small). No
+    // distinct on the right: duplicate urls there cannot change it.
+    val pending = base.fold(pages)(b => pages.join(b.select("url"), Seq("url"), "left_anti"))
     val attempt = runId + "-" + java.util.UUID.randomUUID().toString.take(8)
     val staged = s"${stagingRoot(outDir)}/$attempt"
-    val extracted = extract(pending, cfg).persist()
+    // pinned by an RDD-level persist, not Dataset.persist: Spark re-caches
+    // every cached plan that reads a path when a write in the session
+    // appends to that path, so a commit landing in this session would
+    // re-extract a cached `extracted` against the grown checkpoint, and it
+    // would no longer match what this attempt staged
+    val docs = extract(pending, cfg).rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    val extracted = spark.createDataset(docs)
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       // 1. stage (bucketed layout, unreadable until published). Staging
       // runs OUTSIDE the commit lock — the expensive extraction work of
-      // concurrent attempts overlaps; only the commit serializes.
-      extracted
-        .withColumn("bucket", pmod(xxhash64($"url"), lit(nBuckets)))
-        .drop("n_bytes", "partition_id")
-        .write.mode("overwrite").partitionBy("bucket").parquet(staged)
+      // concurrent attempts overlaps; only the commit serializes. The
+      // status counts ride on this write.
+      var report = stage(extracted, staged, nBuckets)
       if (fail.afterStage) throw new InjectedCrash("after stage")
-      // ---- commit critical section (Iceberg's optimistic-commit
-      // analog): an atomic-create lock file serializes checkpoint
-      // append + publish, and the pending set is RE-VALIDATED under
-      // the lock — a concurrent attempt that committed some of our
-      // urls first wins them, we commit only the remainder. Without
-      // this, two runs racing the same runId each appended overlapping
-      // ownership rows and readOutput double-counted those urls.
+      fail.beforeLock()
+      // ---- commit critical section: an atomic-create lock file
+      // serializes checkpoint append + publish, and the pending set is
+      // RE-VALIDATED under the lock against the checkpoint files added
+      // since the base snapshot — a concurrent attempt that committed
+      // some of our urls first wins them, we commit only the remainder.
+      // Without this, two runs racing the same runId each appended
+      // overlapping ownership rows and readOutput double-counted them.
       acquireCommitLock(fs, checkpointDir, attempt, cfg.lockTtlMs, cfg.lockWaitMs)
       var crashed = false
       // heartbeat daemon: the TTL is measured from the lock's mtime,
@@ -317,35 +350,29 @@ object ExtractJob {
         // staging while we waited for the lock (its GC is TTL-gated,
         // but a stage→lock gap longer than the TTL is possible under
         // contention); re-stage under the lock if so — `extracted` is
-        // persisted, so this is a rewrite, not a re-extraction
+        // pinned, so this is a rewrite, not a re-extraction
         if (!fs.exists(new org.apache.hadoop.fs.Path(staged)))
-          extracted
-            .withColumn("bucket", pmod(xxhash64($"url"), lit(nBuckets)))
-            .drop("n_bytes", "partition_id")
-            .write.mode("overwrite").partitionBy("bucket").parquet(staged)
+          stage(extracted, staged, nBuckets)
+        val added = checkpointSnapshot(spark, checkpointDir)
+          .fold(Seq.empty[String])(_.inputFiles.filterNot(baseFiles).toSeq)
         val committed: Dataset[ExtractedDoc] =
-          if (!pathExists(spark, checkpointDir)) extracted
+          if (added.isEmpty || report.attempted == 0) extracted
           else {
-            val done2 = spark.read.parquet(checkpointDir).select("url").distinct()
-            val nConflicts = extracted.join(done2, Seq("url"), "left_semi").count()
-            if (nConflicts == 0) extracted
+            val won = readCheckpoint(spark, added).select("url")
+            if (extracted.join(won, Seq("url"), "left_semi").count() == 0) extracted
             else {
               // losing side of the race: drop the stolen urls and
               // re-stage the remainder (only the loser pays a rewrite)
-              val keep = extracted.join(done2, Seq("url"), "left_anti")
-                .as[ExtractedDoc].persist()
-              keep.count() // materialize before overwriting nothing-yet
-              keep
-                .withColumn("bucket", pmod(xxhash64($"url"), lit(nBuckets)))
-                .drop("n_bytes", "partition_id")
-                .write.mode("overwrite").partitionBy("bucket").parquet(staged)
-              keep
+              // (recomputed from the pinned rows for the append; nothing
+              // can add to the checkpoint while we hold the lock)
+              val kept = extracted.join(won, Seq("url"), "left_anti").as[ExtractedDoc]
+              report = stage(kept, staged, nBuckets)
+              kept
             }
           }
-        val statuses = committed.groupBy($"status").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (statuses.isEmpty) {
-          // everything was stolen: nothing to commit, GC our staging
+        if (report.attempted == 0) {
+          // nothing pending, or everything was stolen: nothing to
+          // commit, GC our staging
           fs.delete(new org.apache.hadoop.fs.Path(staged), true)
         } else {
           // 2. record lineage + the attempt that owns each url — but
@@ -358,18 +385,13 @@ object ExtractJob {
             .withColumn("run_id", lit(runId))
             .withColumn("attempt", lit(attempt))
             .withColumn("finished_at", lit(now))
-            .select("run_id", "attempt", "partition_id", "url", "status",
-              "duration_ms", "n_bytes", "finished_at")
+            .select(checkpointSchema.fieldNames.map(col).toSeq: _*)
             .write.mode("append").parquet(checkpointDir)
           if (fail.afterCheckpoint) { crashed = true; throw new InjectedCrash("after checkpoint") }
           // 3. publish (single rename)
           publish(spark, staged, outDir, attempt, failRename = fail.renameFalse)
         }
-        RunReport(
-          attempted = statuses.values.sum,
-          ok = statuses.getOrElse("ok", 0L),
-          error = statuses.getOrElse("error", 0L),
-          skipped = statuses.getOrElse("skipped_oversize", 0L))
+        report
       } finally {
         heartbeat.interrupt()
         // a simulated CRASH means process death: the lock file stays
@@ -377,7 +399,22 @@ object ExtractJob {
         // other exit — success or a surviving failure — releases it
         if (!crashed) releaseCommitLock(fs, checkpointDir)
       }
-    } finally extracted.unpersist()
+    } finally docs.unpersist()
+  }
+
+  /** Write `docs` as this attempt's staged output and count its statuses
+    * in the same pass (an observed metric of the write, no extra job). */
+  private def stage(docs: Dataset[ExtractedDoc], staged: String, nBuckets: Int): RunReport = {
+    val obs = Observation()
+    def n(status: String) = count(when(col("status") === status, 1))
+    docs.observe(obs, count(lit(1)).as("attempted"), n("ok").as("ok"),
+        n("error").as("error"), n("skipped_oversize").as("skipped"))
+      .withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
+      .drop("n_bytes", "partition_id")
+      .write.mode("overwrite").partitionBy("bucket").parquet(staged)
+    val m = obs.get
+    def get(k: String) = m(k).asInstanceOf[Long]
+    RunReport(get("attempted"), get("ok"), get("error"), get("skipped"))
   }
 
   private def commitLockPath(checkpointDir: String): org.apache.hadoop.fs.Path =
@@ -564,7 +601,9 @@ object ExtractJob {
     * silent permanent loss — or steal the rename and fail the
     * committer's publish after a successful commit. Under the lock,
     * src+dst coexisting really does mean debris (commits are
-    * serialized), and src existence is re-checked after acquisition.
+    * serialized), and staging is listed only after acquisition. Both
+    * branches act on that listing alone; the checkpoint is read only
+    * when it is non-empty, and then only for the listed attempt ids.
     * The GC of UNRECORDED staging is additionally TTL-gated: a live
     * concurrent attempt stages outside the lock, so a fresh unrecorded
     * dir may belong to a committer still working — only dirs idle
@@ -578,28 +617,26 @@ object ExtractJob {
     val healId = "heal-" + java.util.UUID.randomUUID().toString.take(8)
     acquireCommitLock(fs, checkpointDir, healId, cfg.lockTtlMs, cfg.lockWaitMs)
     try {
-      val recorded: Set[String] =
-        if (pathExists(spark, checkpointDir))
-          spark.read.parquet(checkpointDir).select("attempt").distinct()
-            .collect().map(_.getString(0)).toSet
-        else Set.empty
-      for (att <- recorded) {
-        val dst = new org.apache.hadoop.fs.Path(s"$outDir/run=$att")
-        val src = new org.apache.hadoop.fs.Path(s"${stagingRoot(outDir)}/$att")
-        if (fs.exists(src)) { // re-checked under the lock
-          if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
-          try publish(spark, src.toString, outDir, att)
-          catch {
-            case e: java.io.IOException =>
-              if (!fs.exists(dst)) throw e // a concurrent healer won: fine
-          }
-        }
-      }
-      if (fs.exists(root)) {
+      // listed under the lock, so every entry is current; an empty
+      // staging root (the steady state) costs no checkpoint read
+      val entries = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+      if (entries.nonEmpty) {
+        val names = entries.map(_.getPath.getName)
+        val recorded: Set[String] = checkpointSnapshot(spark, checkpointDir)
+          .fold(Set.empty[String])(_.select("attempt").where(col("attempt").isin(names: _*))
+            .distinct().collect().map(_.getString(0)).toSet)
         val now = System.currentTimeMillis()
-        fs.listStatus(root).foreach { st =>
-          if (!recorded.contains(st.getPath.getName) &&
-              now - st.getModificationTime > cfg.lockTtlMs)
+        for (st <- entries) {
+          val att = st.getPath.getName
+          if (recorded.contains(att)) {
+            val dst = new org.apache.hadoop.fs.Path(s"$outDir/run=$att")
+            if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
+            try publish(spark, st.getPath.toString, outDir, att)
+            catch {
+              case e: java.io.IOException =>
+                if (!fs.exists(dst)) throw e // a concurrent healer won: fine
+            }
+          } else if (now - st.getModificationTime > cfg.lockTtlMs)
             fs.delete(st.getPath, true)
         }
       }

@@ -27,9 +27,13 @@ final case class ExtractedDoc(
     n_bytes: Long,
     partition_id: Int)
 
-/** Per-row lineage + metrics (FIXTURES.md §2 checkpoint schema). */
+/** Per-row lineage + metrics (FIXTURES.md §2 checkpoint schema): one row
+  * per url, written by `ExtractJob.runWithCheckpoint`. `attempt` names the
+  * staged output that owns the url. `ExtractJob` reads the table with this
+  * class's schema. */
 final case class CheckpointRow(
     run_id: String,
+    attempt: String,
     partition_id: Int,
     url: String,
     status: String,
