@@ -62,7 +62,7 @@ object Crawl {
     * The pair is packed as zero-padded-19-digit-ts || fp and max'd as
     * ONE string: string order == (ts, fp) order for the non-negative
     * epoch timestamps a crawl log carries (contract: warc_ts >= 0).
-    * Plan note (measured, PLANS.md): any non-fixed-width aggregation
+    * Plan note (measured, `Perf plans`): any non-fixed-width aggregation
     * BUFFER — a struct-max OR this string-max — drops the whole
     * aggregate to SortAggregate; with a NUMERIC fp (the production
     * choice: xxhash64) every buffer is fixed-width and the identical

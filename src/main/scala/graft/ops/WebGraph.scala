@@ -648,8 +648,8 @@ object WebGraph {
     ranks
   }
 
-  /** One PageRank round (pre-checkpoint plan — exposed so PlanDump can
-    * audit the per-iteration shape): edges⋈ranks⋈outdeg on src, a
+  /** One PageRank round (pre-checkpoint plan — exposed so `Perf plans`
+    * can audit the per-iteration shape): edges⋈ranks⋈outdeg on src, a
     * partial-aggregated shuffle on dst, left join back to the node
     * set. */
   private[graft] def iterate(e: DataFrame, outdeg: DataFrame,

@@ -33,7 +33,7 @@ import java.util.concurrent.atomic.AtomicLong
   * cache per executor JVM), but in tests and benches it means state
   * leaks across corpora — any spec or A/B arm that reads `hits`/
   * `misses` or asserts cold-start behavior MUST call `clear()` first
-  * (the existing specs and BenchFontCache do). Counters are
+  * (the existing specs and `Perf ab fontcache` do). Counters are
   * monotonically cumulative across all corpora the JVM has seen.
   */
 object FontCache {

@@ -421,7 +421,7 @@ object PagesGen {
   /** Single page, Type0 Identity-H, 2,000-entry bfchar ToUnicode CMap
     * (~36 KB decoded) — byte-identical across ids; the realistic size
     * for CJK / subset-font crawl PDFs, where ToUnicode streams run
-    * tens of KB. Shared by BenchFontCache and the mixed bench corpus
+    * tens of KB. Shared by `Perf ab fontcache` and the mixed bench corpus
     * (reference: docs/ARCHITECTURE.md:255-260 font caching;
     * src/fonts/cmap.rs ToUnicode parse). */
   def bigFontPdf(id: Long): Array[Byte] = {
@@ -468,7 +468,7 @@ object PagesGen {
     * item 1): the standard `payload` mix, except 20% of ids carry the
     * font-fidelity fixture (two embedded ToUnicode CMaps, /Differences,
     * Type0 surrogate pairs) and ~6% the 2,000-entry big-CMap doc — so
-    * the headline docs/s, the BenchCpu gate and the scaling evidence
+    * the headline docs/s, the `Perf cpu` gate and the scaling evidence
     * all execute the ToUnicode parse + FontCache path on every pass.
     * SEPARATE from `generate()` (pins/goldens unchanged); the plain
     * corpus stays available for cross-round comparability. */
@@ -479,19 +479,18 @@ object PagesGen {
     val baseTs = 1735689600000L
     spark.range(0, nDocs, 1, par).mapPartitions { ids =>
       ids.map { id =>
-        if (id % 16 == 2) {
-          PageRow(url(id, "pdf"), new Timestamp(baseTs + id * 1000L),
-            bigFontPdf(id), "", "en")
-        } else if (id % 5 == 1) {
-          PageRow(url(id, "pdf"), new Timestamp(baseTs + id * 1000L),
-            fontPdf(id), "", "en")
-        } else {
-          val (bytes, kind) = payload(id, seed)
-          PageRow(url(id, kind), new Timestamp(baseTs + id * 1000L), bytes, "", "en")
-        }
+        val (bytes, kind) = mixedPayload(id, seed)
+        PageRow(url(id, kind), new Timestamp(baseTs + id * 1000L), bytes, "", "en")
       }
     }
   }
+
+  /** The mixed corpus's per-id rule: the big-CMap doc for id % 16 == 2,
+    * the font fixture for id % 5 == 1, else the standard `payload`. */
+  def mixedPayload(id: Long, seed: Long): (Array[Byte], String) =
+    if (id % 16 == 2) (bigFontPdf(id), "pdf")
+    else if (id % 5 == 1) (fontPdf(id), "pdf")
+    else payload(id, seed)
 
   /** Bench-corpus selector: "mixed" (default — fonts in the measured
     * path) or "plain" (the r3/r4-comparable corpus). */
@@ -506,12 +505,11 @@ object PagesGen {
     * bound shape where per-doc CPU dominates per-byte shuffle cost). */
   def benchPayload(id: Long, seed: Long, corpus: String): Array[Byte] =
     if (corpus == "heavy") longPdf(id, 2000)
-    else if (corpus != "plain" && id % 16 == 2) bigFontPdf(id)
-    else if (corpus != "plain" && id % 5 == 1) fontPdf(id)
-    else payload(id, seed)._1
+    else if (corpus == "plain") payload(id, seed)._1
+    else mixedPayload(id, seed)._1
 
   /** Long text-dense PDF (~nLines/40 pages) — the heavy-tail / heavy-
-    * corpus shape shared by BenchSkew and BenchDedup. */
+    * corpus shape shared by `Perf ab salt` and `Perf ab dedup`. */
   def longPdf(id: Long, nLines: Int): Array[Byte] = {
     import graft.pdf.testgen.PdfBuilder
     val rnd = new java.util.Random(id * 0x9e3779b97f4a7c15L + 99L)

@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** Spark delivers listener events asynchronously; a spec that counts them
+/** Spark delivers listener events asynchronously; code that counts them
   * must wait for the bus to drain first. The bus is `private[spark]`,
   * hence this shim in Spark's package. */
 object ListenerBusDrain {
