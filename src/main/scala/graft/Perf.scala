@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.WebGraph
-import graft.pdf.PdfExtractor
+import graft.pdf.Outputs
 import graft.pdf.font.FontCache
 import graft.pdf.testgen.PdfBuilder
 import graft.spark.{ExtractJob, PageRow, PagesGen}
@@ -331,7 +331,10 @@ object Perf {
 
   /** Single-threaded, Spark-free thread-CPU ns/doc of the extraction
     * kernel over fixed fixture docs per kind: isolates the kernel from
-    * the scheduling noise a whole-job probe carries. */
+    * the scheduling noise a whole-job probe carries. Two arms per kind,
+    * alternating: `all` builds every output, as a plan that reads
+    * markdown or html does; `text_only` builds text, as a plan that
+    * reads neither does. */
   private def kernel(args: Seq[String]): Seq[(String, Any)] = {
     val reps = num(args, 0, 7).toInt
     val tmx = ManagementFactory.getThreadMXBean
@@ -340,19 +343,23 @@ object Perf {
     val kinds = Seq("textPdf" -> mixed("pdf"), "html" -> mixed("html"),
       "fontPdf" -> Array.tabulate(48)(i => PagesGen.fontPdf(i.toLong)),
       "bigFontPdf" -> Array.tabulate(12)(i => PagesGen.bigFontPdf(i.toLong)))
-    // the same dispatch as ExtractJob.extractOne, minus the Row plumbing
+    // each doc through ExtractJob.extractOne, as the extraction function runs it
     var sink = 0
-    def pass(docs: Array[Array[Byte]]): Unit = docs.foreach { d =>
-      sink += (if (PdfExtractor.isPdf(d)) PdfExtractor.extract(d).text.length
-               else graft.html.BoilerplateStripper.extractAll(d)._1.length)
+    def pass(docs: Array[Array[Byte]], outputs: Outputs): Unit = docs.foreach { d =>
+      val r = ExtractJob.extractOne("", d, 0, ExtractJob.Config(), outputs)
+      sink += r.text.length + r.markdown.length + r.html.length
     }
-    for (_ <- 1 to 3; (_, docs) <- kinds) pass(docs)
+    val arms = Seq("all" -> Outputs.All, "text_only" -> Outputs.TextOnly)
+    for (_ <- 1 to 3; (_, docs) <- kinds; (_, o) <- arms) pass(docs, o)
     val perKind = kinds.map { case (name, docs) =>
-      name -> stats((1 to reps).map { _ =>
+      val ns = mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
+      for (rep <- 1 to reps; (arm, o) <- if (rep % 2 == 1) arms else arms.reverse) {
         val c0 = tmx.getCurrentThreadCpuTime
-        pass(docs)
-        (tmx.getCurrentThreadCpuTime - c0).toDouble / docs.length
-      })
+        pass(docs, o)
+        ns(arm) :+= (tmx.getCurrentThreadCpuTime - c0).toDouble / docs.length
+      }
+      val saving = 1.0 - median(ns("text_only")) / median(ns("all"))
+      name -> Obj(arms.map { case (arm, _) => arm -> stats(ns(arm)) } :+ ("text_only_saving" -> saving): _*)
     }
     Seq("unit" -> "thread_cpu_ns_per_doc", "reps" -> reps) ++ perKind :+ ("_sink" -> sink % 1000)
   }
@@ -611,7 +618,10 @@ object Perf {
   private val planNotes: Seq[(String, String)] = Seq(
     "extract" ->
       ("Check: ReadSchema lists only url+html; normal tier has NO Exchange; " +
-       "heavy tier goes through one hash Exchange on __salt."),
+       "heavy tier goes through one hash Exchange on __salt. Each tier's MapPartitions " +
+       "runs ExtractPartitions(markdown=true, html=true): this plan reads every column, " +
+       "so both flags stay on; a plan that drops markdown or html shows that flag false " +
+       "(ExtractJob.PruneOutputs)."),
     "q2_join_broadcast" ->
       "Check: BroadcastHashJoin with BuildRight on customer (dim side), no SortMergeJoin.",
     "q3_antijoin" ->

@@ -130,11 +130,14 @@ object BoilerplateStripper {
     * single charset decode + a single tokenize/segment (the per-doc
     * hot path — profiling showed strip+stripMarkdown+title re-running
     * all three when called separately). */
-  def extractAll(bytes: Array[Byte]): (String, String, String) = {
+  def extractAll(bytes: Array[Byte]): (String, String, String) = extractAll(bytes, markdown = true)
+
+  /** [[extractAll]], with the markdown left empty unless `markdown`. */
+  def extractAll(bytes: Array[Byte], markdown: Boolean): (String, String, String) = {
     val html = decodeCharset(bytes)
     val blocks = segment(html)
     val text = classify(blocks).map(_.text).mkString("\n\n")
-    (text, renderMarkdown(blocks), title(html))
+    (text, if (markdown) renderMarkdown(blocks) else "", title(html))
   }
 
   /** <title> text (entity-decoded, whitespace-normalized); empty if

@@ -4,7 +4,8 @@ import graft.pdf.convert.{Html, Markdown, TextAssembler}
 import graft.pdf.doc.PdfDocument
 import graft.pdf.extract.TextExtractor
 
-/** Pure per-document entry point: PDF bytes → extracted text + markdown.
+/** Pure per-document entry point: PDF bytes → extracted text, markdown
+  * and html.
   * Never throws for malformed content past the header — the fallback
   * ladder inside PdfDocument absorbs corruption (reference's 100%
   * success-rate design, SURVEY §7.4.5). Callers map failures to
@@ -34,6 +35,15 @@ object ReadingOrderMode {
   case object Hybrid extends ReadingOrderMode
 }
 
+/** Which outputs beside text a conversion builds. Text, title and the
+  * page and span counts are always built; an output that is off comes
+  * back as the empty string. */
+final case class Outputs(markdown: Boolean, html: Boolean)
+object Outputs {
+  val All = Outputs(markdown = true, html = true)
+  val TextOnly = Outputs(markdown = false, html = false)
+}
+
 final case class ConversionOptions(
     markdownMode: ReadingOrderMode = ReadingOrderMode.TopToBottomLeftToRight,
     maxPages: Int = PdfExtractor.DefaultMaxPages,
@@ -47,7 +57,10 @@ final case class ConversionOptions(
       * Float.NegativeInfinity disables insertion (reference:
       * extractors/text.rs:30-98 TextExtractionConfig
       * .space_insertion_threshold / with_space_threshold). */
-    spaceInsertionThreshold: Float = TextExtractor.DefaultSpaceInsertionThreshold)
+    spaceInsertionThreshold: Float = TextExtractor.DefaultSpaceInsertionThreshold,
+    /** outputs to build; a text-only caller skips the markdown
+      * reading order and both page conversions. */
+    outputs: Outputs = Outputs.All)
 
 object PdfExtractor {
 
@@ -117,8 +130,9 @@ object PdfExtractor {
       }
       nSpans += forText.size
       texts += TextAssembler.assemble(forText)
-      // markdown reading-order dispatch (reference: markdown.rs:561-703)
-      val forMd = opts.markdownMode match {
+      // markdown reading-order dispatch (reference: markdown.rs:561-703);
+      // lazy: a text-only conversion never orders the page for markdown
+      lazy val forMd = opts.markdownMode match {
         case ReadingOrderMode.TopToBottomLeftToRight => spatial
         case ReadingOrderMode.ColumnAware =>
           // per-page adaptive σ/region thresholds (document_analyzer.rs)
@@ -133,8 +147,8 @@ object PdfExtractor {
             graft.pdf.extract.ReadingOrder.dedup(
               graft.pdf.layout.Hybrid.readingOrder(raw, mediaBox)))
       }
-      mds += Markdown.convertPage(forMd)
-      htmls += Html.convertPage(forMd, preserveLayout = opts.preserveLayout)
+      if (opts.outputs.markdown) mds += Markdown.convertPage(forMd)
+      if (opts.outputs.html) htmls += Html.convertPage(forMd, preserveLayout = opts.preserveLayout)
     }
     // page joins (reference: text "\n\n"; markdown "\n---\n\n",
     // document.rs:2317-2333)

@@ -40,21 +40,26 @@ object CharMode {
     * Clusters come back sorted by left edge.
     *
     * Round 6: the BFS expansion consults a center-x GRID INDEX
-    * (bucket width = epsilon) instead of rescanning every char per
-    * frontier node — |dx| ≤ ε means a match sits in the same or an
-    * adjacent bucket (⌊a/ε⌋ and ⌊b/ε⌋ differ by ≤ 1 when |a−b| ≤ ε),
+    * (bucket width = nextUp(epsilon)) instead of rescanning every char
+    * per frontier node — a match sits in the same or an adjacent bucket,
     * so candidate generation is LOSSLESS and the quadratic inner scan
     * becomes neighborhood-sized (measured 10 µs/char → sub-µs on the
     * dense bench doc). Byte-identical output: candidates are visited
     * in ascending original index (each bucket stores ascending
     * indices; the 3-bucket merge re-sorts), the float comparisons are
     * the exact same expressions, and a NaN coordinate joins nothing
-    * in either formulation (every comparison on it is false). */
+    * in either formulation (every comparison on it is false).
+    *
+    * Why one ULP wider than ε: the test is on the float difference, which
+    * can round a true gap just above ε down to ε (a half-ULP tie). Any
+    * gap whose float difference is ≤ ε is < nextUp(ε) exactly, and two
+    * centers less than one bucket apart are at most one bucket apart;
+    * buckets of width ε could put such a pair two apart and miss it. */
   def clusterCharsIntoWords(chars: IndexedSeq[TextChar], epsilon: Float): Vector[Vector[Int]] = {
     if (chars.isEmpty) return Vector.empty
     if (chars.length == 1) return Vector(Vector(0))
     val n = chars.length
-    val bw = if (epsilon > 0f) epsilon.toDouble else 1e-6
+    val bw = if (epsilon > 0f) Math.nextUp(epsilon).toDouble else 1e-6
     // y bucket height = the page-max dy window: dy < cur.fontSize·0.5
     // ≤ maxFS·0.5 = bh ⇒ a true match is within ±1 y-bucket of cur —
     // still lossless for every per-char window

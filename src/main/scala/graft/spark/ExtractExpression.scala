@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.html.BoilerplateStripper
-import graft.pdf.PdfExtractor
+import graft.pdf.{ConversionOptions, Outputs, PdfExtractor}
 
 /** Catalyst-native scalar expression `extract_text(html BINARY) → STRING`
   * (SURVEY §7.3: the optional Expression wrapper that makes the
@@ -34,7 +34,8 @@ case class ExtractText(child: Expression)
     else {
       try {
         val text =
-          if (PdfExtractor.isPdf(bytes)) PdfExtractor.extract(bytes).text
+          if (PdfExtractor.isPdf(bytes))
+            PdfExtractor.extract(bytes, ConversionOptions(outputs = Outputs.TextOnly)).text
           else BoilerplateStripper.strip(bytes)
         UTF8String.fromString(text)
       } catch { case _: Throwable => null }

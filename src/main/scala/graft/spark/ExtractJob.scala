@@ -3,10 +3,12 @@ package graft.spark
 import java.sql.Timestamp
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions, SerializeFromObject}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.html.BoilerplateStripper
-import graft.pdf.PdfExtractor
+import graft.pdf.{Outputs, PdfExtractor}
 
 /** The production job shape (SURVEY §3.3): pages table → per-row
   * extraction inside `mapPartitions` → Dataset[ExtractedDoc] + the
@@ -45,16 +47,19 @@ object ExtractJob {
     * no partition carries two giants. The heavy exchange uses an
     * EXPLICIT partition count: extraction cost is per-row CPU, and
     * AQE's size-based coalescing would squeeze it into a couple of
-    * 64MB partitions, idling the cluster. */
+    * 64MB partitions, idling the cluster.
+    *
+    * Markdown and html are built only when the query reads them: the
+    * per-partition function is an [[ExtractPartitions]], and
+    * [[PruneOutputs]], registered here on the session, clears the
+    * outputs the optimized plan no longer serializes. */
   def extract(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
     import spark.implicits._
+    PruneOutputs.register(spark)
     val pruned = pages.select(col("url"), col("html"))
     def toDocs(df: DataFrame): Dataset[ExtractedDoc] =
-      df.as[(String, Array[Byte])].mapPartitions { rows =>
-        val pid = TaskContext.getPartitionId()
-        rows.map { case (u, html) => extractOne(u, html, pid, cfg) }
-      }
+      df.as[(String, Array[Byte])].mapPartitions(new ExtractPartitions(cfg, Outputs.All))
     if (!cfg.salt) toDocs(pruned)
     else {
       val heavyPred = length(col("html")) > cfg.heavyThresholdBytes
@@ -167,8 +172,59 @@ object ExtractJob {
       }
   }
 
-  /** Pure per-row dispatch: sniff %PDF- magic vs HTML (SURVEY §2.5). */
-  def extractOne(u: String, html: Array[Byte], pid: Int, cfg: Config): ExtractedDoc = {
+  /** The per-partition function of [[extract]]: every row through
+    * [[extractOne]], building `outputs`. A plain class, so equality is
+    * identity, as for a lambda: plan and cache matching see no change.
+    * Its name and flags show in the plan. */
+  private[spark] final class ExtractPartitions(cfg: Config, val outputs: Outputs)
+      extends (Iterator[(String, Array[Byte])] => Iterator[ExtractedDoc]) with Serializable {
+    def apply(rows: Iterator[(String, Array[Byte])]): Iterator[ExtractedDoc] = {
+      val pid = TaskContext.getPartitionId()
+      rows.map { case (u, html) => extractOne(u, html, pid, cfg, outputs) }
+    }
+    def withOutputs(o: Outputs): ExtractPartitions = new ExtractPartitions(cfg, o)
+    override def toString: String =
+      s"ExtractPartitions(markdown=${outputs.markdown}, html=${outputs.html})"
+  }
+
+  /** Optimizer rule: an [[ExtractPartitions]] whose objects feed only the
+    * serializer right above it builds only the fields that serializer
+    * still has after column pruning. Any other consumer of the objects
+    * (`.rdd`, typed `map`/`filter`, a serializer pair collapsed by
+    * `EliminateSerialization`) leaves no `SerializeFromObject` directly
+    * above the function, so it keeps every output. Flags are only ever
+    * cleared, so a second pass is a no-op. */
+  private[spark] object PruneOutputs extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+      case s @ SerializeFromObject(ser, m: MapPartitions) => (m.func: AnyRef) match {
+        case f: ExtractPartitions =>
+          val names = ser.map(_.name).toSet
+          val need = Outputs(f.outputs.markdown && names("markdown"), f.outputs.html && names("html"))
+          if (need == f.outputs) s
+          else s.copy(child = m.copy(func = f.withOutputs(need).asInstanceOf[Iterator[Any] => Iterator[Any]]))
+        case _ => s
+      }
+    }
+
+    /** Adds the rule to the session's optimizer once (SNIPPETS [1]'s
+      * `setup(session)`); rules already registered are kept. A session
+      * without an optimizer of its own builds every output. */
+    def register(spark: SparkSession): Unit = spark match {
+      case s: org.apache.spark.sql.classic.SparkSession =>
+        val exp = s.experimental
+        exp.synchronized {
+          if (!exp.extraOptimizations.contains(this))
+            exp.extraOptimizations = exp.extraOptimizations :+ this
+        }
+      case _ => ()
+    }
+  }
+
+  /** Pure per-row dispatch: sniff %PDF- magic vs HTML (SURVEY §2.5).
+    * Text, title, counts and status are built whatever `outputs` says;
+    * markdown and html are empty unless asked for. */
+  def extractOne(u: String, html: Array[Byte], pid: Int, cfg: Config,
+                 outputs: Outputs = Outputs.All): ExtractedDoc = {
     val nBytes = if (html == null) 0L else html.length.toLong
     val t0 = System.nanoTime()
     def ms: Double = (System.nanoTime() - t0) / 1e6
@@ -179,7 +235,8 @@ object ExtractJob {
     else if (PdfExtractor.isPdf(html)) {
       try {
         val r = PdfExtractor.extract(html,
-          graft.pdf.ConversionOptions(maxPages = cfg.maxPages, password = cfg.password))
+          graft.pdf.ConversionOptions(maxPages = cfg.maxPages, password = cfg.password,
+            outputs = outputs))
         ExtractedDoc(u, r.text, r.markdown, r.html, r.title, r.nPages, r.nSpans, ms, "ok", "", nBytes, pid)
       } catch {
         case e: Throwable =>
@@ -188,7 +245,7 @@ object ExtractJob {
       }
     } else {
       try {
-        val (text, md, title) = BoilerplateStripper.extractAll(html)
+        val (text, md, title) = BoilerplateStripper.extractAll(html, outputs.markdown)
         val nBlocks = countBlocks(text)
         ExtractedDoc(u, text, md, "", title, 1, nBlocks, ms, "ok", "", nBytes, pid)
       } catch {

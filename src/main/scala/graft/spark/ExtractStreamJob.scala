@@ -56,7 +56,7 @@ object ExtractStreamJob {
       .as[(String, java.sql.Timestamp, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (u, ts, html) =>
-          val d = ExtractJob.extractOne(u, html, 0, cfg)
+          val d = ExtractJob.extractOne(u, html, 0, cfg, graft.pdf.Outputs.TextOnly)
           (u, ts, d.status, d.n_bytes, d.n_pages.toLong)
         }
       }.toDF("url", "warc_ts", "status", "n_bytes", "n_pages")

@@ -12,7 +12,10 @@ final case class PageRow(
     lang: String)
 
 /** Output row (FIXTURES.md §2). `n_bytes` is carried for the checkpoint
-  * table and dropped from the extracted output. */
+  * table and dropped from the extracted output. `markdown` and `html`
+  * are built only when the query reads them (`ExtractJob.PruneOutputs`),
+  * so `duration_ms` times only the outputs the plan built: a text-only
+  * read reports shorter durations than a full one for the same doc. */
 final case class ExtractedDoc(
     url: String,
     text: String,

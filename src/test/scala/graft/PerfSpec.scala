@@ -95,10 +95,11 @@ class PerfSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("kernel: thread-CPU ns/doc per fixture kind") {
     val (line, r, code) = perf("kernel", "2")
     assert(code == 0, line)
-    for (kind <- Seq("textPdf", "html", "fontPdf", "bigFontPdf")) {
-      val s = r.getAs[Row](kind)
-      assert(seq[Double](s, "samples").length == 2)
-      assert(s.getAs[Double]("min") > 0.0)
+    for (kind <- Seq("textPdf", "html", "fontPdf", "bigFontPdf"); arm <- Seq("all", "text_only")) {
+      val s = r.getAs[Row](kind).getAs[Row](arm)
+      assert(seq[Double](s, "samples").length == 2, s"$kind $arm")
+      assert(s.getAs[Double]("min") > 0.0, s"$kind $arm")
+      assert(!r.getAs[Row](kind).getAs[Double]("text_only_saving").isNaN, kind)
     }
   }
 
@@ -109,6 +110,7 @@ class PerfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val text = Files.readString(Paths.get("target", "plans", "extract.txt"))
     assert(text.startsWith("Check: ReadSchema lists only url+html;"), text.take(200))
     assert(text.contains("== Physical Plan =="))
+    assert(text.contains("ExtractPartitions(markdown=true, html=true)"), text)
   }
 
   test("queries: a query that throws is named with its error, never timed") {

@@ -35,6 +35,17 @@ class CharModeSpec extends AnyFunSuite {
     assert(clusters.head.map(i => chars(i).text).mkString == "abc") // x-sorted
   }
 
+  test("word clustering: a half-ULP tie on dx still joins (grid is lossless)") {
+    // zero-width glyphs, so the centers are the x values themselves: the
+    // true gap 2 - 0.99999994 = 1 + 2^-24 is a tie that rounds to 1f, so
+    // the pair passes dx <= epsilon, yet the centers sit in x-buckets 0
+    // and 2 of an epsilon-wide grid
+    val a = Math.nextDown(1f)
+    assert(math.abs(2f - a) <= 1f && math.floor(a / 1.0) == 0.0 && math.floor(2f / 1.0) == 2.0)
+    val chars = Vector(ch("a", a, 700f, w = 0f), ch("b", 2f, 700f, w = 0f))
+    assert(CharMode.clusterCharsIntoWords(chars, epsilon = 1f) == Vector(Vector(0, 1)))
+  }
+
   test("line clustering: column gap keeps columns apart, epsilon-y joins a line") {
     val w = Vector(
       CharMode.blockOf(Vector(ch("l", 0f, 700f), ch("t", 10f, 700f))),     // left col
