@@ -575,9 +575,19 @@ object Perf {
     inv("hitsInt")(e => WebGraph.hitsInt(urls(e), iterations = 3))
     inv("pageRankInt")(e => WebGraph.pageRankInt(urls(e), iterations = 3))
     inv("kCore")(e => WebGraph.kCore(urls(e), k = 3))
-    check("kCore core_deg >= k") {
-      WebGraph.kCore(urls(ids), k = 3)
-        .agg(min(col("core_deg"))).collect()(0).getLong(0) >= 3L
+    lazy val core = WebGraph.kCore(urls(ids), k = 3).as[(String, Long)].collect().toMap
+    check("kCore core_deg >= k")(core.nonEmpty && core.values.min >= 3L)
+    check("kCore == driver peeling") {
+      core == peel(urls(ids).as[(String, String)].collect(), k = 3)
+    }
+
+    // ---- star contraction (gate=0) vs the driver union-find (gate=max)
+    check("components distributed == driver union-find") {
+      val pairs = ids.select(col("src_id").as("a_id"), col("dst_id").as("b_id"))
+      def comps(gate: Long) = graft.ops.Dedup.components(pairs, driverSolveMaxEdges = gate)
+        .as[(Long, Long)].collect().toSet
+      val distributed = comps(0L)
+      distributed == comps(Long.MaxValue) && distributed.nonEmpty
     }
 
     // ---- suffix ranking at 4x the sf0.1 corpus (the radix-4 chain +
@@ -611,6 +621,24 @@ object Perf {
     }
     Seq("n_docs" -> n, "n_edges" -> nEdges, "checks" -> checks.toSeq) ++
       (if (failed.isEmpty) Nil else Seq("failed" -> failed.toSeq))
+  }
+
+  /** The k-core by sequential queue peeling of the undirected simple
+    * graph: node -> degree inside the core. A formulation independent
+    * of kCore's synchronous rounds. */
+  private def peel(edges: Array[(String, String)], k: Int): Map[String, Long] = {
+    val adj = edges.filter(e => e._1 != e._2).flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSet }
+    val deg = mutable.HashMap.from(adj.map { case (v, ns) => v -> ns.size })
+    val queue = mutable.Queue.from(deg.collect { case (v, d) if d < k => v })
+    while (queue.nonEmpty) {
+      val v = queue.dequeue()
+      if (deg.remove(v).isDefined) for (u <- adj(v) if deg.contains(u)) {
+        deg(u) -= 1
+        if (deg(u) == k - 1) queue += u
+      }
+    }
+    deg.map { case (v, d) => v -> d.toLong }.toMap
   }
 
   /** The Check: note of every plan `plans` writes by default: what the

@@ -516,17 +516,11 @@ object Dedup {
     * O(log n) rounds REGARDLESS of graph diameter — the property that
     * matters at 100 TB, where an adversarial duplicate chain (doc A
     * near-dups B near-dups C …) would cost a min-label-propagation
-    * loop one full shuffle round per hop. Each round is CUT OUT of
-    * the lineage with an eager localCheckpoint: a round's plan
-    * references the previous round several times, so without
-    * truncation the logical plan (and Catalyst's per-round analysis
-    * cost) grows exponentially — the classic iterative-DataFrame
-    * trap. Fixpoint is detected by (count, order-independent xxhash64
-    * checksum) equality of consecutive edge sets — one extra agg job
-    * per round instead of a full set compare. On a cluster swap
-    * localCheckpoint for reliable checkpointing if executor loss
-    * mid-algorithm must be survivable; the convergence loop is
-    * identical.
+    * loop one full shuffle round per hop. Rounds run through
+    * [[Fixpoint]], one per barrier, until the (count, order-independent
+    * xxhash64 checksum) of the edge set repeats — one agg job per round
+    * instead of a full set compare. `maxIter` counts rounds; a graph
+    * that needs more throws `IllegalStateException`.
     *
     * Returns (id, comp) for every vertex that appears in `pairs`;
     * comp = min doc id reachable.
@@ -579,19 +573,14 @@ object Dedup {
     // canonical directed form: larger → smaller, self-loops dropped
     // (LAZY checkpoint: the fingerprint agg that follows each round is
     // a full-scan action, materializing the round in the same job)
-    var star = edges.filter(col("src") > col("dst"))
+    val star0 = edges.filter(col("src") > col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .localCheckpoint(false)
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      // bit_xor, not sum: order-independent and cannot overflow under ANSI
-      val r = e.agg(count(lit(1)), coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)))
+    // bit_xor, not sum: order-independent and cannot overflow under ANSI
+    def fingerprint(e: DataFrame): (Long, Long) =
+      e.agg(count(lit(1)), coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)))
         .as[(Long, Long)].first()
-      r
-    }
-    var prev = fingerprint(star)
-    var iter = 0
-    var converged = prev._1 == 0L
-    while (!converged && iter < maxIter) {
+    def round(star: DataFrame): DataFrame = {
       // LARGE-STAR: for each u, m = min(Γ(u) ∪ {u}); emit (v, m) for
       // every neighbor v > u. Since m ≤ u < v, output stays larger→smaller.
       val sym = star.select(col("u"), col("v"))
@@ -604,20 +593,15 @@ object Dedup {
       // SMALL-STAR: every edge now has u > v, so Γ(u) here is exactly
       // the smaller neighbors; m = min(Γ(u)). Re-hang Γ(u) ∪ {u} \ {m} off m.
       val m2 = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = ls.join(m2, "u")
+      ls.join(m2, "u")
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(m2.select(col("u"), col("m").as("v")))
         .distinct()
-        .localCheckpoint(false)
-      val cur = fingerprint(ss)
-      converged = cur == prev
-      prev = cur
-      star = ss
-      iter += 1
     }
-    // At fixpoint every non-root has exactly one outgoing edge (u → root);
-    // the groupBy-min also degrades gracefully if maxIter cut the loop short.
+    val star = new Fixpoint("components", maxIter, hops = 1)
+      .stable(star0, Some(fingerprint(star0)))(round)(fingerprint)
+    // At fixpoint every non-root has exactly one outgoing edge (u → root).
     val nonRoot = star.groupBy(col("u")).agg(min(col("v")).as("comp"))
       .select(col("u").as("id"), col("comp"))
     allVerts.join(nonRoot, Seq("id"), "left")

@@ -521,7 +521,8 @@ object WebGraph {
     * labels. Synchronous + total tie order = fully deterministic (the
     * async variant is run-order dependent and un-oracle-able), at the
     * cost of possible 2-cycles — `rounds` is a fixed hyperparameter,
-    * not a convergence loop. Isolated vertices keep their own label.
+    * not a convergence loop (so not a [[Fixpoint]] loop). Isolated
+    * vertices keep their own label.
     *
     * Scale shape per round: one join of the undirected edge table
     * against the (vertex, label) table + one partial-aggregated count
@@ -609,7 +610,8 @@ object WebGraph {
     * when both are bucketed by src), one partial-aggregated shuffle on
     * dst, one left join back to the node set. Lineage is truncated per
     * round via localCheckpoint — the non-negotiable pattern for
-    * iterative DataFrames (see Dedup.components). */
+    * iterative DataFrames. A fixed iteration count with no convergence
+    * test, so not a [[Fixpoint]] loop. */
   def pageRankInt(edges: DataFrame, iterations: Int,
                   scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
@@ -1152,8 +1154,9 @@ object WebGraph {
     * re-materialized. Rounds are bounded by graph diameter (the web's
     * is ~tens); at 10^12 edges you'd bucket the edge table by src so
     * each round's join is co-partitioned and shuffle-free on the big
-    * side. Oracle: [[crawlDepthOracleSql]], an independent
-    * recursive-CTE min-over-all-walks formulation. */
+    * side. A fixed `maxDepth` levels with no convergence test, so not
+    * a [[Fixpoint]] loop. Oracle: [[crawlDepthOracleSql]], an
+    * independent recursive-CTE min-over-all-walks formulation. */
   def crawlDepth(edges: DataFrame, seeds: DataFrame,
                  maxDepth: Int = 10): DataFrame = {
     // LAZY checkpoints + count-as-materializer: one job per BFS level
@@ -1246,7 +1249,7 @@ object WebGraph {
     * Shape per iteration (same as [[pageRankInt]]): two equi-joins
     * edges⋈scores and two partial-aggregated shuffles, plus a 1-row
     * broadcast for each L1 sum; lineage truncated per round via
-    * localCheckpoint. */
+    * localCheckpoint; not a [[Fixpoint]] loop, as for [[pageRankInt]]. */
   def hitsInt(edges: DataFrame, iterations: Int,
               scale: Long = 100000000L, maxDegree: Long = 900L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
@@ -1438,7 +1441,8 @@ object WebGraph {
     * Scale shape: one self-equi-join (dst = src) + localCheckpoint per
     * round — O(log L) shuffles total, lineage constant-size (the
     * components/pageRank discipline); convergence is one cheap
-    * any-row-advanced probe per round. */
+    * any-row-advanced probe per round. Not a [[Fixpoint]] loop: running
+    * out of `maxRounds` is its cycle signal (`is_cycle`), not an error. */
   def resolveRedirects(redirects: DataFrame,
                        maxRounds: Int = 20): DataFrame = {
     var m = redirects.groupBy(col("src"))
@@ -2127,16 +2131,15 @@ object WebGraph {
     * cores; isolated editorial pages peel away immediately). Output is
     * one row per surviving node with its degree INSIDE the core.
     *
-    * Algorithm: synchronous peeling. Each round recomputes degrees
+    * Algorithm: synchronous peeling. Each peel recomputes degrees
     * (one partial-agg shuffle) and drops every node below k via two
     * LEFT SEMI joins — no row ever widens, state is only the live
-    * edge list. Peeling is removal-only, so an unchanged surviving-
-    * node count IS the fixpoint (nothing was removed ⇒ nothing ever
-    * will be). Rounds are bounded by the peeling depth (single digits
-    * on web graphs, ≤7 on this corpus at both SFs); each round ends in
-    * localCheckpoint(false) — same lineage-truncation discipline as
-    * [[weaklyConnected]], without which the plan doubles per round.
-    * Driver traffic is one count per round.
+    * edge list. Peels run through [[Fixpoint]], three per barrier;
+    * peeling only removes edges, so a live-edge count that repeats
+    * from one barrier to the next IS the fixpoint. Peel depth is
+    * single digits on web graphs (≤7 on this corpus at both SFs).
+    * `maxIter` counts barriers (three peels each); a graph that needs
+    * more throws `IllegalStateException` rather than return a non-core.
     *
     * The DuckDB oracle replays the SAME peeling as a staged CTE chain
     * with a fixed stage count (strictly more stages than the measured
@@ -2144,47 +2147,20 @@ object WebGraph {
     * [[pageRankOracleSql]] stages its iterations. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1 && maxIter >= 1)
-    // LAZY checkpoints: each round's keep.count() is a full-scan
-    // action over the new live set, materializing it in the same job
-    var live = edges.select(least(col("src"), col("dst")).as("a"),
+    val start = edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") < col("b")).distinct()
       .localCheckpoint(false)
-    var prevNodes = -1L
-    var round = 0
-    var done = false
-    // Batched peels (round 6, the SCC-trim BSP lever): each driver
-    // barrier (count) costs fixed job latency at any data size, so
-    // `hops` peels run lazily between barriers — surplus peels past
-    // the fixpoint are identity, and the node count is monotone
-    // non-increasing, so batch-boundary count equality == fixpoint.
-    // Each peel is lazily checkpointed (it references `live` three
-    // times; an unbroken chain grows the logical plan exponentially).
-    val hops = 3
-    while (!done && round < maxIter) {
-      var l2 = live
-      var h = 0
-      while (h < hops) {
-        val keep = l2.select(col("a").as("v"))
-          .unionAll(l2.select(col("b").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k).select(col("v"))
-        l2 = l2
-          .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint(false)
-        h += 1
-      }
-      // one barrier per batch: the surviving node count of the batch
-      val n = l2.select(col("a").as("v"))
-        .unionAll(l2.select(col("b").as("v")))
+    val core = new Fixpoint("kCore", maxIter, hops = 3).stable(start) { live =>
+      val keep = live.select(col("a").as("v"))
+        .unionAll(live.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .count()
-      if (n == prevNodes) done = true // removal-only ⇒ stable count = fixpoint
-      else { prevNodes = n; live = l2; round += 1 }
-    }
-    live.select(col("a").as("v")).unionAll(live.select(col("b").as("v")))
+        .where(col("deg") >= k).select(col("v"))
+      live
+        .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
+    }(_.count())
+    core.select(col("a").as("v")).unionAll(core.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
   }
 
@@ -2317,12 +2293,12 @@ object WebGraph {
     * nodes incident ONLY to self-loops leave the vertex universe, as
     * in the oracle.
     *
-    * Scale shape: each round is degree-bounded joins + distincts with
-    * localCheckpoint lineage truncation (the kCore/weaklyConnected
-    * pattern). Round count is bounded by periphery DAG depth + giant-
-    * SCC diameter per outer iteration — web graphs are shallow; the
-    * maxIter guard turns pathological inputs into an explicit error
-    * rather than an unbounded job. */
+    * Scale shape: each step is degree-bounded joins + distincts, run
+    * `hops` steps per barrier through [[Fixpoint]]. Step count is
+    * bounded by periphery DAG depth + giant-SCC diameter per outer
+    * iteration — web graphs are shallow. `maxIter` is one budget of
+    * barriers shared by all three phases; a graph that needs more
+    * throws `IllegalStateException` rather than run unbounded. */
   def stronglyConnected(edges: DataFrame, maxIter: Int = 200,
                         hops: Int = 3,
                         driverEdgeGate: Long = 200000L): DataFrame = {
@@ -2340,11 +2316,7 @@ object WebGraph {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("scc_id", org.apache.spark.sql.types.LongType))))
-    var barriers = 0
-    def spend(): Unit = {
-      barriers += 1
-      require(barriers <= maxIter, s"SCC did not converge within $maxIter supersteps")
-    }
+    val fixpoint = new Fixpoint("stronglyConnected", maxIter, hops)
     // Upfront size gate (the components() idiom, round 6): when the
     // WHOLE graph already fits the driver budget, solve it there
     // immediately — Kosaraju on ≤200k edges beats ~60 sequential
@@ -2364,46 +2336,24 @@ object WebGraph {
     }
     var remaining = nodes.count()
     while (remaining > 0) {
-      // ---- 1. trim to fixpoint: `hops` peels per superstep. Batching
-      // hops between barriers is the BSP lever — each driver round-trip
-      // (checkpoint + count) costs ~0.5 s of fixed job overhead at any
-      // data size, so 3 peels per barrier cut the sf0.1 wall from 22 s
-      // to ~10 s with identical results (the fixpoint is confluent).
-      var trimming = true
-      while (trimming && remaining > 0) {
-        spend()
-        // LAZY checkpoint per hop: each hop references its input 2-3
-        // times, so an unbroken chain grows the logical plan ~3^hops
-        // and Catalyst goes exponential (measured: ONE hops=5 batch on
-        // 15 edges = 517 s of pure planning). localCheckpoint(false)
-        // truncates the LOGICAL plan immediately (each hop plans over
-        // a LogicalRDD leaf — linear) but launches no job; the whole
-        // batch still materializes in the single eager barrier below.
-        var n2 = nodes
-        var l2 = live
-        var h = 0
-        while (h < hops) {
-          val keep = l2.select(col("s").as("v")).distinct()
-            .join(l2.select(col("t").as("v")).distinct(), Seq("v"), "left_semi")
-          n2 = n2.join(keep, Seq("v"), "left_semi").localCheckpoint(false)
-          l2 = l2.join(n2.select(col("v").as("s")), Seq("s"), "left_semi")
-            .join(n2.select(col("v").as("t")), Seq("t"), "left_semi")
-            .localCheckpoint(false)
-          h += 1
-        }
-        n2 = n2.localCheckpoint(false)
-        val nLeft = n2.count()
-        if (nLeft == remaining) trimming = false
-        else {
-          val trimmed = nodes.join(n2, Seq("v"), "left_anti")
-          assigned = assigned
-            .unionAll(trimmed.select(col("v"), col("v").as("scc_id")))
-            .localCheckpoint(false)
-          nodes = n2
-          live = l2.localCheckpoint(false)
-          remaining = nLeft
-        }
-      }
+      // ---- 1. trim to fixpoint: keep the nodes with an in- and an
+      // out-edge among live edges between kept nodes. Nodes only leave,
+      // so a repeated count is the fixpoint (and the kept set's size)
+      val kept = fixpoint.stable(nodes, Some(remaining)) { n =>
+        val l = live.join(n.select(col("v").as("s")), Seq("s"), "left_semi")
+          .join(n.select(col("v").as("t")), Seq("t"), "left_semi")
+        val keep = l.select(col("s").as("v")).distinct()
+          .join(l.select(col("t").as("v")).distinct(), Seq("v"), "left_semi")
+        n.join(keep, Seq("v"), "left_semi")
+      } { n => remaining = n.count(); remaining }
+      assigned = assigned
+        .unionAll(nodes.join(kept, Seq("v"), "left_anti").select(col("v"), col("v").as("scc_id")))
+        .localCheckpoint(false)
+      nodes = kept
+      live = live
+        .join(nodes.select(col("v").as("s")), Seq("s"), "left_semi")
+        .join(nodes.select(col("v").as("t")), Seq("t"), "left_semi")
+        .localCheckpoint(false)
       if (remaining > 0 && live.count() <= driverEdgeGate) {
         // ---- driver finish: the residual graph (post-trim) is small —
         // collect and run Kosaraju on the driver, the same size-gated
@@ -2420,66 +2370,36 @@ object WebGraph {
         remaining = 0L
       }
       if (remaining > 0) {
-        // ---- 2. forward min-label coloring to fixpoint (batched hops)
-        def colorStep(cIn: DataFrame): DataFrame = {
+        // ---- 2. forward min-label coloring to fixpoint; labels only
+        // ever decrease, so a batch that moved no label is the fixpoint
+        val cls = fixpoint.run(nodes.select(col("v"), col("v").as("c"))) { cIn =>
           val inMin = live
             .join(cIn.select(col("v").as("s"), col("c").as("cs")), Seq("s"))
             .groupBy(col("t")).agg(min(col("cs")).as("m"))
             .select(col("t").as("v"), col("m"))
           cIn.join(inMin, Seq("v"), "left")
             .select(col("v"), least(col("c"), coalesce(col("m"), col("c"))).as("c"))
-        }
-        var c = nodes.select(col("v"), col("v").as("c")).localCheckpoint(false)
-        var coloring = true
-        while (coloring) {
-          spend()
-          var c2 = c
-          var h = 0
-          // lazy per hop (plan-growth guard, see trim loop)
-          while (h < hops) { c2 = colorStep(c2).localCheckpoint(false); h += 1 }
-          c2 = c2.localCheckpoint(false)
-          // fixpoint iff NOTHING moved across the whole batch (labels
-          // only ever decrease, so batch-end equality == fixpoint)
-          val nChanged = c2.select(col("v"), col("c").as("c2"))
-            .join(c, Seq("v")).where(col("c2") =!= col("c")).count()
-          c = c2
-          if (nChanged == 0L) coloring = false
+        } { (c, c2) =>
+          c2.select(col("v"), col("c").as("c2"))
+            .join(c, Seq("v")).where(col("c2") =!= col("c")).count() == 0L
         }
         // ---- 3. extract each pivot's SCC by a class-local backward
-        // wave (batched hops; mark sets only grow, so batch-end count
-        // equality == fixpoint)
-        val cls = c
-        def growStep(m: DataFrame): DataFrame = {
+        // wave; mark sets only grow, so a repeated count is the fixpoint
+        val m0 = cls.where(col("v") === col("c")).localCheckpoint(false)
+        val mark = fixpoint.stable(m0, Some(m0.count())) { m =>
           val next = live
             .join(m.select(col("v").as("t"), col("c").as("mc")), Seq("t"))
             .join(cls.select(col("v").as("s"), col("c").as("sc")), Seq("s"))
             .where(col("sc") === col("mc"))
             .select(col("s").as("v"), col("sc").as("c"))
           m.unionAll(next).groupBy(col("v")).agg(min(col("c")).as("c"))
-        }
-        var mark = c.where(col("v") === col("c")).localCheckpoint(false)
-        var markCount = mark.count()
-        var growing = true
-        while (growing) {
-          spend()
-          var m2 = mark
-          var h = 0
-          // lazy per hop (plan-growth guard, see trim loop)
-          while (h < hops) { m2 = growStep(m2).localCheckpoint(false); h += 1 }
-          m2 = m2.localCheckpoint(false)
-          val cnt = m2.count()
-          if (cnt == markCount) growing = false
-          else { mark = m2; markCount = cnt }
-        }
+        }(_.count())
         assigned = assigned
           .unionAll(mark.select(col("v"), col("c").as("scc_id")))
           .localCheckpoint(false)
+        // the next trim's steps drop the live edges of marked nodes
         nodes = nodes.join(mark, Seq("v"), "left_anti").localCheckpoint(false)
         remaining = nodes.count()
-        live = live
-          .join(nodes.select(col("v").as("s")), Seq("s"), "left_semi")
-          .join(nodes.select(col("v").as("t")), Seq("t"), "left_semi")
-          .localCheckpoint(false)
       }
     }
     val sizes = assigned.groupBy(col("scc_id")).agg(count(lit(1)).as("scc_size"))

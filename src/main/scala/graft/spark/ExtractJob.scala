@@ -3,7 +3,8 @@ package graft.spark
 import java.sql.Timestamp
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions, SerializeFromObject}
+import org.apache.spark.sql.catalyst.expressions.AttributeSet
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, MapPartitions, Project, SerializeFromObject}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -189,21 +190,32 @@ object ExtractJob {
 
   /** Optimizer rule: an [[ExtractPartitions]] whose objects feed only the
     * serializer right above it builds only the fields that serializer
-    * still has after column pruning. Any other consumer of the objects
+    * still has after column pruning and, under a Filter chain (where
+    * Catalyst leaves the serializer whole), that the chain's top Project
+    * and its conditions reference. Any other consumer of the objects
     * (`.rdd`, typed `map`/`filter`, a serializer pair collapsed by
     * `EliminateSerialization`) leaves no `SerializeFromObject` directly
     * above the function, so it keeps every output. Flags are only ever
     * cleared, so a second pass is a no-op. */
   private[spark] object PruneOutputs extends Rule[LogicalPlan] {
-    def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-      case s @ SerializeFromObject(ser, m: MapPartitions) => (m.func: AnyRef) match {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+      case p @ Project(_, child) => narrow(child, p.references).fold[LogicalPlan](p)(c => p.copy(child = c))
+      case s: SerializeFromObject => narrow(s, s.outputSet).getOrElse(s)
+    }
+
+    /** `plan`, a chain of Filters on a serializer, with the function
+      * under it building only the fields in `read` or in a condition. */
+    private def narrow(plan: LogicalPlan, read: AttributeSet): Option[LogicalPlan] = plan match {
+      case f @ Filter(cond, c) => narrow(c, read ++ cond.references).map(n => f.copy(child = n))
+      case s @ SerializeFromObject(_, m: MapPartitions) => Some((m.func: AnyRef) match {
         case f: ExtractPartitions =>
-          val names = ser.map(_.name).toSet
-          val need = Outputs(f.outputs.markdown && names("markdown"), f.outputs.html && names("html"))
+          def reads(field: String) = s.output.exists(a => a.name == field && read.contains(a))
+          val need = Outputs(f.outputs.markdown && reads("markdown"), f.outputs.html && reads("html"))
           if (need == f.outputs) s
           else s.copy(child = m.copy(func = f.withOutputs(need).asInstanceOf[Iterator[Any] => Iterator[Any]]))
         case _ => s
-      }
+      })
+      case _ => None
     }
 
     /** Adds the rule to the session's optimizer once (SNIPPETS [1]'s

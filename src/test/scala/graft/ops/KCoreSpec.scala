@@ -63,6 +63,22 @@ class KCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(run(d, 2) === Map("x" -> 2L, "y" -> 2L, "z" -> 2L))
   }
 
+  test("cascade property: triangle + pendant path of every length 1..10 (k=2)") {
+    // kCore peels three times per barrier: lengths 1..3*3+1 end the
+    // cascade at every position inside a batch, including the last
+    // peel of one (L = 4, 7), where a batch-start state still holds
+    // the path's first node
+    val tri = Seq(("x", "y"), ("y", "z"), ("z", "x"))
+    val wrong = (1 to 10).flatMap { n =>
+      val path = ("z" +: (1 to n).map(i => s"p$i")).sliding(2).map(p => (p(0), p(1))).toSeq
+      val expect = brute((tri ++ path).map { case (a, b) => if (a < b) (a, b) else (b, a) }.toSet, 2)
+      assert(expect === Map("x" -> 2L, "y" -> 2L, "z" -> 2L))
+      val got = run(edges(tri ++ path: _*), 2)
+      if (got == expect) None else Some(s"length $n: $got")
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
   test("a graph below k everywhere has an empty core") {
     assert(run(edges(("a", "b"), ("b", "c"), ("c", "d")), 2).isEmpty)
   }

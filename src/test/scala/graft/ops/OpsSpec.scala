@@ -188,6 +188,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${out.count(_._2 != 0L)} of ${out.size} vertices mislabeled")
   }
 
+  test("connected components: paths of every length 1..10 — star contraction agrees with union-find") {
+    val s = spark
+    import s.implicits._
+    for (n <- 1L to 10L) {
+      // scrambled ids, so the minimum sits mid-path for most lengths
+      val pairs = (0L until n).map(i => ((i * 7) % 11, ((i + 1) * 7) % 11)).toDF("a_id", "b_id")
+      val dist = Dedup.components(pairs, driverSolveMaxEdges = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val drv = Dedup.components(pairs, driverSolveMaxEdges = Long.MaxValue)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(drv.size == n + 1 && drv.values.toSet.size == 1, s"length $n: union-find=$drv")
+      assert(dist == drv, s"length $n: star=$dist vs union-find=$drv")
+    }
+  }
+
   test("connected components: random graphs — star contraction agrees with union-find") {
     val s = spark
     import s.implicits._

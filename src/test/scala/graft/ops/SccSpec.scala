@@ -98,6 +98,20 @@ class SccSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L to 12L).foreach(v => assert(got(v) === ((v, 1L))))
   }
 
+  test("trim-chain property: a cycle with a feeder and a tail chain of every length 1..10") {
+    // trim peels one chain node per step at each end, `hops` (3) steps
+    // per barrier: lengths 1..3*3+1 end the trim at every position of
+    // a batch, and the cycle then goes through color and extract
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L))
+    for (n <- 1 to 10) {
+      val feeder = (0 until n).map(i => (100L + i, if (i == n - 1) 1L else 101L + i))
+      val tail = (0 until n).map(i => (if (i == 0) 3L else 199L + i, 200L + i))
+      val es = cycle ++ feeder ++ tail
+      val got = run(edges(es: _*)).view.mapValues(_._1).toMap
+      assert(got === tarjan(es), s"chain length $n")
+    }
+  }
+
   test("self-loops: ignored inside components, loop-only nodes leave the universe") {
     val es = Seq((1L, 2L), (2L, 1L), (1L, 1L), (9L, 9L))
     val got = run(edges(es: _*))

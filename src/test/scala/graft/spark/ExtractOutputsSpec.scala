@@ -71,10 +71,12 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
       check("select(url, text)", optimized(ds.select("url", "text")), Outputs.TextOnly)
       check("count()", optimized(ds.groupBy().count()), Outputs.TextOnly)
       check("select(markdown)", optimized(ds.select("markdown")), Outputs(markdown = true, html = false))
-      // html feeds the filter (Catalyst keeps the whole serializer under
-      // a Filter, so markdown is built as well)
-      val filtered = optimized(ds.filter(col("html") =!= "").select("url"))
-      assert(filtered.size == n && filtered.forall(_.html), s"filter(html =!= ''): $filtered")
+      // html feeds the filter; the serializer under a Filter stays whole,
+      // so what the Project and the Filter read decides
+      check("filter(html =!= '').select(url)",
+        optimized(ds.filter(col("html") =!= "").select("url")), Outputs(markdown = false, html = true))
+      check("filter(status === ok).select(url, markdown)",
+        optimized(ds.filter(col("status") === "ok").select("url", "markdown")), Outputs(markdown = true, html = false))
       check("toDF()", optimized(ds.toDF()), Outputs.All)
       val s = spark
       import s.implicits._
@@ -117,6 +119,9 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
       same(ds.map(d => (d.url, d.markdown, d.html)).collect().toSeq, "typed map")
       same(ds.rdd.map(d => (d.url, d.markdown, d.html)).collect().toSeq, ".rdd")
       same(ds.collect().map(d => (d.url, d.markdown, d.html)).toSeq, "collect")
+      // a Filter under a narrow select still filters on the html it builds
+      assert(ds.filter(col("html") =!= "").select("url").as[String].collect().toSet ==
+        ref.collect { case (u, d) if d.html.nonEmpty => u }.toSet)
     }
 
   /** Byte-flipped, truncated and broken payloads: the cases where a

@@ -1,4 +1,13 @@
-import duckdb, json, glob, sys
+"""Compare graft.Verify's Spark dumps against the DuckDB oracles.
+
+usage: python3 tools/compare_oracle.py [SF_DIR] [VERIFY_OUT]
+
+Each row prints its status, the DuckDB wall seconds of its oracle query
+and the process's peak RSS so far (ru_maxrss), so a capture that dies
+names its row. Exits 1 unless every row is HASH MATCH or ROWS_ONLY OK
+and every oracle entry has a Spark dump.
+"""
+import duckdb, json, glob, resource, sys, time
 import pandas as pd
 
 d = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
@@ -14,33 +23,41 @@ def canon(df):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
+def peak_mb():
+    # ru_maxrss is in KiB on Linux
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+
+bad = []
+def report(qname, status, duck_s=0.0):
+    print(f'{qname:24s} {status}  duck={duck_s:.2f}s peak_rss={peak_mb():.0f}MB', flush=True)
+    if not (status.endswith('HASH MATCH') or status.endswith('ROWS_ONLY OK')):
+        bad.append(qname)
+
 for name in sorted(glob.glob(f'{out}/*/')):
     qname = name.rstrip('/').split('/')[-1]
     spark_df = pd.read_parquet(name)
     nrows = len(spark_df)
     if qname not in oracle:
-        status = 'ROWS_ONLY ' + ('OK' if nrows > 0 else 'EMPTY!!')
-        print(f'{qname:24s} rows={nrows:7d} {status}')
+        report(qname, f'rows={nrows:7d} ROWS_ONLY ' + ('OK' if nrows > 0 else 'EMPTY!!'))
         continue
+    t0 = time.perf_counter()
     duck_df = con.sql(oracle[qname]).df()
+    duck_s = time.perf_counter() - t0
     s, k = canon(spark_df), canon(duck_df)
-    schema_match = list(s.columns) == list(k.columns)
-    if not schema_match:
-        print(f'{qname:24s} SCHEMA MISMATCH spark={list(s.columns)} duck={list(k.columns)}')
+    if list(s.columns) != list(k.columns):
+        report(qname, f'SCHEMA MISMATCH spark={list(s.columns)} duck={list(k.columns)}', duck_s)
         continue
     if len(s) != len(k):
-        print(f'{qname:24s} ROWCOUNT MISMATCH spark={len(s)} duck={len(k)}')
+        report(qname, f'ROWCOUNT MISMATCH spark={len(s)} duck={len(k)}', duck_s)
         continue
     # value compare (stringified to mimic hashing)
     sa = s.astype(str); ka = k.astype(str)
-    eq = sa.equals(ka)
-    if eq:
-        print(f'{qname:24s} rows={nrows:7d} HASH MATCH')
+    if sa.equals(ka):
+        report(qname, f'rows={nrows:7d} HASH MATCH', duck_s)
     else:
         diff = (sa != ka).any(axis=1)
-        print(f'{qname:24s} VALUE MISMATCH in {diff.sum()} rows; first:')
-        idx = diff[diff].index[:3]
-        for i in idx:
+        report(qname, f'VALUE MISMATCH in {diff.sum()} rows', duck_s)
+        for i in diff[diff].index[:3]:
             print('  spark:', dict(s.loc[i]))
             print('  duck :', dict(k.loc[i]))
 
@@ -48,4 +65,7 @@ for name in sorted(glob.glob(f'{out}/*/')):
 # query's exception) must be loud, not silently skipped
 dumped = {p.rstrip('/').split('/')[-1] for p in glob.glob(f'{out}/*/')}
 for qname in sorted(set(oracle) - dumped):
-    print(f'{qname:24s} MISSING SPARK DUMP (query failed in Verify?)')
+    report(qname, 'MISSING SPARK DUMP (query failed in Verify?)')
+
+print(f'{len(bad)} of {len(dumped | set(oracle))} rows failed' + (': ' + ' '.join(bad) if bad else ''))
+sys.exit(1 if bad else 0)
