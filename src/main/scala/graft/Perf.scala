@@ -436,10 +436,8 @@ object Perf {
     def anchors() = WebGraph.extractAnchors(WebGraph.syntheticWeb(docs, docs.count()))
       .select(col("src"), col("dst"))
     def graph() = {
-      val edges = anchors().filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-      val nodes = edges.select(col("src").as("url"))
-        .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint(true)
-      (edges, nodes)
+      val edges = WebGraph.distinctEdges(anchors()).localCheckpoint(true)
+      (edges, WebGraph.nodeSet(edges).localCheckpoint(true))
     }
     name match {
       case "extract" =>
@@ -450,7 +448,7 @@ object Perf {
         val (edges, nodes) = graph()
         val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")).localCheckpoint(true)
         val ranks0 = nodes.select(col("url"), lit(1000000L).as("pr")).localCheckpoint(true)
-        WebGraph.iterate(edges, outdeg, nodes, ranks0, 49999L)
+        WebGraph.rankRound(edges, outdeg, nodes, ranks0, Seq("pr" -> lit(49999L)))
       case "web_hits_round" =>
         val (edges, nodes) = graph()
         val scores = nodes.select(col("url"), lit(1000L).as("hub"), lit(1000L).as("auth"))
@@ -574,6 +572,9 @@ object Perf {
       col("dst_id").cast("string").as("dst"))
     inv("hitsInt")(e => WebGraph.hitsInt(urls(e), iterations = 3))
     inv("pageRankInt")(e => WebGraph.pageRankInt(urls(e), iterations = 3))
+    val rankSeeds = spark.range(0L, n, 17L).select(col("id").cast("string").as("url"))
+    inv("pageRankSeeded")(e => WebGraph.pageRankSeeded(urls(e), rankSeeds, iterations = 3))
+    inv("spamMass")(e => WebGraph.spamMass(urls(e), rankSeeds, iterations = 3))
     inv("kCore")(e => WebGraph.kCore(urls(e), k = 3))
     lazy val core = WebGraph.kCore(urls(ids), k = 3).as[(String, Long)].collect().toMap
     check("kCore core_deg >= k")(core.nonEmpty && core.values.min >= 3L)
@@ -801,7 +802,10 @@ object Perf {
        "anchor scanner is one MapPartitions over it; edge rows leave the " +
        "stage ready to be written bucketed by src."),
     "web_pagerank_round" ->
-      ("Check: contribution aggregation runs partial_sum BELOW the single " +
+      ("Check: one round of the rank kernel that runs PageRank, TrustRank " +
+       "and spam mass (one global chain here; spam mass adds its seeded " +
+       "chain as a second sum in the SAME aggregate, not a second round). " +
+       "Contribution aggregation runs partial_sum BELOW the single " +
        "hash Exchange on url (map-side combine — the per-iteration shuffle " +
        "moves O(distinct dst per partition), not O(edges)); the src-side " +
        "joins are plain equi-joins over the checkpointed edge/outdeg/rank " +
@@ -857,7 +861,9 @@ object Perf {
        "aggregate), and dedups the rim with a partial-aggregated " +
        "distinct (partial below its Exchange). NO cartesian, nothing " +
        "proportional to |V|x|E|; round cost tracks the newly " +
-       "discovered rim, and the loop exits on first empty frontier."),
+       "discovered rim. There is no per-level barrier: the loop chains " +
+       "all maxDepth levels, and a level after an empty frontier is an " +
+       "empty frame that AQE skips."),
     "web_reciprocity" ->
       ("Check: the reciprocated set is a LeftSemi equi-join on the FULL " +
        "composite (src, dst) key — both sides shuffle on the same key " +
@@ -1209,8 +1215,10 @@ object Perf {
     "text_date_extract" ->
       "Check: scan-local regex projection, zero Exchange.",
     "web_spam_mass" ->
-      ("Check: the two rank fixed points end in checkpointed tables; " +
-       "the composition is ONE url equi-join + codegen long " +
+      ("Check: PageRank and TrustRank run as two columns of ONE rank " +
+       "pass (one node set, one outdeg table, one edge join and one " +
+       "dst aggregate per round); the composition reads the last " +
+       "checkpointed round with NO join, only codegen long " +
        "arithmetic; totals are driver scalars."),
     "dedup_cluster_stats" ->
       ("Check: two partial-agg rollups over the survivors output; " +

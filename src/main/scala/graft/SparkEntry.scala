@@ -1450,8 +1450,9 @@ object SparkEntry {
     }),
     "web_spam_mass" -> ((s, dir) => {
       // link-spam demotion signal (Gyongyi et al.): the share of a
-      // page's PageRank not backed by seed trust — composes the two
-      // integer fixed points, aligns totals exactly, all-long output
+      // page's PageRank not backed by seed trust — both integer fixed
+      // points as columns of one rank pass, totals aligned exactly,
+      // all-long output
       val docs = t(s, dir, "documents")
       val edges = graft.ops.WebGraph.extractAnchors(
         graft.ops.WebGraph.syntheticWeb(docs, docs.count()))
@@ -1517,9 +1518,10 @@ object SparkEntry {
     "web_crawl_depth" -> ((s, dir) => {
       // BFS crawl depth from the mod-29 seed set over the anchor
       // graph (frontier planning: what's reachable within k hops).
-      // Engine = frontier BFS with per-level checkpoints + early
-      // exhaustion exit; oracle = recursive min-over-all-walks CTE —
-      // two independent formulations of shortest hop count.
+      // Engine = frontier BFS with per-level checkpoints, all levels
+      // chained with no per-level barrier; oracle = recursive
+      // min-over-all-walks CTE — two independent formulations of
+      // shortest hop count.
       val docs = t(s, dir, "documents")
       graft.ops.WebGraph.crawlDepth(
         graft.ops.WebGraph.extractAnchors(

@@ -452,9 +452,16 @@ object WebGraph {
         coalesce(col("in_deg"), lit(0L)).as("in_deg"))
   }
 
-  private def distinctEdges(edges: DataFrame): DataFrame =
+  /** The (src, dst) edge set with self-loops dropped and multi-edges
+    * collapsed: the cleanup every rank and degree operator starts from. */
+  private[graft] def distinctEdges(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
+
+  /** Every url of an edge table, once: the union of srcs and dsts. */
+  private[graft] def nodeSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("url"))
+      .union(e.select(col("dst").as("url"))).distinct()
 
   /** Out-in degree-assortativity SUFFICIENT STATISTICS over the
     * directed edge set: per edge (u→v), x = out-degree(u), y =
@@ -594,7 +601,8 @@ object WebGraph {
     * [[pageRankOracleSql]]):
     *  - ranks are Long micro-units at `scale` total initial mass;
     *  - self-loops dropped, multi-edges collapsed (DISTINCT);
-    *  - node set = union of srcs and dsts;
+    *  - node set = union of srcs and dsts; an edge set with no node
+    *    left (none, or self-loops only) is rejected;
     *  - init r0 = scale div n; per iteration each node emits
     *    r div outdeg along every out-edge, and
     *    r' = (15*(scale div n)) div 100 + (85 * sum(in-contribs)) div 100;
@@ -605,67 +613,90 @@ object WebGraph {
     * non-negative operands, and Long sums commute — the result is
     * independent of partitioning, parallelism, and visit order.
     * `scale` must satisfy 85*scale < Long.MaxValue (scale ≤ ~1e17).
-    *
-    * Shape per iteration: one equi-join edges⋈ranks on src (co-located
-    * when both are bucketed by src), one partial-aggregated shuffle on
-    * dst, one left join back to the node set. Lineage is truncated per
-    * round via localCheckpoint — the non-negotiable pattern for
-    * iterative DataFrames. A fixed iteration count with no convergence
-    * test, so not a [[Fixpoint]] loop. */
+    * One global chain of [[rankChains]], which gives the per-round
+    * shape. */
   def pageRankInt(edges: DataFrame, iterations: Int,
-                  scale: Long = 1000000000000L): DataFrame = {
+                  scale: Long = 1000000000000L): DataFrame =
+    rankChains(edges, Seq("pr" -> None), iterations, scale)
+
+  /** The integer power iteration behind [[pageRankInt]],
+    * [[pageRankSeeded]] and [[spamMass]]. Each chain is an output
+    * column and its teleport set: every node (None) or the given seed
+    * urls. All chains share one edge cleanup, one node set and one
+    * out-degree table; each round is ONE [[rankRound]] for all of them
+    * and one checkpoint — several aggregates over one join, LMFAO's
+    * layered-aggregate idea. A chain's arithmetic is the one it would
+    * do alone, so running chains together changes no integer.
+    *
+    * A global chain's init and base are literals; only a seeded chain
+    * joins a flag column onto the node set (once, before the loop).
+    * The node and seed counts are one job. Lazy checkpoints: the round
+    * count is fixed (no convergence test, so not a [[Fixpoint]] loop),
+    * so every round materializes exactly once inside the caller's
+    * action — one job DAG, not `iterations` driver-blocking jobs — and
+    * the edge table's exchange is reused across rounds. */
+  private[graft] def rankChains(edges: DataFrame,
+                                chains: Seq[(String, Option[DataFrame])],
+                                iterations: Int, scale: Long): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(scale > 0 && scale <= Long.MaxValue / 85,
       "scale must keep 85*rank within Long")
-    // LAZY checkpoints: the iteration count is fixed (no per-round
-    // convergence action), so every round still materializes exactly
-    // once — inside ONE job DAG at the final action instead of
-    // `iterations` sequential driver-blocking jobs, and the edge
-    // table's exchange is reused across rounds within that job
-    pageRankIntClean(distinctEdges(edges).localCheckpoint(false),
-      iterations, scale)
-  }
-
-  /** [[pageRankInt]] over an ALREADY-cleaned (self-loop-free,
-    * distinct, checkpointed) edge table — lets composites like
-    * [[spamMass]] run both rank fixed points off ONE materialization
-    * of an expensive edge subtree (round 6; the anchor-extraction
-    * parse ran once per pipeline before). */
-  private[graft] def pageRankIntClean(e: DataFrame, iterations: Int,
-                  scale: Long = 1000000000000L): DataFrame = {
-    val nodes = e.select(col("src").as("url"))
-      .union(e.select(col("dst").as("url"))).distinct()
-      .localCheckpoint(false)
-    val n = nodes.count()
-    val init = scale / n
-    val base = 15L * init / 100L
+    val e = distinctEdges(edges).localCheckpoint(false)
+    val nodes = chains.foldLeft(nodeSet(e)) {
+      case (df, (c, Some(seeds))) =>
+        df.join(seeds.select(col("url")).distinct()
+          .select(col("url"), lit(true).as(s"seed_$c")), Seq("url"), "left")
+      case (df, _) => df
+    }.localCheckpoint(false)
+    val seeded = chains.collect { case (c, Some(_)) => c }
+    val sizes = nodes.agg(count(lit(1)),
+      seeded.map(c => count(col(s"seed_$c"))): _*).collect()(0)
+    val n = sizes.getLong(0)
+    require(n > 0,
+      "rankChains: empty edge set (no nodes to rank once self-loops are dropped)")
+    // per chain: initial rank and per-round teleport base, over `nodes`
+    val teleports = chains.map { case (c, seeds) =>
+      if (seeds.isEmpty) {
+        val init = scale / n
+        (c, lit(init), lit(15L * init / 100L))
+      } else {
+        val nS = sizes.getLong(1 + seeded.indexOf(c))
+        require(nS > 0, "no seed url is present in the edge set's node universe")
+        val init = scale / nS
+        val isSeed = col(s"seed_$c").isNotNull
+        (c, when(isSeed, lit(init)).otherwise(lit(0L)),
+          when(isSeed, lit(15L * init / 100L)).otherwise(lit(0L)))
+      }
+    }
     val outdeg = e.groupBy(col("src"))
       .agg(count(lit(1)).as("outdeg")).localCheckpoint(false)
-    var ranks = nodes.select(col("url"), lit(init).as("pr"))
-    var i = 0
-    while (i < iterations) {
-      ranks = iterate(e, outdeg, nodes, ranks, base).localCheckpoint(false)
-      i += 1
-    }
+    val bases = teleports.map { case (c, _, base) => c -> base }
+    var ranks = nodes.select(
+      col("url") +: teleports.map { case (c, init, _) => init.as(c) }: _*)
+    for (_ <- 1 to iterations)
+      ranks = rankRound(e, outdeg, nodes, ranks, bases).localCheckpoint(false)
     ranks
   }
 
-  /** One PageRank round (pre-checkpoint plan — exposed so `Perf plans`
-    * can audit the per-iteration shape): edges⋈ranks⋈outdeg on src, a
-    * partial-aggregated shuffle on dst, left join back to the node
-    * set. */
-  private[graft] def iterate(e: DataFrame, outdeg: DataFrame,
-                             nodes: DataFrame, ranks: DataFrame,
-                             base: Long): DataFrame = {
+  /** One [[rankChains]] round before its checkpoint (exposed so `Perf
+    * plans` can audit the per-iteration shape): edges⋈ranks⋈outdeg on
+    * src, ONE partial-aggregated shuffle on dst summing every chain's
+    * `rank div outdeg`, one left join back to the node set, then per
+    * chain r' = base + (85 * Σ contribs) div 100. `bases` pairs each
+    * rank column of `ranks` with its teleport base over `nodes`. */
+  private[graft] def rankRound(e: DataFrame, outdeg: DataFrame,
+                               nodes: DataFrame, ranks: DataFrame,
+                               bases: Seq[(String, Column)]): DataFrame = {
+    val sums = bases.map { case (c, _) => sum(col(s"c_$c")).as(s"contrib_$c") }
     val contribs = e
       .join(ranks.withColumnRenamed("url", "src"), Seq("src"))
       .join(outdeg, Seq("src"))
-      .select(col("dst").as("url"), expr("pr div outdeg").as("c"))
-      .groupBy(col("url")).agg(sum(col("c")).as("contrib"))
+      .select(col("dst").as("url") +:
+        bases.map { case (c, _) => expr(s"$c div outdeg").as(s"c_$c") }: _*)
+      .groupBy(col("url")).agg(sums.head, sums.tail: _*)
     nodes.join(contribs, Seq("url"), "left")
-      .select(col("url"),
-        (lit(base) +
-          expr("(85 * coalesce(contrib, 0L)) div 100")).as("pr"))
+      .select(col("url") +: bases.map { case (c, base) =>
+        (base + expr(s"(85 * coalesce(contrib_$c, 0L)) div 100")).as(c) }: _*)
   }
 
   /** DuckDB replica of [[pageRankInt]] as flat CTE stages (the
@@ -723,90 +754,37 @@ object WebGraph {
     * With seeds == the full node universe this reduces term-for-term
     * to [[pageRankInt]] (asserted in WebGraphSpec). All arithmetic is
     * truncating Long division + commutative Long sums → bit-exact at
-    * any parallelism. Per-iteration shape matches [[pageRankInt]] plus
-    * one broadcast-sized left join against the seed flag. */
+    * any parallelism. One seeded chain of [[rankChains]]: the
+    * [[pageRankInt]] round shape plus one seed-flag join before the
+    * loop. */
   def pageRankSeeded(edges: DataFrame, seeds: DataFrame, iterations: Int,
-                     scale: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(scale > 0 && scale <= Long.MaxValue / 85,
-      "scale must keep 85*rank within Long")
-    // LAZY checkpoints — the pageRankInt argument verbatim
-    pageRankSeededClean(distinctEdges(edges).localCheckpoint(false),
-      seeds, iterations, scale)
-  }
-
-  /** [[pageRankSeeded]] over an already-cleaned edge table — see
-    * [[pageRankIntClean]]. */
-  private[graft] def pageRankSeededClean(e: DataFrame, seeds: DataFrame,
-                     iterations: Int,
-                     scale: Long = 1000000000000L): DataFrame = {
-    val nodes = e.select(col("src").as("url"))
-      .union(e.select(col("dst").as("url"))).distinct()
-      .localCheckpoint(false)
-    val sd = seeds.select(col("url")).distinct()
-      .join(nodes, Seq("url")).localCheckpoint(false)
-    val nS = sd.count()
-    require(nS > 0, "no seed url is present in the edge set's node universe")
-    val init = scale / nS
-    val base = 15L * init / 100L
-    // seed flag joined once; the per-iteration base is a column, not a
-    // constant — otherwise identical to the global kernel's iterate()
-    val flagged = nodes
-      .join(sd.select(col("url"), lit(true).as("is_seed")), Seq("url"), "left")
-      .select(col("url"),
-        when(col("is_seed"), lit(base)).otherwise(lit(0L)).as("base"),
-        when(col("is_seed"), lit(init)).otherwise(lit(0L)).as("init"))
-      .localCheckpoint(false)
-    val outdeg = e.groupBy(col("src"))
-      .agg(count(lit(1)).as("outdeg")).localCheckpoint(false)
-    var ranks = flagged.select(col("url"), col("init").as("trust"))
-    var i = 0
-    while (i < iterations) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("url", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("url"), expr("trust div outdeg").as("c"))
-        .groupBy(col("url")).agg(sum(col("c")).as("contrib"))
-      ranks = flagged.join(contribs, Seq("url"), "left")
-        .select(col("url"),
-          (col("base") +
-            expr("(85 * coalesce(contrib, 0L)) div 100")).as("trust"))
-        .localCheckpoint(false)
-      i += 1
-    }
-    ranks
-  }
+                     scale: Long = 1000000000000L): DataFrame =
+    rankChains(edges, Seq("trust" -> Some(seeds)), iterations, scale)
 
   /** Spam-mass census (Gyöngyi/Garcia-Molina/Pedersen): the share of
     * a page's PageRank that does NOT come with trust — pages whose
     * rank is boosted by link spam score high, trusted-neighborhood
-    * pages score ~0. Composes the two existing integer fixed points
-    * ([[pageRankInt]] global teleport, [[pageRankSeeded]] seed-only
-    * teleport), aligns their totals exactly, and reports
+    * pages score ~0. Runs the [[pageRankInt]] global chain and the
+    * [[pageRankSeeded]] seed-only chain as two columns of ONE
+    * [[rankChains]] pass, aligns their totals exactly, and reports
     * spam_mass_permille = (p·Tt − t·Tp)·1000 div (p·Tt) floored at 0
     * — where p/t are the ranks down-scaled by `div` so every product
     * stays within long (p ≤ scale/div = 10^7, Tt ≤ 10^7, product
     * ≤ 10^14, ·1000 ≤ 10^17). All-integer; the floors are identical
     * both engines.
     *
-    * Scale shape: two existing rank pipelines + ONE url equi-join;
-    * totals are driver scalars over the checkpointed join. */
+    * Scale shape: one rank pass for both chains (no join of two rank
+    * tables); totals are driver scalars over its checkpointed last
+    * round. */
   def spamMass(edges: DataFrame, seeds: DataFrame, iterations: Int = 5,
                div: Long = 100000L): DataFrame = {
-    // ONE edge cleanup shared by both fixed points (round 6): the
-    // caller's edge subtree (typically an HTML anchor-extraction
-    // parse) materializes once; distinctEdges is idempotent, so the
-    // cleaned set handed to both kernels is exactly what each computed
-    // for itself before — bit-identical ranks.
-    val e = distinctEdges(edges).localCheckpoint(false)
-    val pr = pageRankIntClean(e, iterations)
-      .select(col("url"), col("pr"), expr(s"pr div ${div}L").as("p"))
-    val tr = pageRankSeededClean(e, seeds, iterations)
-      .select(col("url"), col("trust"), expr(s"trust div ${div}L").as("t"))
-    val joined = pr.join(tr, Seq("url")).localCheckpoint(false)
-    val tot = joined.agg(sum(col("p")), sum(col("t"))).collect()(0)
+    val ranks = rankChains(edges, Seq("pr" -> None, "trust" -> Some(seeds)),
+      iterations, 1000000000000L)
+      .select(col("url"), col("pr"), col("trust"),
+        expr(s"pr div ${div}L").as("p"), expr(s"trust div ${div}L").as("t"))
+    val tot = ranks.agg(sum(col("p")), sum(col("t"))).collect()(0)
     val (tp, tt) = (tot.getLong(0), tot.getLong(1))
-    joined.select(col("url"), col("pr"), col("trust"),
+    ranks.select(col("url"), col("pr"), col("trust"),
       expr(s"CASE WHEN p = 0 OR p * ${tt}L <= t * ${tp}L THEN 0L " +
         s"ELSE (p * ${tt}L - t * ${tp}L) * 1000 div (p * ${tt}L) END")
         .as("spam_mass_permille"))
@@ -980,10 +958,8 @@ object WebGraph {
                       driverSolveMaxEdges: Long = 200000L): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
-    val verts = e.select(col("src").as("url"))
-      .union(e.select(col("dst").as("url"))).distinct()
     val ids = spark.createDataFrame(
-      verts.orderBy("url").select("url").rdd
+      nodeSet(e).orderBy("url").select("url").rdd
         .map(_.getString(0)).zipWithIndex()
     ).toDF("url", "id").localCheckpoint(false)
     val pairs = e
@@ -1066,8 +1042,7 @@ object WebGraph {
     // checkpoint the deduped edge set: it feeds BOTH the total rollup
     // and both sides of the semi-join — without the barrier the whole
     // upstream (anchor extraction at corpus scale) runs three times
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(false)
+    val e = distinctEdges(edges).localCheckpoint(false)
     val recip = e.join(
       e.select(col("dst").as("src"), col("src").as("dst")),
       Seq("src", "dst"), "left_semi")
@@ -1246,21 +1221,22 @@ object WebGraph {
     * in/out-degrees of ~900 at web scale; the require below enforces
     * the caller's stated bound.
     *
-    * Shape per iteration (same as [[pageRankInt]]): two equi-joins
-    * edges⋈scores and two partial-aggregated shuffles, plus a 1-row
-    * broadcast for each L1 sum; lineage truncated per round via
-    * localCheckpoint; not a [[Fixpoint]] loop, as for [[pageRankInt]]. */
+    * Shape per iteration: two equi-joins edges⋈scores and two
+    * partial-aggregated shuffles, plus a 1-row broadcast for each L1
+    * sum; lineage truncated per round via localCheckpoint; not a
+    * [[Fixpoint]] loop, as for [[rankChains]]. HITS keeps its own loop
+    * rather than being two [[rankChains]] columns: a round's authority
+    * update reads that SAME round's fresh hubs, so the two scores
+    * cannot be summed side by side in one pass over the edges. */
   def hitsInt(edges: DataFrame, iterations: Int,
               scale: Long = 100000000L, maxDegree: Long = 900L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(scale > 0 && maxDegree > 0 &&
       scale <= Long.MaxValue / scale / maxDegree,
       "scale must keep maxDegree*scale^2 within Long")
-    // LAZY checkpoints — the pageRankInt argument verbatim
+    // LAZY checkpoints — the rankChains argument verbatim
     val e = distinctEdges(edges).localCheckpoint(false)
-    val nodes = e.select(col("src").as("url"))
-      .union(e.select(col("dst").as("url"))).distinct()
-      .localCheckpoint(false)
+    val nodes = nodeSet(e).localCheckpoint(false)
     val n = nodes.count()
     require(n > 0, "hitsInt: empty edge set (no nodes to score)")
     val init = scale / n
@@ -1300,20 +1276,6 @@ object WebGraph {
       .join(auth, Seq("url"), "left")
       .select(col("url"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
-  }
-
-  /** L1-renormalize a sparse (url, raw) score table onto the full node
-    * set: s = raw * scale div Σ raw (0 when the table is empty). The
-    * Σ is a 1-row aggregate cross-joined in — a broadcast, never a
-    * shuffle of the node table. */
-  private def renormL1(nodes: DataFrame, raw: DataFrame,
-                       scale: Long): DataFrame = {
-    val tot = raw.agg(sum(col("raw")).as("tot"))
-    nodes.join(raw, Seq("url"), "left").crossJoin(broadcast(tot))
-      .select(col("url"),
-        when(col("tot").isNull || col("tot") === 0L, lit(0L))
-          .otherwise(expr(s"(coalesce(raw, 0L) * ${scale}L) div tot"))
-          .as("s"))
   }
 
   /** DuckDB replica of [[hitsInt]] as flat unrolled CTE stages —
@@ -2570,10 +2532,8 @@ object WebGraph {
     // the bfs joins for `ids`), so the eager variants only added
     // sequential blocking jobs. `e` persists on first compute and is
     // reused by the BFS, both orderings and the node set.
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(false)
-    val nodes = e.select(col("src").as("url"))
-      .union(e.select(col("dst").as("url"))).distinct()
+    val e = distinctEdges(edges).localCheckpoint(false)
+    val nodes = nodeSet(e)
     val depths = crawlDepth(e, seeds, maxDepth)
     val keyed = nodes.join(depths, Seq("url"), "left")
       .select(col("url"),

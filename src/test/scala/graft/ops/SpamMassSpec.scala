@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the arithmetic matches an independent JVM composition of the
   *    two collected rank tables (the components carry their own
   *    oracles);
-  *  - bounds: 0 ≤ spam_mass_permille ≤ 1000 everywhere.
+  *  - bounds: 0 ≤ spam_mass_permille ≤ 1000 everywhere;
+  *  - the two chains share one pass: fewer Spark jobs than the two
+  *    ranks run one after the other.
   */
 class SpamMassSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -27,17 +29,20 @@ class SpamMassSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("planted farm vs trusted ring, JVM replication, bounds") {
+  /** A trusted ring t0->t1->t2->t0 (seeded at t0) plus a spam farm
+    * f0..f3 all linking each other, with no path from the ring. */
+  private def planted(): (DataFrame, DataFrame) = {
     val s = spark
     import s.implicits._
-    // trusted ring t0->t1->t2->t0 (seeded at t0) + spam farm
-    // f0..f3 all linking each other, no path from the ring
     val ring = Seq(("t0", "t1"), ("t1", "t2"), ("t2", "t0"))
     val farm = for {
       i <- 0 until 4; j <- 0 until 4 if i != j
     } yield (s"f$i", s"f$j")
-    val edges = (ring ++ farm).toDF("src", "dst")
-    val seeds = Seq("t0").toDF("url")
+    ((ring ++ farm).toDF("src", "dst"), Seq("t0").toDF("url"))
+  }
+
+  test("planted farm vs trusted ring, JVM replication, bounds") {
+    val (edges, seeds) = planted()
     val rows = WebGraph.spamMass(edges, seeds).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
@@ -65,5 +70,15 @@ class SpamMassSpec extends AnyFunSuite with BeforeAndAfterAll {
         else (p * tt - t * tp) * 1000 / (p * tt)
       assert(m == exp, u)
     }
+  }
+
+  test("both rank chains run in one pass: fewer jobs than the two ranks run apart") {
+    val (edges, seeds) = planted()
+    val sc = spark.sparkContext
+    val (_, both) = graft.SparkJobs.during(sc)(WebGraph.spamMass(edges, seeds).collect())
+    val (_, pr) = graft.SparkJobs.during(sc)(WebGraph.pageRankInt(edges, 5).collect())
+    val (_, tr) = graft.SparkJobs.during(sc)(
+      WebGraph.pageRankSeeded(edges, seeds, 5).collect())
+    assert(both < pr + tr, s"spamMass ran $both jobs; pageRankInt $pr + pageRankSeeded $tr")
   }
 }

@@ -237,6 +237,20 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seeded16 == seeded)
   }
 
+  test("rank kernels reject an edge set whose every edge is a self-loop") {
+    // a host graph with intra-host links only: no node survives cleanup
+    val sp = spark; import sp.implicits._
+    val e = edgeDf(Seq(("h1.example", "h1.example"), ("h2.example", "h2.example")))
+    val seeds = Seq("h1.example").toDF("url")
+    Seq[() => DataFrame](
+      () => WebGraph.pageRankInt(e, 1),
+      () => WebGraph.pageRankSeeded(e, seeds, 1),
+      () => WebGraph.spamMass(e, seeds, 1)).foreach { run =>
+      val err = intercept[IllegalArgumentException](run().collect())
+      assert(err.getMessage.contains("empty edge set"), err.getMessage)
+    }
+  }
+
   test("coCitation: hand-computed counts, dup edges/self-loops dropped, cap binds") {
     // S1→{A,B,C}, S2→{A,B} (A twice), S3→{A,B}, H→{A,B,C,D};
     // self-loop A→A ignored. With maxOutDegree=3, H (degree 4) is out:

@@ -6,8 +6,12 @@ Each row prints its status, the DuckDB wall seconds of its oracle query
 and the process's peak RSS so far (ru_maxrss), so a capture that dies
 names its row. Exits 1 unless every row is HASH MATCH or ROWS_ONLY OK
 and every oracle entry has a Spark dump.
+
+SPARK_GRAFT_VERIFY_ONLY (comma-separated query names), read as
+graft.Verify reads it, restricts the compare to those rows: a subset
+Verify run is checked against the oracles of that subset only.
 """
-import duckdb, json, glob, resource, sys, time
+import duckdb, json, glob, os, resource, sys, time
 import pandas as pd
 
 d = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
@@ -17,6 +21,12 @@ for t in ['region','nation','customer','supplier','part','orders','lineitem','ev
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
 
 oracle = json.load(open(f'{out}/oracle_sql.json'))
+dumped = [p.rstrip('/').split('/')[-1] for p in sorted(glob.glob(f'{out}/*/'))]
+only = os.environ.get('SPARK_GRAFT_VERIFY_ONLY')
+if only is not None:
+    only = {n.strip() for n in only.split(',') if n.strip()}
+    oracle = {k: v for k, v in oracle.items() if k in only}
+    dumped = [n for n in dumped if n in only]
 
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -33,9 +43,8 @@ def report(qname, status, duck_s=0.0):
     if not (status.endswith('HASH MATCH') or status.endswith('ROWS_ONLY OK')):
         bad.append(qname)
 
-for name in sorted(glob.glob(f'{out}/*/')):
-    qname = name.rstrip('/').split('/')[-1]
-    spark_df = pd.read_parquet(name)
+for qname in dumped:
+    spark_df = pd.read_parquet(f'{out}/{qname}')
     nrows = len(spark_df)
     if qname not in oracle:
         report(qname, f'rows={nrows:7d} ROWS_ONLY ' + ('OK' if nrows > 0 else 'EMPTY!!'))
@@ -63,9 +72,8 @@ for name in sorted(glob.glob(f'{out}/*/')):
 
 # oracle entries whose Spark dump is MISSING (Verify swallowed the
 # query's exception) must be loud, not silently skipped
-dumped = {p.rstrip('/').split('/')[-1] for p in glob.glob(f'{out}/*/')}
-for qname in sorted(set(oracle) - dumped):
+for qname in sorted(set(oracle) - set(dumped)):
     report(qname, 'MISSING SPARK DUMP (query failed in Verify?)')
 
-print(f'{len(bad)} of {len(dumped | set(oracle))} rows failed' + (': ' + ' '.join(bad) if bad else ''))
+print(f'{len(bad)} of {len(set(dumped) | set(oracle))} rows failed' + (': ' + ' '.join(bad) if bad else ''))
 sys.exit(1 if bad else 0)
