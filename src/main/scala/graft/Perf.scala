@@ -196,8 +196,9 @@ object Perf {
       "docs_per_cpu_sec" -> nDocs / xs.map(_.cpu).min) ++ summary(xs).fields
   }
 
-  /** Scaling efficiency: the same extraction over the same parquet
-    * corpus at local[n] and local[4n], each pass in a fresh session,
+  /** Scaling efficiency: the same extraction over the same bucketed
+    * pages table, read as `ExtractMain` reads it (`readBucketed`), at
+    * local[n] and local[4n], each pass in a fresh session,
     * widths alternating; efficiency = (docs/s at 4n) / (docs/s at n) / 4.
     * The corpus is written and the JIT warmed (two full passes) on
     * `spark`, which is then stopped. */
@@ -206,14 +207,14 @@ object Perf {
     val n = num(args, 2, math.max(1, cores / 4)).toInt
     val dir = "target/perf/scaling-corpus"
     PagesGen.writeBucketed(PagesGen.benchCorpus(spark, nDocs, 42L, 64, corpus), dir, nBuckets = 64)
-    ExtractJob.extract(spark.read.parquet(dir)).count()
-    ExtractJob.extract(spark.read.parquet(dir)).count()
+    ExtractJob.extract(PagesGen.readBucketed(spark, dir)).count()
+    ExtractJob.extract(PagesGen.readBucketed(spark, dir)).count()
     spark.stop()
     val rows = mutable.Set.empty[Long]
     def at(width: Int): () => Sample = () => {
       val s = session(width)
       try {
-        val pages = s.read.parquet(dir)
+        val pages = PagesGen.readBucketed(s, dir)
         time(s)(rows += ExtractJob.extract(pages).count())
       } finally { s.stop(); System.gc() }
     }
@@ -368,9 +369,11 @@ object Perf {
     args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
   /** SparkEntry queries timed as `graft.Bench` times them: round-robin
-    * rounds, `fn(spark, sfDir).count()`, per-query min, cache cleared
-    * between rounds. A query that throws is dropped from later rounds
-    * and reported with its error instead of a time. */
+    * rounds, `fn(spark, sfDir).count()`, per-query min and median, cache
+    * cleared between rounds. An untimed round runs each query once first,
+    * so the timed rounds start past JIT warm-up. A query that throws is
+    * dropped from later rounds and reported with its error instead of a
+    * time. */
   private def queries(spark: SparkSession, args: Seq[String], sfDir: String): Seq[(String, Any)] = {
     val names = queryNames(args)
     require(names.nonEmpty, "pass query names: queries q1,q2")
@@ -380,22 +383,23 @@ object Perf {
     ExtractJob.extract(PagesGen.generate(spark, 64, 1L, 4).toDF(), ExtractJob.Config(salt = false)).count()
     val samples = mutable.Map.empty[String, Vector[Sample]].withDefaultValue(Vector.empty)
     val errors = mutable.Map.empty[String, String]
-    for (round <- 1 to rounds) {
+    for (round <- 0 to rounds) {
       for (name <- names if !errors.contains(name)) {
         try {
           val fn = SparkEntry.queries.getOrElse(name,
             throw new NoSuchElementException(s"unknown query $name"))
-          samples(name) :+= time(spark)(fn(spark, sfDir).count())
+          val sample = time(spark)(fn(spark, sfDir).count())
+          if (round > 0) samples(name) :+= sample
         } catch { case NonFatal(e) => errors(name) = e.toString }
       }
       spark.catalog.clearCache()
-      System.err.println(s"[perf] queries round $round/$rounds done")
+      System.err.println(s"[perf] queries round $round/$rounds done" + (if (round == 0) " (warm-up)" else ""))
     }
     val per = names.map { n =>
       n -> errors.get(n).map(e => Obj("error" -> e)).getOrElse {
         val best = samples(n).minBy(_.wall)
-        Obj("wall_s" -> best.wall, "jobs" -> best.jobs, "stages" -> best.stages,
-          "samples" -> samples(n).map(_.wall))
+        Obj("wall_s" -> best.wall, "median_s" -> median(samples(n).map(_.wall)), "jobs" -> best.jobs,
+          "stages" -> best.stages, "samples" -> samples(n).map(_.wall))
       }
     }
     val failed = names.filter(errors.contains)
@@ -443,7 +447,7 @@ object Perf {
       case "extract" =>
         val dir = "target/perf/plan-pages"
         PagesGen.writeBucketed(PagesGen.generate(spark, 200, 42L, 4), dir, 8)
-        ExtractJob.extract(spark.read.parquet(dir)).toDF()
+        ExtractJob.extract(PagesGen.readBucketed(spark, dir)).toDF()
       case "web_pagerank_round" =>
         val (edges, nodes) = graph()
         val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")).localCheckpoint(true)
@@ -646,11 +650,12 @@ object Perf {
     * plan must show, and why. */
   private val planNotes: Seq[(String, String)] = Seq(
     "extract" ->
-      ("Check: ReadSchema lists only url+html; normal tier has NO Exchange; " +
-       "heavy tier goes through one hash Exchange on __salt. Each tier's MapPartitions " +
-       "runs ExtractPartitions(markdown=true, html=true): this plan reads every column, " +
-       "so both flags stay on; a plan that drops markdown or html shows that flag false " +
-       "(ExtractJob.PruneOutputs)."),
+      ("Check: ReadSchema lists only url+html; NO Exchange anywhere: the table's " +
+       "manifest bounds every payload at or below heavyThresholdBytes, so extract plans " +
+       "the normal tier alone (an input without that bound adds a heavy tier through one " +
+       "hash Exchange on __salt). The MapPartitions runs ExtractPartitions(markdown=true, " +
+       "html=true): this plan reads every column, so both flags stay on; a plan that drops " +
+       "markdown or html shows that flag false (ExtractJob.PruneOutputs)."),
     "q2_join_broadcast" ->
       "Check: BroadcastHashJoin with BuildRight on customer (dim side), no SortMergeJoin.",
     "q3_antijoin" ->

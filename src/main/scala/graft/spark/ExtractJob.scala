@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, MapPartitions, Project, SerializeFromObject}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.html.BoilerplateStripper
 import graft.pdf.{Outputs, PdfExtractor}
@@ -14,7 +15,8 @@ import graft.pdf.{Outputs, PdfExtractor}
 /** The production job shape (SURVEY §3.3): pages table → per-row
   * extraction inside `mapPartitions` → Dataset[ExtractedDoc] + the
   * checkpoint/lineage table. Zero shuffles on the hot path unless skew
-  * salting is enabled (then exactly one, to spread oversized binaries).
+  * salting is enabled and a row may be heavy (then exactly one, to
+  * spread oversized binaries).
   */
 object ExtractJob {
 
@@ -50,6 +52,16 @@ object ExtractJob {
     * AQE's size-based coalescing would squeeze it into a couple of
     * 64MB partitions, idling the cluster.
     *
+    * When no row can be heavy, there is no heavy tier: if `pages` reads
+    * its `html` from manifested pages tables (`PagesGen.writeBucketed`)
+    * whose recorded largest payload is at most heavyThresholdBytes,
+    * [[PagesManifest.htmlBound]] proves it from the analyzed plan and
+    * the normal tier is the whole plan, with no Exchange. Any other
+    * input (no manifest, files the manifest does not name, an `html`
+    * computed by an expression, a Union with an unbounded child) keeps
+    * both tiers. The tiers never change output bytes, so a stale bound
+    * could only cost balance.
+    *
     * Markdown and html are built only when the query reads them: the
     * per-partition function is an [[ExtractPartitions]], and
     * [[PruneOutputs]], registered here on the session, clears the
@@ -65,13 +77,16 @@ object ExtractJob {
     else {
       val heavyPred = length(col("html")) > cfg.heavyThresholdBytes
       val normal = toDocs(pruned.filter(!heavyPred))
-      val nPart = math.max(spark.sparkContext.defaultParallelism * 2, 16)
-      val heavy = toDocs(
-        pruned.filter(heavyPred)
-          .withColumn("__salt", pmod(xxhash64(col("url"), lit(1)), lit(cfg.heavySaltBuckets)))
-          .repartition(nPart, col("__salt"))
-          .drop("__salt"))
-      normal.unionAll(heavy)
+      if (PagesManifest.htmlBound(pruned).exists(_ <= cfg.heavyThresholdBytes)) normal
+      else {
+        val nPart = math.max(spark.sparkContext.defaultParallelism * 2, 16)
+        val heavy = toDocs(
+          pruned.filter(heavyPred)
+            .withColumn("__salt", pmod(xxhash64(col("url"), lit(1)), lit(cfg.heavySaltBuckets)))
+            .repartition(nPart, col("__salt"))
+            .drop("__salt"))
+        normal.unionAll(heavy)
+      }
     }
   }
 
@@ -630,12 +645,20 @@ object ExtractJob {
         s"found ${owner.getOrElse("<missing>")} — aborting commit to avoid double ownership")
   }
 
-  /** Committed output: plain parquet read of outDir (run=attempt /
-    * bucket=n partition dirs). Staging lives outside outDir, and each
-    * url is checkpoint-owned by exactly one attempt, so this is
-    * duplicate-free WITHOUT any reader-side dedup. */
+  /** The committed output's schema: what [[stage]] writes ([[ExtractedDoc]]
+    * without `n_bytes` and `partition_id`), then the `run` and `bucket`
+    * partition columns. */
+  private lazy val outputSchema = StructType(
+    Encoders.product[ExtractedDoc].schema.filterNot(f => f.name == "n_bytes" || f.name == "partition_id"))
+    .add("run", StringType).add("bucket", IntegerType)
+
+  /** Committed output: parquet read of outDir (run=attempt / bucket=n
+    * partition dirs) with [[outputSchema]], so no schema-inference job.
+    * Staging lives outside outDir, and each url is checkpoint-owned by
+    * exactly one attempt, so this is duplicate-free WITHOUT any
+    * reader-side dedup. */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", outDir).parquet(outDir)
+    spark.read.schema(outputSchema).option("basePath", outDir).parquet(outDir)
 
   private def publish(spark: SparkSession, staged: String, outDir: String,
                       attempt: String, failRename: Boolean = false): Unit = {

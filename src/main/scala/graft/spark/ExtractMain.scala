@@ -8,11 +8,15 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.spark.ExtractMain app.jar \
   *     <pagesDir> <outDir> <checkpointDir> <runId> [oversizeCapMB]
   *
-  * Reads the bucketed pages table, resumes past checkpointed urls,
-  * extracts (scan-local normal tier + salted heavy tier), appends the
-  * bucketed output + per-partition lineage, prints a one-line JSON
-  * report. Re-running after a kill is idempotent by url. No master is
-  * hardcoded — spark-submit supplies cluster config.
+  * Reads the bucketed pages table with its known schema
+  * (`PagesGen.readBucketed`, no inference job), resumes past
+  * checkpointed urls, extracts, appends the bucketed output +
+  * per-partition lineage, prints a one-line JSON report. Extraction is
+  * the scan-local normal tier, plus the salted heavy tier unless the
+  * table's manifest (`PagesGen.writeBucketed`) bounds every payload at
+  * or below the heavy threshold. Re-running after a kill is idempotent
+  * by url. No master is hardcoded — spark-submit supplies cluster
+  * config.
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
@@ -30,7 +34,7 @@ object ExtractMain {
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val report = ExtractJob.runWithCheckpoint(
-      spark, spark.read.parquet(pagesDir), outDir, ckptDir, runId,
+      spark, PagesGen.readBucketed(spark, pagesDir), outDir, ckptDir, runId,
       ExtractJob.Config(oversizeCapBytes = capMb * 1024 * 1024))
     val dt = (System.nanoTime() - t0) / 1e9
     println(

@@ -1,7 +1,8 @@
 package graft.spark
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.pdf.testgen.PdfBuilder
 import graft.pdf.testgen.PdfBuilder.Line
 
@@ -558,18 +559,29 @@ object PagesGen {
   }
 
   /** Write as the Iceberg-emulated bucketed parquet layout:
-    * directory-partitioned by bucket = pmod(xxhash64(url), nBuckets).
-    * (No Iceberg jars in this sandbox — SURVEY preamble.) */
+    * directory-partitioned by bucket = pmod(xxhash64(url), nBuckets),
+    * with a [[PagesManifest]] of the files written and their largest
+    * `html` payload. The payload maximum is an observed metric of the
+    * write: no extra job. (Iceberg itself is not a dependency — SURVEY
+    * preamble.) */
   def writeBucketed(pages: Dataset[PageRow], path: String, nBuckets: Int = 32): Unit = {
     import org.apache.spark.sql.functions._
+    val obs = Observation()
     // repartition on the bucket key first: exactly one file per bucket
     // directory (otherwise every writer task sprays one tiny file into
     // every bucket — a small-file explosion that kills scan scheduling)
     pages.withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
       .repartition(nBuckets, col("bucket"))
+      .observe(obs, coalesce(max(length(col("html"))), lit(0)).as("max_html_bytes"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    PagesManifest.write(pages.sparkSession, path, obs.get("max_html_bytes").asInstanceOf[Int].toLong)
   }
 
+  /** The pages table's schema as `writeBucketed` leaves it: [[PageRow]]'s
+    * fields, then the `bucket` partition column. */
+  private lazy val bucketedSchema: StructType = Encoders.product[PageRow].schema.add("bucket", IntegerType)
+
+  /** Reads with [[bucketedSchema]]: no schema-inference job. */
   def readBucketed(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(bucketedSchema).parquet(path)
 }

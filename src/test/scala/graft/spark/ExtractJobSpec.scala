@@ -644,6 +644,25 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ExtractJob.readOutput(spark, outDir).select("url").distinct().count() == 120)
   }
 
+  test("commit path over a manifested pages table: 2 / 3 / 2 jobs for first run, resume, no-op") {
+    // the table's manifest bounds every payload below the heavy
+    // threshold, so no run plans the heavy tier's shuffle stage
+    val dir = Files.createTempDirectory("graft-ckpt-manifest").toString
+    val (outDir, ckptDir) = (s"$dir/extracted", s"$dir/checkpoint")
+    PagesGen.writeBucketed(PagesGen.generateMixed(spark, 120, 5L, 4), s"$dir/pages", 4)
+    val pages = PagesGen.readBucketed(spark, s"$dir/pages")
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val isNew = pmod(xxhash64(col("url")), lit(4)) === 0
+    val (r1, firstJobs) = jobsDuring(
+      ExtractJob.runWithCheckpoint(spark, pages.filter(!isNew), outDir, ckptDir, "first", nBuckets = 4))
+    val (r2, resumeJobs) = jobsDuring(
+      ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "resume", nBuckets = 4))
+    val (r3, noopJobs) = jobsDuring(
+      ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "noop", nBuckets = 4))
+    assert(r1.attempted + r2.attempted == 120 && r3.attempted == 0)
+    assert((firstJobs, resumeJobs, noopJobs) == (2, 3, 2))
+  }
+
   test("status counts from an empty staging write: every empty input reports zero, none blocks") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
