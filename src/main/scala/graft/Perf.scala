@@ -30,7 +30,7 @@ import graft.spark.{ExtractJob, PageRow, PagesGen}
   *
   * Usage: runMain graft.Perf <subcommand> [args]
   *   cpu [nDocs] [passes]             CPU s per extraction pass, bench corpus
-  *   scaling [nDocs] [outJson] [n]    docs/s at local[n] vs local[4n] (n = cores/4)
+  *   scaling [nDocs] [outJson] [n] [rounds]   docs/s at local[n] vs local[4n] (n = cores/4)
   *   ab dedup|fontcache|salt [nDocs] [rounds]   interleaved two-arm A/B
   *   large [nDocs] [pagesPerDoc]      MB/s on multi-hundred-page PDFs
   *   kernel [reps]                    single-thread, Spark-free ns/doc per kind
@@ -149,6 +149,14 @@ object Perf {
     if (s.length % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
   }
 
+  /** The q-quantile of `xs`, interpolating linearly between ranks. */
+  private def quantile(xs: Seq[Double], q: Double): Double = {
+    val s = xs.sorted
+    val r = q * (s.length - 1)
+    val lo = r.toInt
+    s(lo) + (r - lo) * (s(math.min(lo + 1, s.length - 1)) - s(lo))
+  }
+
   private def stats(xs: Seq[Double]): Obj =
     Obj("min" -> xs.min, "median" -> median(xs), "samples" -> xs)
 
@@ -199,12 +207,17 @@ object Perf {
   /** Scaling efficiency: the same extraction over the same bucketed
     * pages table, read as `ExtractMain` reads it (`readBucketed`), at
     * local[n] and local[4n], each pass in a fresh session,
-    * widths alternating; efficiency = (docs/s at 4n) / (docs/s at n) / 4.
-    * The corpus is written and the JIT warmed (two full passes) on
-    * `spark`, which is then stopped. */
+    * widths alternating for `rounds` rounds (default 3); efficiency =
+    * (docs/s at 4n) / (docs/s at n) / 4, from each width's min wall.
+    * Beside it, each round's paired efficiency (that round's local[n]
+    * wall / local[4n] wall / 4) with their median and IQR: a noise
+    * burst then moves one pair, not the whole figure. The corpus is
+    * written and the JIT warmed (two full passes) on `spark`, which is
+    * then stopped. */
   private def scaling(spark: SparkSession, args: Seq[String]): Seq[(String, Any)] = {
     val nDocs = num(args, 0, 8000)
     val n = num(args, 2, math.max(1, cores / 4)).toInt
+    val rounds = num(args, 3, 3).toInt
     val dir = "target/perf/scaling-corpus"
     PagesGen.writeBucketed(PagesGen.benchCorpus(spark, nDocs, 42L, 64, corpus), dir, nBuckets = 64)
     ExtractJob.extract(PagesGen.readBucketed(spark, dir)).count()
@@ -218,12 +231,15 @@ object Perf {
         time(s)(rows += ExtractJob.extract(pages).count())
       } finally { s.stop(); System.gc() }
     }
-    val Seq(a, b) = interleave(3, 0)(s"local[$n]" -> at(n), s"local[${4 * n}]" -> at(4 * n)).map(_._2)
+    val Seq(a, b) = interleave(rounds, 0)(s"local[$n]" -> at(n), s"local[${4 * n}]" -> at(4 * n)).map(_._2)
     require(rows == Set(nDocs), s"row counts ${rows.mkString(",")} vs $nDocs docs")
     val (tN, t4N) = (a.map(_.wall).min, b.map(_.wall).min)
+    val paired = a.zip(b).map { case (x, y) => x.wall / y.wall / 4 }
     val fields = Seq("n_docs" -> nDocs, "n_cores" -> n, "t_localN_sec" -> tN, "t_local4N_sec" -> t4N,
       "docs_per_sec_N" -> nDocs / tN, "docs_per_sec_4N" -> nDocs / t4N,
       "scaling_efficiency" -> tN / t4N / 4, "target" -> 0.8, "corpus" -> corpus,
+      "paired_efficiency" -> Obj("median" -> median(paired),
+        "iqr" -> (quantile(paired, 0.75) - quantile(paired, 0.25)), "samples" -> paired),
       "localN" -> summary(a), "local4N" -> summary(b))
     args.lift(1).foreach(out => Files.writeString(Paths.get(out), json(Obj(fields: _*)) + "\n"))
     fields

@@ -1,6 +1,7 @@
 package graft.spark
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeSet
@@ -8,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, MapPart
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
-import org.apache.spark.storage.StorageLevel
 import graft.html.BoilerplateStripper
 import graft.pdf.{Outputs, PdfExtractor}
 
@@ -32,8 +32,9 @@ object ExtractJob {
       /** password tried for encrypted PDFs (empty always tried too). */
       password: String = "",
       /** commit-lock staleness: a lock older than this is a crashed
-        * committer and gets broken (commit = checkpoint append +
-        * rename; minutes, not hours, even on a slow object store). */
+        * committer and gets broken (commit = renames of the staged
+        * checkpoint files and of the staged output; minutes, not hours,
+        * even on a slow object store). */
       lockTtlMs: Long = 10L * 60 * 1000,
       /** bound on waiting for a live committer before failing loudly. */
       lockWaitMs: Long = 15L * 60 * 1000)
@@ -68,14 +69,15 @@ object ExtractJob {
     * outputs the optimized plan no longer serializes. */
   def extract(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
-    import spark.implicits._
     PruneOutputs.register(spark)
     val pruned = pages.select(col("url"), col("html"))
     def toDocs(df: DataFrame): Dataset[ExtractedDoc] =
-      df.as[(String, Array[Byte])].mapPartitions(new ExtractPartitions(cfg, Outputs.All))
+      df.as(payloadEncoder).mapPartitions(new ExtractPartitions(cfg, Outputs.All))(docEncoder)
     if (!cfg.salt) toDocs(pruned)
     else {
-      val heavyPred = length(col("html")) > cfg.heavyThresholdBytes
+      // null-safe: a null payload is not heavy, so the normal tier keeps
+      // it and it becomes the "empty payload" error row
+      val heavyPred = coalesce(length(col("html")) > cfg.heavyThresholdBytes, lit(false))
       val normal = toDocs(pruned.filter(!heavyPred))
       if (PagesManifest.htmlBound(pruned).exists(_ <= cfg.heavyThresholdBytes)) normal
       else {
@@ -89,6 +91,11 @@ object ExtractJob {
       }
     }
   }
+
+  /** [[extract]]'s encoders, derived once: deriving them by reflection
+    * on every call was a visible share of the driver's time. */
+  private lazy val payloadEncoder = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
+  private lazy val docEncoder = Encoders.product[ExtractedDoc]
 
   /** Snapshot worklist for incremental crawls: classify every url
     * across two page snapshots (added / removed / changed / unchanged)
@@ -309,18 +316,29 @@ object ExtractJob {
   // metrics; restart = left-anti join; RE-RUNS YIELD AN IDENTICAL
   // OUTPUT TABLE — no reader-side dedup needed).
   //
-  // Commit protocol (Iceberg-emulation, three ordered steps):
-  //   1. stage   — write this attempt's output parquet under a staging
-  //                prefix OUTSIDE outDir (invisible to readers);
-  //   2. record  — append (url, attempt, lineage) rows to the
-  //                checkpoint table (atomic at job commit);
-  //   3. publish — one filesystem rename staging/<attempt> →
-  //                outDir/run=<attempt>.
-  // Crash analysis: before 2 → staged files are orphans (GC'd on the
-  // next run, urls re-extracted — no duplicates, staging was never
-  // readable); between 2 and 3 → the next run's heal() completes the
-  // rename instead of re-extracting (checkpoint names the attempt), so
-  // neither duplicates nor loss; after 3 → done.
+  // Commit protocol (Iceberg emulation): one Spark job, then renames.
+  //   1. stage   — ONE write extracts the pending urls and writes each
+  //                doc twice under a staging prefix OUTSIDE outDir
+  //                (invisible to readers): its output row under
+  //                staging/<attempt>/kind=out/bucket=N, its checkpoint
+  //                row under staging/<attempt>/kind=ckpt;
+  //   2. record  — move the kind=ckpt files flat into checkpointDir,
+  //                one rename per file;
+  //   3. publish — one rename staging/<attempt>/kind=out →
+  //                outDir/run=<attempt>, then drop staging/<attempt>.
+  // Steps 2-3 launch no Spark job on the winning path.
+  // Crash analysis:
+  //   - before 2's first move → no checkpoint row names the attempt:
+  //     its staging is an orphan (GC'd by a later run once idle past
+  //     the lock TTL) and its urls are re-extracted — no duplicates,
+  //     staging was never readable;
+  //   - inside 2 (some files moved) or between 2 and 3 → the
+  //     checkpoint names the attempt, so the next run's heal() first
+  //     moves the checkpoint files still staged, then publishes: a
+  //     partial record is finished, never taken for a whole one, and
+  //     nothing is re-extracted;
+  //   - inside 3 (renamed, staging not yet dropped) → heal drops it;
+  //   - after 3 → done.
   //
   // Validation (Iceberg's optimistic commit): the resume anti-join reads
   // the checkpoint files listed when the run starts — the BASE SNAPSHOT.
@@ -328,10 +346,12 @@ object ExtractJob {
   // listed again: only files ADDED since the base snapshot can own urls
   // this attempt extracted, so only they are semi-joined (no file added
   // → no job). This is exact, not a heuristic: the checkpoint is
-  // append-only (nothing is ever rewritten or deleted) and every append
-  // writes files under fresh job-unique names, so "listed now, not in
-  // the base" is precisely the set of rows committed since the base,
-  // and the full re-read finds no conflict the added files do not.
+  // append-only (nothing is ever rewritten or deleted) and every record
+  // moves in files named by their stage write's unique job id, so
+  // "listed now, not in the base" is precisely the set of rows committed
+  // since the base, and the full re-read finds no conflict the added
+  // files do not. A loser rewrites its remainder from its own staged
+  // files before it records.
   // ------------------------------------------------------------------
   final case class RunReport(attempted: Long, ok: Long, error: Long, skipped: Long)
 
@@ -341,24 +361,23 @@ object ExtractJob {
     * `renameFalse` simulates `FileSystem.rename` returning false at
     * publish (transient FS refusal — distinct from a crash: the
     * process survives, the run FAILS, staging + checkpoint remain).
+    * `midRecord` crashes after the first checkpoint file has moved.
     * `beforeLock` runs after staging and before the commit lock is
     * requested: a concurrent commit injected there lands between this
     * attempt's base snapshot and its validation. */
   private[spark] final case class FailPoints(
-      afterStage: Boolean = false, afterCheckpoint: Boolean = false,
+      afterStage: Boolean = false, midRecord: Boolean = false, afterCheckpoint: Boolean = false,
       renameFalse: Boolean = false, beforeLock: () => Unit = () => ())
   private[spark] final class InjectedCrash(at: String)
     extends RuntimeException(s"injected crash $at")
 
-  /** The checkpoint table's schema, given to every read: no read of it
+  /** The checkpoint read with its declared schema: no read of it
     * launches a schema-inference job. */
-  private lazy val checkpointSchema = Encoders.product[CheckpointRow].schema
-
   private def readCheckpoint(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(checkpointSchema).parquet(paths: _*)
+    spark.read.schema(StagedParquet.checkpointColumns).parquet(paths: _*)
 
   /** The checkpoint as it stands now, over the files listed at this call
-    * (None before its first append). The listing runs on the driver; no
+    * (None before its first record). The listing runs on the driver; no
     * Spark job. */
   private def checkpointSnapshot(spark: SparkSession, checkpointDir: String): Option[DataFrame] =
     if (pathExists(spark, checkpointDir)) Some(readCheckpoint(spark, Seq(checkpointDir)))
@@ -374,7 +393,6 @@ object ExtractJob {
                                        outDir: String, checkpointDir: String,
                                        runId: String, cfg: Config, nBuckets: Int,
                                        fail: FailPoints): RunReport = {
-    import spark.implicits._
     heal(spark, outDir, checkpointDir, cfg)
     // base snapshot: the file index is fixed when the DataFrame is made,
     // so the anti-join below reads exactly `baseFiles`
@@ -385,120 +403,161 @@ object ExtractJob {
     // distinct on the right: duplicate urls there cannot change it.
     val pending = base.fold(pages)(b => pages.join(b.select("url"), Seq("url"), "left_anti"))
     val attempt = runId + "-" + java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"${stagingRoot(outDir)}/$attempt"
-    // pinned by an RDD-level persist, not Dataset.persist: Spark re-caches
-    // every cached plan that reads a path when a write in the session
-    // appends to that path, so a commit landing in this session would
-    // re-extract a cached `extracted` against the grown checkpoint, and it
-    // would no longer match what this attempt staged
-    val docs = extract(pending, cfg).rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val extracted = spark.createDataset(docs)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      // 1. stage (bucketed layout, unreadable until published). Staging
-      // runs OUTSIDE the commit lock — the expensive extraction work of
-      // concurrent attempts overlaps; only the commit serializes. The
-      // status counts ride on this write.
-      var report = stage(extracted, staged, nBuckets)
-      if (fail.afterStage) throw new InjectedCrash("after stage")
-      fail.beforeLock()
-      // ---- commit critical section: an atomic-create lock file
-      // serializes checkpoint append + publish, and the pending set is
-      // RE-VALIDATED under the lock against the checkpoint files added
-      // since the base snapshot — a concurrent attempt that committed
-      // some of our urls first wins them, we commit only the remainder.
-      // Without this, two runs racing the same runId each appended
-      // overlapping ownership rows and readOutput double-counted them.
-      acquireCommitLock(fs, checkpointDir, attempt, cfg.lockTtlMs, cfg.lockWaitMs)
-      var crashed = false
-      // heartbeat daemon: the TTL is measured from the lock's mtime,
-      // so a LIVE committer refreshes it every ttl/4 — without this, a
-      // single commit step slower than lockTtlMs (a big checkpoint
-      // append on a real cluster) would get its lock broken mid-commit
-      // by a waiter and url ownership would double. The thread dies
-      // with the process on a real crash (daemon) and is interrupted
-      // on every in-process exit path, so a simulated crash leaves a
-      // lock that goes stale exactly like a real one.
-      val heartbeat = new Thread(() =>
-        try {
-          while (!Thread.currentThread().isInterrupted) {
-            Thread.sleep(math.max(1000L, cfg.lockTtlMs / 4))
-            heartbeatCommitLock(fs, checkpointDir, attempt)
-          }
-        } catch { case _: InterruptedException => () })
-      heartbeat.setDaemon(true)
-      heartbeat.start()
+    val staged = new Path(s"${stagingRoot(outDir)}/$attempt")
+    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def stageAll(): RunReport = stage(stagedRows(extract(pending, cfg), runId, attempt, nBuckets), staged)
+    // 1. stage (unreadable until published). Staging runs OUTSIDE the
+    // commit lock — the expensive extraction work of concurrent attempts
+    // overlaps; only the commit serializes. The status counts ride on
+    // this write.
+    var report = stageAll()
+    if (fail.afterStage) throw new InjectedCrash("after stage")
+    fail.beforeLock()
+    // ---- commit critical section: an atomic-create lock file
+    // serializes record + publish, and the pending set is RE-VALIDATED
+    // under the lock against the checkpoint files added since the base
+    // snapshot — a concurrent attempt that committed some of our urls
+    // first wins them, we commit only the remainder. Without this, two
+    // runs racing the same runId each recorded overlapping ownership
+    // rows and readOutput double-counted them.
+    acquireCommitLock(fs, checkpointDir, attempt, cfg.lockTtlMs, cfg.lockWaitMs)
+    var crashed = false
+    def crash(at: String): Nothing = { crashed = true; throw new InjectedCrash(at) }
+    // heartbeat daemon: the TTL is measured from the lock's mtime,
+    // so a LIVE committer refreshes it every ttl/4 — without this, a
+    // single commit step slower than lockTtlMs (a slow object store)
+    // would get its lock broken mid-commit by a waiter and url
+    // ownership would double. The thread dies with the process on a
+    // real crash (daemon) and is interrupted on every in-process exit
+    // path, so a simulated crash leaves a lock that goes stale exactly
+    // like a real one.
+    val heartbeat = new Thread(() =>
       try {
-        // a concurrent healer may have GC'd our not-yet-recorded
-        // staging while we waited for the lock (its GC is TTL-gated,
-        // but a stage→lock gap longer than the TTL is possible under
-        // contention); re-stage under the lock if so — `extracted` is
-        // pinned, so this is a rewrite, not a re-extraction
-        if (!fs.exists(new org.apache.hadoop.fs.Path(staged)))
-          stage(extracted, staged, nBuckets)
-        val added = checkpointSnapshot(spark, checkpointDir)
-          .fold(Seq.empty[String])(_.inputFiles.filterNot(baseFiles).toSeq)
-        val committed: Dataset[ExtractedDoc] =
-          if (added.isEmpty || report.attempted == 0) extracted
-          else {
-            val won = readCheckpoint(spark, added).select("url")
-            if (extracted.join(won, Seq("url"), "left_semi").count() == 0) extracted
-            else {
-              // losing side of the race: drop the stolen urls and
-              // re-stage the remainder (only the loser pays a rewrite)
-              // (recomputed from the pinned rows for the append; nothing
-              // can add to the checkpoint while we hold the lock)
-              val kept = extracted.join(won, Seq("url"), "left_anti").as[ExtractedDoc]
-              report = stage(kept, staged, nBuckets)
-              kept
-            }
-          }
-        if (report.attempted == 0) {
-          // nothing pending, or everything was stolen: nothing to
-          // commit, GC our staging
-          fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-        } else {
-          // 2. record lineage + the attempt that owns each url — but
-          // first confirm the lock still carries OUR attempt id: if a
-          // waiter TTL-broke it (heartbeat starved or setTimes-degraded
-          // FS), appending now would double url ownership
-          verifyCommitLock(fs, checkpointDir, attempt)
-          val now = new Timestamp(System.currentTimeMillis())
-          committed.select($"url", $"status", $"duration_ms", $"n_bytes", $"partition_id")
-            .withColumn("run_id", lit(runId))
-            .withColumn("attempt", lit(attempt))
-            .withColumn("finished_at", lit(now))
-            .select(checkpointSchema.fieldNames.map(col).toSeq: _*)
-            .write.mode("append").parquet(checkpointDir)
-          if (fail.afterCheckpoint) { crashed = true; throw new InjectedCrash("after checkpoint") }
-          // 3. publish (single rename)
-          publish(spark, staged, outDir, attempt, failRename = fail.renameFalse)
+        while (!Thread.currentThread().isInterrupted) {
+          Thread.sleep(math.max(1000L, cfg.lockTtlMs / 4))
+          heartbeatCommitLock(fs, checkpointDir, attempt)
         }
-        report
-      } finally {
-        heartbeat.interrupt()
-        // a simulated CRASH means process death: the lock file stays
-        // behind (exactly what the TTL-breaking path is for); every
-        // other exit — success or a surviving failure — releases it
-        if (!crashed) releaseCommitLock(fs, checkpointDir)
+      } catch { case _: InterruptedException => () })
+    heartbeat.setDaemon(true)
+    heartbeat.start()
+    try {
+      // a concurrent healer may have GC'd our not-yet-recorded staging
+      // while we waited for the lock (its GC is TTL-gated, but a
+      // stage→lock gap longer than the TTL is possible under
+      // contention); stage again under the lock if so
+      if (!fs.exists(staged)) report = stageAll()
+      val added = checkpointSnapshot(spark, checkpointDir)
+        .fold(Seq.empty[String])(_.inputFiles.filterNot(baseFiles).toSeq)
+      if (added.nonEmpty && report.attempted > 0) {
+        val won = readCheckpoint(spark, added).select("url")
+        val mine = spark.read.schema(stagedSchema).parquet(staged.toString)
+        if (!mine.where(col("kind") === "ckpt").join(won, Seq("url"), "left_semi").isEmpty) {
+          // losing side of the race: drop the stolen urls and rewrite
+          // the remainder from our own staged files (only the loser pays
+          // a rewrite; nothing can add to the checkpoint while we hold
+          // the lock)
+          val rewrite = new Path(s"$staged.rewrite")
+          report = stage(mine.join(won, Seq("url"), "left_anti"), rewrite)
+          fs.delete(staged, true)
+          if (!fs.rename(rewrite, staged))
+            throw new java.io.IOException(s"restage rename failed: $rewrite -> $staged")
+        }
       }
-    } finally docs.unpersist()
+      if (report.attempted == 0) {
+        // nothing pending, or everything was stolen: nothing to
+        // commit, GC our staging
+        fs.delete(staged, true)
+      } else {
+        // 2. record lineage + the attempt that owns each url — but
+        // first confirm the lock still carries OUR attempt id: if a
+        // waiter TTL-broke it (heartbeat starved or setTimes-degraded
+        // FS), recording now would double url ownership
+        verifyCommitLock(fs, checkpointDir, attempt)
+        record(fs, staged, checkpointDir, () => if (fail.midRecord) crash("mid record"))
+        if (fail.afterCheckpoint) crash("after checkpoint")
+        // 3. publish (single rename)
+        publish(fs, staged, outDir, attempt, failRename = fail.renameFalse)
+      }
+      report
+    } finally {
+      heartbeat.interrupt()
+      // a simulated CRASH means process death: the lock file stays
+      // behind (exactly what the TTL-breaking path is for); every
+      // other exit — success or a surviving failure — releases it
+      if (!crashed) releaseCommitLock(fs, checkpointDir)
+    }
   }
 
-  /** Write `docs` as this attempt's staged output and count its statuses
-    * in the same pass (an observed metric of the write, no extra job). */
-  private def stage(docs: Dataset[ExtractedDoc], staged: String, nBuckets: Int): RunReport = {
+  /** The stage write's columns: the output's, the checkpoint's own, then
+    * the `kind` and `bucket` partition columns. */
+  private lazy val stagedSchema = {
+    import StagedParquet.{checkpointColumns, outputColumns}
+    StructType(outputColumns ++ checkpointColumns.filterNot(f => outputColumns.fieldNames.contains(f.name)))
+      .add("kind", StringType).add("bucket", IntegerType)
+  }
+
+  /** Each doc as two staged rows, out of one explode: its output row
+    * (`kind=out`, bucketed by url) and its checkpoint row (`kind=ckpt`,
+    * no bucket, no text). The attempt's constants are bound as values
+    * that stay out of generated source: the strings are literals, which
+    * codegen passes by reference, and `finished_at`, which a literal
+    * would inline, comes from a function. A repeated run then compiles
+    * nothing. */
+  private def stagedRows(docs: Dataset[ExtractedDoc], runId: String, attempt: String,
+                         nBuckets: Int): DataFrame = {
+    val finishedAt = new Timestamp(System.currentTimeMillis())
+    val out = col("kind") === "out"
+    docs.withColumn("kind", explode(array(lit("out"), lit("ckpt"))))
+      .select(stagedSchema.fieldNames.toSeq.map {
+        case "bucket" => when(out, pmod(xxhash64(col("url")), lit(nBuckets))).as("bucket")
+        case c @ ("text" | "markdown" | "html") => when(out, col(c)).as(c)
+        case "run_id" => lit(runId).as("run_id")
+        case "attempt" => lit(attempt).as("attempt")
+        case "finished_at" => udf(() => finishedAt).apply().as("finished_at")
+        case c => col(c)
+      }: _*)
+  }
+
+  /** Write staged rows to `staged` and count the checkpoint rows'
+    * statuses in the same pass (an observed metric of the write, no
+    * extra job). */
+  private def stage(rows: DataFrame, staged: Path): RunReport = {
     val obs = Observation()
-    def n(status: String) = count(when(col("status") === status, 1))
-    docs.observe(obs, count(lit(1)).as("attempted"), n("ok").as("ok"),
+    val ckpt = col("kind") === "ckpt"
+    def n(status: String) = count(when(ckpt && col("status") === status, 1))
+    rows.observe(obs, count(when(ckpt, 1)).as("attempted"), n("ok").as("ok"),
         n("error").as("error"), n("skipped_oversize").as("skipped"))
-      .withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
-      .drop("n_bytes", "partition_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(staged)
+      .write.mode("overwrite").format(classOf[StagedParquet].getName)
+      .partitionBy("kind", "bucket").save(staged.toString)
     val m = obs.get
     def get(k: String) = m(k).asInstanceOf[Long]
     RunReport(get("attempted"), get("ok"), get("error"), get("skipped"))
+  }
+
+  /** Record: move the staged checkpoint files flat into checkpointDir,
+    * one rename each (their names carry the stage write's unique job
+    * id), then drop the emptied `kind=ckpt` directory. Files already
+    * moved are no longer staged, so a second call finishes a partial
+    * record. `moved` runs after each rename. */
+  private def record(fs: FileSystem, staged: Path, checkpointDir: String,
+                     moved: () => Unit = () => ()): Unit = {
+    val dir = new Path(staged, "kind=ckpt")
+    if (fs.exists(dir)) {
+      val ckpt = new Path(checkpointDir)
+      fs.mkdirs(ckpt)
+      // two plain listings (the files sit one `bucket=` level down):
+      // `listFiles` would read each file's permissions, which the local
+      // filesystem without native code does by forking `ls`
+      val files = fs.listStatus(dir).toSeq
+        .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
+        .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      for (f <- files) {
+        if (!fs.rename(f, new Path(ckpt, f.getName)))
+          throw new java.io.IOException(s"record rename failed: $f -> $ckpt")
+        moved()
+      }
+      fs.delete(dir, true)
+    }
   }
 
   private def commitLockPath(checkpointDir: String): org.apache.hadoop.fs.Path =
@@ -634,22 +693,21 @@ object ExtractJob {
   /** Last-line-of-defense ownership check before the irreversible
     * commit steps: if the lock no longer carries our attempt id (a
     * waiter TTL-broke it — heartbeat starvation, setTimes degradation),
-    * abort THIS run rather than append overlapping ownership rows. */
+    * abort THIS run rather than record overlapping ownership rows. */
   private[spark] def verifyCommitLock(fs: org.apache.hadoop.fs.FileSystem,
                                       checkpointDir: String,
                                       attempt: String): Unit = {
     val owner = readLockOwner(fs, checkpointDir)
     if (!owner.contains(attempt))
       throw new java.io.IOException(
-        s"commit lock lost before checkpoint append: expected owner $attempt, " +
+        s"commit lock lost before checkpoint record: expected owner $attempt, " +
         s"found ${owner.getOrElse("<missing>")} — aborting commit to avoid double ownership")
   }
 
-  /** The committed output's schema: what [[stage]] writes ([[ExtractedDoc]]
-    * without `n_bytes` and `partition_id`), then the `run` and `bucket`
+  /** The committed output's schema: its files' columns
+    * ([[StagedParquet.outputColumns]]), then the `run` and `bucket`
     * partition columns. */
-  private lazy val outputSchema = StructType(
-    Encoders.product[ExtractedDoc].schema.filterNot(f => f.name == "n_bytes" || f.name == "partition_id"))
+  private lazy val outputSchema = StagedParquet.outputColumns
     .add("run", StringType).add("bucket", IntegerType)
 
   /** Committed output: parquet read of outDir (run=attempt / bucket=n
@@ -660,25 +718,30 @@ object ExtractJob {
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(outputSchema).option("basePath", outDir).parquet(outDir)
 
-  private def publish(spark: SparkSession, staged: String, outDir: String,
+  /** Publish: one rename of the staged output to outDir/run=<attempt>,
+    * then drop what is left of the staged attempt. */
+  private def publish(fs: FileSystem, staged: Path, outDir: String,
                       attempt: String, failRename: Boolean = false): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(staged)
-    val dst = new org.apache.hadoop.fs.Path(s"$outDir/run=$attempt")
-    val fs = src.getFileSystem(conf)
+    val src = new Path(staged, "kind=out")
+    val dst = new Path(s"$outDir/run=$attempt")
     fs.mkdirs(dst.getParent)
     if (failRename || !fs.rename(src, dst))
       throw new java.io.IOException(s"publish rename failed: $src -> $dst")
+    fs.delete(staged, true)
   }
 
   /** Recovery pass, run before each attempt:
-    *  - finish publishes the checkpoint recorded but a crash or a
-    *    false-returning rename interrupted. Staging presence is the
-    *    authority: a COMPLETED rename removes src, so src+dst both
-    *    existing means dst is partial debris from a non-atomic
-    *    copy-based rename — it is replaced wholesale from staging
-    *    (the previous `!dst.exists` guard would have trusted the
-    *    partial dst as committed: silent loss);
+    *  - finish the records and publishes a crash or a false-returning
+    *    rename interrupted. An attempt the checkpoint names has
+    *    recorded at least one file: the checkpoint files still staged
+    *    are moved first, so a partial record is completed, never
+    *    trusted as whole. Then staging presence is the authority: a
+    *    COMPLETED rename removes src, so src+dst both existing means
+    *    dst is partial debris from a non-atomic copy-based rename — it
+    *    is replaced wholesale from staging (a `!dst.exists` guard would
+    *    trust the partial dst as committed: silent loss); no src means
+    *    the publish is done and only the staged remains are dropped
+    *    (with no dst either, heal fails rather than lose the urls);
     *  - tolerate a concurrent healer winning the same publish (rename
     *    fails but dst now exists → done);
     *  - GC staged attempts the checkpoint never recorded — including
@@ -703,9 +766,8 @@ object ExtractJob {
   private[spark] def heal(spark: SparkSession, outDir: String,
                           checkpointDir: String,
                           cfg: Config = Config()): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(stagingRoot(outDir))
-    val fs = root.getFileSystem(conf)
+    val root = new Path(stagingRoot(outDir))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val healId = "heal-" + java.util.UUID.randomUUID().toString.take(8)
     acquireCommitLock(fs, checkpointDir, healId, cfg.lockTtlMs, cfg.lockWaitMs)
     try {
@@ -719,21 +781,32 @@ object ExtractJob {
             .distinct().collect().map(_.getString(0)).toSet)
         val now = System.currentTimeMillis()
         for (st <- entries) {
-          val att = st.getPath.getName
+          val (staged, att) = (st.getPath, st.getPath.getName)
           if (recorded.contains(att)) {
-            val dst = new org.apache.hadoop.fs.Path(s"$outDir/run=$att")
-            if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
-            try publish(spark, st.getPath.toString, outDir, att)
-            catch {
-              case e: java.io.IOException =>
-                if (!fs.exists(dst)) throw e // a concurrent healer won: fine
+            record(fs, staged, checkpointDir)
+            val dst = new Path(s"$outDir/run=$att")
+            if (!fs.exists(new Path(staged, "kind=out"))) {
+              // published: only the staged remains are left. Without a
+              // published dst (a staging dir of another layout) the
+              // checkpoint owns urls no output holds: fail loudly
+              if (!fs.exists(dst))
+                throw new java.io.IOException(s"recorded attempt $att has neither $staged/kind=out nor $dst")
+              fs.delete(staged, true)
+            } else {
+              if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
+              try publish(fs, staged, outDir, att)
+              catch {
+                case e: java.io.IOException =>
+                  if (!fs.exists(dst)) throw e // a concurrent healer won: fine
+              }
             }
           } else if (now - st.getModificationTime > cfg.lockTtlMs)
-            fs.delete(st.getPath, true)
+            fs.delete(staged, true)
         }
       }
     } finally releaseCommitLock(fs, checkpointDir)
   }
+
 
   /** Per-partition metrics rollup (SURVEY §2.5 aggregations). */
   def partitionMetrics(extracted: Dataset[ExtractedDoc]): DataFrame = {

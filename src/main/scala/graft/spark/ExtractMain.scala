@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Reads the bucketed pages table with its known schema
   * (`PagesGen.readBucketed`, no inference job), resumes past
-  * checkpointed urls, extracts, appends the bucketed output +
-  * per-partition lineage, prints a one-line JSON report. Extraction is
+  * checkpointed urls, extracts and stages the bucketed output and the
+  * per-partition lineage in one write, commits both by renames, prints
+  * a one-line JSON report. Extraction is
   * the scan-local normal tier, plus the salted heavy tier unless the
   * table's manifest (`PagesGen.writeBucketed`) bounds every payload at
   * or below the heavy threshold. Re-running after a kill is idempotent

@@ -142,6 +142,9 @@ class PerfSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Double]("scaling_efficiency") > 0.0)
     checkArm(r.getAs[Row]("localN"), 3)
     checkArm(r.getAs[Row]("local4N"), 3)
+    val paired = r.getAs[Row]("paired_efficiency")
+    assert(seq[Double](paired, "samples").length == 3 && paired.getAs[Double]("median") > 0.0)
+    assert(paired.getAs[Double]("iqr") >= 0.0)
     val saved = parse(Files.readString(out).trim)
     assert(saved.getAs[Double]("scaling_efficiency") == r.getAs[Double]("scaling_efficiency"))
   }

@@ -308,7 +308,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a non-atomic copy-based rename dying midway: dst exists
     // with ONE bucket dir copied, src (staging) still complete
     val attempt = spark.read.parquet(ckptDir).select("attempt").head().getString(0)
-    val src = new java.io.File(s"$outDir.staging/$attempt")
+    val src = new java.io.File(s"$outDir.staging/$attempt/kind=out")
     val dst = new java.io.File(s"$outDir/run=$attempt")
     val firstBucket = src.listFiles().filter(_.getName.startsWith("bucket=")).head
     val dstBucket = new java.io.File(dst, firstBucket.getName)
@@ -644,7 +644,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ExtractJob.readOutput(spark, outDir).select("url").distinct().count() == 120)
   }
 
-  test("commit path over a manifested pages table: 2 / 3 / 2 jobs for first run, resume, no-op") {
+  test("commit path over a manifested pages table: 1 / 2 / 2 jobs for first run, resume, no-op; nothing persisted") {
     // the table's manifest bounds every payload below the heavy
     // threshold, so no run plans the heavy tier's shuffle stage
     val dir = Files.createTempDirectory("graft-ckpt-manifest").toString
@@ -653,14 +653,92 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = PagesGen.readBucketed(spark, s"$dir/pages")
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val isNew = pmod(xxhash64(col("url")), lit(4)) === 0
-    val (r1, firstJobs) = jobsDuring(
-      ExtractJob.runWithCheckpoint(spark, pages.filter(!isNew), outDir, ckptDir, "first", nBuckets = 4))
-    val (r2, resumeJobs) = jobsDuring(
-      ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "resume", nBuckets = 4))
-    val (r3, noopJobs) = jobsDuring(
-      ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "noop", nBuckets = 4))
+    // RDDs persisted while each run sits between its stage write and
+    // its commit
+    val sc = spark.sparkContext
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def run(input: org.apache.spark.sql.DataFrame, runId: String) = jobsDuring(
+      ExtractJob.runWithCheckpoint(spark, input, outDir, ckptDir, runId, ExtractJob.Config(), 4,
+        ExtractJob.FailPoints(beforeLock = () => persisted += sc.getPersistentRDDs.size)))
+    val before = sc.getPersistentRDDs.size
+    val (r1, firstJobs) = run(pages.filter(!isNew), "first")
+    val (r2, resumeJobs) = run(pages, "resume")
+    val (r3, noopJobs) = run(pages, "noop")
     assert(r1.attempted + r2.attempted == 120 && r3.attempted == 0)
-    assert((firstJobs, resumeJobs, noopJobs) == (2, 3, 2))
+    assert((firstJobs, resumeJobs, noopJobs) == (1, 2, 2))
+    assert(persisted == Seq(before, before, before), s"persisted RDDs ${persisted.mkString(",")} vs $before")
+  }
+
+  test("a warm checkpointed run compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = Files.createTempDirectory("graft-ckpt-codegen").toString
+    PagesGen.writeBucketed(PagesGen.generateMixed(spark, 40, 6L, 4), s"$dir/pages", 4)
+    val pages = PagesGen.readBucketed(spark, s"$dir/pages")
+    // each run on fresh directories, so every run plans the same query
+    def run(i: Int) = ExtractJob.runWithCheckpoint(spark, pages, s"$dir/$i/out", s"$dir/$i/ckpt",
+      s"run-$i", nBuckets = 4)
+    run(1); run(2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run(3).attempted == 40)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+      "a third run on fresh directories compiled generated code")
+  }
+
+  test("commit protocol: kill in the middle of a record; heal finishes the record, then publishes") {
+    val dir = Files.createTempDirectory("graft-ckpt-midrecord").toString
+    val outDir = s"$dir/extracted"
+    val ckptDir = s"$dir/checkpoint"
+    // three scan partitions: the stage write leaves three checkpoint files
+    val pages = PagesGen.generate(spark, 30, seed = 23, parallelism = 3).toDF().cache()
+    intercept[RuntimeException] {
+      ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "run-1",
+        ExtractJob.Config(salt = false), 32,
+        ExtractJob.FailPoints(midRecord = true))
+    }
+    // one checkpoint file moved: the checkpoint owns part of the
+    // attempt's urls, and nothing is published
+    val recorded = spark.read.parquet(ckptDir).count()
+    assert(recorded > 0 && recorded < 30, s"$recorded rows recorded")
+    assert(!new java.io.File(outDir).exists() || spark.read.parquet(outDir).count() == 0)
+    // ttl 0 = restart-after-crash: the crashed committer's lock is broken
+    ExtractJob.heal(spark, outDir, ckptDir, ExtractJob.Config(lockTtlMs = 0))
+    assert(spark.read.parquet(ckptDir).count() == 30, "heal finishes the record")
+    assert(ExtractJob.readOutput(spark, outDir).count() == 30, "heal publishes")
+    val r2 = ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "run-2",
+      ExtractJob.Config(salt = false))
+    assert(r2.attempted == 0, r2.toString)
+    val out = ExtractJob.readOutput(spark, outDir)
+    assert(out.count() == 30 && out.select("url").distinct().count() == 30, "each url once")
+    val ckpt = spark.read.parquet(ckptDir)
+    assert(ckpt.count() == 30 && ckpt.select("url").distinct().count() == 30,
+      "each url checkpoint-owned once")
+    assert(ckpt.columns.toSeq == StagedParquet.checkpointColumns.fieldNames.toSeq, ckpt.columns.mkString(","))
+    val staging = new java.io.File(s"$outDir.staging")
+    assert(!staging.exists() || staging.listFiles().isEmpty, staging.listFiles().mkString(","))
+    pages.unpersist()
+  }
+
+  test("a null payload is an error row, salted, unsalted and manifested; a rerun attempts nothing") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-null-payload").toString
+    val nul = PageRow("https://h.example/null", new java.sql.Timestamp(0), null, "", "en")
+    val input = PagesGen.generate(spark, 8, seed = 24, parallelism = 2).union(Seq(nul).toDS())
+    PagesGen.writeBucketed(input, s"$dir/pages", 4)
+    val manifested = PagesGen.readBucketed(spark, s"$dir/pages")
+    def nullRow(pages: org.apache.spark.sql.DataFrame, cfg: ExtractJob.Config) = {
+      val rows = ExtractJob.extract(pages, cfg).collect()
+      assert(rows.length == 9, rows.map(_.url).mkString(","))
+      rows.filter(_.url == nul.url).map(d => (d.status, d.error_msg)).toSeq
+    }
+    val empty = Seq(("error", "empty payload"))
+    assert(nullRow(input.toDF(), ExtractJob.Config(salt = false)) == empty)
+    assert(nullRow(input.toDF(), ExtractJob.Config()) == empty, "salted")
+    assert(nullRow(manifested, ExtractJob.Config()) == empty, "manifested")
+    val (outDir, ckptDir) = (s"$dir/out", s"$dir/ckpt")
+    val r1 = ExtractJob.runWithCheckpoint(spark, manifested, outDir, ckptDir, "r1", nBuckets = 4)
+    val r2 = ExtractJob.runWithCheckpoint(spark, manifested, outDir, ckptDir, "r2", nBuckets = 4)
+    assert((r1.attempted, r1.error, r2.attempted) == (9, 1, 0), s"$r1 $r2")
   }
 
   test("status counts from an empty staging write: every empty input reports zero, none blocks") {
