@@ -6,15 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.html.BoilerplateStripper
-import graft.pdf.{ConversionOptions, Outputs, PdfExtractor}
+import graft.pdf.Outputs
 
 /** Catalyst-native scalar expression `extract_text(html BINARY) → STRING`
   * (SURVEY §7.3: the optional Expression wrapper that makes the
-  * extractor SQL-addressable). The per-row kernel is the same pure
-  * function the mapPartitions path uses; CodegenFallback is correct
-  * here — the work is the byte-level parse, not the call dispatch.
-  * Null/empty/broken payloads yield NULL, never an exception, so the
+  * extractor SQL-addressable). Each row goes through
+  * `ExtractJob.extractOne`, the kernel `extract` runs, with the default
+  * `ExtractJob.Config` and text only; CodegenFallback is correct here —
+  * the work is the byte-level parse, not the call dispatch. The value
+  * is the doc's `text` when its status is `ok` and NULL otherwise: a
+  * null, empty or broken payload, and one over the default
+  * `oversizeCapBytes` (64 MB), give NULL, never an exception, so the
   * expression is safe under any filter ordering Catalyst picks.
   */
 case class ExtractText(child: Expression)
@@ -29,17 +31,8 @@ case class ExtractText(child: Expression)
   override def prettyName: String = "extract_text"
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    if (bytes == null || bytes.isEmpty) null
-    else {
-      try {
-        val text =
-          if (PdfExtractor.isPdf(bytes))
-            PdfExtractor.extract(bytes, ConversionOptions(outputs = Outputs.TextOnly)).text
-          else BoilerplateStripper.strip(bytes)
-        UTF8String.fromString(text)
-      } catch { case _: Throwable => null }
-    }
+    val d = ExtractJob.extractOne(null, input.asInstanceOf[Array[Byte]], 0, ExtractJob.Config(), Outputs.TextOnly)
+    if (d.status == "ok") UTF8String.fromString(d.text) else null
   }
 
   override protected def withNewChildInternal(newChild: Expression): ExtractText =

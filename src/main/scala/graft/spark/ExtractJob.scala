@@ -27,7 +27,6 @@ object ExtractJob {
       heavyThresholdBytes: Long = 1L * 1024 * 1024,
       /** enable the salt-based skew routing (north rule). */
       salt: Boolean = true,
-      heavySaltBuckets: Int = 64,
       maxPages: Int = PdfExtractor.DefaultMaxPages,
       /** password tried for encrypted PDFs (empty always tried too). */
       password: String = "",
@@ -68,31 +67,40 @@ object ExtractJob {
     * [[PruneOutputs]], registered here on the session, clears the
     * outputs the optimized plan no longer serializes. */
   def extract(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    PruneOutputs.register(spark)
     val pruned = pages.select(col("url"), col("html"))
-    def toDocs(df: DataFrame): Dataset[ExtractedDoc] =
-      df.as(payloadEncoder).mapPartitions(new ExtractPartitions(cfg, Outputs.All))(docEncoder)
-    if (!cfg.salt) toDocs(pruned)
+    if (!cfg.salt) toDocs(pruned, cfg)
     else {
       // null-safe: a null payload is not heavy, so the normal tier keeps
       // it and it becomes the "empty payload" error row
       val heavyPred = coalesce(length(col("html")) > cfg.heavyThresholdBytes, lit(false))
-      val normal = toDocs(pruned.filter(!heavyPred))
+      val normal = toDocs(pruned.filter(!heavyPred), cfg)
       if (PagesManifest.htmlBound(pruned).exists(_ <= cfg.heavyThresholdBytes)) normal
       else {
-        val nPart = math.max(spark.sparkContext.defaultParallelism * 2, 16)
         val heavy = toDocs(
           pruned.filter(heavyPred)
-            .withColumn("__salt", pmod(xxhash64(col("url"), lit(1)), lit(cfg.heavySaltBuckets)))
-            .repartition(nPart, col("__salt"))
-            .drop("__salt"))
+            .withColumn("__salt", pmod(xxhash64(col("url"), lit(1)), lit(HeavySaltBuckets)))
+            .repartition(exchangePartitions(pages.sparkSession), col("__salt"))
+            .drop("__salt"), cfg)
         normal.unionAll(heavy)
       }
     }
   }
 
-  /** [[extract]]'s encoders, derived once: deriving them by reflection
+  /** Salt values of [[extract]]'s heavy tier. */
+  private val HeavySaltBuckets = 64
+
+  /** The explicit partition count of an extraction exchange. */
+  private def exchangePartitions(spark: SparkSession): Int =
+    math.max(spark.sparkContext.defaultParallelism * 2, 16)
+
+  /** `(url, html)` rows through one [[ExtractPartitions]], every output
+    * on until [[PruneOutputs]] (registered here) narrows it. */
+  private def toDocs(rows: DataFrame, cfg: Config): Dataset[ExtractedDoc] = {
+    PruneOutputs.register(rows.sparkSession)
+    rows.as(payloadEncoder).mapPartitions(new ExtractPartitions(cfg, Outputs.All))(docEncoder)
+  }
+
+  /** [[toDocs]]'s encoders, derived once: deriving them by reflection
     * on every call was a visible share of the driver's time. */
   private lazy val payloadEncoder = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
   private lazy val docEncoder = Encoders.product[ExtractedDoc]
@@ -133,24 +141,24 @@ object ExtractJob {
     * crawl corpora: extraction runs ONCE per distinct payload and the
     * result fans back out to every url carrying those bytes.
     *
-    * Shape: ONE explicit repartition on (xxhash64(payload), payload) —
-    * exact, the raw BINARY column stays in the key so colliding
-    * payloads can never merge; the leading hash makes the partitioner
-    * and the in-partition sort resolve almost every comparison on one
-    * long (crawl payloads share deep common prefixes — every PDF opens
-    * with the same header bytes; keying on raw bytes alone made each
-    * sort comparison scan to the first divergence, measured at 1.7x the
-    * CPU of the whole plain extraction at dup=3). A sortWithinPartitions
-    * on (hash, payload, url) then lands every copy of a payload
-    * ADJACENT with min(url) first, and a single streaming mapPartitions
-    * pass extracts each group's payload once and re-emits the row per
-    * url. Payload bytes cross the wire once and are scanned once; no
-    * window, no join, no second computation of the exchange. (An
-    * earlier window+filter+join formulation computed the payload
-    * exchange twice — mapping arm and reps arm — and benched SLOWER
-    * than no dedup at all; mapPartitions is the (d)-tier last resort,
-    * used here precisely because group-adjacent streaming extraction
-    * is not expressible as one pass with relational operators.)
+    * Shape: ONE explicit repartition on xxhash64(payload), then a
+    * sortWithinPartitions on (hash, payload, url): exact, the raw BINARY
+    * column stays in the sort key so colliding payloads can never
+    * merge; the leading hash makes the sort resolve almost every
+    * comparison on one long (crawl payloads share deep common prefixes —
+    * every PDF opens with the same header bytes; keying on raw bytes
+    * alone made each comparison scan to the first divergence, measured
+    * at 1.7x the CPU of the whole plain extraction at dup=3). Every copy
+    * of a payload lands ADJACENT with min(url) first, and the same
+    * [[ExtractPartitions]] that [[extract]] runs extracts it once and
+    * re-emits its row per url, since it reuses the row before whenever
+    * a payload equals the one before it. So [[PruneOutputs]] narrows it
+    * as it narrows [[extract]]: `select("url", "text")` builds neither
+    * markdown nor html. Payload bytes cross the wire once and are
+    * scanned once; no window, no join, no second computation of the
+    * exchange. (An earlier window+filter+join formulation computed the
+    * payload exchange twice — mapping arm and reps arm — and benched
+    * SLOWER than no dedup at all.)
     *
     * Cost model (why opt-IN, default extract() stays shuffle-free):
     * the full corpus pays exactly one payload shuffle + sort; that buys
@@ -166,44 +174,32 @@ object ExtractJob {
     * reps; output rows differ from plain extract() ONLY in duration_ms
     * and partition_id lineage (duplicates inherit the rep's), which is
     * pinned by the equality spec. */
-  def extractDeduped(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val nPart = math.max(spark.sparkContext.defaultParallelism * 2, 16)
-    pages.select(col("url"), col("html"))
+  def extractDeduped(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedDoc] =
+    toDocs(pages.select(col("url"), col("html"))
       .withColumn("__h", coalesce(xxhash64(col("html")), lit(0L))) // null payload → one group
       // route on the 8-byte hash alone (colliding payloads still
       // co-locate; the partitioner needn't re-scan the payload bytes)
-      .repartition(nPart, col("__h"))
+      .repartition(exchangePartitions(pages.sparkSession), col("__h"))
       .sortWithinPartitions(col("__h"), col("html"), col("url"))
-      .as[(String, Array[Byte], Long)]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var prevH = 0L
-        var prevBytes: Array[Byte] = null
-        var prevDoc: ExtractedDoc = null
-        it.map { case (u, bytes, h) =>
-          val same = prevDoc != null && h == prevH &&
-            java.util.Arrays.equals(bytes, prevBytes)
-          if (same) prevDoc.copy(url = u) // duplicate: rep's row, this url
-          else {
-            val doc = extractOne(u, bytes, pid, cfg)
-            prevH = h; prevBytes = bytes; prevDoc = doc
-            doc
-          }
-        }
-      }
-  }
+      .drop("__h"), cfg)
 
-  /** The per-partition function of [[extract]]: every row through
-    * [[extractOne]], building `outputs`. A plain class, so equality is
-    * identity, as for a lambda: plan and cache matching see no change.
-    * Its name and flags show in the plan. */
+  /** The per-partition function of [[extract]] and [[extractDeduped]]:
+    * every row through [[extractOne]], building `outputs`, except that a
+    * row whose payload equals the row's just before it reuses that
+    * row's doc under its own url (it holds one payload per task). A
+    * plain class, so equality is identity, as for a lambda: plan and
+    * cache matching see no change. Its name and flags show in the
+    * plan. */
   private[spark] final class ExtractPartitions(cfg: Config, val outputs: Outputs)
       extends (Iterator[(String, Array[Byte])] => Iterator[ExtractedDoc]) with Serializable {
     def apply(rows: Iterator[(String, Array[Byte])]): Iterator[ExtractedDoc] = {
       val pid = TaskContext.getPartitionId()
-      rows.map { case (u, html) => extractOne(u, html, pid, cfg, outputs) }
+      var prev: Array[Byte] = null
+      var prevDoc: ExtractedDoc = null
+      rows.map { case (u, html) =>
+        if (prevDoc != null && java.util.Arrays.equals(html, prev)) prevDoc.copy(url = u)
+        else { prev = html; prevDoc = extractOne(u, html, pid, cfg, outputs); prevDoc }
+      }
     }
     def withOutputs(o: Outputs): ExtractPartitions = new ExtractPartitions(cfg, o)
     override def toString: String =
@@ -266,27 +262,20 @@ object ExtractJob {
       ExtractedDoc(u, "", "", "", "", 0, 0, ms, "error", "empty payload", nBytes, pid)
     else if (nBytes > cfg.oversizeCapBytes)
       ExtractedDoc(u, "", "", "", "", 0, 0, ms, "skipped_oversize", "", nBytes, pid)
-    else if (PdfExtractor.isPdf(html)) {
-      try {
+    else try {
+      if (PdfExtractor.isPdf(html)) {
         val r = PdfExtractor.extract(html,
           graft.pdf.ConversionOptions(maxPages = cfg.maxPages, password = cfg.password,
             outputs = outputs))
         ExtractedDoc(u, r.text, r.markdown, r.html, r.title, r.nPages, r.nSpans, ms, "ok", "", nBytes, pid)
-      } catch {
-        case e: Throwable =>
-          ExtractedDoc(u, "", "", "", "", 0, 0, ms, "error",
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(200), nBytes, pid)
-      }
-    } else {
-      try {
+      } else {
         val (text, md, title) = BoilerplateStripper.extractAll(html, outputs.markdown)
-        val nBlocks = countBlocks(text)
-        ExtractedDoc(u, text, md, "", title, 1, nBlocks, ms, "ok", "", nBytes, pid)
-      } catch {
-        case e: Throwable =>
-          ExtractedDoc(u, "", "", "", "", 0, 0, ms, "error",
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(200), nBytes, pid)
+        ExtractedDoc(u, text, md, "", title, 1, countBlocks(text), ms, "ok", "", nBytes, pid)
       }
+    } catch {
+      case e: Throwable =>
+        ExtractedDoc(u, "", "", "", "", 0, 0, ms, "error",
+          Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(200), nBytes, pid)
     }
   }
 
@@ -319,13 +308,13 @@ object ExtractJob {
   // Commit protocol (Iceberg emulation): one Spark job, then renames.
   //   1. stage   — ONE write extracts the pending urls and writes each
   //                doc twice under a staging prefix OUTSIDE outDir
-  //                (invisible to readers): its output row under
-  //                staging/<attempt>/kind=out/bucket=N, its checkpoint
-  //                row under staging/<attempt>/kind=ckpt;
-  //   2. record  — move the kind=ckpt files flat into checkpointDir,
-  //                one rename per file;
-  //   3. publish — one rename staging/<attempt>/kind=out →
-  //                outDir/run=<attempt>, then drop staging/<attempt>.
+  //                (invisible to readers), partitioned by bucket: its
+  //                output row under staging/<attempt>/bucket=N, its
+  //                checkpoint row in the null bucket,
+  //                staging/<attempt>/bucket=__HIVE_DEFAULT_PARTITION__;
+  //   2. record  — move the null bucket's files flat into
+  //                checkpointDir, one rename per file;
+  //   3. publish — one rename staging/<attempt> → outDir/run=<attempt>.
   // Steps 2-3 launch no Spark job on the winning path.
   // Crash analysis:
   //   - before 2's first move → no checkpoint row names the attempt:
@@ -337,8 +326,7 @@ object ExtractJob {
   //     moves the checkpoint files still staged, then publishes: a
   //     partial record is finished, never taken for a whole one, and
   //     nothing is re-extracted;
-  //   - inside 3 (renamed, staging not yet dropped) → heal drops it;
-  //   - after 3 → done.
+  //   - after 3 → done: the rename leaves nothing staged.
   //
   // Validation (Iceberg's optimistic commit): the resume anti-join reads
   // the checkpoint files listed when the run starts — the BASE SNAPSHOT.
@@ -451,7 +439,7 @@ object ExtractJob {
       if (added.nonEmpty && report.attempted > 0) {
         val won = readCheckpoint(spark, added).select("url")
         val mine = spark.read.schema(stagedSchema).parquet(staged.toString)
-        if (!mine.where(col("kind") === "ckpt").join(won, Seq("url"), "left_semi").isEmpty) {
+        if (!mine.where(col("bucket").isNull).join(won, Seq("url"), "left_semi").isEmpty) {
           // losing side of the race: drop the stolen urls and rewrite
           // the remainder from our own staged files (only the loser pays
           // a rewrite; nothing can add to the checkpoint while we hold
@@ -489,28 +477,26 @@ object ExtractJob {
   }
 
   /** The stage write's columns: the output's, the checkpoint's own, then
-    * the `kind` and `bucket` partition columns. */
+    * the `bucket` partition column. */
   private lazy val stagedSchema = {
     import StagedParquet.{checkpointColumns, outputColumns}
     StructType(outputColumns ++ checkpointColumns.filterNot(f => outputColumns.fieldNames.contains(f.name)))
-      .add("kind", StringType).add("bucket", IntegerType)
+      .add("bucket", IntegerType)
   }
 
-  /** Each doc as two staged rows, out of one explode: its output row
-    * (`kind=out`, bucketed by url) and its checkpoint row (`kind=ckpt`,
-    * no bucket, no text). The attempt's constants are bound as values
-    * that stay out of generated source: the strings are literals, which
+  /** Each doc as two staged rows, out of one explode of its bucket: its
+    * output row (bucketed by url) and its checkpoint row (the null
+    * bucket, no text). The attempt's constants are bound as values that
+    * stay out of generated source: the strings are literals, which
     * codegen passes by reference, and `finished_at`, which a literal
     * would inline, comes from a function. A repeated run then compiles
     * nothing. */
   private def stagedRows(docs: Dataset[ExtractedDoc], runId: String, attempt: String,
                          nBuckets: Int): DataFrame = {
     val finishedAt = new Timestamp(System.currentTimeMillis())
-    val out = col("kind") === "out"
-    docs.withColumn("kind", explode(array(lit("out"), lit("ckpt"))))
+    docs.withColumn("bucket", explode(array(pmod(xxhash64(col("url")), lit(nBuckets)), lit(null))))
       .select(stagedSchema.fieldNames.toSeq.map {
-        case "bucket" => when(out, pmod(xxhash64(col("url")), lit(nBuckets))).as("bucket")
-        case c @ ("text" | "markdown" | "html") => when(out, col(c)).as(c)
+        case c @ ("text" | "markdown" | "html") => when(col("bucket").isNotNull, col(c)).as(c)
         case "run_id" => lit(runId).as("run_id")
         case "attempt" => lit(attempt).as("attempt")
         case "finished_at" => udf(() => finishedAt).apply().as("finished_at")
@@ -520,37 +506,36 @@ object ExtractJob {
 
   /** Write staged rows to `staged` and count the checkpoint rows'
     * statuses in the same pass (an observed metric of the write, no
-    * extra job). */
+    * extra job). The write leaves no `_SUCCESS` marker, so the staged
+    * attempt publishes as its bucket directories alone. */
   private def stage(rows: DataFrame, staged: Path): RunReport = {
     val obs = Observation()
-    val ckpt = col("kind") === "ckpt"
+    val ckpt = col("bucket").isNull
     def n(status: String) = count(when(ckpt && col("status") === status, 1))
     rows.observe(obs, count(when(ckpt, 1)).as("attempted"), n("ok").as("ok"),
         n("error").as("error"), n("skipped_oversize").as("skipped"))
       .write.mode("overwrite").format(classOf[StagedParquet].getName)
-      .partitionBy("kind", "bucket").save(staged.toString)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy("bucket").save(staged.toString)
     val m = obs.get
     def get(k: String) = m(k).asInstanceOf[Long]
     RunReport(get("attempted"), get("ok"), get("error"), get("skipped"))
   }
 
-  /** Record: move the staged checkpoint files flat into checkpointDir,
-    * one rename each (their names carry the stage write's unique job
-    * id), then drop the emptied `kind=ckpt` directory. Files already
-    * moved are no longer staged, so a second call finishes a partial
-    * record. `moved` runs after each rename. */
+  /** Record: move the staged checkpoint files (the null bucket's) flat
+    * into checkpointDir, one rename each (their names carry the stage
+    * write's unique job id), then drop the emptied directory. Files
+    * already moved are no longer staged, so a second call finishes a
+    * partial record. `moved` runs after each rename. */
   private def record(fs: FileSystem, staged: Path, checkpointDir: String,
                      moved: () => Unit = () => ()): Unit = {
-    val dir = new Path(staged, "kind=ckpt")
+    val dir = new Path(staged, StagedParquet.CheckpointDir)
     if (fs.exists(dir)) {
       val ckpt = new Path(checkpointDir)
       fs.mkdirs(ckpt)
-      // two plain listings (the files sit one `bucket=` level down):
-      // `listFiles` would read each file's permissions, which the local
-      // filesystem without native code does by forking `ls`
-      val files = fs.listStatus(dir).toSeq
-        .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-        .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      // a plain listing: `listFiles` would read each file's permissions,
+      // which the local filesystem without native code does by forking `ls`
+      val files = fs.listStatus(dir).toSeq.map(_.getPath).filterNot(p => hidden(p.getName))
       for (f <- files) {
         if (!fs.rename(f, new Path(ckpt, f.getName)))
           throw new java.io.IOException(s"record rename failed: $f -> $ckpt")
@@ -718,30 +703,34 @@ object ExtractJob {
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(outputSchema).option("basePath", outDir).parquet(outDir)
 
-  /** Publish: one rename of the staged output to outDir/run=<attempt>,
-    * then drop what is left of the staged attempt. */
+  /** Publish: one rename of the recorded staged attempt, which holds
+    * only its `bucket=N` directories, to outDir/run=<attempt>. */
   private def publish(fs: FileSystem, staged: Path, outDir: String,
                       attempt: String, failRename: Boolean = false): Unit = {
-    val src = new Path(staged, "kind=out")
     val dst = new Path(s"$outDir/run=$attempt")
     fs.mkdirs(dst.getParent)
-    if (failRename || !fs.rename(src, dst))
-      throw new java.io.IOException(s"publish rename failed: $src -> $dst")
-    fs.delete(staged, true)
+    if (failRename || !fs.rename(staged, dst))
+      throw new java.io.IOException(s"publish rename failed: $staged -> $dst")
   }
+
+  /** A name Spark's file listing skips. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
   /** Recovery pass, run before each attempt:
     *  - finish the records and publishes a crash or a false-returning
     *    rename interrupted. An attempt the checkpoint names has
-    *    recorded at least one file: the checkpoint files still staged
-    *    are moved first, so a partial record is completed, never
-    *    trusted as whole. Then staging presence is the authority: a
-    *    COMPLETED rename removes src, so src+dst both existing means
-    *    dst is partial debris from a non-atomic copy-based rename — it
-    *    is replaced wholesale from staging (a `!dst.exists` guard would
-    *    trust the partial dst as committed: silent loss); no src means
-    *    the publish is done and only the staged remains are dropped
-    *    (with no dst either, heal fails rather than lose the urls);
+    *    recorded at least one file and is still staged, since a
+    *    publish renames the whole staged attempt. Its children must all
+    *    be `bucket=` directories (or files Spark skips); anything else
+    *    (a `kind=out` directory of an older staging layout) fails heal
+    *    loudly, naming the directory, before anything moves, since
+    *    publishing it would break partition discovery under outDir. The
+    *    checkpoint files still staged are moved, so a partial record is
+    *    completed, never trusted as whole. Then the attempt publishes. A
+    *    COMPLETED rename removes src, so src+dst both existing means dst
+    *    is partial debris from a non-atomic copy-based rename — it is
+    *    replaced wholesale from staging (a `!dst.exists` guard would
+    *    trust the partial dst as committed: silent loss);
     *  - tolerate a concurrent healer winning the same publish (rename
     *    fails but dst now exists → done);
     *  - GC staged attempts the checkpoint never recorded — including
@@ -783,22 +772,18 @@ object ExtractJob {
         for (st <- entries) {
           val (staged, att) = (st.getPath, st.getPath.getName)
           if (recorded.contains(att)) {
+            val foreign = fs.listStatus(staged).toSeq.filterNot(c =>
+              hidden(c.getPath.getName) || (c.isDirectory && c.getPath.getName.startsWith("bucket=")))
+            if (foreign.nonEmpty)
+              throw new java.io.IOException(s"recorded attempt $att: $staged holds " +
+                s"${foreign.map(_.getPath.getName).mkString(", ")}, not only bucket= directories; not published")
             record(fs, staged, checkpointDir)
             val dst = new Path(s"$outDir/run=$att")
-            if (!fs.exists(new Path(staged, "kind=out"))) {
-              // published: only the staged remains are left. Without a
-              // published dst (a staging dir of another layout) the
-              // checkpoint owns urls no output holds: fail loudly
-              if (!fs.exists(dst))
-                throw new java.io.IOException(s"recorded attempt $att has neither $staged/kind=out nor $dst")
-              fs.delete(staged, true)
-            } else {
-              if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
-              try publish(fs, staged, outDir, att)
-              catch {
-                case e: java.io.IOException =>
-                  if (!fs.exists(dst)) throw e // a concurrent healer won: fine
-              }
+            if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
+            try publish(fs, staged, outDir, att)
+            catch {
+              case e: java.io.IOException =>
+                if (!fs.exists(dst)) throw e // a concurrent healer won: fine
             }
           } else if (now - st.getModificationTime > cfg.lockTtlMs)
             fs.delete(staged, true)

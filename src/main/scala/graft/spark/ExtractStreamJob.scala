@@ -13,15 +13,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object ExtractStreamJob {
 
   /** Start a file-source stream over `pagesDir` (bucketed parquet
-    * layout), writing extracted docs to `outDir`. AvailableNow trigger
-    * processes the backlog then stops — the batch-equivalent mode; pass
+    * layout, read with its known schema: no inference job), writing
+    * extracted docs to `outDir`. AvailableNow trigger processes the
+    * backlog then stops — the batch-equivalent mode; pass
     * `continuous = true` for an always-on micro-batch stream. */
   def start(spark: SparkSession, pagesDir: String, outDir: String,
             checkpointDir: String, cfg: ExtractJob.Config = ExtractJob.Config(salt = false),
             continuous: Boolean = false): StreamingQuery = {
-    val schema = spark.read.parquet(pagesDir).schema
     val pages: DataFrame = spark.readStream
-      .schema(schema)
+      .schema(PagesGen.bucketedSchema)
       .option("maxFilesPerTrigger", "64")
       .parquet(pagesDir)
     val extracted = ExtractJob.extract(pages, cfg.copy(salt = false))

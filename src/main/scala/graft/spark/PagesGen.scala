@@ -579,7 +579,7 @@ object PagesGen {
 
   /** The pages table's schema as `writeBucketed` leaves it: [[PageRow]]'s
     * fields, then the `bucket` partition column. */
-  private lazy val bucketedSchema: StructType = Encoders.product[PageRow].schema.add("bucket", IntegerType)
+  private[spark] lazy val bucketedSchema: StructType = Encoders.product[PageRow].schema.add("bucket", IntegerType)
 
   /** Reads with [[bucketedSchema]]: no schema-inference job. */
   def readBucketed(spark: SparkSession, path: String): DataFrame =

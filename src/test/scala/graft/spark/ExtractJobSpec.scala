@@ -308,7 +308,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a non-atomic copy-based rename dying midway: dst exists
     // with ONE bucket dir copied, src (staging) still complete
     val attempt = spark.read.parquet(ckptDir).select("attempt").head().getString(0)
-    val src = new java.io.File(s"$outDir.staging/$attempt/kind=out")
+    val src = new java.io.File(s"$outDir.staging/$attempt")
     val dst = new java.io.File(s"$outDir/run=$attempt")
     val firstBucket = src.listFiles().filter(_.getName.startsWith("bucket=")).head
     val dstBucket = new java.io.File(dst, firstBucket.getName)
@@ -325,6 +325,59 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.count() == 20, "partial dst must be replaced, not trusted")
     assert(out.select("url").distinct().count() == 20)
     pages.unpersist()
+  }
+
+  test("a staged and a published run hold only bucket directories; no kind= directory anywhere") {
+    val dir = Files.createTempDirectory("graft-ckpt-layout").toString
+    val outDir = s"$dir/extracted"
+    val root = new java.io.File(s"$outDir.staging")
+    val pages = PagesGen.generate(spark, 20, seed = 25, parallelism = 2).toDF()
+    def tree(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(tree)
+    // the staging tree, seen between the stage write and the commit
+    var staged = Seq.empty[java.io.File]
+    assert(ExtractJob.runWithCheckpoint(spark, pages, outDir, s"$dir/checkpoint", "run-1",
+      ExtractJob.Config(salt = false), 4, ExtractJob.FailPoints(beforeLock = () => staged = tree(root)))
+      .attempted == 20)
+    val attempts = staged.filter(_.getParentFile == root)
+    assert(attempts.length == 1, attempts.mkString(","))
+    val stagedChildren = staged.filter(_.getParentFile == attempts.head).map(_.getName)
+    assert(stagedChildren.contains("bucket=__HIVE_DEFAULT_PARTITION__") &&
+      stagedChildren.forall(_.startsWith("bucket=")), stagedChildren.mkString(","))
+    val runs = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("run="))
+    assert(runs.map(_.getName).toSeq == Seq(s"run=${attempts.head.getName}"), runs.mkString(","))
+    val published = runs.head.listFiles()
+    assert(published.nonEmpty && published.forall(c => c.isDirectory && c.getName.matches("bucket=\\d+")),
+      published.mkString(","))
+    val kinds = (staged ++ tree(new java.io.File(dir))).filter(_.getName.startsWith("kind="))
+    assert(kinds.isEmpty, kinds.mkString(","))
+  }
+
+  test("heal fails loudly on a recorded attempt of the older kind= staging layout; nothing is published") {
+    val dir = Files.createTempDirectory("graft-ckpt-oldlayout").toString
+    val outDir = s"$dir/extracted"
+    val ckptDir = s"$dir/checkpoint"
+    val pages = PagesGen.generate(spark, 20, seed = 26, parallelism = 2).toDF()
+    intercept[RuntimeException] {
+      ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "run-1",
+        ExtractJob.Config(salt = false), 4, ExtractJob.FailPoints(afterCheckpoint = true))
+    }
+    // a recorded, unpublished attempt as a crash of the older layout left
+    // it: its output one `kind=out` level down
+    val attempt = spark.read.parquet(ckptDir).select("attempt").head().getString(0)
+    val staged = new java.io.File(s"$outDir.staging/$attempt")
+    val kindOut = new java.io.File(staged, "kind=out")
+    assert(kindOut.mkdir())
+    staged.listFiles().filter(_.getName.startsWith("bucket=")).foreach { b =>
+      java.nio.file.Files.move(b.toPath, new java.io.File(kindOut, b.getName).toPath)
+    }
+    val e = intercept[java.io.IOException] {
+      ExtractJob.heal(spark, outDir, ckptDir, ExtractJob.Config(lockTtlMs = 0))
+    }
+    assert(e.getMessage.contains(staged.getName) && e.getMessage.contains("kind=out"), e.getMessage)
+    val published = Option(new java.io.File(outDir).listFiles()).toSeq.flatten
+    assert(published.isEmpty, published.mkString(","))
+    assert(kindOut.isDirectory, "the staged attempt is left as it was")
   }
 
   test("heal GCs stray non-attempt files inside staging") {

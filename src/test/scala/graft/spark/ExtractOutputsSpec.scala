@@ -146,16 +146,19 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
       PageRow("https://bad/null", ts, null, "", "en"))
   }
 
+  /** The mixed, fixture and malformed corpora of the text-level checks. */
+  private def corpora: Seq[(String, DataFrame)] = {
+    val s = spark
+    import s.implicits._
+    Seq("generateMixed" -> mixed(400),
+      "generateFixtures" -> PagesGen.generateFixtures(spark, nPerKind = 6, parallelism = 2).toDF(),
+      "malformed" -> spark.createDataset(malformed).toDF())
+  }
+
   private val kept = Seq("url", "text", "title", "status", "error_msg", "n_pages", "n_spans", "n_bytes")
 
   for ((name, cfg) <- configs)
     test(s"text-only and full plans agree byte for byte on text, counts and status ($name)") {
-      val s = spark
-      import s.implicits._
-      val corpora = Seq(
-        "generateMixed" -> mixed(400),
-        "generateFixtures" -> PagesGen.generateFixtures(spark, nPerKind = 6, parallelism = 2).toDF(),
-        "malformed" -> spark.createDataset(malformed).toDF())
       for ((corpus, pages) <- corpora) {
         val ds = ExtractJob.extract(pages, cfg)
         val narrow = ds.select(kept.map(col): _*)
@@ -182,6 +185,36 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(text.copy(markdown = full.markdown, html = full.html, duration_ms = full.duration_ms) == full, u)
       val md = ExtractJob.extractOne(u, b, 0, cfg, Outputs(markdown = true, html = false))
       assert(md.markdown == full.markdown && md.html.isEmpty, u)
+    }
+  }
+
+  test("extractDeduped runs extract's function: select(url, text) builds no markdown or html") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{concat, lit}
+    val base = mixed(64)
+    val pages = base.unionAll(base.withColumn("url", concat(lit("dup-"), col("url"))))
+    val narrow = ExtractJob.extractDeduped(pages).select("url", "text")
+    assert(optimized(narrow) == Seq(Outputs.TextOnly))
+    assert(narrow.queryExecution.optimizedPlan.toString.contains("ExtractPartitions(markdown=false, html=false)"))
+    val plain = ExtractJob.extract(pages).select("url", "text").as[(String, String)].collect()
+    assert(plain.length == 128)
+    assert(narrow.as[(String, String)].collect().sorted.toSeq == plain.sorted.toSeq)
+  }
+
+  test("extract_text is extractOne's text-only text where the status is ok, NULL elsewhere") {
+    val s = spark
+    import s.implicits._
+    for ((corpus, pages) <- corpora) {
+      val rows = pages.select(col("url"), col("html"), ExtractText.of(col("html")))
+        .as[(String, Array[Byte], String)].collect()
+      assert(rows.nonEmpty, corpus)
+      for ((u, b, t) <- rows) {
+        val d = ExtractJob.extractOne(u, b, 0, ExtractJob.Config(), Outputs.TextOnly)
+        assert(t == (if (d.status == "ok") d.text else null), s"$corpus: $u")
+      }
+      if (corpus == "malformed")
+        assert(rows.exists(_._3 == null) && rows.exists(_._3 != null))
     }
   }
 
