@@ -724,7 +724,12 @@ object ExtractJob {
     *    be `bucket=` directories (or files Spark skips); anything else
     *    (a `kind=out` directory of an older staging layout) fails heal
     *    loudly, naming the directory, before anything moves, since
-    *    publishing it would break partition discovery under outDir. The
+    *    publishing it would break partition discovery under outDir. A
+    *    recorded attempt with no output bucket left staged was published
+    *    by a layout that dropped its staging only after the rename (the
+    *    older one did, and could crash between the two): if its
+    *    outDir/run=<attempt> exists the staging is dropped, never the
+    *    published run; if not, heal fails loudly. Otherwise the
     *    checkpoint files still staged are moved, so a partial record is
     *    completed, never trusted as whole. Then the attempt publishes. A
     *    COMPLETED rename removes src, so src+dst both existing means dst
@@ -772,18 +777,25 @@ object ExtractJob {
         for (st <- entries) {
           val (staged, att) = (st.getPath, st.getPath.getName)
           if (recorded.contains(att)) {
-            val foreign = fs.listStatus(staged).toSeq.filterNot(c =>
-              hidden(c.getPath.getName) || (c.isDirectory && c.getPath.getName.startsWith("bucket=")))
+            val children = fs.listStatus(staged).toSeq.filterNot(c => hidden(c.getPath.getName))
+            val foreign = children.filterNot(c => c.isDirectory && c.getPath.getName.startsWith("bucket="))
             if (foreign.nonEmpty)
               throw new java.io.IOException(s"recorded attempt $att: $staged holds " +
                 s"${foreign.map(_.getPath.getName).mkString(", ")}, not only bucket= directories; not published")
-            record(fs, staged, checkpointDir)
             val dst = new Path(s"$outDir/run=$att")
-            if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
-            try publish(fs, staged, outDir, att)
-            catch {
-              case e: java.io.IOException =>
-                if (!fs.exists(dst)) throw e // a concurrent healer won: fine
+            val output = children.exists(_.getPath.getName != StagedParquet.CheckpointDir)
+            if (!output && !fs.exists(dst))
+              throw new java.io.IOException(s"recorded attempt $att: $staged holds no output " +
+                s"bucket and $dst does not exist; its output is lost")
+            record(fs, staged, checkpointDir)
+            if (!output) fs.delete(staged, true) // published by a layout that dropped staging after the rename
+            else {
+              if (fs.exists(dst)) fs.delete(dst, true) // partial rename debris
+              try publish(fs, staged, outDir, att)
+              catch {
+                case e: java.io.IOException =>
+                  if (!fs.exists(dst)) throw e // a concurrent healer won: fine
+              }
             }
           } else if (now - st.getModificationTime > cfg.lockTtlMs)
             fs.delete(staged, true)

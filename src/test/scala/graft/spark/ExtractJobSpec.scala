@@ -380,6 +380,37 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kindOut.isDirectory, "the staged attempt is left as it was")
   }
 
+  test("heal keeps a published run whose staging the older layout left holding only _SUCCESS") {
+    val dir = Files.createTempDirectory("graft-ckpt-oldpublished").toString
+    val outDir = s"$dir/extracted"
+    val ckptDir = s"$dir/checkpoint"
+    val pages = PagesGen.generate(spark, 20, seed = 27, parallelism = 2).toDF()
+    assert(ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "run-1",
+      ExtractJob.Config(salt = false), 4).attempted == 20)
+    // the older layout's crash between its publish rename and dropping
+    // the staged attempt: recorded, published, staging holds `_SUCCESS`
+    val attempt = spark.read.parquet(ckptDir).select("attempt").head().getString(0)
+    val staged = new java.io.File(s"$outDir.staging/$attempt")
+    assert(staged.mkdirs() && new java.io.File(staged, "_SUCCESS").createNewFile())
+    val dst = new java.io.File(s"$outDir/run=$attempt")
+    val aside = new java.io.File(s"$dir/aside")
+    // without its published run the attempt's output is lost: fail loudly
+    assert(dst.renameTo(aside))
+    val e = intercept[java.io.IOException] {
+      ExtractJob.heal(spark, outDir, ckptDir, ExtractJob.Config(lockTtlMs = 0))
+    }
+    assert(e.getMessage.contains(attempt), e.getMessage)
+    assert(staged.isDirectory, "the staged attempt is left as it was")
+    assert(aside.renameTo(dst))
+    ExtractJob.heal(spark, outDir, ckptDir, ExtractJob.Config(lockTtlMs = 0))
+    assert(!staged.exists(), "the published attempt's staging is dropped")
+    val out = ExtractJob.readOutput(spark, outDir)
+    assert(out.count() == 20 && out.select("url").distinct().count() == 20)
+    assert(ExtractJob.runWithCheckpoint(spark, pages, outDir, ckptDir, "run-2",
+      ExtractJob.Config(salt = false), 4).attempted == 0)
+    assert(ExtractJob.readOutput(spark, outDir).count() == 20)
+  }
+
   test("heal GCs stray non-attempt files inside staging") {
     val dir = Files.createTempDirectory("graft-ckpt-stray").toString
     val outDir = s"$dir/extracted"
