@@ -966,9 +966,10 @@ object Perf {
        "degenerates to a bucket-local merge (Iceberg MERGE INTO's " +
        "copy-on-write shape) and only the day's change batch moves."),
     "corpus_shard_assign" ->
-      ("Check: the assign pass is Scan ExistingRDD (the checkpointed " +
-       "range layout) -> Deserialize -> MapPartitions -> Serialize — " +
-       "ZERO Exchange: the one range shuffle happened before the " +
+      ("Check: the assign pass of GlobalRank.positions is Scan " +
+       "ExistingRDD (the checkpointed range layout) -> Deserialize -> " +
+       "MapPartitions -> Serialize, then the shard Project — ZERO " +
+       "Exchange: the one range shuffle happened before the " +
        "checkpoint, the offset pass collected only P partition counts, " +
        "and positions are assigned partition-locally from broadcast " +
        "prefix offsets (the zipWithIndex pattern). A row_number() OVER " +
@@ -1051,15 +1052,15 @@ object Perf {
        "state bounded at m rows/node regardless of ball size — the " +
        "whole point vs the closure, which only the ORACLE computes."),
     "corpus_pack" ->
-      ("Check: the visible plan is the streamed interval pass over the " +
-       "pinned range-partitioned layout (Scan ExistingRDD -> " +
-       "MapPartitions — the weighted-zipWithIndex second pass); NO " +
-       "partitionless window, no join; the single range Exchange " +
-       "happened inside the localCheckpoint. Driver traffic is P " +
-       "per-partition token sums."),
+      ("Check: the visible plan is GlobalRank.positions' assign pass " +
+       "over the pinned range-partitioned layout (Scan ExistingRDD -> " +
+       "MapPartitions — the weighted-zipWithIndex second pass), then " +
+       "the interval Project; NO partitionless window, no join; the " +
+       "single range Exchange happened inside the localCheckpoint. " +
+       "Driver traffic is P per-partition token sums."),
     "corpus_interleave" ->
       ("Check: one hash Exchange on source for the per-source rank " +
-       "window, then the streamed enumeration pass over the pinned " +
+       "window, then GlobalRank.positions' assign pass over the pinned " +
        "range layout (Scan ExistingRDD -> MapPartitions) — NO " +
        "partitionless window; integer virtual-time keys only."),
     "corpus_ngram_lm" ->
@@ -1146,18 +1147,21 @@ object Perf {
        "builds clusters, the join back is broadcast, the final " +
        "per-split aggregate collapses to 3 rows."),
     "web_host_gini" ->
-      ("Check: one partial-aggregated Exchange collapses the corpus " +
-       "to |hosts| rows; the global rank is the two-pass zipWithIndex " +
-       "(Exchange rangepartitioning + Sort + Scan ExistingRDD — the " +
-       "frozen checkpoint both passes share), NEVER a single-partition " +
-       "Window; the final aggregate is one row."),
+      ("Check: the global rank is GlobalRank.positions: its assign " +
+       "pass is Scan ExistingRDD -> MapPartitions with no Exchange, " +
+       "NEVER a single-partition Window. The checkpoint both passes " +
+       "share holds the per-host rollup (one partial-aggregated " +
+       "Exchange collapsed the corpus to |hosts| rows) and the range " +
+       "partition; the final aggregate is one row."),
     "corpus_epoch_order" ->
-      ("Check: the epoch fan-out is a Generate (explode) over a " +
-       "3-long projection — the text column is pruned before the " +
-       "fan-out; keys are pure codegen long arithmetic; the only " +
-       "exchange is ONE rangepartitioning on (epoch, key) feeding " +
-       "the frozen checkpoint both rank passes share (Scan " +
-       "ExistingRDD), NEVER a partitionless Window."),
+      ("Check: the per-epoch rank is GlobalRank.positions grouped by " +
+       "epoch; this plan is its assign pass, Scan ExistingRDD -> " +
+       "MapPartitions with no Exchange, NEVER a partitionless Window. " +
+       "The checkpoint both passes share holds the rest: the epoch " +
+       "fan-out, a Generate (explode) over a 3-long projection with " +
+       "the text column pruned before it; the keys, pure codegen long " +
+       "arithmetic; and the only exchange, ONE rangepartitioning on " +
+       "(epoch, key)."),
     "corpus_reshard_churn" ->
       ("Check: ReadSchema is doc_id alone; the rings never appear in " +
        "the plan (generated in-kernel from the closed-form vnode " +
@@ -1222,7 +1226,7 @@ object Perf {
        "ONE partial-agg df rollup; the join back re-partitions on " +
        "gram (co-partitioned); one per-doc rollup."),
     "web_graph_reorder" ->
-      ("Check: BFS rank = range partition + frozen-pid offsets (no " +
+      ("Check: BFS rank = GlobalRank.positions (no " +
        "partitionless window anywhere in the engine plan); the id " +
        "map joins back as url equi-joins; per-ordering stats " +
        "collapse to ONE row each before the 2-row union."),

@@ -493,14 +493,11 @@ object Events {
 
   /** For each query key, how many item keys precede it:
     * count(items k : k <= query) when `inclusive`, count(k < query)
-    * otherwise — computed WITHOUT a join by the zipWithIndex pattern:
-    * range-partition the union of items and queries on (key, tag),
-    * pin the layout (localCheckpoint — both passes must see one
-    * layout), collect the P-row per-partition item counts, broadcast
-    * the prefix offsets, and stream each partition once emitting the
-    * running item count at every query row. The tag orders items
-    * before equal-key queries for <=, after for < — the whole
-    * inclusivity rule is one sort byte.
+    * otherwise — computed WITHOUT a join: over the union of items and
+    * queries ordered by (key, tag), a query's count is its
+    * [[GlobalRank.positions]] with weight 1 on item rows and 0 on
+    * query rows. The tag orders items before equal-key queries for
+    * <=, after for < — the whole inclusivity rule is one sort byte.
     *
     * This is the distributed sweep-line primitive: two narrow passes
     * over a single range exchange, driver traffic is P longs. At
@@ -508,35 +505,15 @@ object Events {
     * impossible; this stays n log n. */
   private def countBelow(items: DataFrame, queries: DataFrame,
                          inclusive: Boolean, nPartitions: Int): DataFrame = {
-    val spark = items.sparkSession
-    import spark.implicits._
     val itemTag = if (inclusive) 0 else 1
-    val queryTag = 1 - itemTag
-    val sorted = items.select(col("key").cast("long"),
+    val rows = items.select(col("key").cast("long"),
         lit(itemTag).as("tag"), lit(-1L).as("qid"))
       .unionAll(queries.select(col("key").cast("long"),
-        lit(queryTag).as("tag"), col("qid").cast("long")))
-      .repartitionByRange(nPartitions, col("key"), col("tag"), col("qid"))
-      .sortWithinPartitions(col("key"), col("tag"), col("qid"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
-    val counts = sorted.where(col("tag") === itemTag)
-      .groupBy(col("pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPartitions)
-      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toArray
-    val bc = spark.sparkContext.broadcast(offsets)
-    val it = itemTag
-    sorted.as[(Long, Int, Long, Int)].mapPartitions { rows =>
-      val buf = rows.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        var seen = bc.value(buf.head._4) // all rows here share one pid
-        buf.flatMap { case (_, tag, qid, _) =>
-          if (tag == it) { seen += 1L; None } else Some((qid, seen))
-        }
-      }
-    }.toDF("qid", "cnt")
+        lit(1 - itemTag).as("tag"), col("qid").cast("long")))
+    val isItem = col("tag") === itemTag
+    GlobalRank.positions(rows, Seq(col("key"), col("tag"), col("qid")),
+        nPartitions, weight = isItem.cast("long"))
+      .where(!isItem).select(col("qid"), col("pos").as("cnt"))
   }
 
   /** Session-concurrency census: for every session (gap-based, as in

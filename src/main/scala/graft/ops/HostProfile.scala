@@ -122,37 +122,17 @@ object HostProfile {
     * matches bit-for-bit.
     *
     * Scale shape: the corpus collapses in one partial-agg shuffle to
-    * |hosts| rows; the global ascending rank is the TWO-PASS
-    * zipWithIndex pattern (range-partition + per-partition offsets —
-    * shardAssign's machinery, incl. its frozen-pid lesson), NEVER a
-    * partitionless window: |hosts| is 10⁸ at web scale. The final
-    * aggregate is one row. Long arithmetic holds to Σ i·x ≲ 9·10¹⁸
+    * |hosts| rows; the global ascending rank is
+    * [[GlobalRank.positions]] + 1, NEVER a partitionless window:
+    * |hosts| is 10⁸ at web scale. The final aggregate is one row.
+    * Long arithmetic holds to Σ i·x ≲ 9·10¹⁸
     * (e.g. 10⁸ hosts × 10⁹ avg tokens needs the documented decimal
     * escape hatch). */
   def hostGini(docs: DataFrame, nPartitions: Int = 32): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val w = docs.groupBy(col("source").as("host"))
       .agg(sum(size(TextAnalysis.tokens(col("text"))).cast("long")).as("x"))
-    val sorted = w
-      .repartitionByRange(nPartitions, col("x"), col("host"))
-      .sortWithinPartitions(col("x"), col("host"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin layout: both passes must see ONE layout
-    val counts = sorted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPartitions)
-      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toArray
-    val bc = spark.sparkContext.broadcast(offsets)
-    val ranked = sorted.select(col("host"), col("x"), col("pid"))
-      .as[(String, Long, Int)].mapPartitions { it =>
-        val buf = it.buffered
-        if (!buf.hasNext) Iterator.empty
-        else {
-          var pos = bc.value(buf.head._3) // all rows here share one pid
-          buf.map { case (h, x, _) => val p = pos; pos += 1; (h, x, p + 1) }
-        }
-      }.toDF("host", "x", "rank")
+    val ranked = GlobalRank.positions(w, Seq(col("x"), col("host")), nPartitions)
+      .select(col("x"), (col("pos") + 1L).as("rank"))
     ranked.agg(
         count(lit(1)).as("n_hosts"),
         sum(col("x")).as("total_tokens"),

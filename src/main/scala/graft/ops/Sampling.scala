@@ -499,63 +499,22 @@ object Sampling {
     * "shuffle once, then shard" step that materializes a training
     * set as numbered files with a reproducible read order.
     *
-    * The whole point is HOW the global position is computed at
-    * 10^12 rows: never `row_number() OVER (ORDER BY ...)` — a
-    * partitionless window moves the corpus through ONE task. This is
-    * the two-pass zipWithIndex pattern restated over Dataset:
-    *  1. range-partition + in-partition sort on (k, doc_id) — the
-    *     one real exchange, partitions are globally ordered;
-    *  2. count rows per partition (a P-row aggregate collected to
-    *     the driver — partition COUNTS, never data);
-    *  3. prefix-sum the counts into per-partition offsets, broadcast
-    *     the tiny array, assign pos = offset(pid) + local index in a
-    *     partition-local map.
-    * The range partitioner samples its bounds, so PARTITION SIZES
-    * vary run to run — but concatenating sorted range partitions in
-    * partition order is the same total order regardless of where the
-    * cuts fell, so (pos, shard) are exactly reproducible.
+    * The position is [[GlobalRank.positions]] over (k, doc_id), never
+    * `row_number() OVER (ORDER BY ...)`: a partitionless window moves
+    * the corpus through ONE task. doc_id breaks the ties of the hash,
+    * so (pos, shard) are exactly reproducible.
     *
     * Output: (doc_id, k, pos, shard, pos_in_shard); positions
     * 0-based, shard = pos div shardSize. */
   def shardAssign(docs: DataFrame, shardSize: Long,
                   nPartitions: Int = 32): DataFrame = {
     require(shardSize > 0, "shardSize must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // The partition id is FROZEN INTO THE DATA at checkpoint time, not
-    // read from TaskContext in the assign pass. TaskContext
-    // .getPartitionId() is the TASK's id: if a consumer pipelines a
-    // coalesce() above this operator, one task computes many parent
-    // partitions (each with a fresh closure) and every one of them
-    // would read the coalesced id — all offsets resolve to
-    // offsets(0) = 0 and positions silently restart per partition.
-    // spark_partition_id() evaluated DURING localCheckpoint
-    // materialization is the real range-partition index (materialize
-    // runs one task per partition), and a data column survives any
-    // downstream re-partitioning.
-    val sorted = docs
+    val keyed = docs
       .select(col("doc_id").cast("long"), shuffleKey(col("doc_id")).as("k"))
-      .repartitionByRange(nPartitions, col("k"), col("doc_id"))
-      .sortWithinPartitions(col("k"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin layout: both passes must see ONE layout
-    val counts = sorted.groupBy(col("pid"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPartitions)
-      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toArray
-    val bc = spark.sparkContext.broadcast(offsets)
-    sorted.as[(Long, Long, Int)].mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        var pos = bc.value(buf.head._3) // all rows here share one pid
-        buf.map { case (id, k, _) =>
-          val p = pos; pos += 1
-          (id, k, p, p / shardSize, p % shardSize)
-        }
-      }
-    }.toDF("doc_id", "k", "pos", "shard", "pos_in_shard")
+    GlobalRank.positions(keyed, Seq(col("k"), col("doc_id")), nPartitions)
+      .select(col("doc_id"), col("k"), col("pos"),
+        expr(s"pos div ${shardSize}L").as("shard"),
+        (col("pos") % shardSize).as("pos_in_shard"))
   }
 
   /** Concat-and-chunk sequence packing (the GPT-style training layout):
@@ -569,46 +528,24 @@ object Sampling {
     * sharded pretraining loader needs to materialize any sequence
     * without ever building the concatenated stream.
     *
-    * Scale shape: the global prefix sum is the [[shardAssign]]
-    * two-pass (range-partition on the shuffle key, pinned layout,
-    * P-row driver collect of per-partition token sums, broadcast
-    * offsets, one streaming pass) — a weighted zipWithIndex. No
+    * Scale shape: tok_start is [[GlobalRank.positions]] over the
+    * shuffle order with weight n_tokens — a weighted zipWithIndex. No
     * partitionless window, no join; driver traffic is P longs. All
     * outputs are exact integers.
     */
   def pack(docs: DataFrame, seqLen: Long,
            nPartitions: Int = 32): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sorted = docs
+    val sized = docs
       .select(col("doc_id").cast("long"), shuffleKey(col("doc_id")).as("k"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
-      .repartitionByRange(nPartitions, col("k"), col("doc_id"))
-      .sortWithinPartitions(col("k"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin layout: both passes must see ONE layout
-    val counts = sorted.groupBy(col("pid"))
-      .agg(sum(col("n_tokens")).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPartitions)
-      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toArray
-    val bc = spark.sparkContext.broadcast(offsets)
-    val L = seqLen
-    sorted.as[(Long, Long, Long, Int)].mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        var pos = bc.value(buf.head._4) // all rows here share one pid
-        buf.map { case (id, _, n, _) =>
-          val s = pos; pos += n
-          (id, n, s, s / L, s % L, (s + n - 1) / L,
-            (s + n - 1) / L - s / L + 1)
-        }
-      }
-    }.toDF("doc_id", "n_tokens", "tok_start", "seq_start", "off_in_seq",
-      "seq_end", "n_seqs")
+    val (first, last) = (s"pos div ${seqLen}L", s"(pos + n_tokens - 1) div ${seqLen}L")
+    GlobalRank.positions(sized, Seq(col("k"), col("doc_id")), nPartitions,
+        weight = col("n_tokens"))
+      .selectExpr("doc_id", "n_tokens", "pos AS tok_start",
+        s"$first AS seq_start", s"pos % ${seqLen}L AS off_in_seq",
+        s"$last AS seq_end", s"$last - $first + 1 AS n_seqs")
   }
 
   /** Deterministic weighted source interleaving (stride scheduling —
@@ -627,11 +564,9 @@ object Sampling {
     * documents are ordered by the corpus shuffle key.
     *
     * Scale shape: one hash shuffle per-source for the rank window,
-    * then the global enumeration is the same range-partitioned
-    * two-pass as [[shardAssign]] — no partitionless window. */
+    * then the global enumeration is [[GlobalRank.positions]] — no
+    * partitionless window. */
   def interleave(docs: DataFrame, nPartitions: Int = 32): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val stride = 12L
     val w = lit(1L) + substring(col("source"), 4, 10).cast("long") % 4
     val bySrc = org.apache.spark.sql.expressions.Window
@@ -641,28 +576,8 @@ object Sampling {
       .select(col("doc_id").cast("long"), col("source"))
       .withColumn("k", row_number().over(bySrc).cast("long") - 1)
       .withColumn("skey", (col("k") + 1) * (lit(stride) / w).cast("long"))
-    val sorted = keyed
-      .repartitionByRange(nPartitions, col("skey"), col("source"), col("k"))
-      .sortWithinPartitions(col("skey"), col("source"), col("k"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin layout: both passes must see ONE layout
-    val counts = sorted.groupBy(col("pid"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPartitions)
-      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toArray
-    val bc = spark.sparkContext.broadcast(offsets)
-    sorted.as[(Long, String, Long, Long, Int)].mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        var pos = bc.value(buf.head._5) // all rows here share one pid
-        buf.map { case (id, src, k, skey, _) =>
-          val p = pos; pos += 1
-          (id, src, k, skey, p)
-        }
-      }
-    }.toDF("doc_id", "source", "k", "skey", "pos")
+    GlobalRank.positions(keyed, Seq(col("skey"), col("source"), col("k")),
+      nPartitions)
   }
 
   /** DuckDB oracle for [[interleave]] — the SPEC as one global
@@ -1008,55 +923,19 @@ object Sampling {
     * Scale shape: the epoch fan-out is a zero-shuffle explode (E·N
     * rows of 3 longs — the TEXT never fans out); the only exchange is
     * the range partition on (epoch, key); dense per-epoch positions
-    * come from the [[shardAssign]] two-pass (per-(partition, epoch)
-    * counts — P·E longs to the driver, never data; epochs are
-    * contiguous inside a (epoch, key)-sorted partition so one running
-    * counter per epoch-run suffices). No partitionless window, no
-    * join. Output: (epoch, doc_id, key, pos) with pos dense 0..N−1
-    * per epoch. */
+    * are [[GlobalRank.positions]] grouped by epoch (P·E counts to the
+    * driver, never data). No partitionless window, no join. Output:
+    * (epoch, doc_id, key, pos) with pos dense 0..N−1 per epoch. */
   def epochOrder(docs: DataFrame, epochs: Int = 3, seed: Long = 17L,
                  nPartitions: Int = 32): DataFrame = {
     require(epochs > 0, "epochs must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
     val keyed = docs
       .select(col("doc_id").cast("long"),
         explode(sequence(lit(0), lit(epochs - 1))).as("epoch"))
       .select(col("epoch"), col("doc_id"),
         feistelKey(col("doc_id"), col("epoch"), seed))
-    val sorted = keyed
-      .repartitionByRange(nPartitions, col("epoch"), col("key"))
-      .sortWithinPartitions(col("epoch"), col("key"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin layout: both passes must see ONE layout
-    val counts = sorted.groupBy(col("pid"), col("epoch"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    // per-epoch prefix sums over partitions in range order
-    val offsets: Map[(Int, Int), Long] = (0 until epochs).flatMap { e =>
-      var acc = 0L
-      (0 until nPartitions).map { p =>
-        val o = (p, e) -> acc
-        acc += counts.getOrElse((p, e), 0L)
-        o
-      }
-    }.toMap
-    val bc = spark.sparkContext.broadcast(offsets)
-    sorted.select(col("epoch"), col("doc_id"), col("key"), col("pid"))
-      .as[(Int, Long, Long, Int)].mapPartitions { it =>
-        val buf = it.buffered
-        if (!buf.hasNext) Iterator.empty
-        else {
-          val pid = buf.head._4 // all rows here share one pid (frozen col)
-          var curEpoch = -1
-          var pos = 0L
-          buf.map { case (e, id, k, _) =>
-            if (e != curEpoch) { curEpoch = e; pos = bc.value((pid, e)) }
-            val p = pos; pos += 1
-            (e, id, k, p)
-          }
-        }
-      }.toDF("epoch", "doc_id", "key", "pos")
+    GlobalRank.positions(keyed, Seq(col("key")), nPartitions,
+      group = col("epoch"))
   }
 
   // ---------------------------------------------------------------

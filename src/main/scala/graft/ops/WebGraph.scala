@@ -2517,19 +2517,16 @@ object WebGraph {
     * crawl locality exists — this census measures by how much, per
     * snapshot, before a 10^11-edge store commits to an ordering.
     *
-    * Scale shape: the BFS rank is the two-pass zipWithIndex pattern
-    * (range-partition on (depth, url) + frozen-pid offsets — NEVER a
-    * partitionless window; the oracle's row_number is the bounded
-    * audit formulation); the id map joins back by url (co-partitioned
-    * equi-joins); each ordering collapses to per-src rows then ONE
-    * summary row. */
+    * Scale shape: the BFS rank is [[GlobalRank.positions]] over
+    * (depth, url) — NEVER a partitionless window; the oracle's
+    * row_number is the bounded audit formulation; the id map joins
+    * back by url (co-partitioned equi-joins); each ordering collapses
+    * to per-src rows then ONE summary row. */
   def graphReorder(edges: DataFrame, seeds: DataFrame,
                    maxDepth: Int = 10, nPartitions: Int = 16): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     // LAZY checkpoints (round 6): every checkpoint below is followed
-    // by an action that materializes it (counts.collect for `sorted`,
-    // the bfs joins for `ids`), so the eager variants only added
+    // by an action that materializes it (the rank's offset pass, the
+    // bfs joins for `ids`), so the eager variants only added
     // sequential blocking jobs. `e` persists on first compute and is
     // reused by the BFS, both orderings and the node set.
     val e = distinctEdges(edges).localCheckpoint(false)
@@ -2538,26 +2535,8 @@ object WebGraph {
     val keyed = nodes.join(depths, Seq("url"), "left")
       .select(col("url"),
         coalesce(col("depth"), lit(Int.MaxValue)).as("depth"))
-    val sorted = keyed
-      .repartitionByRange(nPartitions, col("depth"), col("url"))
-      .sortWithinPartitions(col("depth"), col("url"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin layout for both passes (the
-      // counts.collect below materializes it)
-    val counts = sorted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPartitions)
-      .scanLeft(0L)((a, p) => a + counts.getOrElse(p, 0L)).toArray
-    val bc = spark.sparkContext.broadcast(offsets)
-    val ids = sorted.select(col("url"), col("pid")).as[(String, Int)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        if (!buf.hasNext) Iterator.empty
-        else {
-          var pos = bc.value(buf.head._2)
-          buf.map { case (url, _) => val p = pos; pos += 1; (url, p) }
-        }
-      }.toDF("url", "bfs_id").localCheckpoint(false)
+    val ids = GlobalRank.positions(keyed, Seq(col("depth"), col("url")), nPartitions)
+      .select(col("url"), col("pos").as("bfs_id")).localCheckpoint(false)
     val natural = e.select(
       regexp_extract(col("src"), "doc([0-9]+)$", 1).cast("long").as("src_id"),
       regexp_extract(col("dst"), "doc([0-9]+)$", 1).cast("long").as("dst_id"))

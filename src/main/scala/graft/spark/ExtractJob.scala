@@ -714,7 +714,7 @@ object ExtractJob {
   }
 
   /** A name Spark's file listing skips. */
-  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+  private[spark] def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
   /** Recovery pass, run before each attempt:
     *  - finish the records and publishes a crash or a false-returning

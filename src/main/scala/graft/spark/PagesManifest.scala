@@ -37,12 +37,14 @@ object PagesManifest {
     node.put("format", Format)
     node.put("max_html_bytes", maxHtmlBytes)
     val files = node.putArray("files")
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      relative(dir, st.getPath).filterNot(_.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
-        .foreach(p => files.addObject().put("path", p).put("bytes", st.getLen))
+    // a plain listing, as in ExtractJob.record: `listFiles` would read each
+    // file's permissions, which the local filesystem without native code
+    // does by forking `ls`
+    def walk(d: Path): Unit = for (st <- fs.listStatus(d) if !ExtractJob.hidden(st.getPath.getName)) {
+      if (st.isDirectory) walk(st.getPath)
+      else relative(dir, st.getPath).foreach(p => files.addObject().put("path", p).put("bytes", st.getLen))
     }
+    walk(dir)
     val out = fs.create(new Path(dir, FileName), true)
     try out.write(mapper.writeValueAsBytes(node)) finally out.close()
   }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pdf.font.FontCache
 
@@ -11,20 +10,7 @@ import graft.pdf.font.FontCache
   * query that throws is reported by name with its error and a non-zero
   * exit code, never with a time. `stress` is left out: its edge gate
   * needs a graph of more than 200k edges. */
-class PerfSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PerfSpec extends AnyFunSuite with SparkSuite {
 
   /** Runs a subcommand; returns its JSON line, parsed, and the exit code. */
   private def perf(args: String*): (String, Row, Int) = {
@@ -134,18 +120,21 @@ class PerfSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("scaling: local[n] vs local[4n] in fresh sessions, optional out-file") {
     val out = Files.createTempDirectory("perf-scaling").resolve("scaling.json")
     val (line, code) = Perf.run(spark, Seq("scaling", "200", out.toString, "1"), sfDir = "")
-    spark = SparkSession.builder().master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
-    assert(code == 0, line)
-    val r = parse(line)
-    assert(r.getAs[Long]("n_cores") == 1L)
-    assert(r.getAs[Double]("target") == 0.8)
-    assert(r.getAs[Double]("scaling_efficiency") > 0.0)
-    checkArm(r.getAs[Row]("localN"), 3)
-    checkArm(r.getAs[Row]("local4N"), 3)
-    val paired = r.getAs[Row]("paired_efficiency")
-    assert(seq[Double](paired, "samples").length == 3 && paired.getAs[Double]("median") > 0.0)
-    assert(paired.getAs[Double]("iqr") >= 0.0)
-    val saved = parse(Files.readString(out).trim)
-    assert(saved.getAs[Double]("scaling_efficiency") == r.getAs[Double]("scaling_efficiency"))
+    // `parse` needs a live session
+    val parser = SparkSession.builder().master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      assert(code == 0, line)
+      val r = parse(line)
+      assert(r.getAs[Long]("n_cores") == 1L)
+      assert(r.getAs[Double]("target") == 0.8)
+      assert(r.getAs[Double]("scaling_efficiency") > 0.0)
+      checkArm(r.getAs[Row]("localN"), 3)
+      checkArm(r.getAs[Row]("local4N"), 3)
+      val paired = r.getAs[Row]("paired_efficiency")
+      assert(seq[Double](paired, "samples").length == 3 && paired.getAs[Double]("median") > 0.0)
+      assert(paired.getAs[Double]("iqr") >= 0.0)
+      val saved = parse(Files.readString(out).trim)
+      assert(saved.getAs[Double]("scaling_efficiency") == r.getAs[Double]("scaling_efficiency"))
+    } finally parser.stop()
   }
 }

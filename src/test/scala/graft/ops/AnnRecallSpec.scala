@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANN recall-evaluation harness ([[Similarity.annRecall]]):
@@ -16,26 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    since the component pipelines carry their own driver oracles;
   *  - recall_permille is the exact integer hits*1000 div truth.
   */
-class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AnnRecallSpec extends AnyFunSuite with SparkSuite {
 
   /** Deterministic pseudo-random corpus, same recipe style as the
     * driver embeddings table (splitmix-ish integer mix → [-1, 1)). */
   private def corpus(n: Int, dim: Int = 64) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     (0 until n).map { i =>
       val v = Array.tabulate(dim) { d =>
         var z = i.toLong * 0x9e3779b97f4a7c15L + d.toLong * 0xbf58476d1ce4e5b9L

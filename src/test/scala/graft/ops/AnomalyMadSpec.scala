@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hourly MAD anomalies ([[Events.hourlyAnomalies]]):
@@ -13,27 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - robustness: the burst hour barely moves the threshold (vs a
   *    mean/stddev detector it would mask itself).
   */
-class AnomalyMadSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AnomalyMadSpec extends AnyFunSuite with SparkSuite {
 
   private val H = 3600L * 1000000L
 
   /** Build events with the given number of rows in each hour. */
   private def events(hourCounts: Seq[Int]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     hourCounts.zipWithIndex.flatMap { case (n, h) =>
       (0 until n).map(j => (h.toLong * 1000 + j, h * H + j * 1000L))
     }.toDF("event_id", "us")

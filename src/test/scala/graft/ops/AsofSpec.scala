@@ -1,32 +1,17 @@
 package graft.ops
 
+import graft.SparkSuite
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** As-of join on hand-built event streams: latest-prior selection,
   * the strict (ts, event_id) tie rule, unmatched sentinels, and
   * per-user isolation. */
-class AsofSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AsofSpec extends AnyFunSuite with SparkSuite {
 
   private def events(rows: (Long, Long, Long, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.map { case (eid, ms, uid, tpe) => (eid, new Timestamp(ms), uid, tpe) }
       .toDF("event_id", "ts", "user_id", "event_type")
   }

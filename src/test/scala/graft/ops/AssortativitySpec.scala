@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Degree-assortativity statistics ([[WebGraph.assortativity]]):
@@ -14,24 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    two-hub mutual clique is assortative (cov_n > 0);
   *  - duplicate and self-loop edges are dropped before counting.
   */
-class AssortativitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AssortativitySpec extends AnyFunSuite with SparkSuite {
 
   private def edges(es: Seq[(String, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     es.toDF("src", "dst")
   }
 

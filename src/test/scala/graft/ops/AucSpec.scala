@@ -1,31 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Rank-sum AUC against hand-computed expectations — the midrank
   * arithmetic, the pair-counting definition, and every expected value
   * below are worked by hand (independent ground truth). */
-class AucSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AucSpec extends AnyFunSuite with SparkSuite {
 
   private def run(rows: Seq[(String, Double)])
       : Map[String, (Long, Long, Option[Double])] = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     TextAnalysis.rankSumAuc(rows.toDF("source", "score"), "score", "source")
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),

@@ -1,26 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** WAV parse + clip stats against HAND-BUILT containers and
   * hand-computed expectations — independent ground truth (no byte or
   * number below comes from the engine or the generator). */
-class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AudioSpec extends AnyFunSuite with SparkSuite {
 
   /** Hand-roll a WAV: header + optional junk chunk + int16 samples. */
   private def wav(channels: Int, rate: Int, samples: Seq[Int],
@@ -96,8 +82,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DataFrame surface: silence_frac is n_silent over all samples") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val df = Seq((0L, wav(2, 8000, Seq(0, 0, 1000, -800))))
       .toDF("doc_id", "payload")
     val row = Multimodal.audioFeatures(df).collect()(0)

@@ -1,30 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HyperLogLog cardinality: register/rank kernel pinned against an
   * independent bit-twiddling reimplementation, duplicate idempotence
   * (the property HLL exists for), partitioning invariance, and
   * loose-band sanity of the raw estimate vs the exact audit column. */
-class CardinalitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CardinalitySpec extends AnyFunSuite with SparkSuite {
 
   private def urls(us: Seq[String]): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     us.toDF("url")
   }
 
@@ -61,8 +48,7 @@ class CardinalitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("repartition-invariant") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val us = (0 until 400).map(i => s"https://x.example/$i")
     val a = Cardinality.urlCardinality(us.toDF("url"), 8).collect().head
     val b = Cardinality.urlCardinality(us.toDF("url").repartition(11), 8)
@@ -87,8 +73,7 @@ class CardinalitySpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------- Count-Min sketch -------------------------------
 
   private def docsDf(texts: Seq[String]): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 
@@ -121,8 +106,7 @@ class CardinalitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("countmin: repartition-invariant") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val texts = (0 until 60).map(i => s"common w${i % 9} w${i % 4}")
     val base = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
@@ -134,8 +118,7 @@ class CardinalitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hostCardinality: each host's sketch equals the global sketch on that host alone") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val urls = (0 until 400).map(i =>
       s"https://h${i % 3}.x/p${i % (50 + 40 * (i % 3))}").toDF("url")
     val grouped = Cardinality.hostCardinality(urls, p = 6).collect()

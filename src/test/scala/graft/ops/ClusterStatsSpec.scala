@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cluster-size histogram ([[Dedup.clusterStats]]):
@@ -9,24 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    1 (x3), 2 (x1), 3 (x2) with correct doc sums / maxes / witnesses;
   *  - totals identity: sum(n_docs) == input rows.
   */
-class ClusterStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ClusterStatsSpec extends AnyFunSuite with SparkSuite {
 
   test("hand histogram + totals identity") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // reps: 10 (size 1), 11 (1), 12 (1), 20 (2), 30 (4), 40 (5)
     val surv = (Seq(10L, 11L, 12L) ++ Seq.fill(2)(20L) ++
       Seq.fill(4)(30L) ++ Seq.fill(5)(40L))

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Code-vs-prose routing ([[TextAnalysis.codeDetect]]):
@@ -14,24 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - deep indents count one run per 5-char window, same as the
   *    length-delta arithmetic the oracle uses.
   */
-class CodeDetectSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CodeDetectSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: Seq[(Long, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.map { case (id, t) => (id, "srcT", t) }
       .toDF("doc_id", "source", "text")
   }
@@ -56,8 +41,7 @@ class CodeDetectSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted corpus binds both ways") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = (0L until 70L).map(i =>
       (i, s"src${i % 5}", "table scan merge join window agg value row"))
       .toDF("doc_id", "source", "text")

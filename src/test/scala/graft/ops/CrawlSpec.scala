@@ -1,30 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Crawl snapshot delta on a hand-built pair of snapshots: every
   * classification exercised, counts exact. */
-class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CrawlSpec extends AnyFunSuite with SparkSuite {
 
   test("delta classifies added/removed/changed/unchanged") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val prev = Seq(("a", "h1"), ("b", "h2"), ("c", "h3")).toDF("url", "fp")
     val cur = Seq(("b", "h2"), ("c", "h3x"), ("d", "h4")).toDF("url", "fp")
     val out = Crawl.delta(prev, cur).collect()
@@ -38,8 +23,7 @@ class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("NULL fingerprints: presence still counts, null-safe change detection") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // md5(NULL text) = NULL on both engines — presence must come from
     // the row, not fp nullness
     val prev = Seq(("a", Option("h1")), ("b", None), ("c", None), ("d", None))
@@ -57,8 +41,7 @@ class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("manifest: partitioning/order-invariant; any single-row change flips its bucket") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val snap = (0 until 300).map(i => (s"https://h/$i", s"fp$i"))
       .toDF("url", "fp")
     val m = (df: org.apache.spark.sql.DataFrame) =>
@@ -81,8 +64,7 @@ class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mergeUpsert: every action path on a hand-built base + batch") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // base: one row per url at ts 100
     val base = Seq(
       ("kept", 100L, "f0"),        // untouched
@@ -120,8 +102,7 @@ class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mergeUpsert batch collapse: same-ts upsert outvotes delete; fp breaks final tie") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = Seq(("u", 100L, "f")).toDF("url", "warc_ts", "fp")
     val batch = Seq(
       ("u", 200L, "delete", None: Option[String]),
@@ -136,8 +117,7 @@ class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mergeUpsert is idempotent: re-applying the same batch changes nothing") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = Seq(("a", 100L, "f1"), ("b", 100L, "f2")).toDF("url", "warc_ts", "fp")
     val batch = Seq(
       ("a", 200L, "upsert", Option("g1")),
@@ -156,8 +136,7 @@ class CrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("identical snapshots are all unchanged; disjoint are added+removed") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val a = Seq(("a", "h1"), ("b", "h2")).toDF("url", "fp")
     assert(Crawl.delta(a, a).collect().forall(_.getString(1) == "unchanged"))
     val b = Seq(("c", "h3")).toDF("url", "fp")

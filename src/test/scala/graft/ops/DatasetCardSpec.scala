@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dataset card ([[TextAnalysis.datasetCard]]):
@@ -10,24 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - integer identities: tercile counts sum to n_docs,
   *    n_dup_docs = n_docs - n_distinct_texts.
   */
-class DatasetCardSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DatasetCardSpec extends AnyFunSuite with SparkSuite {
 
   test("hand corpus card") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val docs = Seq(
       (0L, "en", "sA", "the a of to in and or is the a of to in and or is"),
       (1L, "en", "sA", "the a of to in and or is the a of to in and or is"),

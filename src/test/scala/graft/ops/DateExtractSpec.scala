@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Date extraction ([[TextAnalysis.dateExtract]]):
@@ -11,24 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the planted corpus parses to exactly the generator arithmetic
   *    (JVM closed-form replication over all five variants).
   */
-class DateExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DateExtractSpec extends AnyFunSuite with SparkSuite {
 
   private def run(rows: Seq[(Long, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     TextAnalysis.dateExtract(
         rows.map { case (i, t) => (i, "s", t) }.toDF("doc_id", "source", "text"))
       .collect()
@@ -53,8 +38,7 @@ class DateExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted corpus equals the generator arithmetic") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = (0L until 100L).map(i => (i, "srcA", "plain words only"))
       .toDF("doc_id", "source", "text")
     val got = TextAnalysis.dateExtract(TextAnalysis.syntheticDateMix(base))

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edit-distance-verified near-dup pipeline:
@@ -17,20 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the testdata corpus is all-ASCII at the driver SF (the contract
   *    the DuckDB byte-based levenshtein replica depends on).
   */
-class DedupEditSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DedupEditSpec extends AnyFunSuite with SparkSuite {
 
   /** Textbook Wagner–Fischer over codepoints — the independent
     * reference the engine's decision arm is checked against. */
@@ -52,8 +38,7 @@ class DedupEditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def docs(texts: String*) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
   }
@@ -85,8 +70,7 @@ class DedupEditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("banded levenshtein equals unbounded on kept pairs; -1 beyond band") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val pairs = Seq(
       ("kitten", "sitting"), ("abcdef", "abcdef"), ("abc", "xyz"),
       ("aaaaaaaaaa", "bbbbbbbbbb"), ("short", "a much longer string entirely"))
@@ -110,8 +94,7 @@ class DedupEditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Spark levenshtein counts codepoints (oracle ASCII-only contract)") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val r = Seq(("héllo", "hello")).toDF("a", "b")
       .select(levenshtein(col("a"), col("b"))).head().getInt(0)
     // 1 under codepoint semantics; DuckDB's byte-based count says 2 —

@@ -1,29 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Span-level exact-substring dedup — hand-computed expectations for
   * every interval case: overlapping windows merge, exactly-adjacent
   * windows (gap == w) merge, separated occurrences stay two spans,
   * within-doc self-repetition counts, unique/short docs emit nothing. */
-class DuplicateSpansSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DuplicateSpansSpec extends AnyFunSuite with SparkSuite {
 
   test("duplicateSpans: overlap, adjacency, separation, self-repeat") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val docs = Seq(
       // A and B share "one two three" and "two three four"
       (1L, "one two three four five six"),
@@ -57,7 +44,7 @@ class DuplicateSpansSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("duplicateSpans is bit-identical across partitioning") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val docs = (0L until 80L).map { i =>
       // overlapping vocabulary so cross-doc w-grams genuinely repeat
       (i, (0 until 30).map(j => s"w${(i + j) % 11}").mkString(" "))

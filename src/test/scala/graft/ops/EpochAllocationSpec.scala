@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Data-constrained epoch allocation ([[Sampling.epochAllocation]]):
@@ -13,25 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the first rejected candidate would exceed it;
   *  - partitioning invariance.
   */
-class EpochAllocationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EpochAllocationSpec extends AnyFunSuite with SparkSuite {
 
   /** doc with exactly n single-char tokens */
   private def docs(rows: Seq[(String, Int)], parts: Int = 4) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.zipWithIndex.map { case ((src, n), i) =>
       (i.toLong, src, Seq.fill(n)("x").mkString(" "))
     }.toDF("doc_id", "source", "text").repartition(parts)

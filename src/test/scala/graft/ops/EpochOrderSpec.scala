@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-epoch Feistel shuffle:
@@ -16,24 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    values themselves (guards the DuckDB oracle's closed form);
   *  - out-of-domain ids raise instead of silently aliasing.
   */
-class EpochOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EpochOrderSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(ids: Seq[Long]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     ids.map(id => (id, s"text $id")).toDF("doc_id", "text")
   }
 

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EXIF plumbing ([[Multimodal.syntheticExifJpeg]] / exifOf /
@@ -15,20 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    magic, entry count bomb, and an out-of-bounds rational offset
   *    all return the absent tuple rather than throwing.
   */
-class ExifSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExifSpec extends AnyFunSuite with SparkSuite {
 
   /** The generator formula, restated independently (mirrors the
     * oracle SQL, not the parser). */
@@ -77,9 +63,8 @@ class ExifSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("engine census equals the closed form over the full corpus") {
-    val s = spark
-    import s.implicits._
-    val imgs = s.range(0, 200, 1, 4)
+    import spark.implicits._
+    val imgs = spark.range(0, 200, 1, 4)
       .map(id => (id, Multimodal.syntheticExifJpeg(id)))
       .toDF("doc_id", "payload")
     val got = Multimodal.exifCensus(imgs).collect()

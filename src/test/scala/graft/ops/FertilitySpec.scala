@@ -1,26 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tokenizer fertility census against hand-computed expectations —
   * independent ground truth (the merge chain, unit counts and both
   * IEEE ratios are worked by hand below, not engine-generated). */
-class FertilitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FertilitySpec extends AnyFunSuite with SparkSuite {
 
   // Corpus: en = "ab ab b", de = "ab".
   // Vocab ab:3 (~a~~b~~</w>~), b:1 (~b~~</w>~).
@@ -28,8 +14,7 @@ class FertilitySpec extends AnyFunSuite with BeforeAndAfterAll {
   //   ab -> ~a~~b</w>~ (2 units), b -> ~b</w>~ (1 unit)
   // Round 2 pairs: (a,b</w>):3 -> fuse: ab -> ~ab</w>~ (1 unit)
   private def docs() = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     Seq((0L, "ab ab b", "en"), (1L, "ab", "de"))
       .toDF("doc_id", "text", "lang")
   }

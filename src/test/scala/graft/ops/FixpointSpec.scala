@@ -1,32 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The batched fixpoint driver: it returns the batch end that passed
   * the test, batching does not change the fixpoint, one budget is
   * shared by every loop of an operator, and running out of it throws,
   * both in the helper and in each operator that uses it. */
-class FixpointSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FixpointSpec extends AnyFunSuite with SparkSuite {
 
   private def xs(vals: Long*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     vals.toDF("x")
   }
 
@@ -74,8 +60,7 @@ class FixpointSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("kCore, stronglyConnected and components throw when their budget runs out") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // triangle + a 10-node pendant path: 10 peels, four 3-peel barriers
     // plus the one that sees the count repeat
     val path = ("z" +: (1 to 10).map(i => s"p$i")).sliding(2).map(p => (p(0), p(1))).toSeq

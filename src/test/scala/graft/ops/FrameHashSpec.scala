@@ -1,27 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GVID video-container plumbing: build/parse round trip, corrupt and
   * hostile-input guards, stride sampling, independent fingerprint
   * replay from the generator formula, and the cross-video share
   * census. */
-class FrameHashSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FrameHashSpec extends AnyFunSuite with SparkSuite {
 
   // Independent replay of the frame formula (no container bytes).
   private def formulaHash(g: Long, f: Int): Long = {

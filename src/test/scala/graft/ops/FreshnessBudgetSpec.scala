@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Freshness-weighted apportionment:
@@ -12,24 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a fresh host out-quotas an equal-token stale host;
   *  - decay floors at 2^0 beyond the bucket cap.
   */
-class FreshnessBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FreshnessBudgetSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: Seq[(Long, String, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("doc_id", "text", "source")
   }
 

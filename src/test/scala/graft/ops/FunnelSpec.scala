@@ -1,34 +1,19 @@
 package graft.ops
 
+import graft.SparkSuite
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Funnel analysis on hand-built event streams: completion, partial
   * dropoff, wrong-order, the strict-after tie rule, and a user who
   * never enters the funnel. */
-class FunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FunnelSpec extends AnyFunSuite with SparkSuite {
 
   private val steps = Seq("signup", "view", "click", "purchase")
 
   private def events(rows: (Long, Long, Long, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.map { case (eid, ms, uid, tpe) => (eid, new Timestamp(ms), uid, tpe) }
       .toDF("event_id", "ts", "user_id", "event_type")
   }

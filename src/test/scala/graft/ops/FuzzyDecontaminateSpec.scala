@@ -1,31 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fuzzy (minhash) benchmark decontamination: planted lightly-edited
   * leakage is caught while unrelated docs are not, the cross-table
   * pipeline agrees with the self-join pipeline restricted to cross
   * pairs, and the result is partition-independent. */
-class FuzzyDecontaminateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FuzzyDecontaminateSpec extends AnyFunSuite with SparkSuite {
 
   private def df(rows: Seq[(Long, String)]): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("doc_id", "text")
   }
 

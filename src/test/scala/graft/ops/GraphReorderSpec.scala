@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BFS reordering compression census ([[WebGraph.graphReorder]]):
@@ -14,30 +13,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *    against a JVM replication;
   *  - partitioning invariance of the rank (4 vs 16 range partitions).
   */
-class GraphReorderSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GraphReorderSpec extends AnyFunSuite with SparkSuite {
 
   private def df(rows: Seq[(String, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("src", "dst")
   }
 
   private def seeds(urls: Seq[String]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     urls.toDF("url")
   }
 
@@ -62,8 +46,7 @@ class GraphReorderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = df(Seq(
       ("a", "m"), ("a", "c"), ("c", "z"),   // reached from a
       ("q", "r")))                          // unreached island
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // replicate through the public census: run reorder on a graph
     // whose urls carry doc numbers so natural ids exist
     val named = df(Seq(

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hard-negative mining:
@@ -15,24 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - exact-cosine ties break to the smaller neg_id;
   *  - anchors with an empty band emit no row.
   */
-class HardNegativesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HardNegativesSpec extends AnyFunSuite with SparkSuite {
 
   private def emb(vs: Seq[Array[Float]]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("vec_id", "embedding")
   }

@@ -1,30 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Heaps-law vocabulary growth census: hand-computed expectations,
   * final-checkpoint totals ≡ corpus totals, monotone growth, interval
   * arithmetic at non-dividing bucket counts, partition independence. */
-class HeapsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HeapsSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(texts: String*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 

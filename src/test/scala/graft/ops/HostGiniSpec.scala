@@ -1,31 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gini concentration against hand-computed values, cross-checked via
   * the independent pairwise-difference definition
   * G = Σᵢⱼ|xᵢ−xⱼ| / (2n²μ). */
-class HostGiniSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HostGiniSpec extends AnyFunSuite with SparkSuite {
 
   /** One doc per (host, tokenCount) — token counts are word counts. */
   private def docsWith(masses: (String, Int)*) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     masses.zipWithIndex.map { case ((h, m), i) =>
       (i.toLong, Seq.fill(m)("tok").mkString(" "), h)
     }.toDF("doc_id", "text", "source")

@@ -1,28 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Host-level rollup — hand-computed expectations for every flag
   * branch: dup-and-thin, clean, dup-but-not-thin, and the host
   * extraction including an explicit port. */
-class HostProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HostProfileSpec extends AnyFunSuite with SparkSuite {
 
   test("hostProfile: counts, dup detection, flags, port-in-host") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val long150 = Array.fill(50)("abc").mkString(" ")          // 199 chars, 50 toks
     val long120 = Array.fill(40)("xy").mkString(" ")           // 119 chars, 40 toks
     val pages = Seq(
@@ -56,7 +43,7 @@ class HostProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("syntheticHostPages: thin host truncates, parked host constant") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val docs = Seq(
       (3L, "0123456789" * 8),   // host 3: expect first 40 chars
       (7L, "anything at all"),  // host 7: expect banner

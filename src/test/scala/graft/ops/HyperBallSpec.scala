@@ -1,31 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HyperBall: the registers after r rounds must be EXACTLY the HLL
   * sketch of the exact r-ball — so per node, the engine's estimate
   * must bit-match an independently folded sketch of the BFS ball, and
   * exact_ball must match BFS. Hand graphs + a seeded random graph. */
-class HyperBallSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HyperBallSpec extends AnyFunSuite with SparkSuite {
 
   private def edges(rows: (String, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("src", "dst")
   }
 

@@ -1,26 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSIR-shaped importance weighting: bucket-count kernel vectors, an
   * INDEPENDENT plain-Scala replay of the whole weight algebra, a
   * planted target-affinity signal, and partition independence. */
-class ImportanceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ImportanceSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: (Long, String, String)*): DataFrame = {
     val ss = spark

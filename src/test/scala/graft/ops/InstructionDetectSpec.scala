@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Instruction-format routing ([[TextAnalysis.instructionDetect]]):
@@ -13,24 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the middle of a line never fires;
   *  - the planted census is exactly the doc_id % 6 split.
   */
-class InstructionDetectSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class InstructionDetectSpec extends AnyFunSuite with SparkSuite {
 
   private def run(rows: Seq[(Long, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     TextAnalysis.instructionDetect(
         rows.map { case (i, t) => (i, "s", t) }
           .toDF("doc_id", "source", "text"))
@@ -55,8 +40,7 @@ class InstructionDetectSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted census is the doc_id % 6 split") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = (0L until 60L).map(i => (i, "srcA", "plain prose"))
       .toDF("doc_id", "source", "text")
     val got = TextAnalysis.instructionDetect(

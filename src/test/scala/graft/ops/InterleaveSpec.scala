@@ -1,31 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stride-scheduled interleaving: exact match against a brute-force
   * single-threaded merge, and the proportional-share property — any
   * prefix of the merged order carries each source in proportion to
   * its weight (±1 emission per source). */
-class InterleaveSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class InterleaveSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: (Long, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.map { case (id, src) => (id, src, "t") }
       .toDF("doc_id", "source", "text")
   }

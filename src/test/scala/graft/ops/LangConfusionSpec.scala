@@ -1,29 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Confusion census over documents whose predictions are forced by
   * construction (marker-dense texts) — expectations worked by hand. */
-class LangConfusionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LangConfusionSpec extends AnyFunSuite with SparkSuite {
 
   test("cells, row totals and shares on a forced two-lang corpus") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val en = "the cat and the dog of the house is that with everything"
     val de = "der hund und die katze das haus ist mit allem der die das"
     // metadata says: 3 en docs (one of which READS German), 1 de doc
@@ -40,8 +25,7 @@ class LangConfusionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("empty text lands in the und column") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val docs = Seq((0L, "", "en")).toDF("doc_id", "text", "lang")
     val out = TextAnalysis.langConfusion(docs).collect()
     assert(out.length === 1)

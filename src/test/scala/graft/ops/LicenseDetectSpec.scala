@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** License routing ([[TextAnalysis.licenseDetect]]):
@@ -12,24 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    routed family;
   *  - the planted corpus census is exactly the doc_id % 6 split.
   */
-class LicenseDetectSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LicenseDetectSpec extends AnyFunSuite with SparkSuite {
 
   private def run(rows: Seq[(Long, String, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     TextAnalysis.licenseDetect(rows.toDF("doc_id", "source", "text"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)) ->
@@ -54,8 +39,7 @@ class LicenseDetectSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted corpus census is the doc_id % 6 split") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = (0L until 60L).map(i => (i, "srcA", "plain prose text"))
       .toDF("doc_id", "source", "text")
     val got = TextAnalysis.licenseDetect(

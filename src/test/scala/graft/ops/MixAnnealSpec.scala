@@ -1,35 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Two-phase mixture schedule against a fully hand-computed example:
   * quality buckets, both weight tables, and every Hamilton base/
   * remainder/extra below are worked by hand (independent ground
   * truth). */
-class MixAnnealSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MixAnnealSpec extends AnyFunSuite with SparkSuite {
 
   // quality by hand (0.4·min(1,T/100) + 0.3·min(1,8·stop/T) + 0.3·(1−…)):
   //   hi : 30 tokens, all stopwords, no punct -> 0.12+0.3+0.3 = 0.72 (×3)
   //   lo : 4 punct-only tokens              -> 0.016           (×0)
   //   mid: 7 tokens, 3 stopwords, no punct  -> 0.028+0.3+0.3 = 0.628 (×1)
   private def docs() = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     Seq(
       (0L, ("the of and to in is " * 5).trim, "hi"),
       (1L, "%%% ### !!! @@@", "lo"),

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mojibake repair (ftfy-style cp1252/UTF-8 round trip): scalar-kernel
@@ -9,20 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * strict-decode false-positive gate, fixpoint behavior on
   * double-encoded text, and the Spark-level contract of
   * [[TextAnalysis.repairEncoding]]. */
-class MojibakeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MojibakeSpec extends AnyFunSuite with SparkSuite {
 
   private def repair(s: String): (String, Int) =
     TextAnalysis.repairMojibakeString(s)

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Trigram novelty ([[Ngram.trigramNovelty]]):
@@ -12,24 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - docs under 3 tokens are excluded;
   *  - partitioning invariance.
   */
-class NgramNoveltySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NgramNoveltySpec extends AnyFunSuite with SparkSuite {
 
   private def run(rows: Seq[(Long, String)], parts: Int = 4) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     Ngram.trigramNovelty(
         rows.toDF("doc_id", "text").repartition(parts))
       .collect()

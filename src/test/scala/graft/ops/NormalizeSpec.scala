@@ -1,26 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unicode normalization pass (control strip + NFC): scalar-kernel
   * vectors against hand-derived UAX #15 ground truth, idempotence,
   * and the Spark-level contract of [[TextAnalysis.normalizeText]]. */
-class NormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NormalizeSpec extends AnyFunSuite with SparkSuite {
 
   // ---- scalar kernel vectors (hand-derived, engine-independent) ----
 
@@ -68,8 +55,7 @@ class NormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- Spark-level contract ----
 
   private def docs(rows: (Long, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toSeq.toDF("doc_id", "text")
   }
 
@@ -87,8 +73,7 @@ class NormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("normalizeText: null text treated as empty") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq((1L, null: String)).toDF("doc_id", "text")
     val out = TextAnalysis.normalizeText(d).collect().head
     assert(out.getString(1) == "" && !out.getBoolean(2)

@@ -1,29 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Training-data ops on controlled inputs: known duplicates, planted
   * near-dups, clustered embeddings. */
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OpsSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: (Long, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toSeq.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'src0' AS source",
         "length(text) AS n_chars")
@@ -66,8 +52,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("brute-force ANN: nearest neighbor of a cluster member is in-cluster") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // two tight clusters around orthogonal axes
     def vec(axis: Int, jitter: Float): Array[Float] = {
       val v = new Array[Float](8)
@@ -96,8 +81,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Deterministic synthetic embeddings: 40 vectors, dim 8, values a
     * small integer lattice scaled to [-1, 1] — no RNG, non-zero norms. */
   private def syntheticEmb(n: Int = 40, dim: Int = 8): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     (0 until n).map { id =>
       val v = Array.tabulate(dim)(d => (((id * 7 + d * 3) % 11) - 5).toFloat / 5f)
       (id.toLong, if (v.forall(_ == 0f)) Array.fill(dim)(0.2f) else v)
@@ -118,8 +102,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sessionize: gap boundaries, singleton sessions, durations — hand-computed") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(sec: Long) = new java.sql.Timestamp(base.getTime + sec * 1000)
     // user 1: burst at 0/10/20 s, then (after a >1h gap) 7200/7205 s;
@@ -149,8 +132,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: min-id representative per cluster, singletons self-represent") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // components {1,2,3} via chain 1-2, 2-3 (propagation needs 2 hops),
     // {5,9}, singleton 7
     val pairs = Seq((2L, 3L), (1L, 2L), (5L, 9L)).toDF("a_id", "b_id")
@@ -161,8 +143,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: long path converges (diameter > 2), both solve paths agree") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // path 10-11-12-13-14-15: min label must travel 5 hops
     val pairs = (10L until 15L).map(i => (i + 1, i)).toDF("a_id", "b_id")
     // distributed min-label loop (gate forced off)
@@ -177,8 +158,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: 300-hop adversarial path solved in O(log n) rounds") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // a duplicate CHAIN of diameter 300: min-label propagation needs
     // ~300 shuffle rounds; star contraction must finish within 15.
     val pairs = (0L until 300L).map(i => (i + 1, i)).toDF("a_id", "b_id")
@@ -189,8 +169,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: paths of every length 1..10 — star contraction agrees with union-find") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     for (n <- 1L to 10L) {
       // scrambled ids, so the minimum sits mid-path for most lengths
       val pairs = (0L until n).map(i => ((i * 7) % 11, ((i + 1) * 7) % 11)).toDF("a_id", "b_id")
@@ -204,8 +183,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: random graphs — star contraction agrees with union-find") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 3) {
       val n = 120 + trial * 40
@@ -220,8 +198,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("langId identifies obvious English and German") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq(
       (1L, "the cat is on the mat and the dog is in the house with the family", "en"),
       (2L, "der Hund ist im Haus und die Katze ist auf der Matte mit der Familie", "de"))
@@ -233,8 +210,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("langId splits CJK scripts: kana → ja, Han-only → zh, hangul → ko") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq(
       // Japanese: Han + kana mixed (round 2 returned "zh" for this)
       (1L, "日本語のテキストです。これはひらがなとカタカナを含む文章である。", "ja"),
@@ -250,8 +226,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("langId marker argmax is deterministic on ties (alphabetically first)") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // " de " is a marker for pt ("o/a/de") and nl ("de"); craft a text
     // hitting only the shared ' de ' marker → tie broken to 'nl' < 'pt'
     val d = Seq((1L, "xxx de yyy", "und")).toDF("doc_id", "text", "lang")
@@ -389,8 +364,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("embedding near-dup: pivot-bucketed exact matches collect-baseline; LSH finds tight dups") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(3)
     // 3 tight clusters (intra-cosine ≈ 0.999) + noise vectors
     def jittered(axis: Int): Array[Float] = {
@@ -416,8 +390,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("exact embedding dedup: pivot prune is lossless at loose and tight thresholds, no corpus broadcast") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // adversarial spread: random unit-ball vectors → pairs at all
     // cosines, including near each threshold boundary
     val rnd = new scala.util.Random(17)
@@ -478,16 +451,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.decodeHeader(full.take(n)) // must not throw
     // and through the Spark job path: one malformed payload must not
     // fail the task
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq((1L, truncated24), (2L, png)).toDF("doc_id", "payload")
     val out = Multimodal.extractFeatures(d).collect().map(f => f.doc_id -> f.format).toMap
     assert(out == Map(1L -> "unknown", 2L -> "png"))
   }
 
   test("extractFeatures emits scalar, hash-stable columns with real dims") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     def be32(v: Int): Array[Byte] =
       Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
@@ -567,8 +538,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("line dedup: threshold, order preservation, blank lines immune") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // "nav menu" in 3 docs (>= minDocs=3 → dropped), "rare" lines
     // unique (kept), blank line in every doc (kept — never counted),
     // "duo" in 2 docs (< 3 → kept). Doc 4 has the boiler line TWICE —
@@ -588,8 +558,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("line dedup: trimmed key matches padded variants; all-dropped doc yields empty text") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq(
       (1L, "  promo  "), (2L, "promo"), (3L, "promo\nkeep me"))
       .toDF("doc_id", "text")
@@ -603,8 +572,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("multimodal metadata sniffs pdf magic") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val pdf = graft.pdf.testgen.PdfBuilder.singlePage(
       Seq(graft.pdf.testgen.PdfBuilder.Line(100, 700, 12, "F1", "x")))
     val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a)
@@ -616,8 +584,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------- host-level minhash overlap ---------------------
 
   private def hostDocs(rows: (String, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toSeq.zipWithIndex.map { case ((src, t), i) => (i.toLong, t, src) }
       .toDF("doc_id", "text", "source")
   }
@@ -656,8 +623,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("minhashLshIncremental == full minhashLsh restricted to delta-touching pairs") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // base: two planted near-dup families + noise; delta: a near-dup
     // of base doc 1, an exact dup of base doc 3, a delta-delta pair,
     // and an unrelated doc
@@ -692,8 +658,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bloomDecontaminate: true hits subset of bloom hits; planted contamination found") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // doc 100 shares a full 5-gram with the benchmark; doc 101 none
     val bench = Seq((0L, "secret eval question about physics here"))
       .toDF("doc_id", "text")
@@ -713,8 +678,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pmiCollocations: lift ordering and exact counts by hand") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // tokens: a b a b a b c c c c — bigrams (a,b):3 (b,a):2 (b,c):1
     // (c,c):3; N=10, c_a=3 c_b=3 c_c=4; lifts 30/9, 20/9, 10/12, 30/16
     val d = Seq((1L, "a b a b a b c c c c")).toDF("doc_id", "text")
@@ -730,8 +694,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pmiCollocations: minCount floors hapax bigrams; tie breaks (a,b)") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // 'x y' and 'y x' both occur twice with identical lift — tie must
     // break on (a asc); 'q r' occurs once and is floored out
     val d = Seq((1L, "x y x y"), (2L, "y x y x"), (3L, "q r"))

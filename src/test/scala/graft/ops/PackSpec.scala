@@ -1,31 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sequence packing: interval arithmetic against a brute-force
   * single-threaded concatenation, boundary straddling, empty-doc
   * exclusion, and the wholeness invariants (intervals tile the stream
   * exactly, in shuffle order, with no gaps). */
-class PackSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PackSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(texts: (Long, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     texts.toDF("doc_id", "text")
   }
 

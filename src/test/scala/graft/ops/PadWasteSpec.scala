@@ -1,30 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Next-pow2 pad-waste census: hand-computed buckets (including the
   * exact-power and n<=1 edges), totals identity, and partition
   * independence. */
-class PadWasteSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PadWasteSpec extends AnyFunSuite with SparkSuite {
 
   private def docsOfTokenCounts(ns: Int*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     ns.zipWithIndex.map { case (n, i) => (i.toLong, Seq.fill(n)("w").mkString(" ")) }
       .toDF("doc_id", "text")
   }

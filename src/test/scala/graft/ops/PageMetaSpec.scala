@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Head-metadata scanner vectors — hand-written markup, hand-computed
@@ -101,27 +102,14 @@ class PageMetaSpec extends AnyFunSuite {
   * canonical applied at the TERMINAL (one hop only), out-of-corpus
   * terminal, redirect loop, and the cluster-representative rule. */
 class CanonicalMapSpec extends org.scalatest.funsuite.AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
-  import org.apache.spark.sql.SparkSession
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+    with SparkSuite {
 
   // pages: a→b→c chain; c declares canonical k; k self-canonical;
   // d declares canonical m (m not fetched); e redirects OUT of corpus;
   // f↔g redirect loop (f even declares a canonical — must be IGNORED,
   // loops have no trustworthy canonical); h plain self-canonical page.
   private def meta() = {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     Seq(
       ("u:a", "u:a"), ("u:b", "u:b"), ("u:c", "u:k"), ("u:k", "u:k"),
       ("u:d", "u:m"), ("u:e", "u:e"), ("u:f", "u:z"), ("u:g", "u:g"),
@@ -129,7 +117,7 @@ class CanonicalMapSpec extends org.scalatest.funsuite.AnyFunSuite
     ).toDF("url", "canonical")
   }
   private def redirects() = {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     Seq(("u:a", "u:b"), ("u:b", "u:c"), ("u:e", "u:out"),
       ("u:f", "u:g"), ("u:g", "u:f")).toDF("src", "dst")
   }

@@ -1,25 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Real pixel decode (ImageIO) + perceptual aHash: hand-computed
   * ground truth on constructed images, determinism, failure
   * degradation, and the banded image near-dup operator against
   * brute-force hamming truth. */
-class PixelFeaturesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PixelFeaturesSpec extends AnyFunSuite with SparkSuite {
 
   private def png(fill: java.awt.image.BufferedImage => Unit,
                   w: Int = 16, h: Int = 16): Array[Byte] = {
@@ -59,8 +47,7 @@ class PixelFeaturesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("decode failures degrade: garbage and empty payloads") {
     assert(Multimodal.pixelFeaturesOf("not an image".getBytes).isEmpty)
     assert(Multimodal.pixelFeaturesOf(Array.emptyByteArray).isEmpty)
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val df = Seq((1L, "junk".getBytes), (2L, Array.emptyByteArray))
       .toDF("doc_id", "payload")
     val rows = Multimodal.pixelFeatures(df).collect()
@@ -79,8 +66,7 @@ class PixelFeaturesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hammingNearDups64 over aHashes equals brute-force truth") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val items = (0L until 40L).map { id =>
       (id, Multimodal.pixelFeaturesOf(
         Multimodal.syntheticPng(id / 4, (id % 4).toInt)).get._4)

@@ -1,32 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Product-quantization ANN: plain-Scala reference replay (independent
   * implementation of the quantize → per-subspace Lloyd → encode → ADC
   * → re-rank contract), full-probe ≡ brute force, partition
   * independence, and ADC-cut recall sanity. */
-class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PqSpec extends AnyFunSuite with SparkSuite {
 
   private def emb(rows: Seq[(Long, Array[Float])]): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("vec_id", "embedding")
   }
 

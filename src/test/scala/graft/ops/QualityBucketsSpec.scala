@@ -1,29 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CCNet-style quality terciles: ntile bucket-size rule, tie-break
   * determinism, and per-language independence. */
-class QualityBucketsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class QualityBucketsSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: (Long, String, String)*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("doc_id", "lang", "text")
   }
 

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quality drift ([[TextAnalysis.qualityDrift]]):
@@ -12,24 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    bucket fold and the TV algebra matches the engine end to end;
   *  - share arithmetic holds per row (n*1000 div total).
   */
-class QualityDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class QualityDriftSpec extends AnyFunSuite with SparkSuite {
 
   private def corpus(n: Int) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     (0L until n.toLong).map { i =>
       val len = 5 + (i * 13 % 120).toInt
       val words = (0 until len).map { j =>
@@ -73,8 +58,7 @@ class QualityDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("identical snapshots would give tv 0 on equal splits") {
     // degenerate: all docs identical text -> single bucket both sides
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val docs = (0L until 70L).map(i => (i, "the a of to in and or is " * 5))
       .toDF("doc_id", "text")
     val rows = TextAnalysis.qualityDrift(docs).collect()

@@ -1,31 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Log2-bucket quantile sketch: hand-computed buckets and ranks, the
   * DDSketch error contract (exact value inside [lo, hi], hi < 2·lo),
   * histogram mergeability (the property that makes it a sketch), and
   * partition independence. */
-class QuantileSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class QuantileSketchSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(lens: Int*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     lens.zipWithIndex.map { case (n, i) => (i.toLong, "x" * n) }
       .toDF("doc_id", "text")
   }
@@ -75,8 +61,7 @@ class QuantileSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rnd = new scala.util.Random(11)
     val a = docs(Seq.fill(100)(rnd.nextInt(3000)): _*)
     val bLens = Seq.fill(130)(rnd.nextInt(3000))
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val b = bLens.zipWithIndex.map { case (n, i) => (1000L + i, "x" * n) }
       .toDF("doc_id", "text")
     val merged = hist(a.union(b))

@@ -1,29 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Flesch–Kincaid readability: hand-computed counts and grades,
   * silent-e rule, punctuation stripping, and degenerate docs. */
-class ReadabilitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ReadabilitySpec extends AnyFunSuite with SparkSuite {
 
   private def run(texts: (Long, String)*): Map[Long, (Long, Long, Long, Double)] = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     TextAnalysis.readability(texts.toDF("doc_id", "text")).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))).toMap

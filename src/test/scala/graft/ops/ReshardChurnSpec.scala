@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Consistent-hash resharding census:
@@ -13,20 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the census row invariants hold (n_docs, load bounds);
   *  - determinism across partitioning.
   */
-class ReshardChurnSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ReshardChurnSpec extends AnyFunSuite with SparkSuite {
 
   /** Independent naive owner: linear scan over (vh, shard, vnode)
     * tuples — no packing, no binary search. */
@@ -54,8 +40,7 @@ class ReshardChurnSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ring churn near ideal 1 - nOld/nNew and far below mod churn") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val docs = (0L until 4000L).map(i => (i, "t")).toDF("doc_id", "text")
     val out = Sampling.reshardChurn(docs, nOld = 8, nNew = 10, vnodes = 64)
       .collect().map(r => r.getString(0) ->
@@ -72,8 +57,7 @@ class ReshardChurnSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("census invariants and determinism across partitioning") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val docs = (0L until 1000L).map(i => (i * 7919L, "t")).toDF("doc_id", "text")
     val a = Sampling.reshardChurn(docs.repartition(2)).collect()
       .map(_.toSeq).toSet

@@ -1,34 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sampling/mixing operators on controlled corpora: cap semantics,
   * budget monotonicity, determinism under repartitioning (the property
   * the multiplicative-hash order exists FOR), and hand-computed
   * expectations independent of the engine. */
-class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SamplingSpec extends AnyFunSuite with SparkSuite {
 
   /** doc_id, text, lang, source — text length scales with id so token
     * counts differ per doc. */
   private def corpus(n: Int, langs: Seq[String], sources: Seq[String]): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     (0 until n).map { i =>
       val words = Seq.tabulate(3 + i % 7)(j => s"w${(i + j) % 11}")
       (i.toLong, words.mkString(" "), langs(i % langs.size), sources(i % sources.size))
@@ -56,8 +42,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tokenBudgetSample: per-stratum inclusive budget, hand-checked") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // one stratum, known token counts: 3,1,2,5 tokens for ids 0..3
     val d = Seq(
       (0L, "a b c"), (1L, "a"), (2L, "a b"), (3L, "a b c d e"))
@@ -96,8 +81,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("vocabulary: hand-computed counts with deterministic tie order") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq((0L, "b a b C"), (1L, "c a B"), (2L, "a")).toDF("doc_id", "text")
     // counts: a=3, b=3, c=2 (lowercased)
     val out = Sampling.vocabulary(d, n = 2).collect()
@@ -109,8 +93,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lengthProfile: exact rank-based quantiles, hand-computed") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // source 'a': lengths 1..10 (doc_id = length for tie-order) ->
     //   n=10: p50 = value at ceil(5)=rank 5 -> 5; p90 -> rank 9 -> 9;
     //   p99 -> ceil(9.9)=rank 10 -> 10; max=10
@@ -129,8 +112,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mixReport: integer totals per stratum, hand-computed") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq(
       (0L, "x y", "en", "a"), (1L, "x", "en", "a"),
       (2L, "x y z", "de", "a"), (3L, "x y z w", "en", "b"))
@@ -144,8 +126,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hostDisjointSplit: host-consistent, threshold-exact, hand-checked buckets") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // independently computed (python FNV-1a mod 1000):
     // host2.example → 11, host6.example → 7, host0.example → 997,
     // host5.example → 838
@@ -273,8 +254,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
       r.getLong(3), r.getLong(4))).sortBy(_._1).toSeq
 
   test("shardAssign: positions are the global (k, doc_id) rank") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = (0L until 300L).map(i => Tuple1(i)).toDF("doc_id")
     val out = shardRows(Sampling.shardAssign(d, shardSize = 64L, nPartitions = 8))
     // independent local computation of the spec
@@ -296,8 +276,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // if the operator relied on it, every range partition would
     // restart numbering at offsets(0). The pid is frozen into the
     // checkpointed rows instead, so this must be byte-identical.
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = (0L until 257L).map(i => Tuple1(i)).toDF("doc_id")
     val plain = shardRows(Sampling.shardAssign(d, 32L, 8))
     val coalesced = shardRows(Sampling.shardAssign(d, 32L, 8).coalesce(1))
@@ -307,8 +286,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("shardAssign: partition-count-invariant (range cuts don't matter)") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = (0L until 300L).map(i => Tuple1(i)).toDF("doc_id")
     assert(shardRows(Sampling.shardAssign(d, 50L, 4)) ==
       shardRows(Sampling.shardAssign(d.repartition(11), 50L, 9)))

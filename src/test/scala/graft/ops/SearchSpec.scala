@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BM25 retrieval — expected scores computed INDEPENDENTLY in plain
@@ -10,19 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-for-bit against a second implementation; plus exact-value spot
   * checks where the arithmetic is clean, rank/tie determinism, and
   * partitioning invariance. */
-class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SearchSpec extends AnyFunSuite with SparkSuite {
 
   // the documented step order, in plain doubles
   private def score(tf: Long, dl: Long, df: Long, n: Long,
@@ -36,7 +23,7 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def corpus() = {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     Seq(
       (1L, "apple banana apple"),
       (2L, "apple cherry"),
@@ -54,7 +41,7 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bm25TopK matches the independent double-precision replica") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val queries = Seq((0L, "apple"), (0L, "banana"), (1L, "cherry"))
       .toDF("query_id", "term")
     // N = 3, dl = (3, 2, 4), avgdl = 3.0, df = 2 for every term
@@ -89,7 +76,7 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bm25TopK: k truncates; equal scores tie-break by doc_id") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     // two docs with IDENTICAL stats -> bit-equal scores -> doc_id order
     val docs = Seq((5L, "kiwi mango"), (4L, "kiwi mango"),
       (6L, "kiwi kiwi kiwi")).toDF("doc_id", "text")
@@ -103,7 +90,7 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bm25TopK is bit-identical across partitioning") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val docs = (0L until 60L).map(i =>
       (i, s"w${i % 7} w${(i * 3) % 11} w${(i * 5) % 11} common"))
       .toDF("doc_id", "text")
@@ -117,7 +104,7 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("syntheticQueries: first 4 distinct tokens, first-occurrence order") {
-    val s = spark; import s.implicits._
+    import spark.implicits._
     val docs = Seq((0L, "b a b c a d e"), (1L, "x y"), (7L, "zzz"))
       .toDF("doc_id", "text")
     val q = Search.syntheticQueries(docs, nQueries = 5).collect()

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shuffle-quality census ([[Sampling.shuffleAdjacency]]):
@@ -13,24 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a JVM replication from the collected epochOrder output matches
   *    the census.
   */
-class ShuffleAdjacencySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ShuffleAdjacencySpec extends AnyFunSuite with SparkSuite {
 
   test("sorted corpus collapses after shuffling; exact replication") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val n = 400
     // source-sorted: docs 0..99 src0, 100..199 src1, ...
     val docs = (0L until n.toLong)

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sitemap coverage ([[WebGraph.parseSitemap]] /
@@ -14,20 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - full synthetic 13-host corpus equals a closed-form JVM
   *    replication of the oracle's variant rules.
   */
-class SitemapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SitemapSpec extends AnyFunSuite with SparkSuite {
 
   test("parse kernel vectors") {
     val (i1, e1, n1) = WebGraph.parseSitemap(
@@ -49,8 +35,7 @@ class SitemapSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hand census: both / declared-only / fetched-only / lastmod sum") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val maps = Seq(
       ("hA", "<urlset>" +
         "<url><loc>https://hA/p1</loc><lastmod>2026-01-03</lastmod></url>" +
@@ -74,8 +59,7 @@ class SitemapSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("synthetic corpus equals the closed-form variant rules") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val n = 200
     val docs = (0 until n).map(i => (i.toLong, s"t$i")).toDF("doc_id", "text")
     val fetched = docs.select(concat(lit("https://host"),

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spam mass ([[WebGraph.spamMass]]):
@@ -14,26 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the two chains share one pass: fewer Spark jobs than the two
   *    ranks run one after the other.
   */
-class SpamMassSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SpamMassSpec extends AnyFunSuite with SparkSuite {
 
   /** A trusted ring t0->t1->t2->t0 (seeded at t0) plus a spam farm
     * f0..f3 all linking each other, with no path from the ring. */
   private def planted(): (DataFrame, DataFrame) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val ring = Seq(("t0", "t1"), ("t1", "t2"), ("t2", "t0"))
     val farm = for {
       i <- 0 until 4; j <- 0 until 4 if i != j

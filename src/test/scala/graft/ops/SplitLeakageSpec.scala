@@ -1,31 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Split-leakage census against hand-computed Knuth buckets:
   * key(id) = ((id mod 2^31)·2654435761) mod 2^32, bucket = key mod 10.
   * By hand: ids 0,1,2 -> buckets 0,1,6 (train); 6 -> 8 (val);
   * 9 -> 9 (test). */
-class SplitLeakageSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SplitLeakageSpec extends AnyFunSuite with SparkSuite {
 
   test("duplicates follow their cluster; naive straddles are counted") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // cluster {0, 6}: identical text, rep 0 -> split train for BOTH,
     //   though doc 6's own hash lands in val -> a naive straddle.
     // cluster {1}: train. cluster {9}: test.
@@ -42,8 +27,7 @@ class SplitLeakageSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("by construction no cluster ever straddles the real split") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // 60 docs over 20 texts (3 dups each): every text's docs must all
     // land in the SAME split — per-(fp) distinct split count == 1
     val docs = (0L until 60L).map(i => (i, s"text ${i % 20}"))

@@ -1,30 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQ8 ANN: exactness when the candidate cut covers the corpus,
   * partition-independence of the integer-tie cut, constant dimensions,
   * and recall against the brute-force baseline. */
-class Sq8Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class Sq8Spec extends AnyFunSuite with SparkSuite {
 
   private def emb(rows: (Long, Array[Float])*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("vec_id", "embedding")
   }
 

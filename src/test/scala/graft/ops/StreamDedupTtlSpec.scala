@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TTL-evicting streaming dedup ([[Events.dedupTtlStream]]):
@@ -21,30 +20,16 @@ import org.scalatest.funsuite.AnyFunSuite
   *    next advances (Spark rejects timeouts below the watermark);
   *  - min-fold determinism for multi-row emitting batches.
   */
-class StreamDedupTtlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamDedupTtlSpec extends AnyFunSuite with SparkSuite {
 
   private val H = 3600L * 1000000L // one hour in us
 
   private def run(rows: Seq[(Long, Long, Long)], nBatches: Int = 4) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val events = rows.toDF("event_id", "us", "user_id")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"))
-    Events.dedupTtlStream(s, events, nBatches = nBatches).collect()
+    Events.dedupTtlStream(spark, events, nBatches = nBatches).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
   }
 

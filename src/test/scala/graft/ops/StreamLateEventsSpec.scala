@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Watermark late-data semantics ([[Events.lateEventsStream]]):
@@ -16,29 +15,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a JVM replication of the oracle's exact rule reproduces the
   *    engine output on a deterministic pseudo-random corpus.
   */
-class StreamLateEventsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamLateEventsSpec extends AnyFunSuite with SparkSuite {
 
   private val H = 3600L * 1000000L
 
   private def run(rows: Seq[(Long, Long)], delayUs: Long) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val events = rows.toDF("event_id", "us")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"))
-    Events.lateEventsStream(s, events, windowUs = H, delayUs = delayUs)
+    Events.lateEventsStream(spark, events, windowUs = H, delayUs = delayUs)
       .collect()
       .map(r => (r.getLong(0) / H, r.getLong(1), r.getLong(2)))
       .sortBy(_._1)

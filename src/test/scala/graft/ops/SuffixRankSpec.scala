@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Prefix-doubling suffix ranks: hand-computed spectrum, the
@@ -9,24 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * grouping (the oracle's formulation, replayed in-engine on random
   * corpora), document-boundary isolation, witness correctness, and
   * partition independence. */
-class SuffixRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SuffixRankSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(texts: String*): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LSH banding-recall sweep ([[Dedup.thresholdSweep]]):
@@ -15,24 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - monotonicity: n_truth and n_caught never increase as t rises;
   *  - the audit bound excludes doc_id >= auditMax from both arms.
   */
-class ThresholdSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ThresholdSweepSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: Seq[(Long, String)]) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.map { case (id, t) => (id, t, "srcT") }
       .toDF("doc_id", "text", "source")
   }
@@ -79,8 +64,7 @@ class ThresholdSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("monotone in t and audit-bounded") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val base = (0L until 60L).map { i =>
       val words = (0 until 30).map(j => s"t${(i * 31 + j * 7) % 40}")
       (i, words.mkString(" "), "srcT")

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Query-param census ([[WebGraph.urlParamCensus]]):
@@ -9,24 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    tracking flags, param-free urls contribute nothing;
   *  - empty query string and valueless params don't blow up.
   */
-class UrlParamsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class UrlParamsSpec extends AnyFunSuite with SparkSuite {
 
   test("hand census") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val urls = Seq(
       "https://h/a?id=1&utm_source=x",
       "https://h/b?id=2&utm_source=x",

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** WARC/1.0 container plumbing ([[Warc.parseShard]] / [[Warc.records]]):
@@ -15,20 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (JVM closed-form replication incl. FNV fingerprints and the
   *    truncated-shard last-record loss).
   */
-class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WarcSpec extends AnyFunSuite with SparkSuite {
 
   private def ascii(s: String): Array[Byte] = s.getBytes("US-ASCII")
 
@@ -75,9 +61,8 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("synthetic corpus equals the generator formula end to end") {
-    val s = spark
-    import s.implicits._
-    val shards = s.range(0, 40, 1, 4)
+    import spark.implicits._
+    val shards = spark.range(0, 40, 1, 4)
       .map(id => (id, Warc.syntheticShard(id)))
       .toDF("shard_id", "warc")
     val got = Warc.records(shards).collect()

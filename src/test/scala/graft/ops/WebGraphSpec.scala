@@ -1,28 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Web-graph layer: anchor-scanner vectors (hand-written markup, not
   * engine-generated), hand-computed integer PageRank, determinism
   * under repartitioning, and the synthetic-web construct+parse
   * round-trip against a Spark replication of the closed-form oracle. */
-class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WebGraphSpec extends AnyFunSuite with SparkSuite {
 
   private val base = "https://h.example/a/page.html"
 
@@ -101,8 +88,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("normalizeUrls collapses all messy variants to one canonical") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val docs = (0L until 60L).map(i => (i, "t")).toDF("doc_id", "text")
     val out = WebGraph.normalizeUrls(WebGraph.messyUrls(docs)).collect()
     assert(out.length == 60)
@@ -118,8 +104,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------- graph kernels ----------------------------------
 
   private def edgeDf(rows: Seq[(String, String)]): DataFrame = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     rows.toDF("src", "dst")
   }
 
@@ -315,8 +300,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------- synthetic web round-trip ------------------------
 
   test("extractAnchors(syntheticWeb) equals the closed-form edge set") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val n = 50L
     val docs = (0L until n).map(i => (i, s"word$i text body"))
       .toDF("doc_id", "text")
@@ -345,8 +329,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------- redirect resolution ----------------------------
 
   test("resolveRedirects: chains to terminal with exact hops; dup src folds") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // a→b→c→d (len 3), e→f (len 1), g→b (joins mid-chain),
     // h has TWO rows (→z and →a): min(dst) = a wins deterministically
     val r = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("e", "f"),
@@ -363,8 +346,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("resolveRedirects: loops flagged, loop-feeders flagged, acyclic untouched") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val r = Seq(("p", "q"), ("q", "p"), ("in", "p"), ("ok", "t"))
       .toDF("src", "dst")
     val out = WebGraph.resolveRedirects(r, maxRounds = 6).collect()
@@ -374,8 +356,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("resolveRedirects: 100-hop chain resolves within 8 doubling rounds") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val r = (0 until 100).map(i => (s"u$i", s"u${i + 1}")).toDF("src", "dst")
     // 2^7 = 128 ≥ 100 → 7 doubling rounds + 1 convergence probe round
     val out = WebGraph.resolveRedirects(r, maxRounds = 8).collect()
@@ -389,8 +370,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---------------- anchor-text profile ----------------------------
 
   test("anchorTextProfile: counts, distinct hosts, capped sorted anchors") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val e = Seq(
       ("https://a.x/1", "https://t.x/p", "zeta", false),
       ("https://a.x/2", "https://t.x/p", "alpha", false),
@@ -479,8 +459,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("scheduleCrawl: per-host priority order, delay spacing, default fill") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val frontier = Seq(
       (1L, "https://h1.x/a", "h1.x", 5L),
       (2L, "https://h1.x/b", "h1.x", 9L),
@@ -497,8 +476,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("robotsFilter end-to-end incl. missing-policy host") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val frontier = Seq(
       (1L, "https://h0.x/priv/a"), (2L, "https://h0.x/priv/pub/a"),
       (3L, "https://h0.x/open"), (4L, "https://nopolicy.x/a"))
@@ -513,13 +491,12 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("robotsFilter over the synthetic corpus matches the closed form") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // 400 docs so the (hm=1, v∈{0,3}, id starts with '2') allow-carve
     // cell is populated (first witness: doc 213)
     val docs = (0L until 400L).map(i => (i, "t")).toDF("doc_id", "text")
     val out = WebGraph.robotsFilter(WebGraph.syntheticFrontier(docs),
-      WebGraph.syntheticRobots(s), "graftbot").collect()
+      WebGraph.syntheticRobots(spark), "graftbot").collect()
       .map(r => r.getLong(0) -> ((r.getBoolean(2), r.getString(3)))).toMap
     assert(out.size == 400)
     (0L until 400L).foreach { d =>
@@ -668,8 +645,7 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("crawlTraps: parameterized explosion flags, path templates don't") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val f = ((0 until 150).map(i => s"https://h1.x/cal?p=$i") ++
       (0 until 150).map(i => s"https://h1.x/page$i") ++
       Seq("https://h2.x/about")).toDF("url")

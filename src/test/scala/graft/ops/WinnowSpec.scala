@@ -1,26 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Winnowing fingerprints against an independent brute-force
   * reference (explicit per-window rightmost-argmin — no packed keys),
   * plus the guarantee the algorithm exists for and the stop-gram cap. */
-class WinnowSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WinnowSpec extends AnyFunSuite with SparkSuite {
 
   /** Reference winnow: literal Schleimer et al. — for every window of
     * w hashes keep the rightmost minimum; union of selections. */
@@ -43,8 +29,7 @@ class WinnowSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def docs(texts: String*) = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
   }

@@ -1,31 +1,22 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pdf.testgen.PdfBuilder
 import graft.pdf.testgen.PdfBuilder.Line
 
-class ExtractExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtractExpressionSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 2
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     ExtractText.register(spark)
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
   test("extract_text usable from SQL over a binary column") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val pdf = PdfBuilder.singlePage(Seq(Line(100, 700, 12, "F1", "Via SQL")))
     val html = "<html><body><article><p>This paragraph is long enough to survive the boilerplate density rules of the stripper.</p></article></body></html>".getBytes("UTF-8")
     Seq(("a", pdf), ("b", html)).toDF("id", "payload").createOrReplaceTempView("blobs")
@@ -36,8 +27,7 @@ class ExtractExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Column API + null safety") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val df = Seq(("x", null: Array[Byte]), ("y", Array.emptyByteArray),
         ("z", "garbage not a pdf".getBytes("UTF-8")))
       .toDF("id", "payload")

@@ -1,27 +1,11 @@
 package graft.spark
 
+import graft.SparkSuite
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.html.BoilerplateStripper
 
-class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("extract-job-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtractJobSpec extends AnyFunSuite with SparkSuite {
 
   test("html stripper keeps article, drops nav/footer") {
     val html =
@@ -40,8 +24,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("xref-killed payloads recover byte-identical text via reconstruction") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val pages = PagesGen.generate(spark, 40, seed = 42L, parallelism = 4).toDF()
       .filter(col("url").endsWith(".pdf"))
@@ -97,8 +80,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("payload-dedup path: per-url output identical to plain extract on a duplicated corpus") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     import org.apache.spark.sql.functions._
     // 20 distinct payloads seen under 3 urls each (interleaved url
     // ordering so reps aren't trivially the first partition's rows)
@@ -126,11 +108,10 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("oversize rows are skipped not failed") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val big = PageRow("https://h.example/big.pdf",
       new java.sql.Timestamp(0), new Array[Byte](2 * 1024 * 1024), "", "en")
-    val pages = s.createDataset(Seq(big)).toDF()
+    val pages = spark.createDataset(Seq(big)).toDF()
     val out = ExtractJob.extract(pages,
       ExtractJob.Config(salt = false, oversizeCapBytes = 1024 * 1024)).collect()
     assert(out.length == 1)
@@ -138,8 +119,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Config.password flows to the extractor: locked PDF ok with password, error row without") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.pdf.cos.PdfObj
     import graft.pdf.cos.PdfObj._
@@ -171,7 +151,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"/P -3904 /O <${hx(oBytes)}> /U <$uHex> >>")
     val pdf = b.build(catId, s"/Encrypt $encId 0 R /ID [<$idHex> <$idHex>] ")
 
-    val pages = s.createDataset(Seq(PageRow("https://h.example/locked.pdf",
+    val pages = spark.createDataset(Seq(PageRow("https://h.example/locked.pdf",
       new java.sql.Timestamp(0), pdf, "", "en"))).toDF()
     val ok = ExtractJob.extract(pages,
       ExtractJob.Config(salt = false, password = "sesame")).collect()
@@ -803,8 +783,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a null payload is an error row, salted, unsalted and manifested; a rerun attempts nothing") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val dir = Files.createTempDirectory("graft-null-payload").toString
     val nul = PageRow("https://h.example/null", new java.sql.Timestamp(0), null, "", "en")
     val input = PagesGen.generate(spark, 8, seed = 24, parallelism = 2).union(Seq(nul).toDS())
@@ -829,8 +808,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val dir = Files.createTempDirectory("graft-ckpt-empty").toString
     val pages = PagesGen.generate(spark, 12, seed = 19, parallelism = 2).toDF().cache()
     val cfg = ExtractJob.Config(salt = false)
@@ -847,8 +825,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fixture kinds through the JOB path decode identically to the kernel path") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     import org.apache.spark.sql.functions.col
     // the same payload bytes the kernel-level pins decode, pushed
     // through ExtractJob.extract (pruning, sniff, dispatch, status)
@@ -882,8 +859,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("malformed payloads become error rows with messages, never failures") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val rows = Seq(
       PageRow("https://bad/nohdr", new java.sql.Timestamp(0), "%PDF-1.4 then nothing".getBytes, "", "en"),
       PageRow("https://bad/garbage", new java.sql.Timestamp(0),
@@ -891,7 +867,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
           System.arraycopy("%PDF-1.7".getBytes, 0, a, 0, 8); a }, "", "en"),
       PageRow("https://good/html", new java.sql.Timestamp(0),
         "<html><body><article><p>Long enough paragraph for the density classifier to keep happily.</p></article></body></html>".getBytes, "", "en"))
-    val out = ExtractJob.extract(s.createDataset(rows).toDF(),
+    val out = ExtractJob.extract(spark.createDataset(rows).toDF(),
       ExtractJob.Config(salt = false)).collect().map(d => d.url -> d).toMap
     assert(out("https://good/html").status == "ok")
     // the two broken PDFs either recover to ok (reconstruction) or

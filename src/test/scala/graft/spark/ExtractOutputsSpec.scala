@@ -1,14 +1,14 @@
 package graft.spark
 
+import graft.SparkSuite
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pdf.Outputs
 
@@ -17,22 +17,7 @@ import graft.pdf.Outputs
   * function builds; narrowing never changes a row's text, counts or
   * status; and every consumer that reads markdown or html (a write,
   * typed objects, `.rdd`, the checkpointed run) still gets them. */
-class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("extract-outputs-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtractOutputsSpec extends AnyFunSuite with SparkSuite {
 
   /** Salted with a threshold low enough that both tiers hold rows, and
     * unsalted: one extraction function or two. */
@@ -55,8 +40,7 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The kernel's all-outputs row, the reference every full read must match. */
   private def kernel(pages: DataFrame): Map[String, ExtractedDoc] = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     pages.select("url", "html").as[(String, Array[Byte])].collect()
       .map { case (u, b) => u -> ExtractJob.extractOne(u, b, 0, ExtractJob.Config()) }.toMap
   }
@@ -78,8 +62,7 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
       check("filter(status === ok).select(url, markdown)",
         optimized(ds.filter(col("status") === "ok").select("url", "markdown")), Outputs(markdown = true, html = false))
       check("toDF()", optimized(ds.toDF()), Outputs.All)
-      val s = spark
-      import s.implicits._
+      import spark.implicits._
       check("typed map(_.html)", optimized(ds.map(_.html)), Outputs.All)
       check("typed filter", optimized(ds.filter(_.status == "ok").select("url")), Outputs.All)
       // count() runs, and agrees with the full read
@@ -92,8 +75,7 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ref = kernel(pages)
       assert(ref.values.count(d => d.markdown.nonEmpty) > 24 && ref.values.count(_.html.nonEmpty) > 12)
       val ds = ExtractJob.extract(pages, cfg)
-      val s = spark
-      import s.implicits._
+      import spark.implicits._
       def same(got: Seq[(String, String, String)], what: String): Unit = {
         assert(got.size == ref.size, what)
         got.foreach { case (u, md, html) =>
@@ -148,8 +130,7 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The mixed, fixture and malformed corpora of the text-level checks. */
   private def corpora: Seq[(String, DataFrame)] = {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     Seq("generateMixed" -> mixed(400),
       "generateFixtures" -> PagesGen.generateFixtures(spark, nPerKind = 6, parallelism = 2).toDF(),
       "malformed" -> spark.createDataset(malformed).toDF())
@@ -189,8 +170,7 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("extractDeduped runs extract's function: select(url, text) builds no markdown or html") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     import org.apache.spark.sql.functions.{concat, lit}
     val base = mixed(64)
     val pages = base.unionAll(base.withColumn("url", concat(lit("dup-"), col("url"))))
@@ -203,8 +183,7 @@ class ExtractOutputsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("extract_text is extractOne's text-only text where the status is ok, NULL elsewhere") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     for ((corpus, pages) <- corpora) {
       val rows = pages.select(col("url"), col("html"), ExtractText.of(col("html")))
         .as[(String, Array[Byte], String)].collect()

@@ -1,26 +1,12 @@
 package graft.spark
 
+import graft.SparkSuite
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming extraction: backlog processed exactly-once; late-arriving
   * files picked up on restart from the same checkpoint. */
-class ExtractStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtractStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("AvailableNow stream extracts backlog then new files exactly once") {
     val dir = Files.createTempDirectory("graft-stream").toString

@@ -1,34 +1,23 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions.{concat, lit}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Codegen'd doc_fingerprint expression: SQL surface, whole-stage
   * codegen participation, kernel equivalence. */
-class FingerprintExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FingerprintExpressionSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 2
 
   test("SQL-registered doc_fingerprint matches the kernel and is deterministic") {
-    val s = spark
-    import s.implicits._
-    DocFingerprint.register(s)
+    import spark.implicits._
+    DocFingerprint.register(spark)
     Seq((1L, "the quick brown fox jumps over the lazy dog"),
         (2L, "the quick brown fox jumps over the lazy dog"),
         (3L, "completely different content here entirely"))
       .toDF("doc_id", "text").createOrReplaceTempView("fp_docs")
-    val rows = s.sql("SELECT doc_id, doc_fingerprint(text) AS fp FROM fp_docs")
+    val rows = spark.sql("SELECT doc_id, doc_fingerprint(text) AS fp FROM fp_docs")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rows(1L) == rows(2L))
     assert(rows(1L) != rows(3L))
@@ -36,11 +25,10 @@ class FingerprintExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("expression runs inside WholeStageCodegen (no UDF boundary)") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // a range scan (not a constant-foldable local relation) so the
     // projection actually lands in a WholeStageCodegen stage
-    val df = s.range(0, 8)
+    val df = spark.range(0, 8)
       .select($"id", concat(lit("doc body number "), $"id".cast("string")).as("text"))
       .select($"id", DocFingerprint.of($"text").as("fp"))
     val plan = df.queryExecution.explainString(
@@ -55,8 +43,7 @@ class FingerprintExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null input yields null, empty string yields 0") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val df = Seq((1L, null: String), (2L, "")).toDF("doc_id", "text")
       .select($"doc_id", DocFingerprint.of($"text").as("fp"))
     val rows = df.collect()

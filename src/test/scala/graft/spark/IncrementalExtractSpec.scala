@@ -1,32 +1,18 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental extraction between crawl snapshots: hand-computed
   * worklist classification, and the invariant that incremental output
   * is bit-identical to full extraction restricted to the worklist. */
-class IncrementalExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class IncrementalExtractSpec extends AnyFunSuite with SparkSuite {
 
   private def snap(ids: Range, seedOf: Long => Long): DataFrame = {
-    val s = spark
-    import s.implicits._
-    s.range(ids.start, ids.end, 1, 4).map { id =>
+    import spark.implicits._
+    spark.range(ids.start, ids.end, 1, 4).map { id =>
       (s"https://host$id.example/doc$id", PagesGen.payload(id, seedOf(id))._1)
     }.toDF("url", "html")
   }

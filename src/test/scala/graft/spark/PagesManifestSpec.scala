@@ -1,33 +1,18 @@
 package graft.spark
 
+import graft.SparkSuite
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, concat, length, lit, max, pmod, xxhash64}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pages-table manifest and what `extract` plans from it: no heavy
   * tier over a manifested table whose largest payload is within the
   * threshold, the salted plan for every input the manifest cannot bound,
   * and the same rows either way. Also the known-schema reads. */
-class PagesManifestSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("pages-manifest-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PagesManifestSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanHelper {
 
   /** A fresh manifested pages table of `n` mixed docs. */
   private def table(n: Long = 60): String = {
@@ -96,8 +81,7 @@ class PagesManifestSpec extends AnyFunSuite with BeforeAndAfterAll with Adaptive
   }
 
   test("a file appended after the manifest keeps the salted heavy tier") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val dir = table()
     val big = ("<html><body><article>" + "<p>Appended paragraph about extraction engines.</p>" * 24000 +
       "</article></body></html>").getBytes("UTF-8")

@@ -1,8 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming quality gate: hand-computed score/accept semantics on
@@ -10,25 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * equality through the full extraction pipeline (the gate is pure
   * projections, so Structured Streaming and batch must agree
   * bit-for-bit). */
-class StreamQualityGateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamQualityGateSpec extends AnyFunSuite with SparkSuite {
 
   test("gate semantics on hand-computed docs") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     // doc 1: 6 tokens all stopwords, 18 chars, 0 punct ->
     //   quality = 0.4*min(1, 6/100) + 0.3*min(1, 6*8/6) + 0.3*(1-0)
     //           = 0.024 + 0.3 + 0.3 = 0.624 ; en markers > 0 -> accept
@@ -49,8 +33,7 @@ class StreamQualityGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("threshold and language list are honored") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     val d = Seq((1L, "the a of to in and")).toDF("doc_id", "text")
     assert(!ExtractStreamJob.qualityGate(d, minQuality = 0.7)
       .head().getAs[Boolean]("accept"))
@@ -59,20 +42,19 @@ class StreamQualityGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream == batch through the full extraction pipeline") {
-    val s = spark
     val base = java.nio.file.Files.createTempDirectory("gate_eq").toString
-    PagesGen.writeBucketed(PagesGen.generate(s, 40, seed = 7L, parallelism = 4),
+    PagesGen.writeBucketed(PagesGen.generate(spark, 40, seed = 7L, parallelism = 4),
       s"$base/pages", nBuckets = 4)
     // batch arm
     val batch = ExtractStreamJob.qualityGate(
-      ExtractJob.extract(s.read.parquet(s"$base/pages"),
+      ExtractJob.extract(spark.read.parquet(s"$base/pages"),
         ExtractJob.Config(salt = false)).toDF())
       .select(col("url"), col("quality"), col("lang_pred"), col("accept"),
         xxhash64(col("text")).as("h"))
       .collect().map(_.toSeq).sortBy(_.head.toString)
     // stream arm
-    val schema = s.read.parquet(s"$base/pages").schema
-    val pages = s.readStream.schema(schema).parquet(s"$base/pages")
+    val schema = spark.read.parquet(s"$base/pages").schema
+    val pages = spark.readStream.schema(schema).parquet(s"$base/pages")
     val q = ExtractStreamJob.qualityGate(
       ExtractJob.extract(pages, ExtractJob.Config(salt = false)).toDF())
       .writeStream.format("parquet")
@@ -80,7 +62,7 @@ class StreamQualityGateSpec extends AnyFunSuite with BeforeAndAfterAll {
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val stream = s.read.parquet(s"$base/out")
+    val stream = spark.read.parquet(s"$base/out")
       .select(col("url"), col("quality"), col("lang_pred"), col("accept"),
         xxhash64(col("text")).as("h"))
       .collect().map(_.toSeq).sortBy(_.head.toString)

@@ -1,28 +1,14 @@
 package graft.spark
 
+import graft.SparkSuite
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful streaming operators: watermarked windowed quality metrics
   * (append emits a window exactly once, after the watermark passes it)
   * and first-seen URL dedup (per-key state spans micro-batches). */
-class StreamStateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamStateSpec extends AnyFunSuite with SparkSuite {
 
   private val base = 1735689600000L // 2025-01-01T00:00:00Z — fixed, no wall clock
   private def ts(minutes: Long) = new Timestamp(base + minutes * 60000L)
@@ -30,9 +16,8 @@ class StreamStateSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getBytes("UTF-8")
 
   test("qualityMetrics: window emits once, after the watermark passes it") {
-    val s = spark
-    implicit val sqlCtx = s.sqlContext
-    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
     val in = MemoryStream[(String, Timestamp, Array[Byte])]
     val metrics = ExtractStreamJob.qualityMetrics(in.toDF.toDF("url", "warc_ts", "html"))
     val q = metrics.writeStream.format("memory").queryName("qm")
@@ -62,9 +47,8 @@ class StreamStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedupFirstSeen: intra-batch duplicates survive min warc_ts, tie-break payload") {
-    val s = spark
-    implicit val sqlCtx = s.sqlContext
-    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
     val pA = "<html><body><p>payload AAAA</p></body></html>".getBytes("UTF-8")
     val pB = "<html><body><p>payload BBBB</p></body></html>".getBytes("UTF-8")
     val in = MemoryStream[(String, Timestamp, Array[Byte])]
@@ -96,8 +80,7 @@ class StreamStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("qualityMetricsFromExtracted matches the re-extracting variant (batch)") {
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val pages = Seq(
       ("https://a.example/1", ts(10), html),
@@ -121,9 +104,8 @@ class StreamStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedupFirstSeen: only the first occurrence of a url ever passes") {
-    val s = spark
-    implicit val sqlCtx = s.sqlContext
-    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
     val in = MemoryStream[(String, Timestamp, Array[Byte])]
     val deduped = ExtractStreamJob.dedupFirstSeen(in.toDF.toDF("url", "warc_ts", "html"))
     val q = deduped.writeStream.format("memory").queryName("dd")
