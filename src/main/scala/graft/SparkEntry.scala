@@ -210,16 +210,17 @@ object SparkEntry {
       // Structured Streaming surface: AvailableNow micro-batch over a
       // staged corpus, read back from the parquet sink (exactly-once
       // via the streaming checkpoint)
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
-      PagesGen.writeBucketed(PagesGen.generate(s, 80, seed = 42L, parallelism = 4),
-        s"$base/pages", nBuckets = 4)
-      val q = graft.spark.ExtractStreamJob.start(s, s"$base/pages",
-        s"$base/out", s"$base/ckpt")
-      q.awaitTermination()
-      s.read.parquet(s"$base/out")
-        .filter(col("status") === "ok")
-        .select(col("url"), col("n_pages"), col("n_spans"),
-          xxhash64(col("text")).as("text_hash"))
+      graft.ops.Events.inStreamDir("graft_stream_q") { base =>
+        PagesGen.writeBucketed(PagesGen.generate(s, 80, seed = 42L, parallelism = 4),
+          s"$base/pages", nBuckets = 4)
+        val q = graft.spark.ExtractStreamJob.start(s, s"$base/pages",
+          s"$base/out", s"$base/ckpt")
+        q.awaitTermination()
+        s.read.parquet(s"$base/out")
+          .filter(col("status") === "ok")
+          .select(col("url"), col("n_pages"), col("n_spans"),
+            xxhash64(col("text")).as("text_hash"))
+      }
     }),
     "extract_stream_metrics" -> ((s, _) => {
       // watermarked per-(event-time window, host) quality metrics
@@ -228,29 +229,30 @@ object SparkEntry {
       // AvailableNow drains, so the result is the full deterministic
       // aggregate. Hosts are remapped onto 5 buckets and timestamps
       // spread over 3 hours so the windowing actually groups.
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_m").toString
-      PagesGen.writeBucketed(PagesGen.generate(s, 80, seed = 42L, parallelism = 4),
-        s"$base/pages", nBuckets = 4)
-      val schema = s.read.parquet(s"$base/pages").schema
-      val pages = s.readStream.schema(schema).parquet(s"$base/pages")
-        .withColumn("warc_ts", timestamp_seconds(
-          unix_timestamp(col("warc_ts")) + pmod(xxhash64(col("url")), lit(180L)) * 60L))
-        .withColumn("url",
-          concat(lit("https://h"), pmod(xxhash64(col("url")), lit(5L)),
-            lit(".example/"), regexp_extract(col("url"), "doc[0-9]+\\.(pdf|html)", 0)))
-      val sink = "qm_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // stateful-stream shuffle partitions = state stores to checkpoint
-      // per batch; a handful is plenty for the staged corpus
-      // (result-invariant; centralized knob in Events.withStreamShuffle)
-      graft.ops.Events.withStreamShuffle(s) {
-        val q = graft.spark.ExtractStreamJob.qualityMetrics(pages)
-          .writeStream.format("memory").queryName(sink).outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      graft.ops.Events.inStreamDir("graft_stream_m") { base =>
+        PagesGen.writeBucketed(PagesGen.generate(s, 80, seed = 42L, parallelism = 4),
+          s"$base/pages", nBuckets = 4)
+        val schema = s.read.parquet(s"$base/pages").schema
+        val pages = s.readStream.schema(schema).parquet(s"$base/pages")
+          .withColumn("warc_ts", timestamp_seconds(
+            unix_timestamp(col("warc_ts")) + pmod(xxhash64(col("url")), lit(180L)) * 60L))
+          .withColumn("url",
+            concat(lit("https://h"), pmod(xxhash64(col("url")), lit(5L)),
+              lit(".example/"), regexp_extract(col("url"), "doc[0-9]+\\.(pdf|html)", 0)))
+        val sink = "qm_" + java.util.UUID.randomUUID().toString.replace("-", "")
+        // stateful-stream shuffle partitions = state stores to checkpoint
+        // per batch; a handful is plenty for the staged corpus
+        // (result-invariant; centralized knob in Events.withStreamShuffle)
+        graft.ops.Events.withStreamShuffle(s) {
+          val q = graft.spark.ExtractStreamJob.qualityMetrics(pages)
+            .writeStream.format("memory").queryName(sink).outputMode("complete")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+          q.awaitTermination()
+        }
+        s.table(sink)
+          .select(col("host"), unix_timestamp(col("window.start")).as("win_start"),
+            col("n_docs"), col("n_ok"), col("n_bytes"), col("n_pages"))
       }
-      s.table(sink)
-        .select(col("host"), unix_timestamp(col("window.start")).as("win_start"),
-          col("n_docs"), col("n_ok"), col("n_bytes"), col("n_pages"))
     }),
     "extract_stream_dedup" -> ((s, _) => {
       // stateful first-seen URL dedup (flatMapGroupsWithState) driven as
@@ -258,23 +260,24 @@ object SparkEntry {
       // exact re-crawl), and only the first occurrence passes. The
       // duplicates are byte-identical, so the surviving rows are
       // deterministic regardless of file/batch arrival order.
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_d").toString
-      val once = PagesGen.generate(s, 60, seed = 42L, parallelism = 4)
-      PagesGen.writeBucketed(once.union(once), s"$base/pages", nBuckets = 4)
-      val schema = s.read.parquet(s"$base/pages").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/pages")
-      graft.ops.Events.withStreamShuffle(s) {
-        val q = graft.spark.ExtractStreamJob.dedupFirstSeen(stream)
-          .writeStream.format("parquet")
-          .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      graft.ops.Events.inStreamDir("graft_stream_d") { base =>
+        val once = PagesGen.generate(s, 60, seed = 42L, parallelism = 4)
+        PagesGen.writeBucketed(once.union(once), s"$base/pages", nBuckets = 4)
+        val schema = s.read.parquet(s"$base/pages").schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "2").parquet(s"$base/pages")
+        graft.ops.Events.withStreamShuffle(s) {
+          val q = graft.spark.ExtractStreamJob.dedupFirstSeen(stream)
+            .writeStream.format("parquet")
+            .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
+            .outputMode("append")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+          q.awaitTermination()
+        }
+        s.read.parquet(s"$base/out")
+          .select(col("url"), unix_timestamp(col("warc_ts")).as("ts_sec"),
+            xxhash64(col("html")).as("html_hash"))
       }
-      s.read.parquet(s"$base/out")
-        .select(col("url"), unix_timestamp(col("warc_ts")).as("ts_sec"),
-          xxhash64(col("html")).as("html_hash"))
     }),
     "extract_stream_quality" -> ((s, _) => {
       // streaming quality gate: ONE streaming pipeline — file source →
@@ -282,22 +285,23 @@ object SparkEntry {
       // pure projections, no state) → parquet sink. Stamps `accept`
       // instead of filtering, so rejected docs stay auditable and the
       // langId pushdown trap never arms.
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_g").toString
-      PagesGen.writeBucketed(PagesGen.generate(s, 80, seed = 42L, parallelism = 4),
-        s"$base/pages", nBuckets = 4)
-      val schema = s.read.parquet(s"$base/pages").schema
-      val pages = s.readStream.schema(schema).parquet(s"$base/pages")
-      val gated = graft.spark.ExtractStreamJob.qualityGate(
-        ExtractJob.extract(pages, ExtractJob.Config(salt = false)).toDF())
-      val q = gated.writeStream.format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$base/out")
-        .filter(col("status") === "ok")
-        .select(col("url"), col("quality"), col("lang_pred"), col("accept"),
-          xxhash64(col("text")).as("text_hash"))
+      graft.ops.Events.inStreamDir("graft_stream_g") { base =>
+        PagesGen.writeBucketed(PagesGen.generate(s, 80, seed = 42L, parallelism = 4),
+          s"$base/pages", nBuckets = 4)
+        val schema = s.read.parquet(s"$base/pages").schema
+        val pages = s.readStream.schema(schema).parquet(s"$base/pages")
+        val gated = graft.spark.ExtractStreamJob.qualityGate(
+          ExtractJob.extract(pages, ExtractJob.Config(salt = false)).toDF())
+        val q = gated.writeStream.format("parquet")
+          .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        s.read.parquet(s"$base/out")
+          .filter(col("status") === "ok")
+          .select(col("url"), col("quality"), col("lang_pred"), col("accept"),
+            xxhash64(col("text")).as("text_hash"))
+      }
     }),
     "extract_fonts" -> ((s, _) => {
       // font-fidelity tier (round-4): real embedded ToUnicode CMap

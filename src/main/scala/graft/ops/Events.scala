@@ -35,6 +35,28 @@ object Events {
     try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Runs a staged streaming query in a fresh temporary directory and
+    * owns its cleanup: `run(base)` stages its input under `base`, runs
+    * the query to termination and returns what reads the results, such
+    * as a lazy read of `base/out`. Once `run` returns, everything under
+    * `base` but `out` (the staged input, the replay batches, the
+    * streaming checkpoint) is deleted, and `base` itself is deleted at
+    * JVM exit. */
+  private[graft] def inStreamDir[T](prefix: String)(run: String => T): T = {
+    val base = java.nio.file.Files.createTempDirectory(prefix).toFile
+    streamDirs.add(base)
+    try run(base.toString)
+    finally Option(base.listFiles()).toSeq.flatten.filter(_.getName != "out")
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  /** Every [[inStreamDir]] of this JVM, deleted by one shutdown hook. */
+  private lazy val streamDirs: java.util.Set[java.io.File] = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    sys.addShutdownHook(dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+    dirs
+  }
+
   /** Stage a staged-replay corpus in ONE Spark job (round 6): the
     * per-batch filter+coalesce+write loop cost nBatches sequential
     * jobs of fixed latency; a single partitionBy("b") write of the
@@ -297,36 +319,37 @@ object Events {
                        events: DataFrame, gapUs: Long): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.TimestampType
-    val base = java.nio.file.Files.createTempDirectory("graft_sess").toString
-    val src = events.select(col("event_id").cast("long"),
-      col("ts").cast(TimestampType).as("ts"), col("user_id").cast("long"))
-    val flushTs = src.agg((max(unix_micros(col("ts"))) +
-      lit(10L) * gapUs).as("f")).collect()(0).getLong(0)
-    src.unionAll(src.sparkSession.range(1).select(
-        lit(-1L).as("event_id"),
-        timestamp_micros(lit(flushTs)).as("ts"), lit(-1L).as("user_id")))
-      .write.parquet(s"$base/in")
-    withStreamShuffle(spark) {
-      val stream = spark.readStream.schema(src.schema).parquet(s"$base/in")
-        .withWatermark("ts", "0 seconds")
-        .withColumn("us", unix_micros(col("ts")))
-      val q = stream
-        .groupBy(col("user_id"),
-          session_window(col("ts"), s"$gapUs microseconds"))
-        .agg(min(col("event_id")).as("session_start"),
-          count(lit(1)).as("n_events"),
-          (max(col("us")) - min(col("us"))).as("duration_us"))
-        .select(col("user_id"), col("session_start"), col("n_events"),
-          col("duration_us"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    inStreamDir("graft_sess") { base =>
+      val src = events.select(col("event_id").cast("long"),
+        col("ts").cast(TimestampType).as("ts"), col("user_id").cast("long"))
+      val flushTs = src.agg((max(unix_micros(col("ts"))) +
+        lit(10L) * gapUs).as("f")).collect()(0).getLong(0)
+      src.unionAll(src.sparkSession.range(1).select(
+          lit(-1L).as("event_id"),
+          timestamp_micros(lit(flushTs)).as("ts"), lit(-1L).as("user_id")))
+        .write.parquet(s"$base/in")
+      withStreamShuffle(spark) {
+        val stream = spark.readStream.schema(src.schema).parquet(s"$base/in")
+          .withWatermark("ts", "0 seconds")
+          .withColumn("us", unix_micros(col("ts")))
+        val q = stream
+          .groupBy(col("user_id"),
+            session_window(col("ts"), s"$gapUs microseconds"))
+          .agg(min(col("event_id")).as("session_start"),
+            count(lit(1)).as("n_events"),
+            (max(col("us")) - min(col("us"))).as("duration_us"))
+          .select(col("user_id"), col("session_start"), col("n_events"),
+            col("duration_us"))
+          .writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      spark.read.parquet(s"$base/out").filter(col("user_id") >= 0)
     }
-    spark.read.parquet(s"$base/out").filter(col("user_id") >= 0)
   }
 
   /** STREAM-STREAM attribution join — the remaining stateful
@@ -353,43 +376,44 @@ object Events {
                         events: DataFrame, windowUs: Long): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.TimestampType
-    val base = java.nio.file.Files.createTempDirectory("graft_attr").toString
-    val staged = events.select(col("event_id").cast("long"),
-      col("ts").cast(TimestampType).as("ts"), col("user_id").cast("long"),
-      col("event_type").cast("string"))
-    staged.write.parquet(s"$base/in")
-    withStreamShuffle(spark) {
-      // schema from the staged projection (round 6) — the footer
-      // re-read job only restated what the writer already knew
-      val src = spark.readStream
-        .schema(staged.schema)
-        .parquet(s"$base/in")
-      val clicks = src.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "0 seconds")
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "0 seconds")
-      // the bound is written as interval arithmetic on the event-time
-      // columns — the shape Spark's streaming analyzer recognizes to
-      // derive state-eviction thresholds from the watermarks
-      val q = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= expr(s"c_ts + INTERVAL $windowUs MICROSECOND"))
-        .select(col("click_id"), col("purchase_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    inStreamDir("graft_attr") { base =>
+      val staged = events.select(col("event_id").cast("long"),
+        col("ts").cast(TimestampType).as("ts"), col("user_id").cast("long"),
+        col("event_type").cast("string"))
+      staged.write.parquet(s"$base/in")
+      withStreamShuffle(spark) {
+        // schema from the staged projection (round 6) — the footer
+        // re-read job only restated what the writer already knew
+        val src = spark.readStream
+          .schema(staged.schema)
+          .parquet(s"$base/in")
+        val clicks = src.filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"),
+            col("ts").as("c_ts"))
+          .withWatermark("c_ts", "0 seconds")
+        val purchases = src.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"),
+            col("user_id").as("p_user"), col("ts").as("p_ts"))
+          .withWatermark("p_ts", "0 seconds")
+        // the bound is written as interval arithmetic on the event-time
+        // columns — the shape Spark's streaming analyzer recognizes to
+        // derive state-eviction thresholds from the watermarks
+        val q = clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+            col("p_ts") >= col("c_ts") &&
+            col("p_ts") <= expr(s"c_ts + INTERVAL $windowUs MICROSECOND"))
+          .select(col("click_id"), col("purchase_id"),
+            (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
+          .writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
     }
-    spark.read.parquet(s"$base/out")
   }
 
   /** DuckDB replica of [[attributionStream]] — the batch join the
@@ -623,43 +647,44 @@ object Events {
                        nBatches: Int = 4): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.TimestampType
-    val base = java.nio.file.Files.createTempDirectory("graft_late").toString
-    val src = events.select(col("event_id").cast("long"),
-      col("ts").cast(TimestampType).as("ts"))
-    val maxUs = src.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    // one-job staging (round 6): batch tag as a partition column; the
-    // flush sentinel rides in the LAST batch as before
-    stageReplayBatches(
-      src.withColumn("b", (col("event_id") % nBatches).cast("int"))
-        .unionAll(spark.range(1).select(lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxUs + 10L * delayUs)).as("ts"),
-          lit(nBatches - 1).cast("int").as("b"))),
-      base, nBatches)
-    withStreamShuffle(spark) {
-      val stream = spark.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(s"$base/in")
-        .withWatermark("ts", s"$delayUs microseconds")
-      val q = stream
-        .groupBy(window(col("ts"), s"$windowUs microseconds"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("event_id")).as("min_event_id"))
-        .select(unix_micros(col("window.start")).as("window_us"),
-          col("n_events"), col("min_event_id"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    inStreamDir("graft_late") { base =>
+      val src = events.select(col("event_id").cast("long"),
+        col("ts").cast(TimestampType).as("ts"))
+      val maxUs = src.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+      // one-job staging (round 6): batch tag as a partition column; the
+      // flush sentinel rides in the LAST batch as before
+      stageReplayBatches(
+        src.withColumn("b", (col("event_id") % nBatches).cast("int"))
+          .unionAll(spark.range(1).select(lit(-1L).as("event_id"),
+            timestamp_micros(lit(maxUs + 10L * delayUs)).as("ts"),
+            lit(nBatches - 1).cast("int").as("b"))),
+        base, nBatches)
+      withStreamShuffle(spark) {
+        val stream = spark.readStream
+          .schema(src.schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .parquet(s"$base/in")
+          .withWatermark("ts", s"$delayUs microseconds")
+        val q = stream
+          .groupBy(window(col("ts"), s"$windowUs microseconds"))
+          .agg(count(lit(1)).as("n_events"),
+            min(col("event_id")).as("min_event_id"))
+          .select(unix_micros(col("window.start")).as("window_us"),
+            col("n_events"), col("min_event_id"))
+          .writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      // the sentinel's window cannot have been emitted (end > final wm),
+      // but guard the contract explicitly rather than rely on it
+      spark.read.parquet(s"$base/out")
+        .filter(col("window_us") <= lit(maxUs))
     }
-    // the sentinel's window cannot have been emitted (end > final wm),
-    // but guard the contract explicitly rather than rely on it
-    spark.read.parquet(s"$base/out")
-      .filter(col("window_us") <= lit(maxUs))
   }
 
   /** DuckDB replica of [[lateEventsStream]] — the watermark state
@@ -826,60 +851,61 @@ object Events {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
     import org.apache.spark.sql.types.TimestampType
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_ttl").toString
-    val src = events.select(col("event_id").cast("long"),
-      col("ts").cast(TimestampType).as("ts"), col("user_id").cast("long"))
-    // one-job staging (round 6), see stageReplayBatches
-    stageReplayBatches(
-      src.withColumn("b", (col("event_id") % nBatches).cast("int")),
-      base, nBatches)
-    withStreamShuffle(spark) {
-    val stream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/in")
-      .withWatermark("ts", s"$delayMs milliseconds")
-    val q = stream
-      // the watermarked ts column must SURVIVE into the stateful
-      // operator (dropping it fails analysis: "Watermark must be
-      // specified ... for event-time timeout"); us rides alongside
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"))
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[TtlState, (Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key, rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            rows.foreach { r =>
-              if (r._3 < mn) mn = r._3
-              if (r._3 > mx) mx = r._3
-            }
-            val existed = state.exists
-            val last = if (existed) math.max(state.get.lastSeenUs, mx) else mx
-            state.update(TtlState(last))
-            // setTimeoutTimestamp THROWS below the current watermark
-            // (a row can pass the LAGGED late filter yet sit far
-            // below the eviction watermark) — clamp to wm + 1 ms, so
-            // such state lives exactly until the watermark next moves
-            state.setTimeoutTimestamp(math.max(last / 1000 + ttlMs,
-              state.getCurrentWatermarkMs() + 1))
-            if (existed) Iterator.empty else Iterator((key, mn))
+    inStreamDir("graft_ttl") { base =>
+      val src = events.select(col("event_id").cast("long"),
+        col("ts").cast(TimestampType).as("ts"), col("user_id").cast("long"))
+      // one-job staging (round 6), see stageReplayBatches
+      stageReplayBatches(
+        src.withColumn("b", (col("event_id") % nBatches).cast("int")),
+        base, nBatches)
+      withStreamShuffle(spark) {
+        val stream = spark.readStream
+          .schema(src.schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .parquet(s"$base/in")
+          .withWatermark("ts", s"$delayMs milliseconds")
+        val q = stream
+          // the watermarked ts column must SURVIVE into the stateful
+          // operator (dropping it fails analysis: "Watermark must be
+          // specified ... for event-time timeout"); us rides alongside
+          .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"))
+          .as[(Long, java.sql.Timestamp, Long)]
+          .groupByKey(_._1)
+          .flatMapGroupsWithState[TtlState, (Long, Long)](
+            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+            (key, rows, state) =>
+              if (state.hasTimedOut) { state.remove(); Iterator.empty }
+              else {
+                var mn = Long.MaxValue
+                var mx = Long.MinValue
+                rows.foreach { r =>
+                  if (r._3 < mn) mn = r._3
+                  if (r._3 > mx) mx = r._3
+                }
+                val existed = state.exists
+                val last = if (existed) math.max(state.get.lastSeenUs, mx) else mx
+                state.update(TtlState(last))
+                // setTimeoutTimestamp THROWS below the current watermark
+                // (a row can pass the LAGGED late filter yet sit far
+                // below the eviction watermark) — clamp to wm + 1 ms, so
+                // such state lives exactly until the watermark next moves
+                state.setTimeoutTimestamp(math.max(last / 1000 + ttlMs,
+                  state.getCurrentWatermarkMs() + 1))
+                if (existed) Iterator.empty else Iterator((key, mn))
+              }
           }
+          .toDF("user_id", "emit_us")
+          .writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
       }
-      .toDF("user_id", "emit_us")
-      .writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      spark.read.parquet(s"$base/out")
     }
-    spark.read.parquet(s"$base/out")
   }
 
   /** DuckDB replica of [[dedupTtlStream]] — the per-batch state

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -21,91 +21,161 @@ object Similarity {
     dot / (na * nb)
   }
 
-  /** Primitive-loop cosine-threshold test, arithmetic-identical to
-    * [[cosine]] `>= threshold`: the same left fold (0.0 seed, one
-    * double product per element, dot and both norms accumulated in
-    * element order), one sqrt each, one division. Mismatched lengths
-    * reject the pair — exactly zip_with's null-extension poisoning.
-    * Zero vectors give 0/0 = NaN, and NaN >= t is false either way.
-    * The HOF form dispatches a boxed lambda per element (~µs/pair at
-    * dim 64), which dominates any O(n²/k) within-cluster pair pass;
-    * this kernel is the bruteForceTopK discipline applied to it. */
-  private[ops] def cosineAtLeast(a: Array[Float], b: Array[Float],
-                                 threshold: Double): Boolean = {
-    if (a == null || b == null || a.length != b.length) return false
+  /** Exact cosine of two float vectors, arithmetic-identical to
+    * [[cosine]]: the same left folds (0.0 seed, one double product per
+    * element, dot and both norms accumulated in element order), one
+    * sqrt each, one division. Vectors of different lengths, or a null,
+    * give NaN — zip_with's null-extension poisoning — so every `>=` or
+    * `<` test on the result rejects the pair instead of failing the
+    * task. Zero vectors give 0/0 = NaN as well. The HOF form dispatches
+    * a boxed lambda per element (~µs/pair at dim 64), which dominates
+    * any pair pass; every pair kernel here calls this loop instead. */
+  private[ops] def cosineOf(a: Array[Float], b: Array[Float]): Double = {
+    if (a == null || b == null || a.length != b.length) return Double.NaN
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < a.length) {
       val x = a(i).toDouble; val y = b(i).toDouble
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb)) >= threshold
+    dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Exact top-k neighbors for each query vector (brute force).
-    * The small query side is broadcast as plain arrays; the corpus
-    * scans ONCE with a primitive-loop kernel emitting per-partition
-    * top-k candidates per query (a superset of the global top-k), and
-    * only that tiny candidate set shuffles into the final window rank.
-    * (A crossJoin + higher-order-function cosine evaluates boxed
-    * lambdas per element — benched 10x slower.) */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float], Double)] = queries
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (id, v) => (id, v, norm(v)) }
-    val qB = spark.sparkContext.broadcast(qArr)
-    val candidates = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val qs = qB.value
-        // per-query bounded candidate lists for this partition
-        // min-heap under (score ASC, id DESC) — the sq8TopK ordering:
-        // evicting the head drops the globally-worst candidate, and
-        // equal scores keep the SMALLER id, matching the oracle's
-        // (cos DESC, id ASC) cut so ties at the k boundary cannot
-        // make recall rows partitioning-dependent
-        val best = Array.fill(qs.length)(
-          new java.util.PriorityQueue[(Double, Long)](k + 1,
-            (a: (Double, Long), b: (Double, Long)) => {
-              val c = java.lang.Double.compare(a._1, b._1)
-              if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-            }))
-        rows.foreach { case (id, v) =>
-          val nv = norm(v)
-          var qi = 0
-          while (qi < qs.length) {
-            val (qid, qv, qn) = qs(qi)
-            if (qid != id) {
-              var dot = 0.0
-              var d = 0
-              while (d < v.length) { dot += qv(d).toDouble * v(d).toDouble; d += 1 }
-              val cos = dot / (qn * nv)
-              val pq = best(qi)
-              pq.add((cos, id))
-              if (pq.size() > k) pq.poll()
-            }
-            qi += 1
-          }
-        }
-        best.iterator.zipWithIndex.flatMap { case (pq, qi) =>
-          val qid = qs(qi)._1
-          Iterator.continually(pq.poll()).takeWhile(_ != null)
-            .map { case (cos, id) => (qid, id, cos) }
-        }
-      }.toDF("query_id", "neighbor_id", "cos")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-  }
-
+  /** The norm fold of [[cosineOf]], for the brute-force scans that keep
+    * it precomputed per vector and pay one [[dot]] per pair. */
   @inline private def norm(v: Array[Float]): Double = {
     var s = 0.0
     var i = 0
     while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
     math.sqrt(s)
+  }
+
+  /** The dot fold of [[cosineOf]]; the caller checks that the lengths
+    * match. */
+  @inline private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var d = 0
+    while (d < a.length) { s += a(d).toDouble * b(d).toDouble; d += 1 }
+    s
+  }
+
+  /** The score with which [[topCandidates]] skips a pair. Cosines are
+    * finite or NaN and the quantized scores finite, so no real score is
+    * lost. */
+  private val NoCandidate = Double.NegativeInfinity
+
+  /** (score ASC, id DESC): the head of a min-heap under this order is
+    * its worst candidate, the lowest score and, among equal scores, the
+    * larger id. */
+  private object WorstFirst extends java.util.Comparator[(Double, Long)] {
+    def compare(a: (Double, Long), b: (Double, Long)): Int = {
+      val c = java.lang.Double.compare(a._1, b._1)
+      if (c != 0) c else java.lang.Long.compare(b._2, a._2)
+    }
+  }
+
+  /** Bounded top-`c` candidate scan, the first stage of the brute-force
+    * and quantized ANN operators. The queries are broadcast and the
+    * corpus streams once, never shuffled: each partition keeps one
+    * min-heap of at most `c` (score, id) per query under [[WorstFirst]],
+    * so evicting the head drops the worst candidate and equal scores
+    * keep the SMALLER id. A partition's survivors are then its prefix of
+    * the global (score DESC, id ASC) order, their union contains the
+    * global top `c` wherever the partition cuts fall, and [[rankCut]]
+    * cuts it exactly: ties at the boundary cannot make the result
+    * depend on the partitioning. A query is never scored against its
+    * own id.
+    *
+    * `scorer` takes the broadcast queries once per partition (where
+    * per-partition tables such as PQ's ADC lookups are built), then each
+    * corpus row once (per-row work such as a norm), and returns the
+    * row's score against query index `qi`; [[NoCandidate]] skips the
+    * pair. Only the (query_id, neighbor_id, score) candidates, at most
+    * `c` per query per partition, reach the rank shuffle. */
+  private[ops] def topCandidates[Q, R](corpus: Dataset[(Long, R)],
+                                       queries: Array[(Long, Q)], c: Int)(
+      scorer: Array[(Long, Q)] => R => Int => Double): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val qB = spark.sparkContext.broadcast(queries)
+    corpus.mapPartitions { rows =>
+      val qs = qB.value
+      val rowScorer = scorer(qs)
+      val best = Array.fill(qs.length)(
+        new java.util.PriorityQueue[(Double, Long)](c + 1, WorstFirst))
+      rows.foreach { case (id, r) =>
+        val score = rowScorer(r)
+        var qi = 0
+        while (qi < qs.length) {
+          if (qs(qi)._1 != id) {
+            val s = score(qi)
+            if (s != NoCandidate) {
+              val h = best(qi)
+              h.add((s, id))
+              if (h.size() > c) h.poll()
+            }
+          }
+          qi += 1
+        }
+      }
+      best.iterator.zipWithIndex.flatMap { case (h, qi) =>
+        val qid = qs(qi)._1
+        Iterator.continually(h.poll()).takeWhile(_ != null)
+          .map { case (s, id) => (qid, id, s) }
+      }
+    }.toDF("query_id", "neighbor_id", "score")
+  }
+
+  /** The per-query rank cut: number the (query_id, neighbor_id, score)
+    * rows of each query by (score DESC, neighbor_id ASC), the order
+    * every operator in this family ranks by, and keep `rank` ≤ `n`.
+    * `rank` is the INT row number. */
+  private[ops] def rankCut(cand: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("neighbor_id").asc)
+    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
+  }
+
+  /** Exact re-rank of a candidate cut: join both embeddings back to the
+    * (query_id, neighbor_id) pairs of `cut`, score each with [[cosine]]
+    * (the ordered element fold the oracle replays bit for bit) and cut
+    * to `k`. The cut is |queries|·C rows, broadcast-sized by
+    * construction. Output (query_id, neighbor_id, rank BIGINT). */
+  private[ops] def rerank(cut: DataFrame, corpus: DataFrame, queries: DataFrame,
+                          k: Int): DataFrame = {
+    val scored = cut.select(col("query_id"), col("neighbor_id"))
+      .join(queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb")), Seq("query_id"))
+      .join(corpus.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("n_emb")), Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        cosine(col("q_emb"), col("n_emb")).as("score"))
+    rankCut(scored, k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
+  }
+
+  /** Exact top-k neighbors for each query vector (brute force): the
+    * [[topCandidates]] scan with exact cosine (norms precomputed per
+    * vector, one dot per pair; vectors of different lengths are no
+    * candidates), then the [[rankCut]] to k. (A crossJoin +
+    * higher-order-function cosine evaluates boxed lambdas per element —
+    * benched 10x slower.) */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val qs = queries.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].collect()
+      .map { case (id, v) => (id, (v, norm(v))) }
+    val vecs = corpus.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])]
+    val cand = topCandidates(vecs, qs, k) { qp => v =>
+      val nv = norm(v)
+      qi => {
+        val (qv, qn) = qp(qi)._2
+        if (qv.length != v.length) NoCandidate else dot(qv, v) / (qn * nv)
+      }
+    }
+    rankCut(cand, k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
   }
 
   /** Deterministic pseudo-random hyperplane component in [-1, 1). */
@@ -115,6 +185,44 @@ object Similarity {
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z = z ^ (z >>> 31)
     z.toDouble / Long.MaxValue.toDouble
+  }
+
+  /** `n` deterministic directions of length `dim`, flat [row][d]: row r
+    * is the [[hyperplane]] stream of `seedBit(r)`. The signature, cell
+    * and pivot kernels materialize theirs ONCE per partition and vector
+    * length: the mix is ~6 int ops per component vs 2 flops for the
+    * mult-add it feeds, so recomputing it per row made the hash the
+    * bulk of the kernel. The components, and every left-to-right double
+    * fold over them, are those of the per-row formulation, so
+    * signatures, cells and buckets stay bit-identical to the oracles. */
+  private def directions(n: Int, dim: Int)(seedBit: Int => (Long, Int)): Array[Double] = {
+    val m = new Array[Double](n * dim)
+    var r = 0
+    while (r < n) {
+      val (seed, bit) = seedBit(r)
+      var d = 0
+      while (d < dim) { m(r * dim + d) = hyperplane(seed, bit, d); d += 1 }
+      r += 1
+    }
+    m
+  }
+
+  /** sqrt(Σ h²) of each of the `n` rows of a flat [row][d] matrix,
+    * folded in d order. */
+  private def rowNorms(m: Array[Double], n: Int, dim: Int): Array[Double] =
+    Array.tabulate(n) { r =>
+      var s = 0.0
+      var d = 0
+      while (d < dim) { val h = m(r * dim + d); s += h * h; d += 1 }
+      math.sqrt(s)
+    }
+
+  /** v · the matrix row starting at `base`, the left fold of [[dot]]. */
+  @inline private def rowDot(v: Array[Float], m: Array[Double], base: Int): Double = {
+    var s = 0.0
+    var d = 0
+    while (d < v.length) { s += v(d).toDouble * m(base + d); d += 1 }
+    s
   }
 
   /** Random-hyperplane signatures per table, one typed pass: bit i =
@@ -129,31 +237,14 @@ object Similarity {
     df.select(col(idCol).cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { rows =>
-        // Hyperplane matrix materialized ONCE per partition (flat,
-        // [t][bit][d] row-major): the mix is ~6 int ops per component
-        // vs 2 flops for the mult-add it feeds, so recomputing it per
-        // vector row made the hash 3/4 of the kernel. Same components
-        // and the same left-to-right double accumulation → signatures
-        // are bit-identical to the per-row formulation (and to the
-        // DuckDB oracle). Sized lazily off the first row's dim.
+        // [[directions]] [t][bit][d], sized lazily off the row's dim
         var hp: Array[Double] = null
         var dim = -1
         rows.flatMap { case (id, v) =>
           if (v.length != dim) {
             dim = v.length
-            hp = new Array[Double](nTables * nBits * dim)
-            var i = 0
-            var t = 0
-            while (t < nTables) {
-              val seed = 42L + t * 1000003L
-              var bit = 0
-              while (bit < nBits) {
-                var d = 0
-                while (d < dim) { hp(i) = hyperplane(seed, bit, d); d += 1; i += 1 }
-                bit += 1
-              }
-              t += 1
-            }
+            hp = directions(nTables * nBits, dim)(r =>
+              (42L + (r / nBits) * 1000003L, r % nBits))
           }
           val m = hp
           (0 until nTables).map { t =>
@@ -161,10 +252,7 @@ object Similarity {
             var bit = 0
             var base = t * nBits * dim
             while (bit < nBits) {
-              var dot = 0.0
-              var d = 0
-              while (d < dim) { dot += v(d) * m(base + d); d += 1 }
-              if (dot >= 0) sig |= (1 << bit)
+              if (rowDot(v, m, base) >= 0) sig |= (1 << bit)
               bit += 1
               base += dim
             }
@@ -191,11 +279,8 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("c_emb")).as("cos"))
-      .groupBy(col("query_id"), col("neighbor_id")).agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+      .groupBy(col("query_id"), col("neighbor_id")).agg(max(col("cos")).as("score"))
+    rankCut(cand, k).select(col("query_id"), col("neighbor_id"), col("rank"))
   }
 
   /** IVF-style coarse quantization: score every vector against `nCells`
@@ -221,46 +306,25 @@ object Similarity {
     df.select(col(idCol).cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { rows =>
-        var cm: Array[Double] = null   // flat [cell][d] centroid components
-        var cn: Array[Double] = null   // per-cell sqrt(sum h^2), fold order d
+        var cm: Array[Double] = null   // [[directions]] [cell][d]
+        var cn: Array[Double] = null   // their norms
         var dim = -1
         rows.flatMap { case (id, v) =>
           if (v.length != dim) {
             dim = v.length
-            cm = new Array[Double](nCells * dim)
-            cn = new Array[Double](nCells)
-            var c = 0
-            while (c < nCells) {
-              val base = c * dim
-              var n2 = 0.0
-              var d = 0
-              while (d < dim) {
-                val h = hyperplane(1299709L + c * 7919L, 0, d)
-                cm(base + d) = h
-                n2 += h * h
-                d += 1
-              }
-              cn(c) = math.sqrt(n2)
-              c += 1
-            }
+            cm = directions(nCells, dim)(c => (1299709L + c * 7919L, 0))
+            cn = rowNorms(cm, nCells, dim)
           }
-          var vn2 = 0.0
-          var d = 0
-          while (d < v.length) { vn2 += v(d).toDouble * v(d).toDouble; d += 1 }
-          val vn = math.sqrt(vn2)
+          val vn = norm(v)
           val cos = new Array[Double](nCells)
           var c = 0
           while (c < nCells) {
-            var dot = 0.0
-            val base = c * dim
-            var i = 0
-            while (i < v.length) { dot += v(i).toDouble * cm(base + i); i += 1 }
-            cos(c) = dot / (vn * cn(c))
+            cos(c) = rowDot(v, cm, c * dim) / (vn * cn(c))
             c += 1
           }
           // top-`take` cells by (cos desc, cell asc): strictly-greater
           // argmax keeps the lowest cell on ties — matches the oracle's
-          // row_number() ORDER BY cos DESC, cell ASC
+          // ranking ORDER BY cos DESC, cell ASC
           val used = new Array[Boolean](nCells)
           (0 until math.min(take, nCells)).map { _ =>
             var best = -1
@@ -300,11 +364,8 @@ object Similarity {
     val cand = c.join(broadcast(q), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_emb"), col("c_emb")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+        cosine(col("q_emb"), col("c_emb")).as("score"))
+    rankCut(cand, k).select(col("query_id"), col("neighbor_id"), col("rank"))
   }
 
   /** Embedding near-duplicate pairs at scale: random-hyperplane LSH
@@ -337,25 +398,19 @@ object Similarity {
     cosineThresholdPairs(joined, threshold)
   }
 
-  /** Exact-cosine filter over (a_id, b_id, a_emb, b_emb) rows with a
-    * primitive-loop kernel: the HOF-expression `cosine` evaluates boxed
-    * lambdas per element, which benched ~25x slower on millions of
-    * candidate pairs. Left-to-right double accumulation — same order as
-    * the HOF fold, so threshold decisions are bit-identical. */
+  /** Exact-cosine filter over (a_id, b_id, a_emb, b_emb) rows through
+    * the [[cosineOf]] kernel: the HOF-expression `cosine` evaluates
+    * boxed lambdas per element, which benched ~25x slower on millions
+    * of candidate pairs. Same fold order, so threshold decisions are
+    * bit-identical. */
   private def cosineThresholdPairs(joined: DataFrame, threshold: Double): DataFrame = {
     val spark = joined.sparkSession
     import spark.implicits._
     joined.as[(Long, Long, Array[Float], Array[Float])]
-      .mapPartitions { it =>
-        it.flatMap { case (aId, bId, av, bv) =>
-          var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-          while (i < av.length) {
-            val x = av(i).toDouble; val y = bv(i).toDouble
-            dot += x * y; na += x * x; nb += y * y; i += 1
-          }
-          if (dot / (math.sqrt(na) * math.sqrt(nb)) >= threshold) Some((aId, bId)) else None
-        }
-      }.toDF("a_id", "b_id")
+      .mapPartitions(_.collect {
+        case (aId, bId, av, bv) if cosineOf(av, bv) >= threshold => (aId, bId)
+      })
+      .toDF("a_id", "b_id")
   }
 
   /** Distributed EXACT near-dup pairs with a lossless metric-space
@@ -382,9 +437,57 @@ object Similarity {
   def nearDupPairsExact(corpus: DataFrame, threshold: Double,
                         nPivots: Int = 4): DataFrame = {
     val bigD = math.sqrt(math.max(2.0 - 2.0 * threshold, 1e-12))
+    cosineThresholdPairs(pivotPairs(corpus, bigD, nPivots,
+      anchors = lit(true), pair = col("a_id") < col("b_id")), threshold)
+  }
+
+  /** (vec_id, embedding, bk) with bk(p) = ⌊d(v̂, pivot_p)/bigD⌋ — the
+    * lossless metric-prune bucket stage of [[pivotPairs]]. */
+  private def pivotBucketed(corpus: DataFrame, bigD: Double,
+                                 nPivots: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    corpus.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .mapPartitions { it =>
+        // [[directions]] [p][d] and their norms, sized lazily off the
+        // row's dim (seeds disjoint from the LSH tables')
+        var piv: Array[Double] = null
+        var pivNorm: Array[Double] = null
+        var dim = -1
+        it.map { case (id, v) =>
+          if (v.length != dim) {
+            dim = v.length
+            piv = directions(nPivots, dim)(p => (7776001L + p * 104729L, 0))
+            pivNorm = rowNorms(piv, nPivots, dim)
+          }
+          val nv = norm(v)
+          val buckets = new Array[Int](nPivots)
+          var p = 0
+          while (p < nPivots) {
+            val c = math.max(-1.0,
+              math.min(1.0, rowDot(v, piv, p * dim) / (nv * pivNorm(p))))
+            val dist = math.sqrt(math.max(0.0, 2.0 - 2.0 * c))
+            buckets(p) = (dist / bigD).toInt
+            p += 1
+          }
+          (id, v, buckets)
+        }
+      }.toDF("vec_id", "embedding", "bk")
+  }
+
+  /** Candidate pairs (a_id, b_id, a_emb, b_emb) of the [[pivotBucketed]]
+    * prune at radius `bigD`, shared by [[nearDupPairsExact]] and
+    * [[hardNegatives]]: a ranges over the rows passing `anchors`, b over
+    * the corpus; pivot 1 drives the equi-join with b probing its bucket
+    * ±1 (3 copies of the keys, not of the data), every other pivot's
+    * buckets must be adjacent, and `pair` filters (a_id, b_id). */
+  private def pivotPairs(corpus: DataFrame, bigD: Double, nPivots: Int,
+                         anchors: Column, pair: Column): DataFrame = {
     val withBk = pivotBucketed(corpus, bigD, nPivots)
-    val a = withBk.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-      col("bk").as("a_bk"))
+    val a = withBk.filter(anchors)
+      .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
+        col("bk").as("a_bk"))
     val probe = explode(array(
       element_at(col("bk"), 1) - 1,
       element_at(col("bk"), 1),
@@ -394,75 +497,8 @@ object Similarity {
     val adjacent = (2 to nPivots).map { p =>
       abs(element_at(col("a_bk"), p) - element_at(col("b_bk"), p)) <= 1
     }.reduceOption(_ && _).getOrElse(lit(true))
-    val joined = a.join(b,
-        element_at(col("a_bk"), 1) === col("probe") &&
-          col("a_id") < col("b_id") && adjacent)
+    a.join(b, element_at(col("a_bk"), 1) === col("probe") && pair && adjacent)
       .select(col("a_id"), col("b_id"), col("a_emb"), col("b_emb"))
-    cosineThresholdPairs(joined, threshold)
-  }
-
-  /** (vec_id, embedding, bk) with bk(p) = ⌊d(v̂, pivot_p)/bigD⌋ — the
-    * lossless metric-prune bucket stage shared by [[nearDupPairsExact]]
-    * and [[hardNegatives]]. */
-  private[ops] def pivotBucketed(corpus: DataFrame, bigD: Double,
-                                 nPivots: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        // Pivot components materialized ONCE per partition (flat
-        // [p][d] row-major, plus each pivot's norm) — the same hoist
-        // lshSignatures uses: the splitmix-style mix is ~6 int ops per
-        // component vs 2 flops for the mult-add it feeds, so
-        // recomputing it per row made the hash the bulk of the kernel.
-        // Identical component values and the same left-to-right double
-        // accumulation → bucket indices are bit-identical to the
-        // per-row formulation (oracle unchanged). Sized lazily off the
-        // first row's dim; pivots from the deterministic hyperplane
-        // stream (seed disjoint from the LSH tables').
-        var piv: Array[Double] = null
-        var pivNorm: Array[Double] = null
-        var dim = -1
-        it.map { case (id, v) =>
-          if (v.length != dim) {
-            dim = v.length
-            piv = new Array[Double](nPivots * dim)
-            pivNorm = new Array[Double](nPivots)
-            var p = 0
-            while (p < nPivots) {
-              var pn = 0.0
-              var d = 0
-              val base = p * dim
-              while (d < dim) {
-                val r = hyperplane(7776001L + p * 104729L, 0, d)
-                piv(base + d) = r
-                pn += r * r
-                d += 1
-              }
-              pivNorm(p) = pn
-              p += 1
-            }
-          }
-          val nv = norm(v)
-          val buckets = new Array[Int](nPivots)
-          var p = 0
-          while (p < nPivots) {
-            var dot = 0.0
-            val base = p * dim
-            var d = 0
-            while (d < v.length) {
-              dot += v(d).toDouble * piv(base + d)
-              d += 1
-            }
-            val c = math.max(-1.0, math.min(1.0, dot / (nv * math.sqrt(pivNorm(p)))))
-            val dist = math.sqrt(math.max(0.0, 2.0 - 2.0 * c))
-            buckets(p) = (dist / bigD).toInt
-            p += 1
-          }
-          (id, v, buckets)
-        }
-      }.toDF("vec_id", "embedding", "bk")
   }
 
   /** Hard-negative mining for contrastive training: for every anchor
@@ -475,12 +511,11 @@ object Similarity {
     * (anchor_id, neg_id, n_band) — no float column reaches the
     * driver hash.
     *
-    * Exactness: candidates come from the [[pivotBucketed]] metric
+    * Exactness: candidates come from the [[pivotPairs]] metric
     * prune at the BAND FLOOR (cos ≥ floor ⟺ unit-sphere distance ≤
     * D(floor); the triangle bound makes bucket adjacency lossless for
     * everything the band can contain — the ceiling needs no prune,
-    * it only removes pairs), decided by the same interleaved
-    * left-to-right cosine kernel as [[cosineThresholdPairs]], so the
+    * it only removes pairs), decided by the [[cosineOf]] kernel, so the
     * DuckDB oracle's ordered folds reproduce every band decision and
     * every argmax bit-for-bit. Pruning power shrinks as the floor
     * drops (same trade documented on [[nearDupPairsExact]]).
@@ -496,35 +531,14 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bigD = math.sqrt(math.max(2.0 - 2.0 * floor, 1e-12))
-    val withBk = pivotBucketed(corpus, bigD, nPivots)
-    val a = withBk.filter(col("vec_id") < anchorMax)
-      .select(col("vec_id").as("anchor_id"), col("embedding").as("a_emb"),
-        col("bk").as("a_bk"))
-    val probe = explode(array(
-      element_at(col("bk"), 1) - 1,
-      element_at(col("bk"), 1),
-      element_at(col("bk"), 1) + 1)).as("probe")
-    val b = withBk.select(col("vec_id").as("neg_id"), col("embedding").as("b_emb"),
-      col("bk").as("b_bk"), probe)
-    val adjacent = (2 to nPivots).map { p =>
-      abs(element_at(col("a_bk"), p) - element_at(col("b_bk"), p)) <= 1
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    val joined = a.join(b,
-        element_at(col("a_bk"), 1) === col("probe") &&
-          col("anchor_id") =!= col("neg_id") && adjacent)
-      .select(col("anchor_id"), col("neg_id"), col("a_emb"), col("b_emb"))
-    val banded = joined.as[(Long, Long, Array[Float], Array[Float])]
-      .mapPartitions { it =>
-        it.flatMap { case (aId, nId, av, bv) =>
-          var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-          while (i < av.length) {
-            val x = av(i).toDouble; val y = bv(i).toDouble
-            dot += x * y; na += x * x; nb += y * y; i += 1
-          }
-          val c = dot / (math.sqrt(na) * math.sqrt(nb))
-          if (c >= floor && c < ceil) Some((aId, nId, c)) else None
-        }
-      }.toDF("anchor_id", "neg_id", "cos")
+    val banded = pivotPairs(corpus, bigD, nPivots,
+        anchors = col("vec_id") < anchorMax, pair = col("a_id") =!= col("b_id"))
+      .as[(Long, Long, Array[Float], Array[Float])]
+      .mapPartitions(_.flatMap { case (aId, nId, av, bv) =>
+        val c = cosineOf(av, bv)
+        if (c >= floor && c < ceil) Some((aId, nId, c)) else None
+      })
+      .toDF("anchor_id", "neg_id", "cos")
     banded.groupBy(col("anchor_id"))
       .agg(count(lit(1)).as("n_band"),
         max(struct(col("cos").as("c"), (-col("neg_id")).as("ni"),
@@ -561,12 +575,8 @@ object Similarity {
           var i = 0
           while (i < all.length) {
             val (bId, bV, bN) = all(i)
-            if (bId > aId) {
-              var dot = 0.0
-              var d = 0
-              while (d < aV.length) { dot += aV(d).toDouble * bV(d).toDouble; d += 1 }
-              if (dot / (aN * bN) >= threshold) out += ((aId, bId))
-            }
+            if (bId > aId && aV.length == bV.length &&
+                dot(aV, bV) / (aN * bN) >= threshold) out += ((aId, bId))
             i += 1
           }
           out.result()
@@ -614,137 +624,13 @@ object Similarity {
     s
   }
 
-  /** ANN via 8-bit scalar quantization with exact re-rank — the
-    * memory-scale path for similarity search: codes are 4x smaller
-    * than float32, so a 10^10-vector index that would need 2.5 TB of
-    * float RAM fits in 640 GB of executor memory, and the integer dot
-    * product vectorizes (in real deployments, to VNNI/DP4A). Stages:
-    *
-    *  1. per-dimension corpus max-abs (FLOAT max of abs — exact and
-    *     order-independent, unlike means, which is why SQ needs no
-    *     IEEE-fold discipline where PQ's k-means centroids would);
-    *  2. quantize corpus + queries to symmetric [-127,127] codes;
-    *  3. quantized-cosine top-`candidates` cut per query: the dot and
-    *     both norms are EXACT integer sums (order-independent — no
-    *     fold discipline), combined by one sqrt + one division of
-    *     exactly-representable doubles, so the score is a
-    *     deterministic function of the data; equal scores (common —
-    *     duplicate vectors quantize identically) break by id
-    *     (keep-smaller) in the per-partition heap, so the cut never
-    *     flaps under AQE/partitioning;
-    *  4. exact float cosine re-rank of the candidates to top-k
-    *     (ordered element fold — bit-identical to the oracle replay).
-    *
-    * Scale shape: the range pass is one dim-sized aggregate; the scan
-    * emits only per-partition candidate heaps (queries broadcast);
-    * the re-rank joins a candidate set of |queries|·C rows back to the
-    * corpus — broadcast-sized by construction. */
-  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              candidates: Int = 20): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val rng = corpus
-      .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("d"))
-      .agg(max(abs(col("x"))).as("m"))
-      .collect().map(r => (r.getInt(0), r.getFloat(1)))
-      .sortBy(_._1)
-    val maxAbs = rng.map(_._2)
-    val qCodes: Array[(Long, Array[Int], Long)] = queries
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) =>
-        val q = sq8Quantize(v, maxAbs)
-        (id, q, sqNorm2(q))
-      }
-    val mB = spark.sparkContext.broadcast(maxAbs)
-    val qB = spark.sparkContext.broadcast(qCodes)
-    val cand = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val qs = qB.value
-        val m = mB.value
-        // min-heap under (score ASC, id DESC): evicting its head drops
-        // the globally-worst candidate, so equal scores keep the
-        // smaller id — the global total order's preference
-        val ord = new java.util.Comparator[(Double, Long)] {
-          def compare(a: (Double, Long), b: (Double, Long)): Int = {
-            val c = java.lang.Double.compare(a._1, b._1)
-            if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-          }
-        }
-        val best = Array.fill(qs.length)(
-          new java.util.PriorityQueue[(Double, Long)](candidates + 1, ord))
-        rows.foreach { case (id, v) =>
-          val cv = sq8Quantize(v, m)
-          val cn = sqNorm2(cv)
-          var qi = 0
-          while (qi < qs.length) {
-            val (qid, qv, qn) = qs(qi)
-            if (qid != id) {
-              var s = 0L
-              var d = 0
-              while (d < cv.length) { s += qv(d).toLong * cv(d).toLong; d += 1 }
-              // quantized cosine: exact longs in, ONE sqrt + ONE
-              // division — deterministic and oracle-replicable
-              val score =
-                if (qn == 0L || cn == 0L) -2.0
-                else s.toDouble / math.sqrt((qn * cn).toDouble)
-              val pq = best(qi)
-              pq.add((score, id))
-              if (pq.size() > candidates) pq.poll()
-            }
-            qi += 1
-          }
-        }
-        best.iterator.zipWithIndex.flatMap { case (pq, qi) =>
-          val qid = qs(qi)._1
-          Iterator.continually(pq.poll()).takeWhile(_ != null)
-            .map { case (s, id) => (qid, id, s) }
-        }
-      }.toDF("query_id", "neighbor_id", "score")
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    val cut = cand.withColumn("r", row_number().over(wC))
-      .filter(col("r") <= candidates)
-      .select(col("query_id"), col("neighbor_id"))
-    val rerank = cut
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb")), Seq("query_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    rerank.withColumn("rank", row_number().over(wK).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
-  }
-
-  /** Integer Lloyd k-means over SQ8 codes — embedding-space clustering
-    * for diversity-aware sampling and SemDeDup-style semantic dedup
-    * buckets. Every arithmetic step is exact or IEEE-fixed, so cluster
-    * assignments are bit-identical at any parallelism AND replayable
-    * in SQL:
-    *
-    *  1. vectors quantize to the same symmetric [-127,127] codes as
-    *     [[sq8TopK]] (global per-dim max-abs — order-independent);
-    *  2. init: centroids = the codes of the `k` smallest vec_ids
-    *     (deterministic, no sampling);
-    *  3. assignment: exact integer squared-L2 argmin, ties keep the
-    *     lowest centroid index;
-    *  4. update: per-(cluster, dim) EXACT integer sums (the partial
-    *     agg absorbs the corpus map-side), centroid = floor(sum/n) —
-    *     one IEEE division + floor, re-quantizing the centroid to
-    *     integers so the next round stays exact; empty clusters keep
-    *     their previous centroid.
-    *
-    * Scale shape: the code table shuffles never — each round is one
-    * broadcast of k·dim ints out, one k·dim-row aggregate back (the
-    * classic Spark k-means contract: model state is driver-sized by
-    * construction, data never leaves its partitions). `iters` rounds
-    * means exactly `iters` scans + `iters−1` tiny aggregates. */
-  def kmeansSq8(corpus: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
+  /** SQ8 codes of `corpus`, the quantization every SQ8 operator shares:
+    * the per-dimension max-abs scales (FLOAT max of abs — exact and
+    * order-independent; one dim-sized aggregate collected to the
+    * driver), broadcast, then each vector through [[sq8Quantize]].
+    * Returns the scales, with which callers quantize their queries on
+    * the driver, and the lazy (vec_id, code) Dataset. */
+  private[ops] def sq8Codes(corpus: DataFrame): (Array[Float], Dataset[(Long, Array[Int])]) = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val maxAbs = corpus
@@ -758,49 +644,164 @@ object Similarity {
       .mapPartitions { rows =>
         val m = mB.value
         rows.map { case (id, v) => (id, sq8Quantize(v, m)) }
-      }.toDF("vec_id", "code").localCheckpoint(false)
-    var centroids: Array[Array[Int]] = codes
-      .orderBy(col("vec_id")).limit(k)
-      .as[(Long, Array[Int])].collect().map(_._2)
-    require(centroids.length == k, s"corpus smaller than k=$k")
-    var assign: DataFrame = null
-    var round = 0
-    while (round < iters) {
-      val cB = spark.sparkContext.broadcast(centroids)
-      assign = codes.as[(Long, Array[Int])].mapPartitions { rows =>
-        val cs = cB.value
-        rows.map { case (id, q) =>
-          var best = 0
-          var bestD = Long.MaxValue
-          var c = 0
-          while (c < cs.length) {
-            val cc = cs(c)
-            var d2 = 0L
-            var d = 0
-            while (d < q.length) { val x = (q(d) - cc(d)).toLong; d2 += x * x; d += 1 }
-            if (d2 < bestD) { bestD = d2; best = c } // strict < : ties keep lowest c
-            c += 1
-          }
-          (id, best.toLong, bestD, q)
-        }
-      }.toDF("vec_id", "cluster", "dist2", "code")
-      round += 1
-      if (round < iters) {
-        val sums = assign
-          .select(col("cluster"), posexplode(col("code")).as(Seq("d", "q")))
-          .groupBy(col("cluster"), col("d"))
-          .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-          .collect() // k·dim rows — driver-sized by construction
-        val next = centroids.map(_.clone()) // empty-cluster guard
-        sums.foreach { r =>
-          val c = r.getLong(0).toInt
-          val d = r.getInt(1)
-          next(c)(d) = math.floor(r.getLong(2).toDouble / r.getLong(3).toDouble).toInt
-        }
-        centroids = next
+      }.toDF("vec_id", "code").as[(Long, Array[Int])]
+    (maxAbs, codes)
+  }
+
+  /** ANN via 8-bit scalar quantization with exact re-rank — the
+    * memory-scale path for similarity search: codes are 4x smaller
+    * than float32, so a 10^10-vector index that would need 2.5 TB of
+    * float RAM fits in 640 GB of executor memory, and the integer dot
+    * product vectorizes (in real deployments, to VNNI/DP4A). Stages:
+    *
+    *  1. [[sq8Codes]]: per-dimension corpus max-abs (exact and
+    *     order-independent, unlike means, which is why SQ needs no
+    *     IEEE-fold discipline where PQ's k-means centroids would), then
+    *     symmetric [-127,127] codes for corpus and queries;
+    *  2. quantized-cosine top-`candidates` cut per query
+    *     ([[topCandidates]], then [[rankCut]]): the dot and both norms
+    *     are EXACT integer sums (order-independent — no fold
+    *     discipline), combined by one sqrt + one division of
+    *     exactly-representable doubles, so the score is a deterministic
+    *     function of the data. Equal scores are common (duplicate
+    *     vectors quantize identically); the scan's id tie rule keeps the
+    *     cut independent of the partitioning;
+    *  3. [[rerank]] of the candidates to top-k by exact float cosine.
+    *
+    * Scale shape: the range pass is one dim-sized aggregate; the scan
+    * emits only per-partition candidate heaps (queries broadcast);
+    * the re-rank joins a candidate set of |queries|·C rows back to the
+    * corpus — broadcast-sized by construction. */
+  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
+              candidates: Int = 20): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val (maxAbs, codes) = sq8Codes(corpus)
+    val qCodes = queries.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+      .map { case (id, v) =>
+        val q = sq8Quantize(v, maxAbs)
+        (id, (q, sqNorm2(q)))
+      }
+    val cand = topCandidates(codes, qCodes, candidates) { qs => cv =>
+      val cn = sqNorm2(cv)
+      qi => {
+        val (qv, qn) = qs(qi)._2
+        var s = 0L
+        var d = 0
+        while (d < cv.length) { s += qv(d).toLong * cv(d).toLong; d += 1 }
+        // quantized cosine: exact longs in, ONE sqrt + ONE division —
+        // deterministic and oracle-replicable
+        if (qn == 0L || cn == 0L) -2.0
+        else s.toDouble / math.sqrt((qn * cn).toDouble)
       }
     }
-    assign.select(col("vec_id"), col("cluster"), col("dist2"))
+    rerank(rankCut(cand, candidates), corpus, queries, k)
+  }
+
+  /** Integer Lloyd k-means over SQ8 codes — embedding-space clustering
+    * for diversity-aware sampling and SemDeDup-style semantic dedup
+    * buckets: the [[sq8Codes]] of the corpus (the same codes as
+    * [[sq8TopK]]), clustered by [[lloyd]] in one subspace. Every
+    * arithmetic step is exact or IEEE-fixed, so cluster assignments are
+    * bit-identical at any parallelism AND replayable in SQL.
+    *
+    * Scale shape: the code table shuffles never — each round is one
+    * broadcast of k·dim ints out, one k·dim-row aggregate back (the
+    * classic Spark k-means contract: model state is driver-sized by
+    * construction, data never leaves its partitions). `iters` rounds
+    * means exactly `iters` scans + `iters−1` tiny aggregates.
+    * Output: (vec_id, cluster, dist2). */
+  def kmeansSq8(corpus: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val (maxAbs, codes) = sq8Codes(corpus)
+    val (_, assign) = lloyd(codes.localCheckpoint(false), maxAbs.length, m = 1, k, iters)
+    assign.map { case (id, cluster, dist2, _) => (id, cluster(0).toLong, dist2) }
+      .toDF("vec_id", "cluster", "dist2")
+  }
+
+  /** Integer Lloyd over SQ8 codes split into `m` contiguous subspaces of
+    * `dim / m` dims each, trained jointly: [[kmeansSq8]] is m = 1, and
+    * [[pqTopK]] trains its m sub-codebooks in the same loop. Every step
+    * is exact or IEEE-fixed, so assignments are bit-identical at any
+    * parallelism and replayable in SQL:
+    *  - seeds: centroid c of every subspace is cut from the code of the
+    *    c-th smallest vec_id (deterministic, no sampling);
+    *  - assignment: exact integer squared-L2 argmin per subspace with a
+    *    strict `<`, so ties keep the lowest centroid index;
+    *  - update: EXACT integer sums per (subspace, centroid, dim) — the
+    *    partial aggregate absorbs the corpus map-side — and centroid =
+    *    floor(sum/n), one IEEE division + floor that re-quantizes the
+    *    centroid to integers so the next round stays exact; an empty
+    *    cluster keeps its previous centroid.
+    * Per round the model ships out as one m·k·(dim/m)-int broadcast and
+    * comes back as one model-sized aggregate; `iters` rounds are `iters`
+    * assignment scans and `iters − 1` aggregates. `codes` (vec_id, code)
+    * is scanned every round, so the caller pins it. Returns the final
+    * centroids, indexed (subspace)(centroid)(dim), and the last
+    * assignment (vec_id, centroid per subspace, summed squared distance,
+    * code). */
+  private[ops] def lloyd(codes: Dataset[(Long, Array[Int])], dim: Int, m: Int,
+                         k: Int, iters: Int)
+      : (Array[Array[Array[Int]]], Dataset[(Long, Array[Int], Long, Array[Int])]) = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    require(iters >= 1, s"iters=$iters: Lloyd needs one assignment round")
+    val subDim = dim / m
+    val seeds = codes.orderBy(col("vec_id")).limit(k).collect().map(_._2)
+    require(seeds.length == k, s"corpus smaller than k=$k")
+    var cents = Array.tabulate(m, k, subDim)((s, c, sd) => seeds(c)(s * subDim + sd))
+    var assign: Dataset[(Long, Array[Int], Long, Array[Int])] = null
+    var round = 0
+    while (round < iters) {
+      val cB = spark.sparkContext.broadcast(cents)
+      assign = codes.mapPartitions { rows =>
+        val cs = cB.value
+        rows.map { case (id, q) =>
+          val a = new Array[Int](m)
+          var dist2 = 0L
+          var s = 0
+          while (s < m) {
+            var best = 0
+            var bestD = Long.MaxValue
+            var c = 0
+            while (c < k) {
+              val cc = cs(s)(c)
+              var d2 = 0L
+              var sd = 0
+              while (sd < subDim) {
+                val x = (q(s * subDim + sd) - cc(sd)).toLong; d2 += x * x; sd += 1
+              }
+              if (d2 < bestD) { bestD = d2; best = c } // strict < : ties keep lowest c
+              c += 1
+            }
+            a(s) = best
+            dist2 += bestD
+            s += 1
+          }
+          (id, a, dist2, q)
+        }
+      }.toDF("vec_id", "assign", "dist2", "code").as[(Long, Array[Int], Long, Array[Int])]
+      round += 1
+      if (round < iters) {
+        val sub = (col("d") / subDim).cast("int")
+        val sums = assign
+          .select(posexplode(col("code")).as(Seq("d", "q")), col("assign"))
+          .select(sub.as("sub"), element_at(col("assign"), sub + 1).as("c"),
+            (col("d") % subDim).as("sd"), col("q"))
+          .groupBy(col("sub"), col("c"), col("sd"))
+          .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+          .collect() // m·k·(dim/m) rows — model-sized by construction
+        val next = cents.map(_.map(_.clone())) // empty-cluster guard
+        sums.foreach { r =>
+          next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+            math.floor(r.getLong(3).toDouble / r.getLong(4).toDouble).toInt
+        }
+        cents = next
+      }
+    }
+    (cents, assign)
   }
 
   /** SemDeDup (Abbas et al. 2023) end-to-end: semantic deduplication
@@ -828,19 +829,11 @@ object Similarity {
       col("embedding").as("av"))
     val rhs = withVec.select(col("vec_id").as("b_id"), col("cluster"),
       col("embedding").as("bv"))
-    // the pair pass evaluates Σ|cluster|² cosines — run it through the
-    // primitive kernel (bit-identical, see cosineAtLeast) instead of
-    // per-element HOF lambdas
-    val spark2 = corpus.sparkSession
-    import spark2.implicits._
-    val pairs = lhs.join(rhs, Seq("cluster"))
+    // the pair pass evaluates Σ|cluster|² cosines: the primitive
+    // kernel, not per-element HOF lambdas
+    val pairs = cosineThresholdPairs(lhs.join(rhs, Seq("cluster"))
       .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("av"), col("bv"))
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .mapPartitions(_.collect {
-        case (a, b, av, bv) if cosineAtLeast(av, bv, threshold) => (a, b)
-      })
-      .toDF("a_id", "b_id")
+      .select(col("a_id"), col("b_id"), col("av"), col("bv")), threshold)
     val surv = Dedup.survivors(
       corpus.select(col("vec_id").as("doc_id")), pairs)
     assign
@@ -857,24 +850,20 @@ object Similarity {
     * ADC distances, and the candidate cut are bit-identical at any
     * parallelism and replayable in SQL:
     *
-    *  1. vectors quantize to [[sq8TopK]]'s SQ8 codes (global per-dim
-    *     max-abs), and each code splits into m contiguous subvectors;
-    *  2. per-subspace codebooks train jointly — ONE integer Lloyd loop
-    *     keyed by (sub, centroid) with [[kmeansSq8]]'s exact contract
-    *     (k-lowest-id init, integer L2 argmin with lowest-c ties,
-    *     floor(sum/n) update, empty-cluster guard); per round the model
-    *     ships as one m·k·subDim-int broadcast out and one
-    *     m·k·subDim-row aggregate back;
+    *  1. vectors quantize to [[sq8Codes]], and each code splits into m
+    *     contiguous subvectors;
+    *  2. the per-subspace codebooks train jointly in one [[lloyd]]
+    *     loop; per round the model ships as one m·k·subDim-int
+    *     broadcast out and one m·k·subDim-row aggregate back;
     *  3. the last assignment IS the encoding: (vec_id, m nibble codes);
     *  4. query scan uses the defining PQ trick — an ADC lookup table
     *     per query (dist[sub][c] = exact L2 of the query subvector to
     *     centroid, m·k longs built ONCE per partition), so scoring a
     *     corpus vector is m table loads + adds, never touching floats;
-    *  5. per-partition tie-consistent top-`candidates` heaps under the
-    *     global (adc ASC, id ASC) order (the [[sq8TopK]] argument:
-    *     each partition's survivors are the partition restriction of
-    *     the global order, so the union covers the global cut), then
-    *     exact float cosine re-ranks the survivors only.
+    *  5. the [[topCandidates]] scan scores −adc (exact in a double), so
+    *     its (score DESC, id ASC) order is the (adc ASC, id ASC) order;
+    *     then the [[rankCut]] to `candidates` and the [[rerank]] of the
+    *     survivors by exact float cosine.
     *
     * With `candidates` ≥ corpus size the cut is a no-op and the result
     * equals brute force exactly (pinned by spec). */
@@ -883,152 +872,41 @@ object Similarity {
              candidates: Int = 20): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val maxAbs = corpus
-      .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("d")).agg(max(abs(col("x"))).as("mx"))
-      .collect().map(r => (r.getInt(0), r.getFloat(1)))
-      .sortBy(_._1).map(_._2)
+    val (maxAbs, codes) = sq8Codes(corpus)
     val dim = maxAbs.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
-    val mB = spark.sparkContext.broadcast(maxAbs)
-    val codes = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val ma = mB.value
-        rows.map { case (id, v) => (id, sq8Quantize(v, ma)) }
-      }.toDF("vec_id", "code").localCheckpoint(false)
-    // ---- 2. joint per-subspace Lloyd: centroids(sub)(c)(sd)
-    var cents: Array[Array[Array[Int]]] = {
-      val seeds = codes.orderBy(col("vec_id")).limit(kCode)
-        .as[(Long, Array[Int])].collect().map(_._2)
-      require(seeds.length == kCode, s"corpus smaller than kCode=$kCode")
-      Array.tabulate(m, kCode, subDim)((s, c, sd) => seeds(c)(s * subDim + sd))
-    }
-    var enc: DataFrame = null
-    var round = 0
-    while (round < iters) {
-      val cB = spark.sparkContext.broadcast(cents)
-      enc = codes.as[(Long, Array[Int])].mapPartitions { rows =>
-        val cs = cB.value
-        val mm = cs.length
-        val kk = cs(0).length
-        val sdim = cs(0)(0).length
-        rows.map { case (id, q) =>
-          val pq = new Array[Int](mm)
-          var s = 0
-          while (s < mm) {
-            var best = 0
-            var bestD = Long.MaxValue
-            var c = 0
-            while (c < kk) {
-              val cc = cs(s)(c)
-              var d2 = 0L
-              var sd = 0
-              while (sd < sdim) {
-                val x = (q(s * sdim + sd) - cc(sd)).toLong; d2 += x * x; sd += 1
-              }
-              if (d2 < bestD) { bestD = d2; best = c } // ties keep lowest c
-              c += 1
-            }
-            pq(s) = best
-            s += 1
-          }
-          (id, pq)
-        }
-      }.toDF("vec_id", "pq")
-      round += 1
-      if (round < iters) {
-        val sums = enc.join(codes, Seq("vec_id"))
-          .select(posexplode(col("code")).as(Seq("d", "q")), col("pq"))
-          .select((col("d") / subDim).cast("int").as("sub"),
-            (col("d") % subDim).as("sd"), col("q"),
-            element_at(col("pq"), (col("d") / subDim).cast("int") + 1).as("c"))
-          .groupBy(col("sub"), col("c"), col("sd"))
-          .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-          .collect() // m*kCode*subDim rows — model-sized by construction
-        val next = cents.map(_.map(_.clone())) // empty-cluster guard
-        sums.foreach { r =>
-          val sub = r.getInt(0); val c = r.getInt(1); val sd = r.getInt(2)
-          next(sub)(c)(sd) =
-            math.floor(r.getLong(3).toDouble / r.getLong(4).toDouble).toInt
-        }
-        cents = next
-      }
-    }
-    // ---- 4/5. ADC scan with per-query lookup tables
-    val encoded = enc.localCheckpoint(false)
+    val (cents, enc) = lloyd(codes.localCheckpoint(false), dim, m, kCode, iters)
+    val encoded = enc.select(col("vec_id"), col("assign")).as[(Long, Array[Int])]
+      .localCheckpoint(false)
     val qCodes: Array[(Long, Array[Int])] = queries
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
       .map { case (id, v) => (id, sq8Quantize(v, maxAbs)) }
-    val qB = spark.sparkContext.broadcast(qCodes)
-    val cFinalB = spark.sparkContext.broadcast(cents)
-    val cand = encoded.as[(Long, Array[Int])].mapPartitions { rows =>
-      val qs = qB.value
-      val cs = cFinalB.value
-      val mm = cs.length
-      val kk = cs(0).length
-      val sdim = cs(0)(0).length
-      // ADC tables: lut(qi)(sub*kk + c) = exact L2(query subvec, centroid)
-      val lut = Array.tabulate(qs.length, mm * kk) { (qi, i) =>
-        val sub = i / kk; val c = i % kk
+    val cB = spark.sparkContext.broadcast(cents)
+    val cand = topCandidates(encoded, qCodes, candidates) { qs =>
+      val cs = cB.value
+      // ADC tables: lut(qi)(sub*kCode + c) = exact L2(query subvec, centroid)
+      val lut = Array.tabulate(qs.length, m * kCode) { (qi, i) =>
+        val sub = i / kCode; val c = i % kCode
         val qv = qs(qi)._2
         val cc = cs(sub)(c)
         var d2 = 0L
         var sd = 0
-        while (sd < sdim) {
-          val x = (qv(sub * sdim + sd) - cc(sd)).toLong; d2 += x * x; sd += 1
+        while (sd < subDim) {
+          val x = (qv(sub * subDim + sd) - cc(sd)).toLong; d2 += x * x; sd += 1
         }
         d2
       }
-      // max-heap under (adc DESC, id DESC): evicting the head drops the
-      // globally-worst candidate under the (adc ASC, id ASC) preference
-      val ord = new java.util.Comparator[(Long, Long)] {
-        def compare(a: (Long, Long), b: (Long, Long)): Int = {
-          val c = java.lang.Long.compare(b._1, a._1)
-          if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-        }
+      pq => qi => {
+        val t = lut(qi)
+        var adc = 0L
+        var s = 0
+        while (s < m) { adc += t(s * kCode + pq(s)); s += 1 }
+        (-adc).toDouble
       }
-      val best = Array.fill(qs.length)(
-        new java.util.PriorityQueue[(Long, Long)](candidates + 1, ord))
-      rows.foreach { case (id, pq) =>
-        var qi = 0
-        while (qi < qs.length) {
-          if (qs(qi)._1 != id) {
-            val t = lut(qi)
-            var adc = 0L
-            var s = 0
-            while (s < mm) { adc += t(s * kk + pq(s)); s += 1 }
-            val h = best(qi)
-            h.add((adc, id))
-            if (h.size() > candidates) h.poll()
-          }
-          qi += 1
-        }
-      }
-      best.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        val qid = qs(qi)._1
-        Iterator.continually(h.poll()).takeWhile(_ != null)
-          .map { case (adc, id) => (qid, id, adc) }
-      }
-    }.toDF("query_id", "neighbor_id", "adc")
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val cut = cand.withColumn("r", row_number().over(wC))
-      .filter(col("r") <= candidates)
-      .select(col("query_id"), col("neighbor_id"))
-    val rerank = cut
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb")), Seq("query_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    rerank.withColumn("rank", row_number().over(wK).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    }
+    rerank(rankCut(cand, candidates), corpus, queries, k)
   }
 
   /** ANN quality-evaluation harness: recall@k of every approximate

@@ -941,8 +941,8 @@ object WebGraph {
     * any edge (self-loops included) comes back labeled with the
     * LEXICOGRAPHIC MIN url of its component.
     *
-    * Implementation: deterministic dictionary encode — urls sorted,
-    * dense ids assigned in url order via zipWithIndex (distributed; a
+    * Implementation: deterministic dictionary encode — dense ids are
+    * the urls' [[GlobalRank.positions]] in url order (distributed; a
     * window row_number would single-partition) — then the pinned
     * star-contraction kernel [[Dedup.components]] (O(log n) rounds,
     * per-round localCheckpoint, size-gated driver union-find), then
@@ -950,18 +950,19 @@ object WebGraph {
     * exactly the min-URL label, so output is independent of
     * partitioning and needs no hash replication in the oracle.
     *
-    * Scale note: the dictionary encode costs one sort exchange over
-    * the vertex set + two hash joins over edges — the same shape every
-    * production WCC (GraphFrames, GraphX bridge) pays to densify ids;
-    * at 10^12 edges you'd bucket both tables by url first. */
+    * Scale note: the dictionary encode costs one range exchange over
+    * the vertex set (plus a P-row count) + two hash joins over edges —
+    * the same shape every production WCC (GraphFrames, GraphX bridge)
+    * pays to densify ids; at 10^12 edges you'd bucket both tables by
+    * url first. */
   def weaklyConnected(edges: DataFrame, maxIter: Int = 50,
                       driverSolveMaxEdges: Long = 200000L): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
-    val ids = spark.createDataFrame(
-      nodeSet(e).orderBy("url").select("url").rdd
-        .map(_.getString(0)).zipWithIndex()
-    ).toDF("url", "id").localCheckpoint(false)
+    // not pinned again: each use re-streams positions' pinned layout
+    val ids = GlobalRank.positions(nodeSet(e), Seq(col("url")),
+        spark.sparkContext.defaultParallelism)
+      .select(col("url"), col("pos").as("id"))
     val pairs = e
       .join(ids.select(col("url").as("src"), col("id").as("a_id")), Seq("src"))
       .join(ids.select(col("url").as("dst"), col("id").as("b_id")), Seq("dst"))

@@ -23,20 +23,6 @@ final case class Op(name: String, operands: scala.collection.IndexedSeq[PdfObj])
   */
 object ContentParser {
 
-  /** Names that are content operators (superset is harmless — any
-    * regular-char run that is not a number/bool/null is treated as an
-    * operator; this set only gates multi-char lookups where needed). */
-  private val knownOps: Set[String] = Set(
-    "BT", "ET", "Tf", "Tm", "Td", "TD", "T*", "Tj", "TJ", "'", "\"",
-    "Tc", "Tw", "Tz", "TL", "Ts", "Tr",
-    "q", "Q", "cm", "rg", "RG", "g", "G", "k", "K",
-    "cs", "CS", "sc", "SC", "scn", "SCN",
-    "w", "d", "J", "j", "M", "ri", "i", "gs", "sh",
-    "m", "l", "c", "v", "y", "h", "re",
-    "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "n",
-    "W", "W*", "Do", "BMC", "BDC", "EMC", "MP", "DP",
-    "BI", "ID", "EI", "BX", "EX", "d0", "d1", "Tk")
-
   def parse(data: Array[Byte]): Vector[Op] = {
     val ops = Vector.newBuilder[Op]
     // materializing form: copy out of the reused operand buffer

@@ -37,7 +37,6 @@ final class ObjParser(
   // `c` comes from `cur`/`peek` so its range is [-1, 255].
   import ObjParser.CharClass
   @inline def isWs(c: Int): Boolean = c >= 0 && (CharClass(c) & 1) != 0
-  @inline def isDelim(c: Int): Boolean = c >= 0 && (CharClass(c) & 2) != 0
   @inline def isRegular(c: Int): Boolean = c >= 0 && CharClass(c) == 0
   @inline private def isDigit(c: Int): Boolean = c >= '0' && c <= '9'
 

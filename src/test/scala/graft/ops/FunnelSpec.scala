@@ -135,6 +135,19 @@ class FunnelSpec extends AnyFunSuite with SparkSuite {
       (7L, 6L, 0L)))
   }
 
+  test("a streaming operator keeps only its output once its query has terminated") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staging = tmp.listFiles().filter(_.getName.startsWith("graft_attr")).toSet
+    val before = staging
+    val d = events((1L, 5000L, 1L, "click"), (2L, 6000L, 1L, "purchase"))
+    val out = Events.attributionStream(spark, d, windowUs = 10000L * 1000L)
+    val made = staging -- before
+    assert(made.size == 1)
+    assert(made.head.list().toSet == Set("out")) // in and ckpt are gone
+    // the result still reads out lazily
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+  }
+
   test("session_window boundary: an event at EXACTLY last+gap MERGES (batch-identical)") {
     // pins that Spark's session_window treats the window end as
     // inclusive for merging — an event at exactly last+gap joins the
