@@ -2,7 +2,7 @@ package graft
 
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.mutable
 import scala.util.control.NonFatal
 import org.apache.spark.ListenerBusDrain
@@ -22,7 +22,8 @@ import graft.spark.{ExtractJob, PageRow, PagesGen}
   * once (master = SPARK_GRAFT_CPUS, else the host's core count); times
   * a pass as wall and process-CPU seconds (hypervisor steal is not
   * charged to process CPU, so CPU seconds stay comparable when wall
-  * time swings) and counts the Spark jobs and stages it ran; runs arms
+  * time swings) and counts the Spark jobs and stages it ran and the
+  * shuffle bytes its stages wrote and read; runs arms
   * interleaved, so an ambient noise burst hits every arm rather than
   * one; and prints ONE JSON line with the host's core count and every
   * sample. A query, plan or check that throws is reported with its
@@ -34,7 +35,7 @@ import graft.spark.{ExtractJob, PageRow, PagesGen}
   *   ab dedup|fontcache|salt [nDocs] [rounds]   interleaved two-arm A/B
   *   large [nDocs] [pagesPerDoc]      MB/s on multi-hundred-page PDFs
   *   kernel [reps]                    single-thread, Spark-free ns/doc per kind
-  *   queries q1,q2                    min wall, jobs and stages per query
+  *   queries q1,q2                    min wall, jobs, stages, shuffle MB per query
   *   plans [q1,q2]                    formatted plans into target/plans/
   *   stress [nDocs]                   size-gated operators vs references
   *
@@ -47,7 +48,8 @@ import graft.spark.{ExtractJob, PageRow, PagesGen}
 object Perf {
 
   /** One timed pass. */
-  private final case class Sample(wall: Double, cpu: Double, jobs: Int, stages: Int)
+  private final case class Sample(wall: Double, cpu: Double, jobs: Int, stages: Int,
+                                  shuffleWriteMb: Double, shuffleReadMb: Double)
 
   /** A JSON object whose fields print in order. */
   private final case class Obj(fields: (String, Any)*)
@@ -108,12 +110,22 @@ object Perf {
 
   private final class Counts extends SparkListener {
     val jobs, stages = new AtomicInteger
+    val shuffleWrite, shuffleRead = new AtomicLong
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      val m = e.stageInfo.taskMetrics
+      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+    }
   }
 
+  /** Bytes as MB (2^20) to the KB: a count() stage's few-byte shuffle reads 0. */
+  private def mb(bytes: Long): Double = math.round(bytes / 1024.0) / 1024.0
+
   /** Times `f` on `spark`: wall and process-CPU seconds, plus the jobs
-    * and stages it ran (counted after the listener bus has drained). */
+    * and stages it ran and their shuffle MB written and read (counted
+    * after the listener bus has drained). */
   private def time(spark: SparkSession)(f: => Any): Sample = {
     val sc = spark.sparkContext
     val counts = new Counts
@@ -125,7 +137,8 @@ object Perf {
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = (osBean.getProcessCpuTime - c0) / 1e9
       ListenerBusDrain(sc)
-      Sample(wall, cpu, counts.jobs.get, counts.stages.get)
+      Sample(wall, cpu, counts.jobs.get, counts.stages.get,
+        mb(counts.shuffleWrite.get), mb(counts.shuffleRead.get))
     } finally sc.removeSparkListener(counts)
   }
 
@@ -415,7 +428,8 @@ object Perf {
       n -> errors.get(n).map(e => Obj("error" -> e)).getOrElse {
         val best = samples(n).minBy(_.wall)
         Obj("wall_s" -> best.wall, "median_s" -> median(samples(n).map(_.wall)), "jobs" -> best.jobs,
-          "stages" -> best.stages, "samples" -> samples(n).map(_.wall))
+          "stages" -> best.stages, "shuffle_write_mb" -> best.shuffleWriteMb,
+          "shuffle_read_mb" -> best.shuffleReadMb, "samples" -> samples(n).map(_.wall))
       }
     }
     val failed = names.filter(errors.contains)
@@ -979,12 +993,12 @@ object Perf {
     "dedup_incremental_lsh" ->
       ("Check: the base side enters as Scan ExistingRDD (the persisted " +
        "signature table — NO shingling/text scan of the base anywhere " +
-       "in the plan); the bucket rollup is a partial-aggregated " +
-       "HashAggregate on (band, bh); the pair join keys delta bands " +
-       "against surviving buckets only. At 10^12 docs the base-only " +
-       "buckets (the overwhelming majority) die in the rollup filter " +
-       "and never reach the self-join — per-increment cost is " +
-       "delta-proportional."),
+       "in the plan); base and delta bands meet in one Union under the " +
+       "bucket cap's Window on (band, bh) — the dedup_minhash_lsh shape " +
+       "(Dedup.bucketPairs) — and only delta rows probe the kept " +
+       "buckets. At 10^12 docs a base-only bucket (the overwhelming " +
+       "majority) costs its count and never reaches the pair join — " +
+       "per-increment pair work is delta-proportional."),
     "corpus_bloom_decontaminate" ->
       ("Check: the corpus pays ONE DeserializeToObject -> MapPartitions " +
        "kernel pass (tokenize + slide + probe the broadcast bitmap " +

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import TextAnalysis.tokens
 
 /** Corpus-level deduplication operators for training-data pipelines.
   * All shapes are shuffle-minimal and skew-aware: candidate generation
@@ -43,10 +44,6 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("lang"), col("doc_id"), col("n_chars"))
   }
-
-  /** Word tokens (lowercased, whitespace split). */
-  private def tokens(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
   /** w-shingles as strings (codegen-friendly: transform over sequence). */
   def shingles(text: Column, w: Int): Column = {
@@ -185,21 +182,58 @@ object Dedup {
         expr(s"matches * 1000L div ${k}L").as("est_permille"))
   }
 
-  /** MinHash + LSH banding: signatures → (band, bandHash) buckets →
-    * distinct candidate pairs from a bucket self-join → broadcast the
-    * (small) signature table back in for the estimated-Jaccard filter.
-    * bands×rowsPerBand = k; P(candidate) ≈ 1-(1-j^r)^b. Buckets larger
-    * than `bucketCap` are dropped (standard LSH safety valve — a
-    * degenerate mega-bucket pairs everything with everything).
+  /** The near-duplicate family's one capped bucket self-join: the
+    * similarity theta-join split into bucket equi-joins, called with
+    * different bucket keys by the minhash banding ([[lshPairs]]), the
+    * SimHash chunks ([[hammingNearDups64Persisted]]) and the embedding
+    * hyperplane signatures ([[Similarity.nearDupPairsLsh]]).
     *
-    * NOTE: the returned plan references a persist()ed signature table
-    * (MEMORY_AND_DISK). The cache must outlive the caller's actions on
-    * the result, so cleanup is caller-owned: unpersist via
-    * `spark.catalog.clearCache()` (or track the table) once the result
-    * is materialized — long-lived sessions otherwise accumulate cached
-    * blocks until eviction. Same contract for `simhashNearDups`. */
+    * `rows` holds one row per bucket member: the `keys` columns, `id`
+    * (long) and `is_new` (boolean). A bucket of more than `cap` rows is
+    * dropped whole — the standard LSH safety valve: one degenerate
+    * mega-bucket would otherwise pair everything with everything, so
+    * the cap trades bounded recall on mega-clusters for a hard runtime
+    * bound. The cap counts every row, new or old. Returns the distinct
+    * (a_id, b_id) pairs, a_id < b_id, that share a kept bucket and have
+    * at least one new side; equal ids never pair.
+    *
+    * With every row new this is the plain self-join. With old rows it is
+    * the incremental join: only new rows probe the kept buckets, so a
+    * bucket without a new member costs its count and nothing more, and a
+    * new-new pair is emitted once, from its smaller id.
+    *
+    * Scale shape: a window count and an equi-join, both on `keys`, then
+    * one distinct of the pairs — never a cross join. */
+  private[ops] def bucketPairs(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val kept = rows
+      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("bsz") <= cap)
+    val probe = kept.filter(col("is_new"))
+      .select(keys.map(col) :+ col("id").as("n_id"): _*)
+    val members = kept
+      .select(keys.map(col) :+ col("id").as("o_id") :+ col("is_new").as("o_new"): _*)
+    probe.join(members, keys)
+      .filter(col("n_id") < col("o_id") || (!col("o_new") && col("n_id") =!= col("o_id")))
+      .select(least(col("n_id"), col("o_id")).as("a_id"),
+        greatest(col("n_id"), col("o_id")).as("b_id"))
+      .distinct()
+  }
+
+  /** Estimated Jaccard of two k-lane minhash signatures: the share of
+    * lanes on which they agree. */
+  private def sigAgreement(a: Column, b: Column, k: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), v => v)).cast("double") / k
+
+  /** Exact Jaccard of two distinct-token arrays, |a ∩ b| / |a ∪ b|,
+    * with the union's size taken as |a| + |b| − |a ∩ b| (the same
+    * integers, so the same double). */
+  private def setJaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b))
+    inter.cast("double") / (size(a) + size(b) - inter).cast("double")
+  }
+
   /** (doc_id, band, bh) rows: per-band FNV fold of the signature
-    * lanes — shared by the batch and incremental LSH paths. */
+    * lanes. */
   private def bandSignatures(sig: DataFrame, bands: Int, r: Int): DataFrame = {
     val spark = sig.sparkSession
     import spark.implicits._
@@ -213,12 +247,43 @@ object Dedup {
     }.toDF("doc_id", "band", "bh")
   }
 
+  /** The LSH pipeline behind [[minhashLsh]] and
+    * [[minhashLshIncremental]]: each (doc_id, sig) table of `sigs`,
+    * flagged new or old, is banded by [[bandSignatures]]; the
+    * (band, bh) buckets pair through [[bucketPairs]]; both signatures
+    * join back for the [[sigAgreement]] ≥ `threshold` filter. The
+    * candidate-pair side is the small one, so the re-joins are plain
+    * (shuffle- or AQE-chosen) joins: broadcasting the signature table
+    * instead would ship 0.5 KB × every doc to every executor. */
+  private def lshPairs(sigs: Seq[(DataFrame, Boolean)], k: Int, bands: Int,
+                       threshold: Double, bucketCap: Int): DataFrame = {
+    val banded = sigs.map { case (s, isNew) =>
+      bandSignatures(s, bands, k / bands)
+        .select(col("band"), col("bh"), col("doc_id").as("id"), lit(isNew).as("is_new"))
+    }.reduce(_.unionAll(_))
+    val sig = sigs.map(_._1).reduce(_.unionAll(_))
+    bucketPairs(banded, Seq("band", "bh"), bucketCap)
+      .join(sig.toDF("a_id", "a_sig"), "a_id")
+      .join(sig.toDF("b_id", "b_sig"), "b_id")
+      .select(col("a_id"), col("b_id"),
+        sigAgreement(col("a_sig"), col("b_sig"), k).as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
+  }
+
+  /** MinHash + LSH banding: [[minhashSignatures]], then [[lshPairs]]
+    * with every document new — the incremental run with an empty base.
+    * bands×rowsPerBand = k; P(candidate) ≈ 1-(1-j^r)^b; buckets larger
+    * than `bucketCap` are dropped ([[bucketPairs]]).
+    *
+    * NOTE: the returned plan references a persist()ed signature table
+    * (MEMORY_AND_DISK). The cache must outlive the caller's actions on
+    * the result, so cleanup is caller-owned: unpersist via
+    * `spark.catalog.clearCache()` (or track the table) once the result
+    * is materialized — long-lived sessions otherwise accumulate cached
+    * blocks until eviction. Same contract for `simhashNearDups`. */
   def minhashLsh(docs: DataFrame, k: Int = 64, bands: Int = 16,
                  threshold: Double = 0.5, shingleWidth: Int = 3,
                  bucketCap: Int = 1000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val r = k / bands
     // Persist the signature table: it feeds three consumers (banding +
     // both sides of the est-Jaccard re-join); without the cache the
     // plan recomputes every signature 4x from the raw text scan. k
@@ -226,30 +291,7 @@ object Dedup {
     // at corpus scale, and eviction is safe (recompute is the cost).
     val sig = minhashSignatures(docs, k, shingleWidth)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    locally {
-      val banded = bandSignatures(sig, bands, r)
-      val capped = banded
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bh"))))
-        .filter(col("bsz") <= bucketCap)
-      val a = capped.select(col("band"), col("bh"), col("doc_id").as("a_id"))
-      val b = capped.select(col("band"), col("bh"), col("doc_id").as("b_id"))
-      val pairs = a.join(b, Seq("band", "bh"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id")).distinct()
-      // Plain (shuffle/AQE-chosen) joins on the candidate ids: the
-      // candidate-pair side is the small one, so AQE broadcasts IT.
-      // Broadcasting `sig` instead would ship the full signature table
-      // (0.5 KB x every doc -> hundreds of GB at 10^9 docs) to every
-      // executor — a scale-killer flagged in round 1.
-      pairs
-        .join(sig.toDF("a_id", "a_sig"), "a_id")
-        .join(sig.toDF("b_id", "b_sig"), "b_id")
-        .select(col("a_id"), col("b_id"),
-          (size(filter(zip_with(col("a_sig"), col("b_sig"), (x, y) => x === y), v => v))
-            .cast("double") / k).as("est_jaccard"))
-        .filter(col("est_jaccard") >= threshold)
-    }
+    lshPairs(Seq(sig -> true), k, bands, threshold, bucketCap)
   }
 
   /** INCREMENTAL LSH near-dup: find the near-duplicate pairs a crawl
@@ -263,7 +305,8 @@ object Dedup {
     *
     * Exact contract (spec-tested and oracle-checked): the result
     * equals the FULL-corpus [[minhashLsh]] run restricted to pairs
-    * with at least one delta side. That requires cap semantics on the
+    * with at least one delta side — both are [[lshPairs]], this one
+    * with the base flagged old. That requires cap semantics on the
     * UNION band table (a bucket's size counts base + delta members —
     * in production the per-bucket count is itself a maintained
     * aggregate, incremented as batches append).
@@ -276,44 +319,17 @@ object Dedup {
                             k: Int = 64, bands: Int = 16,
                             threshold: Double = 0.5, shingleWidth: Int = 3,
                             bucketCap: Int = 1000): DataFrame = {
-    val r = k / bands
     val deltaSig = minhashSignatures(delta, k, shingleWidth)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allSig = baseSig.toDF("doc_id", "sig").unionAll(deltaSig)
-    val allBands = bandSignatures(baseSig.toDF("doc_id", "sig"), bands, r)
-      .withColumn("is_delta", lit(false))
-      .unionAll(bandSignatures(deltaSig, bands, r)
-        .withColumn("is_delta", lit(true)))
-    // surviving buckets that matter: under the cap AND touched by the
-    // delta — the base-only buckets (the overwhelming majority at
-    // scale) never reach the self-join
-    val buckets = allBands.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bsz"),
-        max(col("is_delta")).as("touched"))
-      .filter(col("bsz") <= bucketCap && col("touched"))
-      .select(col("band"), col("bh"))
-    val inBuckets = allBands.join(buckets, Seq("band", "bh"))
-    val d = inBuckets.filter(col("is_delta"))
-      .select(col("band"), col("bh"), col("doc_id").as("d_id"))
-    val o = inBuckets.select(col("band"), col("bh"), col("doc_id").as("o_id"))
-    val pairs = d.join(o, Seq("band", "bh"))
-      .filter(col("d_id") =!= col("o_id"))
-      .select(least(col("d_id"), col("o_id")).as("a_id"),
-        greatest(col("d_id"), col("o_id")).as("b_id"))
-      .distinct()
-    pairs
-      .join(allSig.toDF("a_id", "a_sig"), "a_id")
-      .join(allSig.toDF("b_id", "b_sig"), "b_id")
-      .select(col("a_id"), col("b_id"),
-        (size(filter(zip_with(col("a_sig"), col("b_sig"),
-          (x, y) => x === y), v => v)).cast("double") / k).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    lshPairs(Seq(baseSig.toDF("doc_id", "sig") -> false, deltaSig -> true),
+      k, bands, threshold, bucketCap)
   }
 
   /** Candidate-generate-then-verify pipeline: MinHash/LSH candidates
-    * (sub-quadratic) re-checked with EXACT token-set Jaccard — the
-    * production near-dup shape at corpus scale. The doc-side token
-    * arrays join back by id (hash join on the small candidate set). */
+    * (sub-quadratic) re-checked with the exact [[setJaccard]] of the
+    * distinct token sets — the production near-dup shape at corpus
+    * scale. The doc-side token arrays join back by id (hash join on
+    * the small candidate set). */
   def minhashVerified(docs: DataFrame, estThreshold: Double = 0.35,
                       exactThreshold: Double = 0.7): DataFrame = {
     val candidates = minhashLsh(docs, threshold = estThreshold)
@@ -324,8 +340,7 @@ object Dedup {
       .join(tokArrays.select(col("doc_id").as("a_id"), col("toks").as("a_toks")), "a_id")
       .join(tokArrays.select(col("doc_id").as("b_id"), col("toks").as("b_toks")), "b_id")
       .select(col("a_id"), col("b_id"),
-        (size(array_intersect(col("a_toks"), col("b_toks"))).cast("double") /
-          size(array_union(col("a_toks"), col("b_toks"))).cast("double")).as("jaccard"))
+        setJaccard(col("a_toks"), col("b_toks")).as("jaccard"))
       .filter(col("jaccard") >= exactThreshold)
   }
 
@@ -378,9 +393,9 @@ object Dedup {
     * is force-broadcast (it is tiny by contract — an eval suite, not
     * a crawl; the corpus NEVER self-joins and no bucket cap is needed
     * because each corpus band row meets at most the benchmark bucket's
-    * occupancy). Candidates are screened by signature-estimated
-    * Jaccard, then decided by EXACT distinct-token-set Jaccard — the
-    * LSH is recall-only, precision comes from the exact check.
+    * occupancy). Candidates are screened by [[sigAgreement]], then
+    * decided by the exact [[setJaccard]] of the distinct token sets —
+    * the LSH is recall-only, precision comes from the exact check.
     *
     * Scale shape: corpus cost = one signature kernel pass + one
     * banding projection + a broadcast-hash join; per-candidate work is
@@ -404,8 +419,7 @@ object Dedup {
       .join(cSig.toDF("doc_id", "c_sig"), "doc_id")
       .join(broadcast(bSig.toDF("bench_id", "b_sig")), "bench_id")
       .select(col("doc_id"), col("bench_id"),
-        (size(filter(zip_with(col("c_sig"), col("b_sig"), (x, y) => x === y),
-          v => v)).cast("double") / k).as("est_jaccard"))
+        sigAgreement(col("c_sig"), col("b_sig"), k).as("est_jaccard"))
       .filter(col("est_jaccard") >= estThreshold)
     val cToks = corpus.select(col("doc_id"),
       array_distinct(tokens(col("text"))).as("c_toks"))
@@ -415,9 +429,7 @@ object Dedup {
       .join(cToks, "doc_id")
       .join(broadcast(bToks), "bench_id")
       .select(col("doc_id"), col("bench_id"), col("est_jaccard"),
-        (size(array_intersect(col("c_toks"), col("b_toks"))).cast("double") /
-          size(array_union(col("c_toks"), col("b_toks"))).cast("double"))
-          .as("jaccard"))
+        setJaccard(col("c_toks"), col("b_toks")).as("jaccard"))
       .filter(col("jaccard") >= exactThreshold)
   }
 
@@ -427,8 +439,8 @@ object Dedup {
     * against hot tokens. An unblocked token join is quadratic in the
     * posting-list length (a ubiquitous token pairs every doc with
     * every doc: measured 350M intermediate rows on 5k docs with a
-    * narrow vocabulary). Intersections come from the blocked token
-    * equi-join; union by inclusion-exclusion. */
+    * narrow vocabulary). Candidates come from the blocked token
+    * equi-join; each is decided by [[setJaccard]]. */
   def jaccardPairs(docs: DataFrame, threshold: Double,
                    blockCols: Seq[String] = Seq("lang", "source")): DataFrame = {
     // blockCols = Nil computes the unblocked ground truth (prefix
@@ -492,16 +504,12 @@ object Dedup {
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .distinct()
     // Exact verify on the (small) candidate set via token-array joins.
-    val arrays = docToks.select(col("doc_id"), col("toks"), col("sz"))
+    val arrays = docToks.select(col("doc_id"), col("toks"))
     cand
-      .join(arrays.select(col("doc_id").as("a_id"), col("toks").as("a_toks"), col("sz").as("a_sz")), "a_id")
-      .join(arrays.select(col("doc_id").as("b_id"), col("toks").as("b_toks"), col("sz").as("b_sz")), "b_id")
+      .join(arrays.toDF("a_id", "a_toks"), "a_id")
+      .join(arrays.toDF("b_id", "b_toks"), "b_id")
       .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("a_toks"), col("b_toks"))).as("inter"),
-        col("a_sz"), col("b_sz"))
-      .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") /
-          (col("a_sz") + col("b_sz") - col("inter")).cast("double")).as("jaccard"))
+        setJaccard(col("a_toks"), col("b_toks")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -645,12 +653,9 @@ object Dedup {
     * equi-join on (chunk, value) finds every qualifying pair — no
     * cross join, and no recall hole (round 1 shipped 4×16-bit chunks
     * with maxDist=8, which silently missed pairs at distance 4-8).
-    *
-    * Buckets larger than `bucketCap` are dropped (same safety valve as
-    * minhashLsh): a degenerate chunk value shared by millions of
-    * template-spam docs would otherwise make the self-join quadratic.
-    * That trades bounded recall on mega-clusters for a hard runtime
-    * bound — the standard LSH production compromise. */
+    * The buckets pair through [[bucketPairs]], so a chunk value shared
+    * by more than `bucketCap` distinct hashes (template spam) is
+    * dropped, as in [[minhashLsh]]. */
   def simhashNearDups(docs: DataFrame, maxDist: Int = 3,
                       bucketCap: Int = 2000): DataFrame =
     hammingNearDups64(
@@ -679,8 +684,8 @@ object Dedup {
     // Band over DISTINCT simhash VALUES, not docs: identical docs
     // (template spam — the common mega-cluster case) collapse to ONE
     // row, so the banded self-join is sized by hash diversity, not
-    // corpus size. Doc pairs are re-expanded afterwards by plain hash
-    // joins, which is pure output materialization.
+    // corpus size, and the cap counts distinct values per bucket.
+    // `valueDocPairs` re-expands value pairs to doc pairs afterwards.
     val values = sh.select(col("simhash")).distinct()
     // partition 64 bits into nChunks contiguous spans, wide spans first
     val base = 64 / nChunks
@@ -697,27 +702,30 @@ object Dedup {
     }
     val chunked = values.select(col("simhash"),
       explode(array(chunks: _*)).as("cc"))
-      .select(col("simhash"), col("cc.chunk"), col("cc.ch"))
-    // cap counts DISTINCT VALUES per bucket (identical docs are free)
-    val capped = chunked
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("chunk"), col("ch"))))
-      .filter(col("bsz") <= bucketCap)
-      .drop("bsz")
-    val va = capped.select(col("chunk"), col("ch"), col("simhash").as("a_sh"))
-    val vb = capped.select(col("chunk"), col("ch"), col("simhash").as("b_sh"))
-    // value pairs within hamming budget (a_sh < b_sh each appears once)
-    val vpairs = va.join(vb, Seq("chunk", "ch")).filter(col("a_sh") < col("b_sh"))
-      .select(col("a_sh"), col("b_sh"),
-        bit_count(col("a_sh").bitwiseXOR(col("b_sh"))).as("hamming"))
+      .select(col("cc.chunk"), col("cc.ch"), col("simhash").as("id"),
+        lit(true).as("is_new"))
+    valueDocPairs(sh, hammingWithin(
+      bucketPairs(chunked, Seq("chunk", "ch"), bucketCap), maxDist))
+  }
+
+  /** (a_sh, b_sh, hamming) of the value pairs (a_id, b_id) within
+    * `maxDist` bits. */
+  private def hammingWithin(pairs: DataFrame, maxDist: Int): DataFrame =
+    pairs.select(col("a_id").as("a_sh"), col("b_id").as("b_sh"),
+        bit_count(col("a_id").bitwiseXOR(col("b_id"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
-      .distinct()
-    // expand value pairs back to doc pairs
+
+  /** Doc pairs (a_id < b_id, hamming) behind the distinct value pairs
+    * `vpairs` (a_sh < b_sh, hamming) of the (doc_id, simhash) table
+    * `sh`: every doc of a_sh with every doc of b_sh, plus the hamming-0
+    * pairs of docs that share one value. Plain hash joins — pure output
+    * materialization. */
+  private def valueDocPairs(sh: DataFrame, vpairs: DataFrame): DataFrame = {
     val cross = sh.select(col("simhash").as("a_sh"), col("doc_id").as("x_id"))
       .join(vpairs, "a_sh")
       .join(sh.select(col("simhash").as("b_sh"), col("doc_id").as("y_id")), "b_sh")
       .select(least(col("x_id"), col("y_id")).as("a_id"),
         greatest(col("x_id"), col("y_id")).as("b_id"), col("hamming"))
-    // identical-hash doc pairs (hamming 0) from the same-value groups
     val same = sh.as("x").join(sh.as("y"),
         col("x.simhash") === col("y.simhash") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
@@ -742,23 +750,10 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val values = sh.select(col("simhash")).distinct()
     // ground truth over distinct values: all value pairs within budget
-    val vpairs = values.select(col("simhash").as("a_sh"))
-      .crossJoin(values.select(col("simhash").as("b_sh")))
-      .filter(col("a_sh") < col("b_sh"))
-      .select(col("a_sh"), col("b_sh"),
-        bit_count(col("a_sh").bitwiseXOR(col("b_sh"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
-    val cross = sh.select(col("simhash").as("a_sh"), col("doc_id").as("x_id"))
-      .join(vpairs, "a_sh")
-      .join(sh.select(col("simhash").as("b_sh"), col("doc_id").as("y_id")), "b_sh")
-      .select(least(col("x_id"), col("y_id")).as("a_id"),
-        greatest(col("x_id"), col("y_id")).as("b_id"),
-        col("hamming").cast("int").as("hamming"))
-    val same = sh.as("x").join(sh.as("y"),
-        col("x.simhash") === col("y.simhash") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
-        lit(0).cast("int").as("hamming"))
-    val brute = cross.union(same)
+    val brute = valueDocPairs(sh, hammingWithin(
+      values.select(col("simhash").as("a_id"))
+        .crossJoin(values.select(col("simhash").as("b_id")))
+        .filter(col("a_id") < col("b_id")), maxDist))
     // observed behavior of the REAL capped pipeline — driven off the
     // ALREADY-COMPUTED persisted signature table (round 6): simhash()
     // is deterministic, so handing `sh` to the banding kernel is
@@ -911,7 +906,7 @@ object Dedup {
   def duplicateSpans(docs: DataFrame, w: Int = 15): DataFrame = {
     require(w >= 2, "window width must be >= 2")
     val grams = docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
+      .select(col("doc_id"), tokens(col("text")).as("ts"))
       .filter(size(col("ts")) >= w)
       .select(col("doc_id"), explode(transform(
         sequence(lit(0), size(col("ts")) - w),

@@ -16,7 +16,7 @@ package graft.ops
   * Scope caveats, both properties of the corpus rather than the
   * generator: tokens are ASCII (unicode(char) == UTF-8 byte) and
   * ≤ 31 bytes (XXH64's 32-byte accumulator loop is not emitted).
-  * Token extraction mirrors `Dedup.tokens` (lowercase, \s+ split).
+  * Token extraction mirrors `TextAnalysis.tokens` (lowercase, \s+ split).
   */
 object SimhashOracle {
 

@@ -374,22 +374,16 @@ object Similarity {
     * re-checks each candidate, so precision is 1.0. Recall per true
     * pair at cosine c is 1-(1-(1-θ/π)^nBits)^nTables with θ=acos(c):
     * ≈1.0 for real near-dups (c ≥ 0.9) at the defaults; tune
-    * nBits↓/nTables↑ for looser thresholds. The brute-force
+    * nBits↓/nTables↑ for looser thresholds. The (table, sig) buckets
+    * pair through [[Dedup.bucketPairs]] under `bucketCap`. The brute-force
     * `nearDupPairs` below stays as the small-scale exactness oracle. */
   def nearDupPairsLsh(corpus: DataFrame, threshold: Double,
                       nBits: Int = 6, nTables: Int = 24,
                       bucketCap: Int = 2000): DataFrame = {
+    // drop vectors: shuffle ids only
     val sigs = lshSignatures(corpus, "vec_id", nBits, nTables)
-      .select(col("vec_id"), col("table"), col("sig")) // drop vectors: shuffle ids only
-    val capped = sigs
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("table"), col("sig"))))
-      .filter(col("bsz") <= bucketCap)
-      .drop("bsz")
-    val a = capped.select(col("table"), col("sig"), col("vec_id").as("a_id"))
-    val b = capped.select(col("table"), col("sig"), col("vec_id").as("b_id"))
-    val cand = a.join(b, Seq("table", "sig"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+      .select(col("table"), col("sig"), col("vec_id").as("id"), lit(true).as("is_new"))
+    val cand = Dedup.bucketPairs(sigs, Seq("table", "sig"), bucketCap)
     val emb = corpus.select(col("vec_id").cast("long"), col("embedding"))
     val joined = cand
       .join(emb.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), "a_id")
@@ -626,26 +620,43 @@ object Similarity {
 
   /** SQ8 codes of `corpus`, the quantization every SQ8 operator shares:
     * the per-dimension max-abs scales (FLOAT max of abs — exact and
-    * order-independent; one dim-sized aggregate collected to the
-    * driver), broadcast, then each vector through [[sq8Quantize]].
-    * Returns the scales, with which callers quantize their queries on
-    * the driver, and the lazy (vec_id, code) Dataset. */
+    * order-independent; one dim-sized aggregate per vector length,
+    * collected to the driver), broadcast, then each vector through
+    * [[sq8Quantize]]. The longest length is the dim: a vector of any
+    * other length neither sets a scale nor gets a code, so it is left
+    * out as if it were absent. Returns the scales, with which callers
+    * quantize their queries ([[sq8QueryCodes]]), and the lazy
+    * (vec_id, code) Dataset. */
   private[ops] def sq8Codes(corpus: DataFrame): (Array[Float], Dataset[(Long, Array[Int])]) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val maxAbs = corpus
-      .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("d")).agg(max(abs(col("x"))).as("m"))
-      .collect().map(r => (r.getInt(0), r.getFloat(1)))
-      .sortBy(_._1).map(_._2)
+    val ranges = corpus
+      .select(size(col("embedding")).as("n"), posexplode(col("embedding")).as(Seq("d", "x")))
+      .groupBy(col("n"), col("d")).agg(max(abs(col("x"))).as("m"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getFloat(2)))
+    val dim = if (ranges.isEmpty) 0 else ranges.map(_._1).max
+    val maxAbs = ranges.filter(_._1 == dim).sortBy(_._2).map(_._3)
     val mB = spark.sparkContext.broadcast(maxAbs)
-    val codes = corpus.select(col("vec_id").cast("long"), col("embedding"))
+    val codes = corpus.filter(size(col("embedding")) === dim)
+      .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { rows =>
         val m = mB.value
         rows.map { case (id, v) => (id, sq8Quantize(v, m)) }
       }.toDF("vec_id", "code").as[(Long, Array[Int])]
     (maxAbs, codes)
+  }
+
+  /** The id-sorted SQ8 codes, under the corpus scales `maxAbs`, of the
+    * `queries` whose length is the corpus dim; a query of another
+    * length has no code, so it gets no neighbours. */
+  private def sq8QueryCodes(queries: DataFrame,
+                            maxAbs: Array[Float]): Array[(Long, Array[Int])] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+      .collect { case (id, v) if v.length == maxAbs.length => (id, sq8Quantize(v, maxAbs)) }
   }
 
   /** ANN via 8-bit scalar quantization with exact re-rank — the
@@ -674,15 +685,8 @@ object Similarity {
     * corpus — broadcast-sized by construction. */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
               candidates: Int = 20): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (maxAbs, codes) = sq8Codes(corpus)
-    val qCodes = queries.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) =>
-        val q = sq8Quantize(v, maxAbs)
-        (id, (q, sqNorm2(q)))
-      }
+    val qCodes = sq8QueryCodes(queries, maxAbs).map { case (id, q) => (id, (q, sqNorm2(q))) }
     val cand = topCandidates(codes, qCodes, candidates) { qs => cv =>
       val cn = sqNorm2(cv)
       qi => {
@@ -879,10 +883,7 @@ object Similarity {
     val (cents, enc) = lloyd(codes.localCheckpoint(false), dim, m, kCode, iters)
     val encoded = enc.select(col("vec_id"), col("assign")).as[(Long, Array[Int])]
       .localCheckpoint(false)
-    val qCodes: Array[(Long, Array[Int])] = queries
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) => (id, sq8Quantize(v, maxAbs)) }
+    val qCodes = sq8QueryCodes(queries, maxAbs)
     val cB = spark.sparkContext.broadcast(cents)
     val cand = topCandidates(encoded, qCodes, candidates) { qs =>
       val cs = cB.value

@@ -17,21 +17,20 @@ final class DecodeException(msg: String) extends RuntimeException(msg)
   */
 object Codecs {
 
-  val MaxDecodedBytes: Long = 100L * 1024 * 1024 // 100 MB absolute cap (default)
-  val MaxRatio: Long = 100L                      // output/input ratio cap (default)
+  val MaxDecodedBytes: Long = 100L * 1024 * 1024 // 100 MB absolute cap
+  val MaxRatio: Long = 100L                      // output/input ratio cap
 
-  /** Limits come from ParserOptions (reference: decoders/mod.rs:143-152;
-    * 0 disables a check). Divergence kept deliberately: the ratio check
-    * only fires above a 1 MB output floor — tiny legitimate streams
-    * (e.g. flate-packed zero runs) routinely exceed 100:1 and the
-    * reference's unconditional ratio check would reject them. */
-  private def bombCheck(outLen: Long, inLen: Long,
-                        opts: ParserOptions = ParserOptions.lenient): Unit = {
-    if (opts.maxDecompressedSize > 0 && outLen > opts.maxDecompressedSize)
-      throw new DecodeException(s"decoded size $outLen exceeds ${opts.maxDecompressedSize}B cap")
-    if (opts.maxDecompressionRatio > 0 && inLen > 0 &&
-        outLen > inLen * opts.maxDecompressionRatio && outLen > 1024 * 1024)
-      throw new DecodeException(s"decompression ratio ${outLen / math.max(inLen, 1)} exceeds ${opts.maxDecompressionRatio}:1")
+  /** The decompression-bomb guard at [[MaxDecodedBytes]] and
+    * [[MaxRatio]] (reference: decoders/mod.rs:143-152). Divergence kept
+    * deliberately: the ratio check only fires above a 1 MB output
+    * floor — tiny legitimate streams (e.g. flate-packed zero runs)
+    * routinely exceed 100:1 and the reference's unconditional ratio
+    * check would reject them. */
+  private[pdf] def bombCheck(outLen: Long, inLen: Long): Unit = {
+    if (outLen > MaxDecodedBytes)
+      throw new DecodeException(s"decoded size $outLen exceeds ${MaxDecodedBytes}B cap")
+    if (inLen > 0 && outLen > inLen * MaxRatio && outLen > 1024 * 1024)
+      throw new DecodeException(s"decompression ratio ${outLen / math.max(inLen, 1)} exceeds $MaxRatio:1")
   }
 
   // ------------------------------------------------------------------
@@ -40,13 +39,13 @@ object Codecs {
   // src/decoders/flate.rs). Truncated input returns the bytes produced
   // so far rather than failing (crawl robustness).
   // ------------------------------------------------------------------
-  def flateDecode(in: Array[Byte], opts: ParserOptions = ParserOptions.lenient): Array[Byte] = {
-    tryInflate(in, 0, nowrap = false, opts)
-      .orElse(tryInflate(in, 0, nowrap = true, opts))
+  def flateDecode(in: Array[Byte]): Array[Byte] = {
+    tryInflate(in, 0, nowrap = false)
+      .orElse(tryInflate(in, 0, nowrap = true))
       .orElse {
         // tolerate leading garbage before the zlib header (0x78 CMF)
         val idx = in.indexWhere(b => (b & 0xff) == 0x78)
-        if (idx > 0) tryInflate(in, idx, nowrap = false, opts) else None
+        if (idx > 0) tryInflate(in, idx, nowrap = false) else None
       }
       .getOrElse(throw new DecodeException("FlateDecode: no inflater succeeded"))
   }
@@ -57,8 +56,7 @@ object Codecs {
   private val inflaterWrapped = ThreadLocal.withInitial[Inflater](() => new Inflater(false))
   private val inflaterRaw = ThreadLocal.withInitial[Inflater](() => new Inflater(true))
 
-  private def tryInflate(in: Array[Byte], off: Int, nowrap: Boolean,
-                         opts: ParserOptions = ParserOptions.lenient): Option[Array[Byte]] = {
+  private def tryInflate(in: Array[Byte], off: Int, nowrap: Boolean): Option[Array[Byte]] = {
     if (in.length - off <= 0) return Some(Array.emptyByteArray)
     val inf = if (nowrap) inflaterRaw.get() else inflaterWrapped.get()
     inf.reset()
@@ -71,7 +69,7 @@ object Codecs {
         val n = inf.inflate(buf)
         if (n > 0) {
           out.write(buf, 0, n)
-          bombCheck(out.size().toLong, in.length.toLong - off, opts)
+          bombCheck(out.size().toLong, in.length.toLong - off)
         } else if (inf.needsInput() || inf.needsDictionary()) {
           stalled = true // truncated stream: keep what we have
         }
@@ -88,8 +86,7 @@ object Codecs {
   // Clear=256, EOD=257, EarlyChange default 1
   // (reference: src/decoders/lzw.rs).
   // ------------------------------------------------------------------
-  def lzwDecode(in: Array[Byte], earlyChange: Int = 1,
-                opts: ParserOptions = ParserOptions.lenient): Array[Byte] = {
+  def lzwDecode(in: Array[Byte], earlyChange: Int = 1): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(in.length * 4)
     var table = mutable.ArrayBuffer.tabulate[Array[Byte]](256)(i => Array(i.toByte))
     def resetTable(): Unit = { table = mutable.ArrayBuffer.tabulate[Array[Byte]](256)(i => Array(i.toByte)); table += null; table += null } // 256=Clear,257=EOD placeholders
@@ -115,7 +112,7 @@ object Codecs {
             else if (prev != null) prev :+ prev(0) // KwKwK case
             else throw new DecodeException(s"LZW: bad code $code")
           out.write(entry, 0, entry.length)
-          bombCheck(out.size().toLong, in.length.toLong, opts)
+          bombCheck(out.size().toLong, in.length.toLong)
           if (prev != null) table += (prev :+ entry(0))
           prev = entry
           val limit = (1 << codeBits) - earlyChange
@@ -171,7 +168,7 @@ object Codecs {
   // framing prefix is skipped (PostScript framing some generators
   // emit; the reference would error on it).
   // ------------------------------------------------------------------
-  def ascii85Decode(in: Array[Byte], opts: ParserOptions = ParserOptions.lenient): Array[Byte] = {
+  def ascii85Decode(in: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(in.length)
     var acc = 0L
     var gi = 0
@@ -215,7 +212,7 @@ object Codecs {
       val bytes = Array(((acc >>> 24) & 0xff).toByte, ((acc >>> 16) & 0xff).toByte, ((acc >>> 8) & 0xff).toByte)
       out.write(bytes, 0, gi - 1)
     }
-    bombCheck(out.size().toLong, in.length.toLong, opts)
+    bombCheck(out.size().toLong, in.length.toLong)
     out.toByteArray
   }
 
@@ -226,7 +223,7 @@ object Codecs {
   // dropped silently, which produced partial bytes the reference
   // would reject wholesale.
   // ------------------------------------------------------------------
-  def runLengthDecode(in: Array[Byte], opts: ParserOptions = ParserOptions.lenient): Array[Byte] = {
+  def runLengthDecode(in: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(in.length * 2)
     var i = 0
     var done = false
@@ -247,7 +244,7 @@ object Codecs {
         var k = 0
         while (k < 257 - l) { out.write(b); k += 1 }
       }
-      bombCheck(out.size().toLong, in.length.toLong, opts)
+      bombCheck(out.size().toLong, in.length.toLong)
     }
     out.toByteArray
   }
@@ -321,8 +318,7 @@ object Codecs {
   // Image codecs (DCTDecode/CCITTFaxDecode/JBIG2Decode/JPXDecode) pass
   // through — images are out of scope for the text north rule.
   // ------------------------------------------------------------------
-  def decodeStream(dict: Dict, raw: Array[Byte], resolve: PdfObj => PdfObj,
-                   opts: ParserOptions = ParserOptions.lenient): Array[Byte] = {
+  def decodeStream(dict: Dict, raw: Array[Byte], resolve: PdfObj => PdfObj): Array[Byte] = {
     val filters: Vector[String] = resolve(dict.get("Filter").getOrElse(PdfObj.Null)) match {
       case Name(n)  => Vector(n)
       case Arr(xs)  => xs.flatMap(x => resolve(x).asName).toVector
@@ -338,15 +334,14 @@ object Codecs {
     var i = 0
     while (i < filters.length) {
       val parm = if (i < parms.length) parms(i) else None
-      data = applyFilter(filters(i), data, parm, resolve, opts)
+      data = applyFilter(filters(i), data, parm, resolve)
       i += 1
     }
     data
   }
 
   def applyFilter(name: String, data: Array[Byte], parm: Option[Dict],
-                  resolve: PdfObj => PdfObj,
-                  opts: ParserOptions = ParserOptions.lenient): Array[Byte] = {
+                  resolve: PdfObj => PdfObj): Array[Byte] = {
     def pInt(key: String, dflt: Int): Int =
       parm.flatMap(_.get(key)).map(resolve) match {
         case Some(Int64(v)) => v.toInt
@@ -359,11 +354,11 @@ object Codecs {
         pInt("BitsPerComponent", 8), pInt("Columns", 1))
     }
     name match {
-      case "FlateDecode" | "Fl"     => predict(flateDecode(data, opts))
-      case "LZWDecode" | "LZW"      => predict(lzwDecode(data, pInt("EarlyChange", 1), opts))
+      case "FlateDecode" | "Fl"     => predict(flateDecode(data))
+      case "LZWDecode" | "LZW"      => predict(lzwDecode(data, pInt("EarlyChange", 1)))
       case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
-      case "ASCII85Decode" | "A85"  => ascii85Decode(data, opts)
-      case "RunLengthDecode" | "RL" => runLengthDecode(data, opts)
+      case "ASCII85Decode" | "A85"  => ascii85Decode(data)
+      case "RunLengthDecode" | "RL" => runLengthDecode(data)
       case "Crypt"                  => data // handled by encryption layer before filters
       case "DCTDecode" | "CCITTFaxDecode" | "JBIG2Decode" | "JPXDecode" => data
       case other => throw new DecodeException(s"unsupported filter $other")

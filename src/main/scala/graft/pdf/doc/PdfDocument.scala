@@ -29,12 +29,7 @@ final case class Page(
   * binary column in memory.
   */
 final class PdfDocument(val data: Array[Byte],
-                        password: Array[Byte] = Array.emptyByteArray,
-                        /** Parser limits; only the decompression-bomb
-                          * knobs are live, as in the reference (see
-                          * ParserOptions). */
-                        val options: graft.pdf.codec.ParserOptions =
-                          graft.pdf.codec.ParserOptions.lenient) {
+                        password: Array[Byte] = Array.emptyByteArray) {
 
   def this(data: Array[Byte], password: String) =
     this(data, password.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -215,7 +210,7 @@ final class PdfDocument(val data: Array[Byte],
     p.skipWs()
     p.parseObject() match {
       case Stream(dict, raw) =>
-        val decoded = Codecs.decodeStream(dict, raw, shallowResolve, options)
+        val decoded = Codecs.decodeStream(dict, raw, shallowResolve)
         val w = dict.get("W").flatMap(_.asArr).getOrElse(Vector.empty)
           .flatMap(_.asLong).map(_.toInt)
         if (w.size < 3) throw new PdfLoadException("xref stream: bad /W")
@@ -425,7 +420,7 @@ final class PdfDocument(val data: Array[Byte],
       loadObject(Ref(streamId, 0)) match {
         case Stream(dict, raw) =>
           try {
-            val decoded = Codecs.decodeStream(dict, raw, resolve, options)
+            val decoded = Codecs.decodeStream(dict, raw, resolve)
             val n = resolve(dict.get("N").getOrElse(Null)).asLong.getOrElse(0L).toInt
             val first = resolve(dict.get("First").getOrElse(Null)).asLong.getOrElse(0L).toInt
             val hp = new ObjParser(decoded, 0)
@@ -490,7 +485,7 @@ final class PdfDocument(val data: Array[Byte],
   def dictGet(d: Dict, key: String): PdfObj = resolve(d.get(key).getOrElse(Null))
 
   /** Decoded (filters applied) stream data. */
-  def streamData(s: Stream): Array[Byte] = Codecs.decodeStream(s.dict, s.raw, resolve, options)
+  def streamData(s: Stream): Array[Byte] = Codecs.decodeStream(s.dict, s.raw, resolve)
 
   // ------------------------------------------------------------------
   // Page tree with attribute inheritance

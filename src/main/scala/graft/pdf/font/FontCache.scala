@@ -77,9 +77,8 @@ object FontCache {
   private val hitCount = new AtomicLong
   private val missCount = new AtomicLong
 
-  /** Kill switch for A/B benchmarking (BENCH.md records both arms). */
-  @volatile var enabled: Boolean =
-    !"false".equalsIgnoreCase(System.getProperty("graft.fontCache", "true"))
+  /** Kill switch for the `Perf ab fontcache` A/B. */
+  @volatile var enabled: Boolean = true
 
   /** Parse-through cache: parsed CMap for these exact decoded bytes. */
   def cmap(data: Array[Byte]): CMap = {

@@ -111,6 +111,26 @@ class PerfSpec extends AnyFunSuite with SparkSuite {
     assert(!line.contains("wall_s"), line)
   }
 
+  test("queries: shuffle MB per query, 0 for a scan-only query") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("perf-sf")
+    (0L until 3000L).map(id => (id, s"document number $id of the perf queries table"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(dir.resolve("documents.parquet").toString)
+    val (line, code) = Perf.run(spark, Seq("queries", "dedup_exact,text_token_stats"),
+      sfDir = dir.toString)
+    assert(code == 0, line)
+    val q = parse(line).getAs[Row]("queries")
+    // groupBy(text) shuffles every row
+    val grouped = q.getAs[Row]("dedup_exact")
+    assert(grouped.getAs[Double]("shuffle_write_mb") > 0.0, line)
+    assert(grouped.getAs[Double]("shuffle_read_mb") > 0.0, line)
+    // a projection of the scan: only the count()'s few bytes move
+    val scan = q.getAs[Row]("text_token_stats")
+    assert(scan.getAs[Double]("shuffle_write_mb") == 0.0, line)
+    assert(scan.getAs[Double]("shuffle_read_mb") == 0.0, line)
+    assert(scan.getAs[Long]("stages") >= 1L, line)
+  }
+
   test("an unknown subcommand fails") {
     val (line, code) = Perf.run(spark, Seq("nope"), sfDir = "")
     assert(code == 1 && line.contains("usage"), line)

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    64 corpus partitions, and with k larger than the corpus;
   *  - a vector of another length is rejected pairwise, never a failed
   *    task: each pair operator returns exactly what it returns without
-  *    that row.
+  *    that row, and the SQ8 family leaves it out of its codes.
   */
 class CandidateScanSpec extends AnyFunSuite with SparkSuite {
 
@@ -121,5 +121,23 @@ class CandidateScanSpec extends AnyFunSuite with SparkSuite {
     assert(hard._1 === hard._2 && hard._2.nonEmpty)
     val topK = both(c => Similarity.bruteForceTopK(c, c.filter(col("vec_id") < 10), 5))
     assert(topK._1 === topK._2 && topK._2.size === 9 * 5)
+  }
+
+  test("a vector of another length gets no SQ8 code in sq8TopK, kmeansSq8 or pqTopK") {
+    val rnd = new scala.util.Random(23)
+    val full = (0L until 60L).map(id => (id, randomVec(rnd, 8)))
+    // id 2 is a query of both top-k operators
+    val ragged = full.map { case (id, v) => if (id == 2L) (id, v.take(5)) else (id, v) }
+    val without = full.filterNot(_._1 == 2L)
+    def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+    def both(f: DataFrame => DataFrame): (Set[Seq[Any]], Set[Seq[Any]]) =
+      (rows(f(emb(ragged).repartition(4))), rows(f(emb(without).repartition(4))))
+
+    val sq8 = both(c => Similarity.sq8TopK(c, c.filter(col("vec_id") < 10), 5))
+    assert(sq8._1 === sq8._2 && sq8._2.size === 9 * 5)
+    val km = both(Similarity.kmeansSq8(_, k = 4))
+    assert(km._1 === km._2 && km._2.size === 59)
+    val pq = both(c => Similarity.pqTopK(c, c.filter(col("vec_id") < 10), m = 4, k = 5))
+    assert(pq._1 === pq._2 && pq._2.size === 9 * 5)
   }
 }
