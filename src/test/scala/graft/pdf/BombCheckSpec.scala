@@ -41,28 +41,4 @@ class BombCheckSpec extends AnyFunSuite {
     intercept[DecodeException](Codecs.flateDecode(zlib(new Array[Byte](4 * MB.toInt))))
     assert(Codecs.flateDecode(zlib(new Array[Byte](MB.toInt / 2))).length == MB / 2)
   }
-
-  test("a content stream that inflates past the guard reads as empty text; one under the floor reads") {
-    // the decode error is caught by the lenient extraction path and the
-    // content dropped
-    def text(padding: Int): String = {
-      val payload = ("BT /F1 12 Tf 100 700 Td (Hi) Tj ET" + " " * padding).getBytes("ISO-8859-1")
-      val b = new graft.pdf.testgen.PdfBuilder()
-      val catId = b.reserveId()
-      val pagesId = b.reserveId()
-      val f = b.addObject("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-      val cId = b.addStream("", payload, flate = true)
-      val pageId = b.addObject(s"<< /Type /Page /Parent $pagesId 0 R /MediaBox [0 0 612 792] " +
-        s"/Resources << /Font << /F1 $f 0 R >> >> /Contents $cId 0 R >>")
-      b.addObjectAt(pagesId, s"<< /Type /Pages /Kids [$pageId 0 R] /Count 1 >>")
-      b.addObjectAt(catId, s"<< /Type /Catalog /Pages $pagesId 0 R >>")
-      val doc = new graft.pdf.doc.PdfDocument(b.build(catId))
-      doc.pages.flatMap(p =>
-        new graft.pdf.extract.TextExtractor(doc).extractRaw(p)).map(_.text).mkString
-    }
-    // 4 MB of spaces deflate ~1000:1, past the ratio cap
-    assert(text(4 * MB.toInt).isEmpty)
-    // 512 KB of spaces: the same ratio, under the 1 MB floor
-    assert(text(MB.toInt / 2).contains("Hi"))
-  }
 }

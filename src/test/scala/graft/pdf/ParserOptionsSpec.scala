@@ -1,93 +1,36 @@
 package graft.pdf
 
-import org.scalatest.funsuite.AnyFunSuite
-import graft.pdf.codec.{Codecs, DecodeException, ParserOptions}
-
-/** ParserOptions surface parity (reference: src/parser_config.rs) and
-  * the two live knobs' effect on the decompression-bomb guard
-  * (reference: src/decoders/mod.rs:143-152).
+/** The parser's decode options, now the bomb guard's two constants in
+  * Codecs (reference: src/parser_config.rs, src/decoders/mod.rs:143-152),
+  * reach a PdfDocument's stream decode path. The guard at those
+  * constants is checked directly in BombCheckSpec.
   */
-class ParserOptionsSpec extends AnyFunSuite {
+class ParserOptionsSpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  private def zlib(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) { val n = d.deflate(buf); out.write(buf, 0, n) }
-    d.end()
-    out.toByteArray
-  }
-
-  test("preset values match parser_config.rs strict/lenient/very_lenient") {
-    val s = ParserOptions.strict
-    assert(s.strict && !s.skipInvalidObjects && s.maxErrors == 1 && s.maxNesting == 100)
-    assert(s.maxDecompressionRatio == 100L && s.maxDecompressedSize == 100L * 1024 * 1024)
-    assert(s.maxFileSize == 500L * 1024 * 1024)
-
-    val l = ParserOptions.lenient
-    assert(!l.strict && l.skipInvalidObjects && l.maxErrors == 1000)
-    assert(l.allowMissingEndobj && l.allowMalformedStreams)
-    assert(ParserOptions() == l) // default is lenient, like the reference
-
-    val v = ParserOptions.veryLenient
-    assert(v.maxErrors == 0 && v.maxNesting == 200)
-    assert(v.maxDecompressionRatio == 200L && v.maxDecompressedSize == 200L * 1024 * 1024)
-    assert(v.maxFileSize == 1024L * 1024 * 1024)
-  }
-
-  test("maxDecompressedSize caps flate output; default passes; 0 disables") {
-    // ~4 MB of incompressible data (ratio ~1, so only the size knob fires)
-    val rnd = new scala.util.Random(42)
-    val raw = new Array[Byte](4 * 1024 * 1024)
-    rnd.nextBytes(raw)
-    val big = zlib(raw)
-    val tight = ParserOptions.lenient.copy(maxDecompressedSize = 2L * 1024 * 1024)
-    intercept[DecodeException](Codecs.flateDecode(big, tight))
-    // default 100 MB cap passes
-    assert(Codecs.flateDecode(big).length == 4 * 1024 * 1024)
-    // 0 disables the size check entirely
-    val off = tight.copy(maxDecompressedSize = 0L)
-    assert(Codecs.flateDecode(big, off).length == 4 * 1024 * 1024)
-  }
-
-  test("maxDecompressionRatio caps expansion above the 1 MB floor; 0 disables") {
-    val big = zlib(new Array[Byte](4 * 1024 * 1024)) // ratio ≈ 1000:1, > 1 MB out
-    val tight = ParserOptions.lenient.copy(maxDecompressionRatio = 50L)
-    intercept[DecodeException](Codecs.flateDecode(big, tight))
-    val off = ParserOptions.lenient.copy(maxDecompressionRatio = 0L)
-    assert(Codecs.flateDecode(big, off).length == 4 * 1024 * 1024)
-  }
+  private val MB = 1024 * 1024
 
   test("options flow through a PdfDocument's stream decode path") {
-    // a document whose content stream inflates to ~4 MB: readable with
-    // default limits, empty text with a 1 MB cap (decode error is
-    // caught by the lenient extraction path, content dropped)
-    val payload = ("BT /F1 12 Tf 100 700 Td (Hi) Tj ET" + " " * (4 * 1024 * 1024)).getBytes("ISO-8859-1")
-    val b = new graft.pdf.testgen.PdfBuilder()
-    val catId = b.reserveId()
-    val pagesId = b.reserveId()
-    val f = b.addObject("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    val cId = b.addStream("", payload, flate = true)
-    val pageId = b.addObject(s"<< /Type /Page /Parent $pagesId 0 R /MediaBox [0 0 612 792] " +
-      s"/Resources << /Font << /F1 $f 0 R >> >> /Contents $cId 0 R >>")
-    b.addObjectAt(pagesId, s"<< /Type /Pages /Kids [$pageId 0 R] /Count 1 >>")
-    b.addObjectAt(catId, s"<< /Type /Catalog /Pages $pagesId 0 R >>")
-    val bytes = b.build(catId)
-
-    // ratio check off in both arms (4 MB of spaces is ~1000:1); only
-    // the size cap differs — demonstrates the options param reaches
-    // the document's stream-decode path
-    val open = new graft.pdf.doc.PdfDocument(bytes, Array.emptyByteArray,
-      ParserOptions.lenient.copy(maxDecompressionRatio = 0L))
-    val textOpen = open.pages.flatMap(p =>
-      new graft.pdf.extract.TextExtractor(open).extractRaw(p)).map(_.text).mkString
-    assert(textOpen.contains("Hi"))
-
-    val capped = new graft.pdf.doc.PdfDocument(bytes, Array.emptyByteArray,
-      ParserOptions.lenient.copy(maxDecompressedSize = 1024L * 1024, maxDecompressionRatio = 0L))
-    val textCapped = capped.pages.flatMap(p =>
-      new graft.pdf.extract.TextExtractor(capped).extractRaw(p)).map(_.text).mkString
-    assert(textCapped.isEmpty)
+    // a content stream that inflates past the guard reads as empty text
+    // (the decode error is caught by the lenient extraction path and
+    // the content dropped); one under the 1 MB floor reads
+    def text(padding: Int): String = {
+      val payload = ("BT /F1 12 Tf 100 700 Td (Hi) Tj ET" + " " * padding).getBytes("ISO-8859-1")
+      val b = new graft.pdf.testgen.PdfBuilder()
+      val catId = b.reserveId()
+      val pagesId = b.reserveId()
+      val f = b.addObject("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+      val cId = b.addStream("", payload, flate = true)
+      val pageId = b.addObject(s"<< /Type /Page /Parent $pagesId 0 R /MediaBox [0 0 612 792] " +
+        s"/Resources << /Font << /F1 $f 0 R >> >> /Contents $cId 0 R >>")
+      b.addObjectAt(pagesId, s"<< /Type /Pages /Kids [$pageId 0 R] /Count 1 >>")
+      b.addObjectAt(catId, s"<< /Type /Catalog /Pages $pagesId 0 R >>")
+      val doc = new graft.pdf.doc.PdfDocument(b.build(catId))
+      doc.pages.flatMap(p =>
+        new graft.pdf.extract.TextExtractor(doc).extractRaw(p)).map(_.text).mkString
+    }
+    // 4 MB of spaces deflate ~1000:1, past the ratio cap
+    assert(text(4 * MB).isEmpty)
+    // 512 KB of spaces: the same ratio, under the 1 MB floor
+    assert(text(MB / 2).contains("Hi"))
   }
 }
